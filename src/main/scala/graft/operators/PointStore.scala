@@ -55,12 +55,16 @@ object PointStore {
     * (correctness) AND a union of tight zkey intervals from the budgeted
     * quad decomposition ([[graft.zorder.ZRanges]]) — pruning-only, a
     * guaranteed superset of the rectangle's z-image, pushed to Parquet
-    * for row-group skipping. */
+    * for row-group skipping. A rectangle reaching negative coordinates
+    * skips the interval conjunct: the codec covers only the
+    * non-negative quadrant, so only the raw predicates can be trusted
+    * there (the pruning rule's negative-domain bail). */
   def rangeFilter(rx: IntRange, ry: IntRange): Column = {
-    val zpred = graft.zorder.ZRanges.decompose(rx, ry, 16)
+    val raw = col("x").between(rx.min, rx.max) && col("y").between(ry.min, ry.max)
+    if (rx.min < 0 || ry.min < 0) raw
+    else raw && graft.zorder.ZRanges.decompose(rx, ry, 16)
       .map { case (lo, hi) => col("zkey").between(lo, hi) }
       .reduce(_ || _)
-    col("x").between(rx.min, rx.max) && col("y").between(ry.min, ry.max) && zpred
   }
 
   /** 2-D rectangle query, inclusive bounds (`Client.java:76-83`,
@@ -78,57 +82,87 @@ object PointStore {
   /**
    * Exact k-nearest-neighbor with deterministic (dist², id) tie order —
    * the reference's best-first search (`Client.java:92-152`) re-expressed
-   * as at most two pruned scans plus a final `TakeOrderedAndProject`
+   * as probe jobs over a square window around the query point (analog
+   * of `Client.java:118-126`) plus a final `TakeOrderedAndProject`
    * (`orderBy(dist2, id).limit(k)`), which Spark executes as a
    * distributed per-partition top-k + small driver merge: no full sort,
-   * no driver materialization of candidates.
+   * no driver materialization of candidates. Rows with a null x or y
+   * have no distance and are never returned. Distances are exact while
+   * dist² fits a Long (query and points within 2^31 of each other).
    *
-   * Phase 1 probes an expanding window around the query point (analog of
-   * `Client.java:118-126`) until it holds ≥ k points; the k-th distance
-   * in the window bounds the true k-th distance, so phase 2's rectangle
-   * `[q ± ceil(sqrt(kth))]` is a guaranteed superset of the true kNN —
-   * the reference's termination invariant (`Client.java:131-134`).
+   * INVARIANT: the final window's radius is at least the true k-th
+   * distance, so it holds every row of the answer, ties included — the
+   * reference's termination invariant (`Client.java:131-134`). A probe
+   * window holding ≥ k rows bounds the k-th distance by its own k-th
+   * distance; see [[knnRadius]] for how the windows are chosen.
    * Distance ties are KEPT up to k results (the reference's TreeSet
    * silently drops equidistant points, `Client.java:94-101` — documented
    * divergence, SURVEY §2.1).
    *
-   * TERMINATION (structural, not fixpoint-asserted): the probe radius
-   * grows ×8 per round until it clamps at Int.MaxValue, where the
-   * window is the whole domain — ≤ ⌈log8 2^31⌉ + 1 = 12 probes from
-   * initialRadius 1, each collecting k scalars. At the clamp either
-   * the window holds ≥ k points (kth bound found) or the store itself
-   * has < k points and the exhaustion branch scans it whole; no exit
-   * can return a partial window (spec: "knn widening loop is
-   * probe-bounded").
+   * TERMINATION: on a bare store scan (`PointStore.open(..).df`) the
+   * footer zone map ([[ZoneMap]]) seeds the search, and it submits AT
+   * MOST ONE probe job before the final scan: the probe radius is the
+   * one expected to hold ~2k rows at the local density, and a probe
+   * holding fewer than k rows jumps straight to the zone map's cap,
+   * which holds ≥ k rows by the footers' counts. On any other frame
+   * (derived frames, [[PointStore#live]], [[PointStore#snapshotAsOf]])
+   * the probe radius starts at `initialRadius` and grows ×8 until the
+   * window covers every Int coordinate — AT MOST 12 probes
+   * (8^11 > 2^32), each collecting k scalars; there either the window
+   * holds ≥ k rows or the frame has fewer than k rows with
+   * coordinates, all of which that window takes. No exit can return
+   * a partial window (specs: "knn widening loop is probe-bounded",
+   * "knn probe jobs").
    */
   def knn(pts: DataFrame, qx: Int, qy: Int, k: Int, initialRadius: Int = 64): DataFrame = {
-    def window(r: Long): DataFrame = {
-      val rx = IntRange(math.max(0L, qx - r).toInt, math.min(Int.MaxValue.toLong, qx + r).toInt)
-      val ry = IntRange(math.max(0L, qy - r).toInt, math.min(Int.MaxValue.toLong, qy + r).toInt)
-      rangeQuery(pts, rx, ry)
-    }
-    // one job per probe: the k smallest window distances give BOTH the
-    // saturation check (fewer than k rows => widen) and the k-th bound
-    var r = math.max(1L, initialRadius.toLong)
-    var kth = -1L
-    var exhausted = false
-    while (!exhausted && kth < 0) {
-      val top = window(r)
-        .select(dist2(col("x"), col("y"), qx, qy).as("d2"))
-        .orderBy("d2").limit(k).collect()
-      if (top.length >= k) kth = top.last.getLong(0)
-      else if (r >= Int.MaxValue.toLong) exhausted = true
-      else r = math.min(r * 8, Int.MaxValue.toLong)
-    }
-    val base = if (exhausted) pts else {
-      val rFinal = math.min(math.ceil(math.sqrt(kth.toDouble)).toLong + 1, Int.MaxValue.toLong)
-      window(rFinal)
-    }
-    base
-      .withColumn("dist2", dist2(col("x"), col("y"), qx, qy))
+    def window(r: Long): DataFrame = rangeQuery(pts, around(qx, r), around(qy, r))
+    val d2 = dist2(col("x"), col("y"), qx, qy)
+    window(knnRadius(pts, Seq("x", "y"), Seq(qx, qy), k, initialRadius, window, d2))
+      .withColumn("dist2", d2)
       .orderBy(col("dist2"), col("id"))
       .limit(k)
       .select("id", "x", "y", "dist2")
+  }
+
+  /** `[q - r, q + r]` clamped to the Int range. */
+  private[operators] def around(q: Int, r: Long): IntRange =
+    IntRange(math.max(Int.MinValue.toLong, q - r).toInt, math.min(Int.MaxValue.toLong, q + r).toInt)
+
+  /**
+   * The radius of the final kNN window around `q` over the coordinate
+   * columns `coords`. One probe job per round: the k smallest window
+   * distances give both the saturation check (fewer than k rows =>
+   * widen) and the k-th bound. A bare parquet scan starts from its
+   * [[ZoneMap]]'s probe radius and falls back on its cap, so it probes
+   * at most once; any other frame, or a scan whose footers lack
+   * statistics, walks the ×8 ladder from `initialRadius`. The window
+   * of the returned radius holds the whole answer: when fewer than k
+   * rows have coordinates it covers every Int coordinate, which takes
+   * exactly the rows with coordinates.
+   */
+  private[operators] def knnRadius(pts: DataFrame, coords: Seq[String], q: Seq[Int], k: Int,
+                                   initialRadius: Int, window: Long => DataFrame,
+                                   dist: Column): Long = {
+    require(k > 0, s"k must be positive, got $k")
+    val full = q.map(v => math.max(v.toLong - Int.MinValue, Int.MaxValue.toLong - v)).max
+    def radius(d2: Long): Long = math.min(math.ceil(math.sqrt(d2.toDouble)).toLong + 1, full)
+    def kth(r: Long): Option[Long] = {
+      val top = window(r).select(dist.as("d2")).orderBy("d2").limit(k).collect()
+      Option.when(top.length >= k)(top.last.getLong(0))
+    }
+    ZoneMap.of(pts, coords) match {
+      case Some(zones) => zones.knnStart(q, k) match {
+        case None => full
+        case Some((probe, zoneCap)) =>
+          val cap = math.min(zoneCap, full)
+          if (probe >= cap) cap else kth(probe).map(d2 => math.min(radius(d2), cap)).getOrElse(cap)
+      }
+      case None =>
+        var r = math.max(1L, initialRadius.toLong)
+        var bound = kth(r)
+        while (bound.isEmpty && r < full) { r = math.min(r * 8, full); bound = kth(r) }
+        bound.map(radius).getOrElse(full)
+    }
   }
 
   /** Uniform-depth bucket statistics — the reference's index table

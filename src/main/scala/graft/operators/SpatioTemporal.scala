@@ -94,7 +94,7 @@ object SpatioTemporal {
       driverRowCap, keyCol = "z3")
 
   /** Squared Euclidean distance to a fixed 3-D query point, exact in
-    * Long arithmetic (21-bit coordinates: d² ≤ 3·2⁴² ≪ 2⁶³). */
+    * Long arithmetic while it fits (21-bit coordinates: d² ≤ 3·2⁴² ≪ 2⁶³). */
   def dist3(qx: Int, qy: Int, qt: Int): Column = {
     val dx = col("x").cast("long") - qx.toLong
     val dy = col("y").cast("long") - qy.toLong
@@ -104,37 +104,28 @@ object SpatioTemporal {
 
   /**
    * Exact 3-D kNN with deterministic (dist², id) tie order — the 2-D
-   * expanding-window search ([[PointStore.knn]]) lifted to the octree
-   * store: probe a growing cube until it holds ≥ k points, then the
-   * k-th in-cube distance bounds the true k-th, so the final cube
+   * search ([[PointStore.knn]]) lifted to the octree store: probe a cube
+   * around the query until it holds ≥ k points, then the k-th in-cube
+   * distance bounds the true k-th, so the final cube
    * `[q ± ceil(sqrt(kth))]` is a guaranteed superset of the answer;
    * finish with a distributed top-k (TakeOrderedAndProject — no global
    * sort, no driver candidate set; the driver sees only k scalars per
-   * probe).
+   * probe). Rows with a null x, y or t are never returned; cubes clamp
+   * to the Int range only, so queries and rows outside the codec's
+   * domain are answered by the raw predicates.
+   *
+   * TERMINATION, as in [[PointStore.knnRadius]]: a bare store scan
+   * (`SpatioTemporal.open(..).df`) is seeded from its footer zone map
+   * and submits AT MOST ONE probe job before the final scan; any other
+   * frame walks the ×8 ladder from `initialRadius` to the cube covering
+   * every Int coordinate, AT MOST 12 probes.
    */
   def knn3(pts: DataFrame, qx: Int, qy: Int, qt: Int, k: Int,
            initialRadius: Int = 64): DataFrame = {
-    val maxC = graft.zorder.ZOrder3.MaxCoord.toLong
-    def cube(r: Long): DataFrame = {
-      def rng(q: Int) = IntRange(math.max(0L, q - r).toInt, math.min(maxC, q + r).toInt)
-      rangeQuery3(pts, rng(qx), rng(qy), rng(qt))
-    }
-    var r = math.max(1L, initialRadius.toLong)
-    var kth = -1L
-    var exhausted = false
-    while (!exhausted && kth < 0) {
-      val top = cube(r)
-        .select(dist3(qx, qy, qt).as("d2"))
-        .orderBy("d2").limit(k).collect()
-      if (top.length >= k) kth = top.last.getLong(0)
-      else if (r >= maxC) exhausted = true
-      else r = math.min(r * 8, maxC)
-    }
-    val base = if (exhausted) pts else {
-      val rFinal = math.min(math.ceil(math.sqrt(kth.toDouble)).toLong + 1, maxC)
-      cube(rFinal)
-    }
-    base
+    def cube(r: Long): DataFrame = rangeQuery3(pts,
+      PointStore.around(qx, r), PointStore.around(qy, r), PointStore.around(qt, r))
+    cube(PointStore.knnRadius(pts, Seq("x", "y", "t"), Seq(qx, qy, qt), k,
+        initialRadius, cube, dist3(qx, qy, qt)))
       .withColumn("dist3", dist3(qx, qy, qt))
       .orderBy(col("dist3"), col("id"))
       .limit(k)

@@ -110,6 +110,37 @@ class PointStoreSpec extends SparkSpec {
     assert(got === brute)
   }
 
+  test("knn widening loop is probe-bounded on a derived frame: the ×8 ladder stays exact") {
+    // the same far query on a frame that is not a bare store scan, so
+    // no zone map seeds the search: the ladder climbs from radius 1 to
+    // the window covering every Int coordinate (≤ 12 probes) and the
+    // answer is still the exact brute-force top-k
+    val pts = Seq((1L, 0, 0), (2L, 5, 3), (3L, 2, 8), (4L, 7, 7), (5L, 1, 1))
+    val derived = mkStore(pts, 2).df.filter(col("id") > 0L)
+    val got = PointStore.knn(derived, Int.MaxValue, Int.MaxValue, 3, initialRadius = 1)
+      .select("id").collect().map(_.getLong(0)).toSeq
+    val brute = pts.map { case (id, x, y) =>
+      val dx = Int.MaxValue.toLong - x; val dy = Int.MaxValue.toLong - y
+      (dx * dx + dy * dy, id)
+    }.sorted.take(3).map(_._2)
+    assert(got === brute)
+  }
+
+  test("negative coordinates: range and knn keep every row, on a store scan and a derived frame") {
+    val pts = Seq((1L, -10, 5), (2L, -1, 0), (3L, 3, 4), (4L, 7, 7),
+      (5L, -10000, 3), (6L, 100, 100))
+    val scan = mkStore(pts, 2).df
+    for ((name, df) <- Seq("store scan" -> scan, "derived" -> scan.filter(col("id") > 0L))) {
+      assert(collectPts(PointStore.rangeQuery(df, IntRange(-10, 5), IntRange(0, 5))).map(_._1) ===
+        Set(1L, 2L, 3L), name)
+      assert(collectPts(PointStore.get(df, -10, 5)) === Set((1L, -10, 5)), name)
+      val near = PointStore.knn(df, 0, 0, 2).select("id").collect().map(_.getLong(0)).toSeq
+      assert(near === Seq(2L, 3L), name)
+      val far = PointStore.knn(df, -20000, 0, 2).select("id").collect().map(_.getLong(0)).toSeq
+      assert(far === Seq(5L, 1L), name)
+    }
+  }
+
   test("edge coordinates: 0 and Int.MaxValue round-trip the store") {
     val pts = Seq((1L, 0, 0), (2L, Int.MaxValue, Int.MaxValue),
       (3L, 0, Int.MaxValue), (4L, Int.MaxValue, 0))
