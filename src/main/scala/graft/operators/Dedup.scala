@@ -706,7 +706,7 @@ object Dedup {
                     rowsPerBand: Int = 4): DataFrame = {
     clusters(df, num, den, k, numHashes, bands, rowsPerBand)
       .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    ParquetFooters.readParquet(df.sparkSession, path)
   }
 
   // per-JVM memo of materialized cluster tables, keyed by corpus key +
@@ -732,7 +732,7 @@ object Dedup {
     val path = sharedTables.getOrCreate(key) { dir =>
       clustersTable(df, dir, num, den, k, numHashes, bands, rowsPerBand)
     }
-    df.sparkSession.read.parquet(path)
+    ParquetFooters.readParquet(df.sparkSession, path)
   }
 
   /** Corpus survivors given a precomputed cluster map ([[clusters]] /

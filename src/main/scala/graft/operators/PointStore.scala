@@ -322,7 +322,7 @@ class PointStore(spark: SparkSession, path: String) {
   /** The full store as a DataFrame `(id, x, y, zkey [, payload...])`.
     * Converges a crash-interrupted [[compactDeletes]] first, so a
     * mid-fold crash self-heals on the next read. */
-  def df: DataFrame = { resolveFold(); spark.read.parquet(path) }
+  def df: DataFrame = { resolveFold(); ParquetFooters.readParquet(spark, path) }
 
   /** Logical single-entity DELETE (`delete_equiv` gate): append
     * equality-delete markers `(id, x, y, seq...)` to the store's
@@ -350,7 +350,7 @@ class PointStore(spark: SparkSession, path: String) {
   /** Pending range-tombstone markers (empty after a fold). */
   def rangeTombstones: Option[DataFrame] = {
     resolveFold()
-    if (fs.exists(rangeTombPath)) Some(spark.read.parquet(rangeTombPath.toString))
+    if (fs.exists(rangeTombPath)) Some(ParquetFooters.readParquet(spark, rangeTombPath.toString))
     else None
   }
 
@@ -417,7 +417,7 @@ class PointStore(spark: SparkSession, path: String) {
   /** The store's pending tombstone markers (empty after a fold). */
   def tombstones: Option[DataFrame] = {
     resolveFold()
-    if (fs.exists(tombPath)) Some(spark.read.parquet(tombPath.toString)) else None
+    if (fs.exists(tombPath)) Some(ParquetFooters.readParquet(spark, tombPath.toString)) else None
   }
 
   /** The live view: store rows not superseded by a tombstone marker —

@@ -86,7 +86,7 @@ object PostingsStore {
     // written stats partial (no extra corpus scan) + the file-listing/
     // plan fingerprint where the corpus is file-backed
     val s = df.sparkSession
-    val nDocs = s.read.parquet(s"$path/stats/$BaseDir").collect()(0).getLong(0)
+    val nDocs = ParquetFooters.readParquet(s, s"$path/stats/$BaseDir").collect()(0).getLong(0)
     import s.implicits._
     Seq((nDocs, TableMemo.contentKey(df).getOrElse("")))
       .toDF("n_rows", "fingerprint")
@@ -459,7 +459,7 @@ object PostingsStore {
                            bound: Long = Long.MaxValue): Option[DataFrame] = {
     val dirs = readyPurgeDirs(s, path).filter(opId(_) <= bound)
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(d => s"$path/$TermPurgeTree/$d"): _*))
+    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/$TermPurgeTree/$d"): _*))
   }
 
   /** Drop purged terms from a postings view — inline filter or
@@ -499,7 +499,7 @@ object PostingsStore {
                             skipId: Long): Option[DataFrame] = {
     val dirs = readyDeleteDirs(s, path).filter(_ != s"d$skipId")
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(d => s"$path/deletes/$d"): _*))
+    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/deletes/$d"): _*))
   }
 
   private val CompactReady = "_GRAFT_COMPACT_READY"
@@ -588,7 +588,7 @@ object PostingsStore {
     val dstats = readyDeleteDirs(s, path)
     if (dstats.nonEmpty)
       base.unionByName(
-        s.read.parquet(dstats.map(d => s"$path/deletestats/$d"): _*))
+        ParquetFooters.readParquet(s, dstats.map(d => s"$path/deletestats/$d"): _*))
     else base
   }
 
@@ -652,7 +652,7 @@ object PostingsStore {
                                 bound: Long): Option[DataFrame] = {
     val dirs = readyDeleteDirs(s, path).filter(opId(_) <= bound)
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(d => s"$path/deletes/$d"): _*))
+    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/deletes/$d"): _*))
   }
 
   private def rawPartialsAsOf(s: SparkSession, path: String,
@@ -662,7 +662,7 @@ object PostingsStore {
     val dstats = readyDeleteDirs(s, path).filter(opId(_) <= bound)
     if (dstats.nonEmpty)
       base.unionByName(
-        s.read.parquet(dstats.map(d => s"$path/deletestats/$d"): _*))
+        ParquetFooters.readParquet(s, dstats.map(d => s"$path/deletestats/$d"): _*))
     else base
   }
 

@@ -952,7 +952,7 @@ object Similarity {
     val path = sharedJoins.getOrCreate(key) { dir =>
       knnJoin(emb, k, nCentroids, nProbe).write.mode("overwrite").parquet(dir)
     }
-    emb.sparkSession.read.parquet(path)
+    ParquetFooters.readParquet(emb.sparkSession, path)
   }
 
   // per-JVM memo of materialized semantic-cluster tables — the same
@@ -980,7 +980,7 @@ object Similarity {
         minDot)
         .write.mode("overwrite").parquet(dir)
     }
-    emb.sparkSession.read.parquet(path)
+    ParquetFooters.readParquet(emb.sparkSession, path)
   }
 
   /** [[semanticClusters]] over a precomputed kNN-join edge table (see
@@ -1062,7 +1062,7 @@ object Similarity {
     val asgPath = sharedAssigns.getOrCreate(asgKey) { dir =>
       ivfAssign(priorEmb, cents).write.mode("overwrite").parquet(dir)
     }
-    val priorAssigned = priorEmb.sparkSession.read.parquet(asgPath)
+    val priorAssigned = ParquetFooters.readParquet(priorEmb.sparkSession, asgPath)
     val qProbes = newEmb
       .withColumn("probes", probeList(cents, nProbe))
       .select(col("vec_id").as("qid"), col("v").as("qv"),

@@ -141,7 +141,7 @@ object SpatioTemporal {
 class SpatioTemporalStore(spark: org.apache.spark.sql.SparkSession, path: String) {
 
   /** The full store as a DataFrame `(id, x, y, t, z3)`. */
-  def df: DataFrame = spark.read.parquet(path)
+  def df: DataFrame = ParquetFooters.readParquet(spark, path)
 
   def get(x: Int, y: Int, t: Int): DataFrame = SpatioTemporal.get3(df, x, y, t)
   def rangeQuery(rx: IntRange, ry: IntRange, rt: IntRange): DataFrame =

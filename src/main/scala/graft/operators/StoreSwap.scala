@@ -121,21 +121,22 @@ private[operators] object StoreSwap {
     * versions) or reading legacy rows as op NULL (which an
     * `op <= marker` predicate never matches: takedowns silently keep
     * serving the legacy layer). So sources are grouped by op-presence
-    * (one driver-side footer read per source — sources are few by the
-    * compaction contract, and single-source reads skip the probe),
+    * (one cached driver-side footer read per source and no Spark job —
+    * sources are few by the compaction contract, and single-source reads
+    * skip the probe),
     * legacy rows get their contractual `op = 0`, and the groups union
     * by name. */
   def readTree(s: SparkSession, srcs: Seq[TreeSrc], root: String): DataFrame = {
-    if (srcs.isEmpty) s.read.parquet(root)
-    else if (srcs.size == 1) s.read.parquet(srcs.head.absPath)
+    if (srcs.isEmpty) ParquetFooters.readParquet(s, root)
+    else if (srcs.size == 1) ParquetFooters.readParquet(s, srcs.head.absPath)
     else {
       val (versioned, legacy) = srcs.partition(src =>
-        s.read.parquet(src.absPath).schema.fieldNames.contains("op"))
+        ParquetFooters.readParquet(s, src.absPath).schema.fieldNames.contains("op"))
       if (versioned.isEmpty || legacy.isEmpty)
-        s.read.parquet(srcs.map(_.absPath): _*)
+        ParquetFooters.readParquet(s, srcs.map(_.absPath): _*)
       else
-        s.read.parquet(versioned.map(_.absPath): _*)
-          .unionByName(s.read.parquet(legacy.map(_.absPath): _*)
+        ParquetFooters.readParquet(s, versioned.map(_.absPath): _*)
+          .unionByName(ParquetFooters.readParquet(s, legacy.map(_.absPath): _*)
             .withColumn("op", lit(0L)))
     }
   }
@@ -145,7 +146,7 @@ private[operators] object StoreSwap {
   def readTreeAsOf(s: SparkSession, srcs: Seq[TreeSrc], root: String,
                    bound: Long): DataFrame = {
     val in = srcs.filter(_.op <= bound)
-    if (srcs.isEmpty) s.read.parquet(root)
+    if (srcs.isEmpty) ParquetFooters.readParquet(s, root)
     else if (in.isEmpty) readTree(s, srcs, root).limit(0)
     else readTree(s, in, root)
   }

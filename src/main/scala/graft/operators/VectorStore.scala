@@ -106,7 +106,7 @@ object VectorStore {
     // build-corpus identity for [[isStale]]: row count from the just-
     // written assignment's footers (no second corpus scan) + the
     // file-listing/plan fingerprint where the corpus is file-backed
-    val nRows = s.read.parquet(s"$path/assign.next/$BaseDir").count()
+    val nRows = ParquetFooters.readParquet(s, s"$path/assign.next/$BaseDir").count()
     Seq((nRows, TableMemo.contentKey(emb).getOrElse("")))
       .toDF("n_rows", "fingerprint")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.next/$BaseDir")
@@ -267,7 +267,7 @@ object VectorStore {
           fs.exists(new org.apache.hadoop.fs.Path(p, DeleteReady)))
         .map(_.getName).toSeq
     if (dirs.isEmpty) None
-    else Some(s.read.parquet(dirs.map(d => s"$path/deletes/$d"): _*))
+    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/deletes/$d"): _*))
   }
 
   /** [[Similarity.ivfTopK]] served from the store. */
@@ -297,14 +297,18 @@ object VectorStore {
     // rows — a re-evaluated non-deterministic query frame could produce
     // a prefilter inconsistent with the probes actually joined,
     // silently dropping candidate cells. A frame that is ALREADY
-    // materialized (a caller-side checkpoint or a local relation)
+    // materialized (a local relation, or an RDD-backed frame whose RDD
+    // is persisted or checkpointed, e.g. a caller-side checkpoint)
     // satisfies the same-rows requirement by construction — skip the
     // extra localCheckpoint job, so a gate serving several phases from
-    // one query batch pays the materialization once, not per serve
-    // (r20, guide §1.2)
+    // one query batch pays the materialization once, not per serve. An
+    // RDD-backed frame over an unpersisted RDD recomputes per job, so
+    // it is checkpointed like any other plan.
     val queries = queries0.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD |
-           _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => queries0
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+          if lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+            lr.rdd.isCheckpointed => queries0
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => queries0
       case _ => CheckpointScope.checkpoint(queries0)
     }
     val cents = centroids(s, path)

@@ -8,13 +8,16 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.FileStatus
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Driver-side zone map of a bare parquet scan: per row group, the rows
@@ -25,10 +28,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
  * search can start at a radius that fits the data
  * ([[PointStore.knnRadius]]).
  *
- * Files are immutable under their (path, length, modification time),
- * so each file's zones are cached under that key in a fixed-size LRU;
- * a file rewritten in place changes its length or modification time
- * and is read afresh. Cache misses are read in parallel.
+ * The footers come from [[ParquetFooters]]' cache, so a file rewritten
+ * in place (new length or modification time) is read afresh.
  */
 final class ZoneMap private (zones: IndexedSeq[ZoneMap.Zone]) {
 
@@ -71,25 +72,6 @@ object ZoneMap {
     * null count); `lo`/`hi` bound every non-null coordinate value. */
   private[operators] final case class Zone(rows: Long, lo: IndexedSeq[Long], hi: IndexedSeq[Long])
 
-  /** Files whose zones the cache keeps. */
-  private val CacheFiles = 4096
-
-  private type Key = (String, Long, Long, Seq[String])
-
-  private val cache = new java.util.LinkedHashMap[Key, Option[IndexedSeq[Zone]]](256, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[Key, Option[IndexedSeq[Zone]]]): Boolean = size() > CacheFiles
-  }
-
-  private lazy val readers: ExecutionContext = ExecutionContext.fromExecutorService(
-    Executors.newFixedThreadPool(8, new ThreadFactory {
-      def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, "graft-zone-map")
-        t.setDaemon(true)
-        t
-      }
-    }))
-
   /** The zone map of `df` over the integral columns `cols`, when `df`
     * is a bare parquet scan (a non-streaming, unpartitioned parquet
     * relation with no operator on top) whose every row group carries
@@ -97,23 +79,11 @@ object ZoneMap {
     * including when a footer cannot be read. */
   def of(df: DataFrame, cols: Seq[String]): Option[ZoneMap] =
     bareParquetFiles(df).flatMap { files =>
-      def key(st: FileStatus): Key = (st.getPath.toString, st.getLen, st.getModificationTime, cols)
-      val known = cache.synchronized(files.map(st => st -> Option(cache.get(key(st)))))
-      val missing = known.collect { case (st, None) => st }
-      val read =
-        if (missing.isEmpty) Some(Nil)
-        else {
-          val conf = df.sparkSession.sessionState.newHadoopConf()
-          try Some(Await.result(Future.traverse(missing)(st =>
-            Future(readZones(st, cols, conf))(readers))(implicitly, readers), Duration.Inf))
-          catch { case NonFatal(_) => None }
-        }
-      read.flatMap { fresh =>
-        cache.synchronized(missing.zip(fresh).foreach { case (st, z) => cache.put(key(st), z) })
-        val perFile = known.flatMap(_._2) ++ fresh
-        if (perFile.exists(_.isEmpty)) None
-        else Some(new ZoneMap(perFile.flatMap(_.get).toIndexedSeq))
-      }
+      try {
+        val perFile = ParquetFooters.of(files, df.sparkSession.sessionState.newHadoopConf())
+          .map(zones(_, cols))
+        Option.when(perFile.forall(_.isDefined))(new ZoneMap(perFile.flatten.flatten.toIndexedSeq))
+      } catch { case NonFatal(_) => None }
     }
 
   private def bareParquetFiles(df: DataFrame): Option[Seq[FileStatus]] =
@@ -131,25 +101,21 @@ object ZoneMap {
 
   /** One file's zones, keeping row groups with a row that has every
     * coordinate; None when a row group lacks a column's statistics. */
-  private def readZones(st: FileStatus, cols: Seq[String],
-                        conf: Configuration): Option[IndexedSeq[Zone]] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-    try {
-      val groups = reader.getFooter.getBlocks.asScala.toIndexedSeq.map { b =>
-        val chunks = b.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
-        val stats = cols.flatMap(chunks.get).map(_.getStatistics).toIndexedSeq
-        if (stats.size < cols.size ||
-            stats.exists(s => s == null || s.isEmpty || !s.isNumNullsSet)) None
-        else if (stats.exists(!_.hasNonNullValue)) Some(Zone(0L, Vector.empty, Vector.empty))
-        else {
-          val lo = stats.map(s => integral(s.genericGetMin))
-          val hi = stats.map(s => integral(s.genericGetMax))
-          val rows = b.getRowCount - stats.map(_.getNumNulls).sum
-          Option.when((lo ++ hi).forall(_.isDefined))(Zone(rows, lo.flatten, hi.flatten))
-        }
+  private def zones(footer: ParquetMetadata, cols: Seq[String]): Option[IndexedSeq[Zone]] = {
+    val groups = footer.getBlocks.asScala.toIndexedSeq.map { b =>
+      val chunks = b.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+      val stats = cols.flatMap(chunks.get).map(_.getStatistics).toIndexedSeq
+      if (stats.size < cols.size ||
+          stats.exists(s => s == null || s.isEmpty || !s.isNumNullsSet)) None
+      else if (stats.exists(!_.hasNonNullValue)) Some(Zone(0L, Vector.empty, Vector.empty))
+      else {
+        val lo = stats.map(s => integral(s.genericGetMin))
+        val hi = stats.map(s => integral(s.genericGetMax))
+        val rows = b.getRowCount - stats.map(_.getNumNulls).sum
+        Option.when((lo ++ hi).forall(_.isDefined))(Zone(rows, lo.flatten, hi.flatten))
       }
-      if (groups.exists(_.isEmpty)) None else Some(groups.flatten.filter(_.rows > 0))
-    } finally reader.close()
+    }
+    if (groups.exists(_.isEmpty)) None else Some(groups.flatten.filter(_.rows > 0))
   }
 
   /** An INT32/INT64 statistic; other types bound nothing a window can use. */
@@ -157,5 +123,128 @@ object ZoneMap {
     case i: java.lang.Integer => Some(i.longValue)
     case l: java.lang.Long => Some(l.longValue)
     case _ => None
+  }
+}
+
+/**
+ * Parquet footers read on the driver, and the engine's store reads built
+ * on them. Files are immutable under their (path, length, modification
+ * time), so each footer is cached under that key in one fixed-size LRU
+ * shared by every reader ([[ZoneMap]], [[readParquet]]); a file rewritten
+ * in place changes its length or modification time and is read afresh.
+ * Cache misses are read in parallel on a small daemon pool.
+ */
+private[graft] object ParquetFooters {
+
+  /** Files whose footers the cache keeps. */
+  private val CacheFiles = 4096
+
+  private type Key = (String, Long, Long)
+
+  private val cache = new java.util.LinkedHashMap[Key, ParquetMetadata](256, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, ParquetMetadata]): Boolean =
+      size() > CacheFiles
+  }
+
+  private lazy val readers: ExecutionContext = ExecutionContext.fromExecutorService(
+    Executors.newFixedThreadPool(8, new ThreadFactory {
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, "graft-footers")
+        t.setDaemon(true)
+        t
+      }
+    }))
+
+  /** The footers of `files`, in order; `conf` is built only on a cache
+    * miss. Throws when a footer cannot be read. */
+  def of(files: Seq[FileStatus], conf: => Configuration): Seq[ParquetMetadata] = {
+    def key(st: FileStatus): Key = (st.getPath.toString, st.getLen, st.getModificationTime)
+    val known = cache.synchronized(files.map(st => Option(cache.get(key(st)))))
+    val missing = files.zip(known).collect { case (st, None) => st }
+    if (missing.isEmpty) known.flatten
+    else {
+      val c = conf
+      val fresh = Await.result(Future.traverse(missing)(st =>
+        Future(key(st) -> read(st, c))(readers))(implicitly, readers), Duration.Inf).toMap
+      cache.synchronized(fresh.foreach { case (k, f) => cache.put(k, f) })
+      files.zip(known).map { case (st, k) => k.getOrElse(fresh(key(st))) }
+    }
+  }
+
+  private def read(st: FileStatus, conf: Configuration): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /**
+   * `spark.read.parquet(paths: _*)` without Spark's schema-inference job.
+   *
+   * Invariant: the DataFrame has the schema Spark's own inference gives,
+   * taken from the same file, and building it submits no Spark job.
+   * Without `mergeSchema` and summary files, Spark's inference reads the
+   * footer of one file: the path-sorted first data file among the
+   * non-hidden files directly under the paths. This lists the paths on
+   * the driver, picks that file, converts its footer (the schema Spark
+   * wrote there, else the session's parquet-to-Spark conversion) and
+   * hands the result to the reader as its schema. The footer comes from
+   * the shared cache, so a warm read costs one listing per path.
+   *
+   * It falls back to plain `spark.read.parquet` (keeping Spark's errors
+   * and semantics) when `spark.sql.parquet.mergeSchema` is on, when a
+   * path is a glob or cannot be listed, when the listing holds a
+   * `_metadata`/`_common_metadata` summary file or a `k=v` partition
+   * directory, when no data file sits directly under the paths, and
+   * when the footer cannot be read.
+   */
+  def readParquet(s: SparkSession, paths: String*): DataFrame =
+    footerSchema(s, paths) match {
+      case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+      case None => s.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(s: SparkSession, paths: Seq[String]): Option[StructType] = {
+    val sql = s.sessionState.conf
+    if (paths.isEmpty || sql.isParquetSchemaMergingEnabled ||
+        paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else try {
+      val conf = s.sessionState.newHadoopConf()
+      val top = paths.map { p =>
+        val root = new Path(p)
+        val fs = root.getFileSystem(conf)
+        fs -> visible(fs.listStatus(fs.makeQualified(root)))
+      }
+      val entries = top.flatMap { case (fs, sts) =>
+        sts ++ sts.filter(_.isDirectory).flatMap(d => below(fs, d.getPath))
+      }
+      if (entries.exists(summaryOrPartition)) None
+      else top.flatMap(_._2).filter(_.isFile).sortBy(_.getPath.toString).headOption.map { st =>
+        ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, of(Seq(st), conf).head),
+          new ParquetToSparkSchemaConverter(sql))
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** The entries Spark's file listing keeps: it drops names starting
+    * with `_` or `.` (but not summary files or `_k=v`) and in-flight
+    * `._COPYING_` files. */
+  private def visible(sts: Array[FileStatus]): Seq[FileStatus] = sts.toSeq.filterNot { st =>
+    val n = st.getPath.getName
+    val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")
+    hidden && !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+  }
+
+  /** A summary file or a `k=v` partition directory: with either, Spark's
+    * schema is not the first data file's (it reads the summary file, or
+    * adds partition columns). */
+  private def summaryOrPartition(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    n.startsWith("_") || (st.isDirectory && n.contains("="))
+  }
+
+  /** Every visible entry below directory `dir`, at any depth. */
+  private def below(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    val kids = visible(fs.listStatus(dir))
+    kids ++ kids.filter(_.isDirectory).flatMap(k => below(fs, k.getPath))
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.GraftFunctions.bucket_key
-import graft.operators.PointStore
+import graft.operators.{ParquetFooters, PointStore}
 
 /**
  * Online ingest — the Structured Streaming re-expression of the
@@ -194,7 +194,7 @@ object StreamingIngest {
 
   /** Aggregated fine-bucket stats across all deltas (metadata-scale). */
   def fineStats(spark: SparkSession, statsPath: String): DataFrame =
-    spark.read.parquet(statsPath)
+    ParquetFooters.readParquet(spark, statsPath)
       .groupBy("bucket_key").agg(sum("bucket_size").as("bucket_size"))
 
   /** The adaptive (variable-depth, maySplit-rolled) view of the
@@ -230,7 +230,7 @@ object StreamingIngest {
     recoverSwap(fs, target)
     val scratch = new Path(statsPath + SwapSuffix)
     fs.delete(scratch, true)
-    batchStats(spark.read.parquet(storePath), keyCol).coalesce(1)
+    batchStats(ParquetFooters.readParquet(spark, storePath), keyCol).coalesce(1)
       .write.parquet(new Path(scratch, "delta=base").toString)
     fs.create(new Path(scratch, ReadyMarker)).close()
     completeSwap(fs, target, scratch)
@@ -251,12 +251,12 @@ object StreamingIngest {
     val foldable = deltas.filterNot(_.getName == keep)
     val scratch = new Path(statsPath + SwapSuffix)
     fs.delete(scratch, true)
-    spark.read.parquet(foldable.map(_.toString).toIndexedSeq: _*)
+    ParquetFooters.readParquet(spark, foldable.map(_.toString).toIndexedSeq: _*)
       .groupBy("bucket_key").agg(sum("bucket_size").as("bucket_size"))
       .coalesce(1).write.parquet(new Path(scratch, "delta=base").toString)
     // the current (still replayable) batch's delta rides along unchanged
     deltas.find(_.getName == keep).foreach { d =>
-      spark.read.parquet(d.toString).coalesce(1)
+      ParquetFooters.readParquet(spark, d.toString).coalesce(1)
         .write.parquet(new Path(scratch, keep).toString)
     }
     fs.create(new Path(scratch, ReadyMarker)).close()
@@ -331,7 +331,7 @@ object StreamingIngest {
     val scratch = new Path(storePath + CompactSuffix)
     val snapshot = snapshotNames(fs, store)
     if (snapshot.isEmpty) return
-    val df = spark.read.parquet(snapshot.map(n => new Path(store, n).toString): _*)
+    val df = ParquetFooters.readParquet(spark, snapshot.map(n => new Path(store, n).toString): _*)
     val parts = math.max(1, math.ceil(df.count().toDouble / threshold).toInt)
     fs.delete(scratch, true)
     layout.write(df, scratch.toString, parts)
@@ -607,7 +607,7 @@ object StreamingIngest {
       math.max(2, math.ceil(n.toDouble / threshold).toInt) }.sum
     val scratchAll = new Path(storePath + ".splitting")
     fs.delete(scratchAll, true)
-    spark.read.parquet(todo.map(_._1.toString): _*)
+    ParquetFooters.readParquet(spark, todo.map(_._1.toString): _*)
       .withColumn("__split",
         expr("substring(md5(element_at(split(input_file_name(), '/'), -1)), 1, 12)"))
       .repartitionByRange(totalParts, col("__split"), col(layout.keyCol))

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +13,29 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** `body`'s result and the Spark jobs submitted while it ran. A marker
+    * job run after `body` flushes the listener bus, so every earlier job
+    * start has been seen when the count is taken. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val marker = "graft-jobs-marker"
+    val starts = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!starts.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(starts.contains(marker), "listener never saw the marker job")
+      (out, starts.asScala.count(_ != marker))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

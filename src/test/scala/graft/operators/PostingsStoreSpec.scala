@@ -738,23 +738,21 @@ class PostingsStoreSpec extends SparkSpec {
     // right for foreachBatch micro-batches, a footgun for a bulk
     // backfill (r19 VERDICT): the bulk path must stay exercised and
     // must keep the range-clustered layout a backfill relies on
-    val docs = (1L to 200L)
-      .map(i => (i, s"w${i % 37} w${(i * 7) % 37} w${(i * 11) % 37} common"))
-      .toDF("doc_id", "text")
-    val qs = Seq((10L, "w3 w11"), (11L, "w20 common")).toDF("query_id", "qtext")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-postings-bulk").toString
     // AQE coalesces the advisory range shuffle to 1 partition at spec
     // scale (at production scale it sizes partitions to the advisory
     // byte target instead) — pin coalescing off so the range LAYOUT is
-    // observable as multiple files here
-    // (suites share one session and run in parallel — serialize the
-    // conf window on the session monitor so the other suite's unset
-    // cannot interleave)
-    graft.SparkSpec.session.synchronized {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try PostingsStore.appendBatch(docs, tmp, 0L, micro = false)
-      finally spark.conf.unset("spark.sql.adaptive.enabled")
-    }
+    // observable as multiple files here. The append runs on its own
+    // session (appendBatch uses the frame's), so the shared session's
+    // conf never changes under other suites.
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    val rows = (1L to 200L)
+      .map(i => (i, s"w${i % 37} w${(i * 7) % 37} w${(i * 11) % 37} common"))
+    val docs = rows.toDF("doc_id", "text")
+    val qs = Seq((10L, "w3 w11"), (11L, "w20 common")).toDF("query_id", "qtext")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-postings-bulk").toString
+    PostingsStore.appendBatch(noAqe.createDataFrame(rows).toDF("doc_id", "text"), tmp, 0L,
+      micro = false)
     // layout: the batch tree is range-clustered — more than one file,
     // and the per-file term ranges are DISJOINT (each file owns a
     // contiguous term range, the footer-pruning contract); a micro

@@ -9,10 +9,13 @@ class VectorStoreSpec extends SparkSpec {
   private def fixture = {
     // 200 deterministic 8-dim integer vectors with mild cluster
     // structure (id-band offsets), queries = the first 5
-    val e = spark.range(200).select(col("id").as("vec_id"),
-      expr("transform(sequence(0, 7), j -> cast((id * 31 + j * 7) % 97 + div(id, 50) * 100 as bigint))").as("v"))
+    val e = embeddings(spark)
     (e, e.filter(col("vec_id") < 5))
   }
+
+  private def embeddings(s: org.apache.spark.sql.SparkSession) =
+    s.range(200).select(col("id").as("vec_id"),
+      expr("transform(sequence(0, 7), j -> cast((id * 31 + j * 7) % 97 + div(id, 50) * 100 as bigint))").as("v"))
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
@@ -249,19 +252,16 @@ class VectorStoreSpec extends SparkSpec {
     // keeps the cell-range-clustered layout footer pruning relies on
     val (e, qs) = fixture
     val prior = e.filter(col("vec_id") % 2 === 0)
-    val batch = e.filter(col("vec_id") % 2 === 1)
     val tmp = java.nio.file.Files.createTempDirectory("graft-vstore-bulk").toString
     VectorStore.build(prior, tmp, nCentroids = 8)
     // AQE coalesces the advisory range shuffle to 1 partition at spec
-    // scale — pin coalescing off so the range LAYOUT is observable
-    // (suites share one session and run in parallel — serialize the
-    // conf window on the session monitor so the other suite's unset
-    // cannot interleave)
-    graft.SparkSpec.session.synchronized {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try VectorStore.appendBatch(batch, tmp, 1L, micro = false)
-      finally spark.conf.unset("spark.sql.adaptive.enabled")
-    }
+    // scale — pin coalescing off so the range LAYOUT is observable. The
+    // append runs on its own session (appendBatch uses the frame's), so
+    // the shared session's conf never changes under other suites.
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    VectorStore.appendBatch(embeddings(noAqe).filter(col("vec_id") % 2 === 1), tmp, 1L,
+      micro = false)
     val dir = new java.io.File(s"$tmp/assign/b1")
     val files = dir.listFiles().filter(_.getName.endsWith(".parquet")).map(_.toString)
     assert(files.length > 1, s"bulk append wrote ${files.length} file(s)")
@@ -285,4 +285,34 @@ class VectorStoreSpec extends SparkSpec {
     assert(direct.nonEmpty)
     VectorStore.drop(spark, tmp)
   }
+
+  test("an RDD-backed query frame over an unpersisted, non-deterministic RDD serves exactly") {
+    // the RDD yields the first 5 vectors on its first evaluation and
+    // vectors from another cluster band, under the same query ids, on
+    // every later one: a serve that evaluated it once for the probe-cell
+    // prefilter and again for the probe join would drop candidate cells
+    val (e, qs) = fixture
+    val tmp = java.nio.file.Files.createTempDirectory("graft-vstore-rdd").toString
+    VectorStore.build(e, tmp, nCentroids = 8)
+    val first = qs.collect().toSeq
+    val later = e.filter(col("vec_id").between(150, 154)).collect().toSeq
+      .zip(first).map { case (r, q) => org.apache.spark.sql.Row(q.getLong(0), r.get(1)) }
+    VectorStoreSpec.evaluations.set(0)
+    val drifting = spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+      if (VectorStoreSpec.evaluations.getAndIncrement() == 0) first else later
+    }
+    val queries = spark.createDataFrame(drifting, qs.schema)
+    assert(queries.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    val cents = Similarity.ivfCentroids(e, 8)
+    val direct = rows(Similarity.ivfTopKWith(e, cents, qs, 5, nProbe = 2))
+    assert(rows(VectorStore.topK(spark, tmp, queries, 5, nProbe = 2)) === direct)
+    assert(direct !== rows(Similarity.ivfTopKWith(e, cents, spark.createDataFrame(
+      spark.sparkContext.parallelize(later, 1), qs.schema), 5, nProbe = 2)))
+    VectorStore.drop(spark, tmp)
+  }
+}
+
+object VectorStoreSpec {
+  /** Evaluations of the drifting query RDD (tasks run in this JVM). */
+  val evaluations = new java.util.concurrent.atomic.AtomicInteger(0)
 }

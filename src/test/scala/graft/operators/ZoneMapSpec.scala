@@ -2,14 +2,10 @@ package graft.operators
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -143,28 +139,6 @@ class ZoneMapSpec extends SparkSpec {
       }
       true
     })
-  }
-
-  /** Spark jobs submitted while `body` runs. Listener events arrive
-    * asynchronously but in order, so a marked job run afterwards shows
-    * when every earlier job start has been seen. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val starts = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.add(String.valueOf(js.properties.getProperty("spark.job.description")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription("graft-zm-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!starts.contains("graft-zm-marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(starts.contains("graft-zm-marker"), "listener never saw the marker job")
-      (out, starts.asScala.count(_ != "graft-zm-marker"))
-    } finally sc.removeSparkListener(listener)
   }
 
   test("knn probe jobs: a store-scan knn and knn3 submit at most one job before collect") {
