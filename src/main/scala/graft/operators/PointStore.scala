@@ -313,16 +313,18 @@ class PointStore(spark: SparkSession, path: String) {
   import PointStore._
   import org.apache.hadoop.fs.Path
 
-  private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs = StoreSwap.fsOf(spark, path)
   private def tombPath = new Path(path + ".tombstones")
   private def rangeTombPath = new Path(path + ".rangetombs")
-  private def foldScratch = new Path(path + ".folding")
-  private val FoldReady = "_GRAFT_FOLD_READY"
+
+  /** [[compactDeletes]]' swap; it retires both tombstone side tables. */
+  private def fold =
+    StoreSwap.folding(new Path(path), "_GRAFT_FOLD_READY", Seq(tombPath, rangeTombPath))
 
   /** The full store as a DataFrame `(id, x, y, zkey [, payload...])`.
-    * Converges a crash-interrupted [[compactDeletes]] first, so a
-    * mid-fold crash self-heals on the next read. */
-  def df: DataFrame = { resolveFold(); ParquetFooters.readParquet(spark, path) }
+    * Like every read it converges a crash-interrupted [[compactDeletes]]
+    * first, so a mid-fold crash self-heals on the next read. */
+  def df: DataFrame = { StoreSwap.resolve(fs, fold); ParquetFooters.readParquet(spark, path) }
 
   /** Logical single-entity DELETE (`delete_equiv` gate): append
     * equality-delete markers `(id, x, y, seq...)` to the store's
@@ -349,7 +351,7 @@ class PointStore(spark: SparkSession, path: String) {
 
   /** Pending range-tombstone markers (empty after a fold). */
   def rangeTombstones: Option[DataFrame] = {
-    resolveFold()
+    StoreSwap.resolve(fs, fold)
     if (fs.exists(rangeTombPath)) Some(ParquetFooters.readParquet(spark, rangeTombPath.toString))
     else None
   }
@@ -416,7 +418,7 @@ class PointStore(spark: SparkSession, path: String) {
 
   /** The store's pending tombstone markers (empty after a fold). */
   def tombstones: Option[DataFrame] = {
-    resolveFold()
+    StoreSwap.resolve(fs, fold)
     if (fs.exists(tombPath)) Some(ParquetFooters.readParquet(spark, tombPath.toString)) else None
   }
 
@@ -478,13 +480,13 @@ class PointStore(spark: SparkSession, path: String) {
    * Physically fold pending tombstones: rewrite the store z-clustered
    * with the markers applied, then retire the marker table — the
    * point-store analog of [[PostingsStore.compact]], and like it
-   * CRASH-ATOMIC via the `_READY`-marker scratch swap: the clustered
-   * live rows are fully written to a scratch sibling before the marker
-   * announces them, and every crash state converges on the next read
-   * ([[resolveFold]]). Leftover markers after a crash are HARMLESS even
-   * before recovery runs: a marker only kills rows with seq ≤ its own,
-   * and the folded store no longer holds any such row — the anti-join
-   * is a no-op, so correctness never depends on the cleanup step.
+   * CRASH-ATOMIC via the shared [[StoreSwap]]: the clustered live rows
+   * are fully written to a scratch sibling before the marker announces
+   * them, and every crash state converges on the next read. Leftover
+   * markers after a crash are HARMLESS even before recovery runs: a
+   * marker only kills rows with seq ≤ its own, and the folded store no
+   * longer holds any such row — the anti-join is a no-op, so
+   * correctness never depends on the cleanup step.
    *
    * Single fold-writer assumed, and no concurrent [[delete]] during the
    * fold (a marker appended between the scratch write and the cleanup
@@ -496,38 +498,16 @@ class PointStore(spark: SparkSession, path: String) {
    * [[PostingsStore.compact]]'s swap states). On an object store whose
    * rename is per-file copy (e.g. S3A), the in-scratch `_READY` marker
    * could surface under the store path before all data files finish
-   * copying, and [[resolveFold]] would retire the tombstone tables
+   * copying, and the next read would retire the tombstone tables
    * against a partially-copied store. Run folds against an
    * atomic-rename filesystem, or front the store with a committer that
    * provides one.
    */
   def compactDeletes(seqCols: Seq[String], numPartitions: Int = 0): Unit = {
-    resolveFold()
-    fs.delete(foldScratch, true)            // unfinished-build debris
-    clustered(live(seqCols), numPartitions).write.parquet(foldScratch.toString)
-    fs.create(new Path(foldScratch, FoldReady)).close()
-    completeFold()
-  }
-
-  private def completeFold(): Unit = {
-    fs.delete(new Path(path), true)
-    if (!fs.rename(foldScratch, new Path(path)))
-      throw new java.io.IOException(s"fold swap $foldScratch -> $path failed")
-    fs.delete(new Path(path, FoldReady), false)
-    fs.delete(tombPath, true)
-    fs.delete(rangeTombPath, true)
-    ()
-  }
-
-  private def resolveFold(): Unit = {
-    if (fs.exists(new Path(foldScratch, FoldReady))) completeFold()
-    else if (fs.exists(new Path(path, FoldReady))) {
-      // crashed between the swap rename and the cleanup: finish it
-      fs.delete(new Path(path, FoldReady), false)
-      fs.delete(tombPath, true)
-      fs.delete(rangeTombPath, true)
-      ()
-    }
+    val sw = fold
+    StoreSwap.begin(fs, sw)
+    clustered(live(seqCols), numPartitions).write.parquet(sw.trees.head._2.toString)
+    StoreSwap.commit(fs, sw)
   }
 
   def get(x: Int, y: Int): DataFrame = PointStore.get(df, x, y)
@@ -545,12 +525,6 @@ class PointStore(spark: SparkSession, path: String) {
     PointStore.adaptiveStats(df, threshold, statsDepth, baseDepth)
 
   /** Drop the store (`Client.java:217-224`), including its tombstone
-    * side table and any fold scratch. */
-  def drop(): Unit = {
-    fs.delete(new Path(path), true)
-    fs.delete(tombPath, true)
-    fs.delete(rangeTombPath, true)
-    fs.delete(foldScratch, true)
-    ()
-  }
+    * side tables and any fold scratch. */
+  def drop(): Unit = StoreSwap.drop(spark, fold.paths: _*)
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import StoreSwap.BaseDir
 
 /**
  * Materialized inverted-index (postings) store for the text-retrieval
@@ -47,16 +50,17 @@ object PostingsStore {
     * batches. (The pre-r18 flat layout wrote the files at the tree
     * root; reads still union any such flat files in, as operation 0.) */
   def build(df: DataFrame, path: String): Unit = {
-    val fs = fsOf(df.sparkSession, path)
-    resolve(fs, path) // converge an interrupted swap BEFORE overwriting —
-    // else its marker would later promote stale .next over this build
-    Trees.foreach(t => fs.delete(nextPath(path, t), true)) // unfinished-build debris
-    Trees.foreach(t => fs.delete(livePath(path, t), true)) // prior incarnation
-    // prior MARKER trees go with the data trees: the overwrite contract
+    val s = df.sparkSession
+    val fs = StoreSwap.fsOf(s, path)
+    val swap = Store.swap(path)
+    // converge an interrupted swap BEFORE overwriting — else its marker
+    // would later promote stale .next over this build
+    StoreSwap.begin(fs, swap)
+    // prior incarnation, MARKER trees included: the overwrite contract
     // is "prior batches vanish", and a leftover takedown marker would
     // shadow the fresh corpus (all new rows are op 0) while a leftover
     // negative partial corrupts the fresh stats
-    RetireTrees.foreach(t => fs.delete(livePath(path, t), true))
+    (swap.trees.map(_._1) ++ swap.retire).foreach(fs.delete(_, true))
     // three consumers re-run the tokenize+explode pass without a
     // materialization: the range shuffle's SAMPLING job, the postings
     // write itself, and the doclens sidecar aggregate. Persist the
@@ -85,7 +89,6 @@ object PostingsStore {
     // build-corpus identity for [[isStale]]: doc count from the just-
     // written stats partial (no extra corpus scan) + the file-listing/
     // plan fingerprint where the corpus is file-backed
-    val s = df.sparkSession
     val nDocs = ParquetFooters.readParquet(s, s"$path/stats/$BaseDir").collect()(0).getLong(0)
     import s.implicits._
     Seq((nDocs, TableMemo.contentKey(df).getOrElse("")))
@@ -93,25 +96,11 @@ object PostingsStore {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta/$BaseDir")
   }
 
-  /** Has the BUILD corpus changed since [[build]] captured it? — the
-    * [[VectorStore.isStale]] contract on the text surface: the store's
-    * own mutations ([[appendBatch]]/[[deleteDocs]]/[[purgeTerms]]) do
-    * NOT make it stale; upstream drift of the corpus a caller would
-    * rebuild from does. File-backed corpora compare the full
-    * listing+plan fingerprint; in-memory corpora degrade to a doc-count
-    * compare (documented weaker). A store predating the meta tree
-    * answers `true` — unknown provenance is stale by definition. */
-  def isStale(s: SparkSession, path: String, docs: DataFrame): Boolean = {
-    resolve(fsOf(s, path), path)
-    val srcs = treeSources(s, path, "meta")
-    if (srcs.isEmpty) return true
-    val m = readTree(s, srcs, s"$path/meta")
-      .select("n_rows", "fingerprint").collect()(0)
-    val (n0, fp0) = (m.getLong(0), m.getString(1))
-    val fpNow = TableMemo.contentKey(docs).getOrElse("")
-    if (fp0.nonEmpty && fpNow.nonEmpty) fpNow != fp0
-    else docs.count() != n0
-  }
+  /** Has the BUILD corpus changed since [[build]] captured it? The
+    * store's own [[appendBatch]]/[[deleteDocs]]/[[purgeTerms]]
+    * mutations do not count — see [[StoreSwap.IndexStore.isStale]]. */
+  def isStale(s: SparkSession, path: String, docs: DataFrame): Boolean =
+    Store.isStale(s, path, docs)
 
   /** The `(doc_id, dl)` sidecar: one row per doc, clustered by doc_id
     * so parquet footer min/max make a doc-id probe touch ~1 file.
@@ -160,7 +149,7 @@ object PostingsStore {
     // swap-completion would land in the LIVE tree that the first
     // subsequent read's resolve renames aside and deletes — a committed
     // streaming batch silently gone (spec-pinned in the crash battery)
-    resolve(fsOf(df.sparkSession, path), path)
+    StoreSwap.resolve(StoreSwap.fsOf(df.sparkSession, path), Store.swap(path))
     // two consumers (postings write + sidecar agg) — tokenize once;
     // micro-batch scale, so the cached footprint is one batch's pairs.
     // The stats partial re-tokenizes the batch BY CHOICE — the docs
@@ -205,14 +194,15 @@ object PostingsStore {
     * crash state converges — no marker means the `.next` debris is an
     * unfinished build (discarded by the next compact), marker means the
     * build finished (any reader or the next compact completes the swap,
-    * [[resolve]]); at no point is the store's data unrecoverable, and a
-    * completed-swap store is servable between every pair of filesystem
-    * ops (spec-pinned by killing the swap at each step). Single
+    * [[StoreSwap.resolve]]); at no point is the store's data
+    * unrecoverable, and a completed-swap store is servable between every
+    * pair of filesystem ops (spec-pinned by killing the swap at each
+    * step). Single
     * compactor assumed (the gate/stream harness guarantee); the claim
     * here is crash recovery, not multi-writer coordination. */
   def compact(s: SparkSession, path: String): Unit = {
     compactBuild(s, path)
-    completeSwap(fsOf(s, path), path)
+    StoreSwap.complete(StoreSwap.fsOf(s, path), Store.swap(path))
   }
 
   /** [[compact]]'s build half: write both `.next` trees, then announce
@@ -220,25 +210,24 @@ object PostingsStore {
     * spec can stop the world at the marker and prove every subsequent
     * state self-heals. */
   private[operators] def compactBuild(s: SparkSession, path: String): Unit = {
-    val fs = fsOf(s, path)
-    resolve(fs, path)                       // converge an interrupted prior swap
-    Trees.foreach(t => fs.delete(nextPath(path, t), true)) // unfinished-build debris
+    val fs = StoreSwap.fsOf(s, path)
+    val swap = Store.swap(path)
+    StoreSwap.begin(fs, swap) // converge a prior swap, drop unfinished-build debris
     // markers fold into BOTH trees; purges fold into the postings tree
     // ONLY — a doc whose every term was purged is still a live document
     // (purge keeps its (n_docs, dl_sum) contribution by contract), so
     // it must keep its doclens row or a post-fold takedown would find
     // no length and silently skip the stats subtraction the same
     // takedown issued before the fold performs (fold result-invisibility)
-    val liveDocs = applyDocMarkers(withOp(rawPostings(s, path)),
-      deleteMarkers(s, path))
+    val liveDocs = Store.live(s, path, "postings", Long.MaxValue)
     // four consumers otherwise re-read the whole store THROUGH the
     // marker anti-join (postings range-sampling + write, doclens
     // range-sampling + write) — the [[build]]/[[appendBatch]] persist
     // discipline: one store read, three cache reads
     liveDocs.persist()
     try {
-      val pairs = applyPurges(liveDocs, purgeMarkers(s, path))
-      val partial = rawPartials(s, path)
+      val pairs = applyPurges(liveDocs, purges(path).read(s, Long.MaxValue))
+      val partial = rawPartials(s, path, Long.MaxValue)
         .agg(sum("n_docs").as("n_docs"), sum("dl_sum").as("dl_sum"))
       pairs.repartitionByRange(col("term"), col("doc_id"))
         .sortWithinPartitions("term", "doc_id")
@@ -246,7 +235,7 @@ object PostingsStore {
       partial.coalesce(1).write.mode("overwrite").parquet(s"$path/stats.next/$BaseDir")
       writeDoclens(liveDocs, s"$path/doclens.next/$BaseDir")
     } finally { liveDocs.unpersist(); () }
-    fs.create(markerPath(path)).close()
+    fs.create(swap.marker).close()
   }
 
   /**
@@ -305,53 +294,36 @@ object PostingsStore {
    */
   def deleteDocs(s: SparkSession, path: String, docIds: DataFrame,
                  deleteId: Long): Unit = {
-    val fs = fsOf(s, path)
-    resolve(fs, path)
-    // an already-READY batch is final by contract: a replay must not
-    // rewrite it — the overwrite would delete the READY marker first,
-    // un-publishing the applied batch (served-again deleted docs,
-    // un-subtracted stats) until/unless the replay finishes
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/deletes/d$deleteId/$DeleteReady"))) return
-    // null ids (e.g. the long cast of a malformed id) are harmless
-    // no-ops, not probe-time NPEs
-    val ids = docIds.select(col("doc_id").cast("long").as("doc_id"))
-      .filter(col("doc_id").isNotNull).distinct()
-    // LIVE versions of the requested ids: every stored version minus
-    // those a prior marker already shadows (version v is dead under
-    // marker m iff v.op <= m.op). Docs with no live version — absent,
-    // or fully taken down and not re-indexed since — contribute no
-    // marker and no subtraction, which makes overlapping takedown
-    // lists exactly-once AND makes a takedown of a re-indexed doc
-    // (live again under a LATER op) land on the new version
-    val versions = docLengths(s, path, ids)
-    val liveVers = deletesExcept(s, path, deleteId) match {
-      case Some(prior0) =>
-        val prior = withOp(prior0)
-          .select(col("doc_id").as("__d"), col("op").as("__dop"))
-        versions.join(broadcast(prior),
-          versions("doc_id") === col("__d") && versions("op") <= col("__dop"),
-          "left_anti")
-      case None => versions
+    val fs = StoreSwap.fsOf(s, path)
+    StoreSwap.resolve(fs, Store.swap(path))
+    Store.deletes(path).announceOnce(fs, deleteId) { dir =>
+      // null ids (e.g. the long cast of a malformed id) are harmless
+      // no-ops, not probe-time NPEs
+      val ids = docIds.select(col("doc_id").cast("long").as("doc_id"))
+        .filter(col("doc_id").isNotNull).distinct()
+      // LIVE versions of the requested ids: every stored version minus
+      // those a prior marker already shadows. Docs with no live version
+      // — absent, or fully taken down and not re-indexed since —
+      // contribute no marker and no subtraction, which makes overlapping
+      // takedown lists exactly-once AND makes a takedown of a re-indexed
+      // doc (live again under a LATER op) land on the new version
+      val liveVers = StoreSwap.killVersions(docLengths(s, path, ids),
+        Store.deletes(path).read(s, Long.MaxValue), "doc_id")
+      // one probe feeds both trees; scoped so the blocks release HERE
+      // (both consumers materialize inside this call — a raw
+      // localCheckpoint would leave its blocks to the ContextCleaner
+      // lottery, the one leak source the r19 pinned bench caught)
+      val hit = CheckpointScope.checkpoint(liveVers.groupBy("doc_id")
+        .agg(expr("max_by(dl, op)").as("dl")))
+      try {
+        hit.agg((-count(lit(1))).as("n_docs"),
+            (-coalesce(sum("dl"), lit(0L))).as("dl_sum"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$path/deletestats/d$deleteId")
+        hit.select("doc_id").withColumn("op", lit(deleteId))
+          .coalesce(1).write.mode("overwrite").parquet(dir)
+      } finally CheckpointScope.release(hit)
     }
-    // one probe feeds both trees; scoped so the blocks release HERE
-    // (both consumers materialize inside this call — a raw
-    // localCheckpoint would leave its blocks to the ContextCleaner
-    // lottery, the one leak source the r19 pinned bench caught)
-    val hit = CheckpointScope.checkpoint(liveVers.groupBy("doc_id")
-      .agg(expr("max_by(dl, op)").as("dl")))
-    try {
-      hit.agg((-count(lit(1))).as("n_docs"),
-          (-coalesce(sum("dl"), lit(0L))).as("dl_sum"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/deletestats/d$deleteId")
-      hit.select("doc_id").withColumn("op", lit(deleteId))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/deletes/d$deleteId")
-    } finally CheckpointScope.release(hit)
-    // announce LAST: the batch exists to readers only from here on
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/deletes/d$deleteId/$DeleteReady")).close()
   }
 
   /** A takedown set may legally exceed this, but below it the doclens
@@ -369,7 +341,7 @@ object PostingsStore {
                                     fresh: DataFrame): DataFrame =
     doclensTree(s, path) match {
       case Some(lens0) =>
-        val lens = withOp(lens0)
+        val lens = StoreSwap.withOp(lens0)
         val ids = fresh.limit(InlineDeleteIdCap + 1).collect().map(_.getLong(0))
         if (ids.isEmpty) lens.limit(0)
         else if (ids.length <= InlineDeleteIdCap)
@@ -377,16 +349,11 @@ object PostingsStore {
             col("doc_id").isInCollection(ids))
         else lens.join(broadcast(fresh), Seq("doc_id"))
       case None => // uncovered sidecar: the original one-scan fallback
-        withOp(rawPostings(s, path)).join(broadcast(fresh), Seq("doc_id"))
+        StoreSwap.withOp(Store.tree(s, path, "postings", Long.MaxValue))
+          .join(broadcast(fresh), Seq("doc_id"))
           .groupBy("doc_id", "op").agg(first(col("dl")).as("dl"))
           .select("doc_id", "dl", "op")
     }
-
-  /** Pre-versioning stores carry no `op` column; their rows and
-    * markers are all operation 0 — the versioned semantics degrade to
-    * exactly the old permanent-takedown behavior. */
-  private def withOp(df: DataFrame): DataFrame =
-    if (df.columns.contains("op")) df else df.withColumn("op", lit(0L))
 
   /** The sidecar view, ONLY when it covers every postings source —
     * source-key sets must match EXACTLY, else the probe falls back to
@@ -396,10 +363,10 @@ object PostingsStore {
     * takedown that silently doesn't take down; superset coverage
     * (stale sidecar dirs) would subtract stats for absent docs. */
   private def doclensTree(s: SparkSession, path: String): Option[DataFrame] = {
-    val post = treeSources(s, path, "postings")
-    val lens = treeSources(s, path, "doclens")
+    val post = StoreSwap.treeSources(s, path, "postings")
+    val lens = StoreSwap.treeSources(s, path, "doclens")
     if (lens.isEmpty || lens.map(_.key).toSet != post.map(_.key).toSet) None
-    else Some(readTree(s, lens, s"$path/doclens")) // mixed-era op handling
+    else Some(StoreSwap.readTree(s, lens, s"$path/doclens")) // mixed-era op handling
   }
 
   /**
@@ -425,16 +392,13 @@ object PostingsStore {
    */
   def purgeTerms(s: SparkSession, path: String, terms: DataFrame,
                  purgeId: Long): Unit = {
-    val fs = fsOf(s, path)
-    resolve(fs, path)
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/$TermPurgeTree/t$purgeId/$DeleteReady"))) return
-    terms.select(col("term").cast("string").as("term"))
-      .filter(col("term").isNotNull).distinct()
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/$TermPurgeTree/t$purgeId")
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/$TermPurgeTree/t$purgeId/$DeleteReady")).close()
+    val fs = StoreSwap.fsOf(s, path)
+    StoreSwap.resolve(fs, Store.swap(path))
+    purges(path).announceOnce(fs, purgeId) { dir =>
+      terms.select(col("term").cast("string").as("term"))
+        .filter(col("term").isNotNull).distinct()
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   /** Below this many pending purged terms the read inlines them as ONE
@@ -442,25 +406,7 @@ object PostingsStore {
     * dictionary/stats skipping); above it the marker set broadcasts
     * into an anti-join — either way the store side never shuffles. */
   private val InlinePurgeTermCap = 1000
-  private val TermPurgeTree = "termpurges"
-
-  /** READY purge dirs (the only ones any read may see). */
-  private def readyPurgeDirs(s: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/$TermPurgeTree")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("t") &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, DeleteReady)))
-      .map(_.getName).toSeq
-  }
-
-  private def purgeMarkers(s: SparkSession, path: String,
-                           bound: Long = Long.MaxValue): Option[DataFrame] = {
-    val dirs = readyPurgeDirs(s, path).filter(opId(_) <= bound)
-    if (dirs.isEmpty) None
-    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/$TermPurgeTree/$d"): _*))
-  }
+  private def purges(path: String) = StoreSwap.Batches(s"$path/termpurges", "t")
 
   /** Drop purged terms from a postings view — inline filter or
     * broadcast anti-join (see [[purgeTerms]]). */
@@ -475,131 +421,40 @@ object PostingsStore {
         else df.join(broadcast(m), Seq("term"), "left_anti")
     }
 
-  /** Pending takedown markers (all READY delete batches), if any. */
-  private def deleteMarkers(s: SparkSession, path: String): Option[DataFrame] =
-    deletesExcept(s, path, -1L)
-
-  /** Delete-batch dirs whose `_GRAFT_DELETE_READY` marker landed —
-    * the only batches any read path may see ([[deleteDocs]]'s
-    * crash-atomicity contract). */
-  private def readyDeleteDirs(s: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("d") &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, DeleteReady)))
-      .map(_.getName).toSeq
-  }
-
-  /** All ready delete batches except `skipId`, as ONE multi-path
-    * relation — a union of one read per batch dir would bill every
-    * postings read O(#batches) in plan size and file listings. */
-  private def deletesExcept(s: SparkSession, path: String,
-                            skipId: Long): Option[DataFrame] = {
-    val dirs = readyDeleteDirs(s, path).filter(_ != s"d$skipId")
-    if (dirs.isEmpty) None
-    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/deletes/$d"): _*))
-  }
-
-  private val CompactReady = "_GRAFT_COMPACT_READY"
-  private val DeleteReady = "_GRAFT_DELETE_READY"
-  /** Reserved subdir holding [[build]]/[[compact]] output inside each
-    * tree root — see [[StoreSwap.BaseDir]]. */
-  private val BaseDir = StoreSwap.BaseDir
-  private val Trees = Seq("postings", "stats", "doclens")
-  /** Marker/delta trees a completed compaction retires: their content
-    * is folded into the promoted `.next` trees, so they must not
-    * survive the swap (a leftover negative partial would
-    * double-subtract). Retired under the same `_READY` marker, so a
-    * crash at any step still converges without double-counting. */
-  private val RetireTrees = Seq("deletes", "deletestats", "termpurges")
-  private def markerPath(path: String) = StoreSwap.markerPath(path, CompactReady)
-  private def livePath(path: String, t: String) = StoreSwap.livePath(path, t)
-  private def nextPath(path: String, t: String) = StoreSwap.nextPath(path, t)
-
-  private def fsOf(s: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    StoreSwap.fsOf(s, path)
-
-  // the crash-atomic swap, the converge-on-access rule, and the
-  // base/batch/legacy-flat layout are the SHARED store machinery
-  // ([[StoreSwap]] — one implementation, one invariant set, also
-  // backing [[VectorStore]]); this store's instantiation: three data
-  // trees, three retire trees, the compact marker
-  private def completeSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    StoreSwap.completeSwap(fs, path, Trees, RetireTrees, CompactReady)
-
-  private def resolve(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    StoreSwap.resolve(fs, path, Trees, RetireTrees, CompactReady)
-
-  private type TreeSrc = StoreSwap.TreeSrc
-
-  private def treeSources(s: SparkSession, path: String,
-                          tree: String): Seq[TreeSrc] =
-    StoreSwap.treeSources(s, path, tree)
-
-  private def readTree(s: SparkSession, srcs: Seq[TreeSrc],
-                       root: String): DataFrame =
-    StoreSwap.readTree(s, srcs, root)
-
-  private def readTreeAsOf(s: SparkSession, srcs: Seq[TreeSrc],
-                           root: String, bound: Long): DataFrame =
-    StoreSwap.readTreeAsOf(s, srcs, root, bound)
+  /** The store's lifecycle: three data trees, and the marker/delta
+    * trees a completed compaction retires — their content is folded
+    * into the promoted `.next` trees, so they must not survive the swap
+    * (a leftover negative partial would double-subtract). */
+  private val Store = StoreSwap.IndexStore(
+    trees = Seq("postings", "stats", "doclens"),
+    retire = Seq("deletes", "deletestats", "termpurges"),
+    killKey = "doc_id")
 
   /** The LIVE postings view: the stored rows minus any pending
-    * takedown markers ([[deleteDocs]]) — what every serve path and
-    * [[compact]] consume, so deletion is invisible to all downstream
-    * plans except as absent rows. */
-  def postings(s: SparkSession, path: String): DataFrame = {
-    val raw = withOp(rawPostings(s, path))
-    applyPurges(applyDocMarkers(raw, deleteMarkers(s, path)),
-      purgeMarkers(s, path))
-  }
+    * takedown markers ([[deleteDocs]]) and purged terms — what every
+    * serve path and [[compact]] consume, so deletion is invisible to all
+    * downstream plans except as absent rows. */
+  def postings(s: SparkSession, path: String): DataFrame =
+    postingsAsOf(s, path, Long.MaxValue)
 
-  /** Kill every posting VERSION a marker shadows: row dead iff some
-    * marker matches its doc_id with marker.op >= row.op — so a doc
-    * re-indexed under a LATER op than its takedown serves again (the
-    * re-crawl/update lifecycle), while pre-marker versions stay dead. */
-  private def applyDocMarkers(raw: DataFrame,
-                              markers: Option[DataFrame]): DataFrame =
-    markers match {
-      case Some(m0) =>
-        val m = withOp(m0).select(col("doc_id").as("__del_doc"),
-          col("op").as("__del_op"))
-        raw.join(broadcast(m),
-          raw("doc_id") === col("__del_doc") && raw("op") <= col("__del_op"),
-          "left_anti")
-      case None => raw
-    }
-
-  private def rawPostings(s: SparkSession, path: String): DataFrame = {
-    resolve(fsOf(s, path), path)
-    readTree(s, treeSources(s, path, "postings"), s"$path/postings")
-  }
-
-  /** The store's raw `(n_docs, dl_sum)` stats partials (1 row offline,
-    * 1 per batch online) — the mergeable representation every derived
-    * number folds from. */
-  private def rawPartials(s: SparkSession, path: String): DataFrame = {
-    resolve(fsOf(s, path), path)
-    val base = readTree(s, treeSources(s, path, "stats"), s"$path/stats")
-    // only READY delete batches subtract — a half-written batch's
-    // negative partial must stay invisible (deleteDocs crash contract)
-    val dstats = readyDeleteDirs(s, path)
-    if (dstats.nonEmpty)
-      base.unionByName(
-        ParquetFooters.readParquet(s, dstats.map(d => s"$path/deletestats/$d"): _*))
-    else base
+  /** The store's raw `(n_docs, dl_sum)` stats partials as of `bound` (1
+    * row offline, 1 per batch online, plus the negative partial of each
+    * READY delete batch) — the mergeable representation every derived
+    * number folds from. Only READY delete batches subtract: a
+    * half-written batch's negative partial must stay invisible. */
+  private def rawPartials(s: SparkSession, path: String, bound: Long): DataFrame = {
+    val base = Store.tree(s, path, "stats", bound)
+    StoreSwap.readDirs(s, s"$path/deletestats", Store.deletes(path).ready(s, bound))
+      .fold(base)(base.unionByName(_))
   }
 
   def stats(s: SparkSession, path: String): DataFrame =
-    TextAnalysis.bm25Stats(rawPartials(s, path))
+    statsAsOf(s, path, Long.MaxValue)
 
   /** [[TextAnalysis.bm25DocTopK]] served from the store. */
   def bm25DocTopK(s: SparkSession, path: String, queries: DataFrame,
                   k: Int = 10): DataFrame =
-    TextAnalysis.bm25DocTopKFrom(queries, postings(s, path), stats(s, path),
-      k, broadcastQueries = true)
+    bm25DocTopKAsOf(s, path, queries, k, Long.MaxValue)
 
   /**
    * Snapshot (time-travel) reads AS OF an operation bound — the
@@ -622,17 +477,14 @@ object PostingsStore {
    * for bounds SINCE the last compaction (the [[PointStore.snapshotAsOf]]
    * retention trade, stated there).
    */
-  def postingsAsOf(s: SparkSession, path: String, bound: Long): DataFrame = {
-    val raw = withOp(rawPostingsAsOf(s, path, bound))
-    applyPurges(applyDocMarkers(raw, deleteMarkersAsOf(s, path, bound)),
-      purgeMarkers(s, path, bound))
-  }
+  def postingsAsOf(s: SparkSession, path: String, bound: Long): DataFrame =
+    applyPurges(Store.live(s, path, "postings", bound), purges(path).read(s, bound))
 
   /** Corpus stats as of operation `bound` — positive partials from
     * included batches plus negative partials from included READY
     * deletes, folded raw (see [[postingsAsOf]]). */
   def statsAsOf(s: SparkSession, path: String, bound: Long): DataFrame =
-    TextAnalysis.bm25Stats(rawPartialsAsOf(s, path, bound))
+    TextAnalysis.bm25Stats(rawPartials(s, path, bound))
 
   /** [[bm25DocTopK]] served from the store AS OF operation `bound`. */
   def bm25DocTopKAsOf(s: SparkSession, path: String, queries: DataFrame,
@@ -640,37 +492,7 @@ object PostingsStore {
     TextAnalysis.bm25DocTopKFrom(queries, postingsAsOf(s, path, bound),
       statsAsOf(s, path, bound), k, broadcastQueries = true)
 
-  private def opId(dir: String): Long = dir.drop(1).toLong
-
-  private def rawPostingsAsOf(s: SparkSession, path: String,
-                              bound: Long): DataFrame = {
-    resolve(fsOf(s, path), path)
-    readTreeAsOf(s, treeSources(s, path, "postings"), s"$path/postings", bound)
-  }
-
-  private def deleteMarkersAsOf(s: SparkSession, path: String,
-                                bound: Long): Option[DataFrame] = {
-    val dirs = readyDeleteDirs(s, path).filter(opId(_) <= bound)
-    if (dirs.isEmpty) None
-    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/deletes/$d"): _*))
-  }
-
-  private def rawPartialsAsOf(s: SparkSession, path: String,
-                              bound: Long): DataFrame = {
-    resolve(fsOf(s, path), path)
-    val base = readTreeAsOf(s, treeSources(s, path, "stats"), s"$path/stats", bound)
-    val dstats = readyDeleteDirs(s, path).filter(opId(_) <= bound)
-    if (dstats.nonEmpty)
-      base.unionByName(
-        ParquetFooters.readParquet(s, dstats.map(d => s"$path/deletestats/$d"): _*))
-    else base
-  }
-
   /** Drop the store (the reference's `drop` verb, `Client.java:217-224`,
     * for the text index). */
-  def drop(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  def drop(s: SparkSession, path: String): Unit = StoreSwap.drop(s, new Path(path))
 }

@@ -154,10 +154,5 @@ class SpatioTemporalStore(spark: org.apache.spark.sql.SparkSession, path: String
   def adaptiveStats(threshold: Long): DataFrame = SpatioTemporal.adaptiveStats3(df, threshold)
 
   /** Drop the store. */
-  def drop(): Unit = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(hadoopPath, true)
-    ()
-  }
+  def drop(): Unit = StoreSwap.drop(spark, new org.apache.hadoop.fs.Path(path))
 }

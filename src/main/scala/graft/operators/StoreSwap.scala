@@ -5,28 +5,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Shared materialized-store lifecycle machinery — the `_READY`-marker
- * crash-atomic tree swap and the base/batch/legacy-flat tree layout
- * that [[PostingsStore]] (text index) and [[VectorStore]] (ANN index)
- * both build on. One implementation, one set of invariants (the README
- * "store contracts" section states them once for every store):
+ * The one store-lifecycle core: the marker-guarded swap every store
+ * rewrite goes through, the READY-announced marker batches, the
+ * versioned-marker operation axis and the base/batch/legacy-flat tree
+ * layout. [[PointStore]]'s fold, [[PostingsStore]] and [[VectorStore]]
+ * build and compact, and the streaming stats table's fold and rebuild
+ * supply only their paths, marker names and kill key.
+ * `StreamingIngest.recluster` keeps its own completion: it must
+ * preserve files published after its snapshot. The README "Store
+ * lifecycle contracts" section states the invariants once:
  *
- *  - **READY visibility**: a multi-tree rewrite writes every `.next`
- *    tree fully, THEN creates the marker; readers complete a marked
- *    swap ([[resolve]]) and ignore unmarked `.next` debris — so a crash
- *    at any filesystem step leaves the store either wholly-old or
- *    wholly-new, never mixed.
- *  - **Retire-with-swap**: delta trees a compaction folds (markers,
- *    negative partials) are deleted inside the SAME marked swap, so a
- *    crash can neither double-apply nor lose them.
+ *  - **READY visibility**: a rewrite writes every `.next` tree fully,
+ *    THEN creates the swap's marker; a marker batch is announced by its
+ *    READY file, written last. A crash at any filesystem step leaves
+ *    the store either wholly-old or wholly-new, never mixed.
+ *  - **Converge on access**: every read and every mutation completes a
+ *    marked swap first ([[resolve]]). A converging read never deletes
+ *    unmarked `.next` debris — a writer may still be building it; only
+ *    the next rewrite's [[begin]] discards it.
+ *  - **Retire-with-swap**: delta trees a rewrite folds (markers,
+ *    negative partials, tombstones) are deleted inside the SAME marked
+ *    swap, so a crash can neither double-apply nor lose them.
  *  - **Monotone operation axis**: batch subdirs are `b$op`; the
  *    reserved [[BaseDir]] (build/compact output) and legacy flat root
  *    files are operation 0. As-of reads are pure path selection over
- *    this axis ([[readTreeAsOf]]).
+ *    this axis ([[readTreeAsOf]], [[Batches.ready]]).
  *  - **Single writer**: the discipline is crash recovery, not
- *    multi-writer coordination — callers sequence mutations.
+ *    multi-writer coordination — callers sequence mutations. A
+ *    converging read is itself a completer, so a read must not overlap
+ *    the completion of a rewrite of the same store.
  */
-private[operators] object StoreSwap {
+private[graft] object StoreSwap {
 
   /** Reserved subdir holding build/compact output inside a tree root —
     * shaped like a batch dir so the folded and batched layouts compose
@@ -36,24 +45,52 @@ private[operators] object StoreSwap {
   def fsOf(s: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  def livePath(path: String, t: String) = new Path(s"$path/$t")
-  def nextPath(path: String, t: String) = new Path(s"$path/$t.next")
-  def oldPath(path: String, t: String) = new Path(s"$path/$t.old")
-  def markerPath(path: String, marker: String) = new Path(s"$path/$marker")
+  /** One marker-guarded swap: each `next` tree replaces its `live`
+    * tree, the `retire` trees go, and `marker` announces that every
+    * `next` tree is complete. A marker inside a `next` tree moves with
+    * it, so its copy under the promoted live tree announces the swap
+    * too. */
+  final case class Swap(trees: Seq[(Path, Path)], retire: Seq[Path], marker: Path) {
+    def markers: Seq[Path] = marker +: trees.collect {
+      case (live, next) if marker.getParent == next => new Path(live, marker.getName)
+    }
+    /** Every path the swap may leave on disk. */
+    def paths: Seq[Path] =
+      trees.flatMap { case (live, next) => Seq(live, next, live.suffix(".old")) } ++ retire
+  }
 
-  /** Complete a marker-announced swap, per tree and idempotently: move
-    * live aside, promote `.next`, drop the `.old`. Each step only fires
-    * from the state the previous one leaves, so re-running after a
-    * crash at ANY point finishes exactly the remaining steps. A tree
-    * with no `.next` is left as-is (a compaction may rewrite a subset
-    * of the trees). `retire` trees are deleted last, still under the
-    * marker — their content is folded into the promoted trees, so they
-    * must not survive the swap (a leftover negative partial would
+  /** A single-tree swap: the scratch sibling `<live>.folding` replaces
+    * `live`, announced by the marker `name` inside it. */
+  def folding(live: Path, name: String, retire: Seq[Path] = Nil): Swap = {
+    val scratch = live.suffix(".folding")
+    Swap(Seq((live, scratch)), retire, new Path(scratch, name))
+  }
+
+  /** Start a rewrite: complete a marked swap, then discard every
+    * unmarked `next` tree (an unfinished earlier rewrite). */
+  def begin(fs: FileSystem, sw: Swap): Unit = {
+    resolve(fs, sw)
+    sw.trees.foreach { case (_, next) => fs.delete(next, true) }
+  }
+
+  /** Announce the fully written `next` trees, then complete the swap. */
+  def commit(fs: FileSystem, sw: Swap): Unit = {
+    fs.create(sw.marker).close()
+    complete(fs, sw)
+  }
+
+  /** Complete an announced swap, per tree: move live aside to `.old`,
+    * promote `next`, drop `.old`. Each step only fires from the state
+    * the previous one leaves, so re-running after a crash at ANY point
+    * finishes exactly the remaining steps. A tree with no `next` is
+    * left as-is (a compaction may rewrite a subset of the trees). The
+    * `retire` trees are deleted last, still under the marker — their
+    * content is folded into the promoted trees, so they must not
+    * survive the swap (a leftover negative partial would
     * double-subtract). */
-  def completeSwap(fs: FileSystem, path: String, trees: Seq[String],
-                   retire: Seq[String], marker: String): Unit = {
-    trees.foreach { t =>
-      val (live, next, old) = (livePath(path, t), nextPath(path, t), oldPath(path, t))
+  def complete(fs: FileSystem, sw: Swap): Unit = {
+    sw.trees.foreach { case (live, next) =>
+      val old = live.suffix(".old")
       if (fs.exists(next)) {
         if (fs.exists(live)) {
           fs.delete(old, true)              // stale .old from a doubly-crashed swap
@@ -65,21 +102,133 @@ private[operators] object StoreSwap {
       }
       fs.delete(old, true)
     }
-    retire.foreach(t => fs.delete(livePath(path, t), true))
-    fs.delete(markerPath(path, marker), false)
-    ()
+    sw.retire.foreach(fs.delete(_, true))
+    sw.markers.foreach(fs.delete(_, false))
   }
 
   /** Converge a crash-interrupted rewrite: with the marker present the
-    * `.next` trees are complete, so finish the swap; without it any
-    * `.next` debris is an unfinished build and the live trees are
-    * authoritative. Called by every read AND every mutation entry
-    * point — a mutation that skipped it could write into a live tree
-    * the next resolve's swap deletes (the r18 `appendBatch` window). */
-  def resolve(fs: FileSystem, path: String, trees: Seq[String],
-              retire: Seq[String], marker: String): Unit =
-    if (fs.exists(markerPath(path, marker)))
-      completeSwap(fs, path, trees, retire, marker)
+    * `next` trees are complete, so finish the swap; without it the live
+    * trees are authoritative and any `next` debris is left alone.
+    * Called by every read AND every mutation entry point — a mutation
+    * that skipped it could write into a live tree the next resolve
+    * moves aside and deletes. */
+  def resolve(fs: FileSystem, sw: Swap): Unit =
+    if (sw.markers.exists(fs.exists)) complete(fs, sw)
+
+  /** Delete each path, recursively (the stores' `drop` verb). */
+  def drop(s: SparkSession, paths: Path*): Unit =
+    paths.foreach(p => p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true))
+
+  /** The file that announces a marker batch, written last. */
+  val BatchReady = "_GRAFT_DELETE_READY"
+
+  /** READY-announced marker batches `root/<prefix><id>` (takedowns
+    * `deletes/d$id`, term purges `termpurges/t$id`). */
+  final case class Batches(root: String, prefix: String) {
+
+    /** Names of the batch dirs holding [[BatchReady]] with id ≤
+      * `bound` — the only batches any read may see. */
+    def ready(s: SparkSession, bound: Long): Seq[String] = {
+      val dir = new Path(root)
+      val fs = fsOf(s, root)
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+        .filter(n => n.startsWith(prefix) &&
+          n.drop(prefix.length).toLongOption.exists(_ <= bound) &&
+          fs.exists(new Path(dir, s"$n/$BatchReady")))
+    }
+
+    /** The READY batches with id ≤ `bound` as one relation. */
+    def read(s: SparkSession, bound: Long): Option[DataFrame] =
+      readDirs(s, root, ready(s, bound))
+
+    /** Write batch `id` once: `write` gets the batch dir and runs only
+      * while that dir holds no READY file, which lands after it. A
+      * replay of an announced id is a no-op — rewriting it would delete
+      * the READY file first and un-publish the applied batch — and a
+      * batch that crashed mid-write stays invisible. */
+    def announceOnce(fs: FileSystem, id: Long)(write: String => Unit): Unit = {
+      val dir = s"$root/$prefix$id"
+      val ready = new Path(dir, BatchReady)
+      if (!fs.exists(ready)) {
+        write(dir)
+        fs.create(ready).close()
+      }
+    }
+  }
+
+  /** The named dirs under `root` as ONE multi-path relation — a union
+    * of one read per dir would bill every read O(#dirs) in plan size
+    * and file listings. */
+  def readDirs(s: SparkSession, root: String, names: Seq[String]): Option[DataFrame] =
+    Option.when(names.nonEmpty)(ParquetFooters.readParquet(s, names.map(n => s"$root/$n"): _*))
+
+  /** Pre-versioning rows and markers carry no `op` column; they are all
+    * operation 0 — the versioned semantics degrade to exactly the old
+    * permanent-takedown behaviour. */
+  def withOp(df: DataFrame): DataFrame =
+    if (df.columns.contains("op")) df else df.withColumn("op", lit(0L))
+
+  /** Kill every row VERSION a marker shadows: a row is dead iff some
+    * marker matches its `key` with marker.op ≥ row.op — so a key
+    * re-added under a LATER op than its takedown serves again (the
+    * re-crawl / re-embed lifecycle), while earlier versions stay dead.
+    * Takedown sets are tiny, so the markers broadcast and the store
+    * side never shuffles. */
+  def killVersions(rows: DataFrame, markers: Option[DataFrame], key: String): DataFrame = {
+    val raw = withOp(rows)
+    markers.fold(raw) { m0 =>
+      val m = withOp(m0).select(col(key).as("__del_key"), col("op").as("__del_op"))
+      raw.join(broadcast(m),
+        raw(key) === col("__del_key") && raw("op") <= col("__del_op"), "left_anti")
+    }
+  }
+
+  /** The lifecycle of a base/batch index store at `path`
+    * ([[PostingsStore]], [[VectorStore]]): the data `trees` build and
+    * compact swap, the marker `retire` trees a compaction folds, and
+    * the column its `deletes/d$id` takedown markers kill. */
+  final case class IndexStore(trees: Seq[String], retire: Seq[String], killKey: String) {
+
+    def swap(path: String): Swap = Swap(
+      trees.map(t => (new Path(s"$path/$t"), new Path(s"$path/$t.next"))),
+      retire.map(t => new Path(s"$path/$t")),
+      new Path(s"$path/_GRAFT_COMPACT_READY"))
+
+    def deletes(path: String): Batches = Batches(s"$path/deletes", "d")
+
+    /** `path/tree` as of operation `bound` (every source at
+      * `Long.MaxValue`), after converging the store. */
+    def tree(s: SparkSession, path: String, tree: String, bound: Long): DataFrame = {
+      resolve(fsOf(s, path), swap(path))
+      readTreeAsOf(s, treeSources(s, path, tree), s"$path/$tree", bound)
+    }
+
+    /** [[tree]] minus the versions the READY takedown markers with id ≤
+      * `bound` shadow. */
+    def live(s: SparkSession, path: String, tree: String, bound: Long): DataFrame =
+      killVersions(this.tree(s, path, tree, bound), deletes(path).read(s, bound), killKey)
+
+    /** Has the BUILD corpus drifted from the identity `path/meta`
+      * recorded? The store's own mutations do not count; upstream drift
+      * of the corpus a caller would rebuild from does. File-backed
+      * corpora compare the full listing+plan fingerprint
+      * ([[TableMemo.contentKey]] — catches rewrites in place, added
+      * files, and a different derivation over the same files);
+      * in-memory corpora degrade to a row-count compare (weaker: a
+      * same-size content swap passes). A store without a meta tree is
+      * stale — unknown provenance is stale by definition. */
+    def isStale(s: SparkSession, path: String, corpus: DataFrame): Boolean = {
+      resolve(fsOf(s, path), swap(path))
+      val srcs = treeSources(s, path, "meta")
+      srcs.isEmpty || {
+        val m = readTree(s, srcs, s"$path/meta").select("n_rows", "fingerprint").collect()(0)
+        val (n0, fp0) = (m.getLong(0), m.getString(1))
+        val fpNow = TableMemo.contentKey(corpus).getOrElse("")
+        if (fp0.nonEmpty && fpNow.nonEmpty) fpNow != fp0 else corpus.count() != n0
+      }
+    }
+  }
 
   /** One data source of a store tree: `op` its operation id for as-of
     * bounds, `key` its logical identity for sidecar-coverage compare

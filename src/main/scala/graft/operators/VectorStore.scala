@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreSwap.BaseDir
+
 /**
  * Materialized ANN (IVF) index store — the [[PostingsStore]] discipline
  * on the VECTOR surface: the deterministic IVF index
@@ -55,17 +57,8 @@ import org.apache.spark.sql.functions._
  */
 object VectorStore {
 
-  private val CompactReady = "_GRAFT_COMPACT_READY"
-  private val DeleteReady = "_GRAFT_DELETE_READY"
-  private val BaseDir = StoreSwap.BaseDir
-  private val Trees = Seq("centroids", "assign", "meta")
-  private val RetireTrees = Seq("deletes")
-
-  private def fsOf(s: SparkSession, path: String) = StoreSwap.fsOf(s, path)
-  private def resolve(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    StoreSwap.resolve(fs, path, Trees, RetireTrees, CompactReady)
-  private def completeSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    StoreSwap.completeSwap(fs, path, Trees, RetireTrees, CompactReady)
+  private val Store = StoreSwap.IndexStore(
+    trees = Seq("centroids", "assign", "meta"), retire = Seq("deletes"), killKey = "vec_id")
 
   /** Build (or atomically REBUILD) the store at `path`: centroids,
     * assignment, and the build-corpus identity are written under
@@ -79,9 +72,9 @@ object VectorStore {
   def build(emb: DataFrame, path: String, nCentroids: Int = 0,
             lloydIters: Int = 0): Unit = {
     val s = emb.sparkSession
-    val fs = fsOf(s, path)
-    resolve(fs, path) // converge an interrupted swap BEFORE overwriting
-    Trees.foreach(t => fs.delete(StoreSwap.nextPath(path, t), true))
+    val fs = StoreSwap.fsOf(s, path)
+    val swap = Store.swap(path)
+    StoreSwap.begin(fs, swap) // converge an interrupted swap BEFORE overwriting
     val seeds = Similarity.ivfCentroids(emb,
       Similarity.resolveCentroids(emb, nCentroids))
     val cents =
@@ -110,8 +103,7 @@ object VectorStore {
     Seq((nRows, TableMemo.contentKey(emb).getOrElse("")))
       .toDF("n_rows", "fingerprint")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta.next/$BaseDir")
-    fs.create(StoreSwap.markerPath(path, CompactReady)).close()
-    completeSwap(fs, path)
+    StoreSwap.commit(fs, swap)
   }
 
   /** APPEND one batch: assign the new vectors to the EXISTING centroids
@@ -129,7 +121,7 @@ object VectorStore {
   def appendBatch(emb: DataFrame, path: String, batchId: Long,
                   micro: Boolean = true): Unit = {
     val s = emb.sparkSession
-    resolve(fsOf(s, path), path)
+    StoreSwap.resolve(StoreSwap.fsOf(s, path), Store.swap(path))
     val assigned = Similarity.ivfAssign(emb, centroids(s, path))
       .withColumn("op", lit(batchId))
     // `micro` (the foreachBatch default): one cell-sorted file per
@@ -158,16 +150,14 @@ object VectorStore {
     * is a no-op, [[compact]] folds markers physically. */
   def deleteVecs(s: SparkSession, path: String, ids: DataFrame,
                  deleteId: Long): Unit = {
-    val fs = fsOf(s, path)
-    resolve(fs, path)
-    if (fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/deletes/d$deleteId/$DeleteReady"))) return
-    ids.select(col("vec_id").cast("long").as("vec_id"))
-      .filter(col("vec_id").isNotNull).distinct()
-      .withColumn("op", lit(deleteId))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/deletes/d$deleteId")
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/deletes/d$deleteId/$DeleteReady")).close()
+    val fs = StoreSwap.fsOf(s, path)
+    StoreSwap.resolve(fs, Store.swap(path))
+    Store.deletes(path).announceOnce(fs, deleteId) { dir =>
+      ids.select(col("vec_id").cast("long").as("vec_id"))
+        .filter(col("vec_id").isNotNull).distinct()
+        .withColumn("op", lit(deleteId))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   /** Fold batches and takedown markers back to ONE globally
@@ -180,15 +170,17 @@ object VectorStore {
     * since the last compaction. */
   def compact(s: SparkSession, path: String): Unit = {
     compactBuild(s, path)
-    completeSwap(fsOf(s, path), path)
+    StoreSwap.complete(StoreSwap.fsOf(s, path), Store.swap(path))
   }
 
-  /** [[compact]]'s build half (split out for the crash specs): write
-    * the folded `.next` assignment, then the marker. */
+  /** [[compact]]'s build half (split out for the crash specs): discard
+    * every unannounced `.next` tree — a crashed rebuild's centroids
+    * promoted over this assignment would serve wrong neighbours — then
+    * write the folded `.next` assignment and the marker. */
   private[operators] def compactBuild(s: SparkSession, path: String): Unit = {
-    val fs = fsOf(s, path)
-    resolve(fs, path)
-    fs.delete(StoreSwap.nextPath(path, "assign"), true) // unfinished debris
+    val fs = StoreSwap.fsOf(s, path)
+    val swap = Store.swap(path)
+    StoreSwap.begin(fs, swap)
     // sampling + write otherwise re-read the whole store THROUGH the
     // marker anti-join twice — the [[build]] persist discipline
     val live = assignment(s, path)
@@ -199,20 +191,17 @@ object VectorStore {
         .sortWithinPartitions("centroid_id", "vec_id")
         .write.mode("overwrite").parquet(s"$path/assign.next/$BaseDir")
     } finally { live.unpersist(); () }
-    fs.create(StoreSwap.markerPath(path, CompactReady)).close()
+    fs.create(swap.marker).close()
   }
 
   /** The stored centroid table, driver-side (model-scale by the IVF
     * contract — the same collect [[Similarity.ivfCentroids]] performs
     * at build time). */
-  def centroids(s: SparkSession, path: String): Seq[(Int, Array[Long])] = {
-    resolve(fsOf(s, path), path)
-    StoreSwap.readTree(s, StoreSwap.treeSources(s, path, "centroids"),
-        s"$path/centroids")
+  def centroids(s: SparkSession, path: String): Seq[(Int, Array[Long])] =
+    Store.tree(s, path, "centroids", Long.MaxValue)
       .select("centroid_id", "v").collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
-  }
 
   /** The LIVE assignment view: the union of base + batch subtrees minus
     * versioned takedown markers — what every serve and [[compact]]
@@ -223,52 +212,13 @@ object VectorStore {
   /** [[assignment]] AS OF an operation bound: batches with id ≤ bound,
     * minus READY markers with id ≤ bound — pure path selection, the
     * [[PostingsStore.postingsAsOf]] discipline. */
-  def assignmentAsOf(s: SparkSession, path: String, bound: Long): DataFrame = {
-    resolve(fsOf(s, path), path)
-    val srcs = StoreSwap.treeSources(s, path, "assign")
-    val raw = withOp(StoreSwap.readTreeAsOf(s, srcs, s"$path/assign", bound))
-    applyMarkers(raw, deleteMarkers(s, path, bound))
-  }
+  def assignmentAsOf(s: SparkSession, path: String, bound: Long): DataFrame =
+    Store.live(s, path, "assign", bound)
 
   /** The live VECTORS — the corpus a re-cluster ([[build]]) would
     * re-train on. */
   def vectors(s: SparkSession, path: String): DataFrame =
     assignment(s, path).select("vec_id", "v")
-
-  /** Pre-lifecycle stores carry no `op` column; their rows are all
-    * operation 0. */
-  private def withOp(df: DataFrame): DataFrame =
-    if (df.columns.contains("op")) df else df.withColumn("op", lit(0L))
-
-  /** Kill every assignment VERSION a marker shadows: row dead iff some
-    * marker matches its vec_id with marker.op >= row.op. */
-  private def applyMarkers(raw: DataFrame,
-                           markers: Option[DataFrame]): DataFrame =
-    markers match {
-      case Some(m0) =>
-        val m = m0.select(col("vec_id").as("__del_vec"), col("op").as("__del_op"))
-        raw.join(broadcast(m),
-          raw("vec_id") === col("__del_vec") && raw("op") <= col("__del_op"),
-          "left_anti")
-      case None => raw
-    }
-
-  /** READY delete batches with id ≤ `bound` (the only ones any read may
-    * see — [[deleteVecs]]'s crash contract), as one multi-path read. */
-  private def deleteMarkers(s: SparkSession, path: String,
-                            bound: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/deletes")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(root)) Seq.empty[String]
-      else fs.listStatus(root).map(_.getPath)
-        .filter(p => p.getName.startsWith("d") &&
-          p.getName.drop(1).toLong <= bound &&
-          fs.exists(new org.apache.hadoop.fs.Path(p, DeleteReady)))
-        .map(_.getName).toSeq
-    if (dirs.isEmpty) None
-    else Some(ParquetFooters.readParquet(s, dirs.map(d => s"$path/deletes/$d"): _*))
-  }
 
   /** [[Similarity.ivfTopK]] served from the store. */
   def topK(s: SparkSession, path: String, queries: DataFrame, k: Int,
@@ -325,36 +275,13 @@ object VectorStore {
     Similarity.ivfServe(assigned, cents, queries, k, nProbe)
   }
 
-  /** Has the BUILD corpus changed since [[build]] captured it? — the
-    * rebuild-freshness contract: the store serves the corpus as indexed
-    * (plus its own [[appendBatch]]/[[deleteVecs]] mutations, which are
-    * store-side and do NOT make it stale); when the UPSTREAM corpus a
-    * caller would rebuild from has drifted, this says so instead of the
-    * pre-r19 behavior (silently serving stale neighbors with no signal
-    * at all). File-backed corpora compare the full listing+plan
-    * fingerprint ([[TableMemo.contentKey]] — catches rewrites in place,
-    * added files, and a different derivation over the same files);
-    * in-memory corpora degrade to a row-count compare (documented
-    * weaker: a same-size content swap passes). A store predating the
-    * meta tree answers `true` — unknown provenance is stale by
-    * definition. */
-  def isStale(s: SparkSession, path: String, emb: DataFrame): Boolean = {
-    resolve(fsOf(s, path), path)
-    val srcs = StoreSwap.treeSources(s, path, "meta")
-    if (srcs.isEmpty) return true
-    val m = StoreSwap.readTree(s, srcs, s"$path/meta")
-      .select("n_rows", "fingerprint").collect()(0)
-    val (n0, fp0) = (m.getLong(0), m.getString(1))
-    val fpNow = TableMemo.contentKey(emb).getOrElse("")
-    if (fp0.nonEmpty && fpNow.nonEmpty) fpNow != fp0
-    else emb.count() != n0
-  }
+  /** Has the BUILD corpus changed since [[build]] captured it? The
+    * store's own [[appendBatch]]/[[deleteVecs]] mutations do not count
+    * — see [[StoreSwap.IndexStore.isStale]]. */
+  def isStale(s: SparkSession, path: String, emb: DataFrame): Boolean =
+    Store.isStale(s, path, emb)
 
   /** Drop the store. */
-  def drop(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    ()
-  }
+  def drop(s: SparkSession, path: String): Unit =
+    StoreSwap.drop(s, new org.apache.hadoop.fs.Path(path))
 }

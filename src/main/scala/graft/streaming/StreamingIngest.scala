@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.GraftFunctions.bucket_key
-import graft.operators.{ParquetFooters, PointStore}
+import graft.operators.{ParquetFooters, PointStore, StoreSwap}
+import graft.operators.StoreSwap.fsOf
 
 /**
  * Online ingest — the Structured Streaming re-expression of the
@@ -117,7 +118,7 @@ object StreamingIngest {
     // new batches land — otherwise a later recovery would swap a stale
     // snapshot over them
     recoverRecluster(events.sparkSession, storePath)
-    recoverSwap(fsOf(events.sparkSession, statsPath), new Path(statsPath))
+    StoreSwap.resolve(fsOf(events.sparkSession, statsPath), statsSwap(statsPath))
     // ... then converge minor compactions interrupted by a crash: a
     // split that died between publishing its set and deleting its source
     // would otherwise leave persistent DUPLICATE rows (nothing revisits
@@ -185,17 +186,20 @@ object StreamingIngest {
    */
   def mergeBatchStats(spark: SparkSession, batchPts: DataFrame, batchId: Long,
                       statsPath: String, keyCol: String = "zkey"): Unit = {
-    val fs = fsOf(spark, statsPath)
-    recoverSwap(fs, new Path(statsPath))
+    StoreSwap.resolve(fsOf(spark, statsPath), statsSwap(statsPath))
     batchStats(batchPts, keyCol).coalesce(1)
       .write.mode("overwrite").parquet(s"$statsPath/delta=$batchId")
     foldStats(spark, statsPath, keepId = batchId)
   }
 
-  /** Aggregated fine-bucket stats across all deltas (metadata-scale). */
-  def fineStats(spark: SparkSession, statsPath: String): DataFrame =
+  /** Aggregated fine-bucket stats across all deltas (metadata-scale).
+    * Like every read it completes an interrupted fold or rebuild first
+    * — the swap moves the table aside before promoting its scratch. */
+  def fineStats(spark: SparkSession, statsPath: String): DataFrame = {
+    StoreSwap.resolve(fsOf(spark, statsPath), statsSwap(statsPath))
     ParquetFooters.readParquet(spark, statsPath)
       .groupBy("bucket_key").agg(sum("bucket_size").as("bucket_size"))
+  }
 
   /** The adaptive (variable-depth, maySplit-rolled) view of the
     * incremental stats table — same shape as
@@ -226,20 +230,18 @@ object StreamingIngest {
   def rebuildStats(spark: SparkSession, storePath: String, statsPath: String,
                    keyCol: String = "zkey"): Unit = {
     val fs = fsOf(spark, statsPath)
-    val target = new Path(statsPath)
-    recoverSwap(fs, target)
-    val scratch = new Path(statsPath + SwapSuffix)
-    fs.delete(scratch, true)
+    val swap = statsSwap(statsPath)
+    StoreSwap.begin(fs, swap)
     batchStats(ParquetFooters.readParquet(spark, storePath), keyCol).coalesce(1)
-      .write.parquet(new Path(scratch, "delta=base").toString)
-    fs.create(new Path(scratch, ReadyMarker)).close()
-    completeSwap(fs, target, scratch)
+      .write.parquet(new Path(swap.trees.head._2, "delta=base").toString)
+    StoreSwap.commit(fs, swap)
   }
 
   /** Fold all committed deltas (id ≠ `keepId`) into one base partition
-    * once more than `StatsFoldLimit` accumulate, via a marker-guarded
-    * whole-dir swap (crash-convergent; single maintenance writer, same
-    * as every other layout mutation here). */
+    * once more than `StatsFoldLimit` accumulate, via the stats table's
+    * marker-guarded whole-dir swap ([[statsSwap]]; crash-convergent;
+    * single maintenance writer, same as every other layout mutation
+    * here). */
   private def foldStats(spark: SparkSession, statsPath: String, keepId: Long): Unit = {
     val fs = fsOf(spark, statsPath)
     val root = new Path(statsPath)
@@ -249,8 +251,9 @@ object StreamingIngest {
     if (deltas.length <= StatsFoldLimit) return
     val keep = s"delta=$keepId"
     val foldable = deltas.filterNot(_.getName == keep)
-    val scratch = new Path(statsPath + SwapSuffix)
-    fs.delete(scratch, true)
+    val swap = statsSwap(statsPath)
+    val scratch = swap.trees.head._2
+    StoreSwap.begin(fs, swap)
     ParquetFooters.readParquet(spark, foldable.map(_.toString).toIndexedSeq: _*)
       .groupBy("bucket_key").agg(sum("bucket_size").as("bucket_size"))
       .coalesce(1).write.parquet(new Path(scratch, "delta=base").toString)
@@ -259,41 +262,12 @@ object StreamingIngest {
       ParquetFooters.readParquet(spark, d.toString).coalesce(1)
         .write.parquet(new Path(scratch, keep).toString)
     }
-    fs.create(new Path(scratch, ReadyMarker)).close()
-    completeSwap(fs, root, scratch)
+    StoreSwap.commit(fs, swap)
   }
 
-  // ---------------------------------------------------------------------
-  // Marker-guarded directory swap (shared by stats fold/rebuild): the
-  // swap cannot be one atomic rename, so a `_READY` marker makes every
-  // crash state recoverable — scratch without marker = unfinished build
-  // (discard), scratch with marker = finished (complete the swap).
-  // ---------------------------------------------------------------------
-
-  private val ReadyMarker = "_GRAFT_SWAP_READY"
-  private val SwapSuffix = ".folding"
-
-  private def completeSwap(fs: FileSystem, target: Path, scratch: Path): Unit = {
-    fs.delete(target, true)
-    if (!fs.rename(scratch, target))
-      throw new java.io.IOException(s"swap rename $scratch -> $target failed")
-    fs.delete(new Path(target, ReadyMarker), false)
-    ()
-  }
-
-  private def recoverSwap(fs: FileSystem, target: Path): Unit = {
-    val scratch = new Path(target.toString + SwapSuffix)
-    if (fs.exists(scratch)) {
-      if (fs.exists(new Path(scratch, ReadyMarker))) completeSwap(fs, target, scratch)
-      else fs.delete(scratch, true)
-    }
-    if (fs.exists(new Path(target, ReadyMarker)))
-      fs.delete(new Path(target, ReadyMarker), false)
-    ()
-  }
-
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The stats table's fold/rebuild swap. */
+  private def statsSwap(statsPath: String): StoreSwap.Swap =
+    StoreSwap.folding(new Path(statsPath), "_GRAFT_SWAP_READY")
 
   // ---------------------------------------------------------------------
   // Major compaction (recluster)

@@ -193,6 +193,26 @@ class VectorStoreSpec extends SparkSpec {
     VectorStore.drop(spark, stage)
   }
 
+  test("compact discards a crashed rebuild's unannounced centroids") {
+    import org.apache.hadoop.fs.Path
+    val (e, qs) = fixture
+    val tmp = java.nio.file.Files.createTempDirectory("graft-vstore-cdebris").toString
+    val stage = java.nio.file.Files.createTempDirectory("graft-vstore-cstage").toString
+    val fs = new Path(tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    VectorStore.build(e, tmp, nCentroids = 8)
+    val before = rows(VectorStore.topK(spark, tmp, qs, 5, nProbe = 2))
+    // a rebuild over another corpus crashed after its first write,
+    // centroids.next, and before its marker
+    VectorStore.build(e.withColumn("v", expr("transform(v, x -> 1000 - x)")), stage,
+      nCentroids = 3)
+    assert(fs.rename(new Path(s"$stage/centroids"), new Path(s"$tmp/centroids.next")))
+    VectorStore.compact(spark, tmp)
+    assert(rows(VectorStore.topK(spark, tmp, qs, 5, nProbe = 2)) === before)
+    assert(!fs.exists(new Path(s"$tmp/centroids.next")))
+    VectorStore.drop(spark, tmp)
+    VectorStore.drop(spark, stage)
+  }
+
   test("deleteVecs crash/replay: half-written batches invisible, READY ids final") {
     import org.apache.hadoop.fs.Path
     val (e, qs) = fixture

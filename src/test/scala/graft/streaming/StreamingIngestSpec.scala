@@ -98,6 +98,30 @@ class StreamingIngestSpec extends SparkSpec {
     assert(deltas <= 66, s"unbounded deltas: $deltas")
   }
 
+  test("a stats read completes a fold that crashed after moving the table aside") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val stats = tmp("stats-crash") + "/stats"
+    val pts = PointStore.points((0L until 400L)
+      .map(i => (i, (i * 37 % 1009).toInt, (i * 53 % 997).toInt)).toDF("pid", "px", "py"),
+      col("pid"), col("px"), col("py"))
+    StreamingIngest.mergeBatchStats(spark, pts.filter(col("id") < 100), 0L, stats)
+    // the crash state: the folded table sits complete in the marked
+    // scratch, and the live table was already deleted
+    val scratch = new Path(stats + ".folding")
+    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StreamingIngest.batchStats(pts).coalesce(1).write.parquet(s"$scratch/delta=base")
+    fs.create(new Path(scratch, "_GRAFT_SWAP_READY")).close()
+    fs.delete(new Path(stats), true)
+    def view(df: => org.apache.spark.sql.DataFrame) =
+      df.select("bucket_key", "prefix_len", "bucket_size").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val folded = view(PointStore.adaptiveStats(pts, threshold = 50L,
+      statsDepth = StreamingIngest.StatsDepth))
+    assert(view(StreamingIngest.adaptiveStatsView(spark, stats, threshold = 50L)) === folded)
+    assert(!fs.exists(scratch) && !fs.exists(new Path(stats, "_GRAFT_SWAP_READY")))
+  }
+
   test("adaptiveStatsView bounds its driver collect: coarsens under the row cap") {
     import spark.implicits._
     val stats = tmp("stats-cap") + "/stats"
