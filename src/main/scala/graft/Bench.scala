@@ -44,7 +44,7 @@ import graft.zorder.IntRange
  */
 object Bench {
 
-  private final case class Meas(sec: Double, gcSec: Double, leakedRdds: Int,
+  private[graft] final case class Meas(sec: Double, gcSec: Double, leakedRdds: Int,
     setupSec: Double = 0.0)
 
   /** How many child JVMs run at once in fork mode (1 = the round-12
@@ -417,6 +417,36 @@ object Bench {
   /** bench.json + the chunked stdout protocol. */
   private def report(results: Seq[(String, Meas)], fallbacks: Seq[String],
       sfDir: String, fork: Boolean): Unit = {
+    val (json, lines) =
+      reportLines(results, fallbacks, sfDir, fork, benchConcurrency, benchPinned)
+    // the full single-line maps land in a FILE (no size window there);
+    // stdout can be polluted by build-tool log prefixes, and the file
+    // is unambiguous for any reader
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), json)
+    catch { case _: Throwable => () }
+    // print LAST, after any Spark shutdown chatter, bare on stdout
+    lines.foreach(println)
+    System.out.flush()
+  }
+
+  /**
+   * The `bench.json` content and the stdout lines of a report — pure, so
+   * the stdout protocol is spec-checked.
+   *
+   * STDOUT protocol: a tail reader keeps only the last 2000 chars of
+   * stdout, so one long line (a 260-key map is ~6 KB) pushes its own opening
+   * brace out of the window and parses as nothing. The consolidated
+   * one-line map — the `bench.json` total line, renamed `total_full` —
+   * is printed FIRST, for a full-stdout reader. Then every map follows
+   * CHUNKED into <=1.4 KB self-contained JSON lines
+   * (`{"metric":"bench_part","i":k,"n":N,"queries":{...}}` — union the
+   * chunks' maps to reconstruct), the `bench_part` chunks last, so the
+   * tail holds whole chunks, and the VERY LAST line is a compact
+   * ~120-byte summary that always fits the window.
+   */
+  private[graft] def reportLines(results: Seq[(String, Meas)], fallbacks: Seq[String],
+      sfDir: String, fork: Boolean, concurrency: Int,
+      pinned: Boolean): (String, Seq[String]) = {
     // Locale.ROOT: a comma-decimal default locale would break the JSON
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def jmap(f: Meas => String): String =
@@ -438,9 +468,6 @@ object Bench {
         "\"" + k + "\":{\"setup_sec\":" + num(m.setupSec) +
           ",\"steady_sec\":" + num(m.sec) + "}"
       }.mkString("{", ",", "}")
-    // the full single-line maps land in a FILE (no size window there);
-    // stdout can be polluted by build-tool log prefixes, and the file
-    // is unambiguous for any reader
     // per-key measurement annotations: runs > default, and the measured
     // residual run-to-run band (so a reader of one artifact sees the
     // distribution, not just the draw)
@@ -449,19 +476,9 @@ object Bench {
     val bands = ExtraRunKeys.toSeq.sorted
       .map(k => "\"" + k + "\":20").mkString("{", ",", "}")
     val meta =
-      s"""{"metric":"bench_meta","fork":$fork,"concurrency":$benchConcurrency,"pinned":$benchPinned,"fallback":$fb,"extra_runs":$extraRuns,"variance_band_pct":$bands,"gc_sec":$gcs,"leaked_rdds":$leaks,"setup_sec":$setups,"stream_split":$streamSplit}"""
-    val full =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"),
-      meta + "\n" + full + "\n")
-    catch { case _: Throwable => () }
-    // STDOUT protocol: the driver captures only a ~2 KB tail of stdout,
-    // so one long line (the 124-key timings map is ~3.7 KB) pushes its
-    // own opening brace out of the window and parses as nothing. Emit
-    // every map CHUNKED into <=1.4 KB self-contained JSON lines
-    // ({"metric":"bench_part","i":k,"n":N,"queries":{...}} — union the
-    // chunks' maps to reconstruct), and make the VERY LAST line a
-    // compact ~120-byte summary that always fits the tail window.
+      s"""{"metric":"bench_meta","fork":$fork,"concurrency":$concurrency,"pinned":$pinned,"fallback":$fb,"extra_runs":$extraRuns,"variance_band_pct":$bands,"gc_sec":$gcs,"leaked_rdds":$leaks,"setup_sec":$setups,"stream_split":$streamSplit}"""
+    def full(metric: String): String =
+      s"""{"metric":"$metric","value":${num(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     def chunkLines(metric: String, field: String, entries: Seq[String],
         extra: String = "", limit: Int = 1400): Seq[String] = {
       val groups = scala.collection.mutable.ArrayBuffer(
@@ -489,24 +506,7 @@ object Bench {
         .map { case (k, m) => "\"" + k + "\":" + num(m.setupSec) }) ++
       chunkLines("bench_part", "queries", entries(m => num(m.sec)))
     val summary =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","n_keys":${results.size},"n_parts":${lines.size},"fork":$fork,"conc":$benchConcurrency,"sf":"$sfDir"}"""
-    // print LAST, after any Spark shutdown chatter, bare on stdout, with
-    // the compact summary as the very last line (bench_part chunks
-    // directly above it so the tail window catches the newest parts too).
-    // r20 (VERDICT r19 §2): the CONSOLIDATED one-line total JSON — the
-    // driver contract's `{"metric":"total",...,"queries":{...}}` shape,
-    // byte-identical to the `bench.json` line — is now ALSO printed to
-    // stdout in BOTH fork and non-fork mode, directly above the compact
-    // summary, so a full-stdout reader gets the per-query map without
-    // reassembling bench_part chunks. The compact summary stays the
-    // very last line because the driver's artifact keeps a 2000-char
-    // stdout tail (BENCH_r10: a >2 KB final line loses its own opening
-    // brace and the TOTAL parses as nothing — that failure mode must
-    // never come back); a ~6 KB 260-key line can only be read by a
-    // full-stdout consumer, and now it can be.
-    lines.foreach(println)
-    println(full)
-    println(summary)
-    System.out.flush()
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","n_keys":${results.size},"n_parts":${lines.size},"fork":$fork,"conc":$concurrency,"sf":"$sfDir"}"""
+    (meta + "\n" + full("total") + "\n", full("total_full") +: lines :+ summary)
   }
 }

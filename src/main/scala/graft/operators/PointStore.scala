@@ -386,7 +386,7 @@ class PointStore(spark: SparkSession, path: String) {
                                    seqCols: Seq[String]): DataFrame = {
     val rectCols = Seq("xmin", "xmax", "ymin", "ymax")
     val sel = markers.select((rectCols ++ seqCols).map(col): _*)
-    val rects = sel.limit(MaxCompiledRangeMarkers + 1).collect()
+    val rects = ParquetFooters.collectSmall(sel.limit(MaxCompiledRangeMarkers + 1))
     if (rects.isEmpty) pts
     else if (rects.length <= MaxCompiledRangeMarkers) {
       val dead = rects.map { r =>

@@ -414,7 +414,7 @@ object PostingsStore {
     markers match {
       case None => df
       case Some(m) =>
-        val terms = m.limit(InlinePurgeTermCap + 1).collect().map(_.getString(0))
+        val terms = ParquetFooters.collectSmall(m.limit(InlinePurgeTermCap + 1)).map(_.getString(0))
         if (terms.isEmpty) df
         else if (terms.length <= InlinePurgeTermCap)
           df.filter(!col("term").isInCollection(terms))
@@ -490,7 +490,15 @@ object PostingsStore {
   def bm25DocTopKAsOf(s: SparkSession, path: String, queries: DataFrame,
                       k: Int, bound: Long): DataFrame =
     TextAnalysis.bm25DocTopKFrom(queries, postingsAsOf(s, path, bound),
-      statsAsOf(s, path, bound), k, broadcastQueries = true)
+      servedStats(s, path, bound), k, broadcastQueries = true)
+
+  /** [[statsAsOf]] for a serve: the raw partials through the driver-side
+    * row cache ([[ParquetFooters.collectSmall]]), folded on the driver
+    * into a one-row local frame — a warm serve reads its stats with no
+    * Spark job. */
+  private def servedStats(s: SparkSession, path: String, bound: Long): DataFrame =
+    TextAnalysis.bm25StatsOf(s,
+      ParquetFooters.collectSmall(rawPartials(s, path, bound).select("n_docs", "dl_sum")).toSeq)
 
   /** Drop the store (the reference's `drop` verb, `Client.java:217-224`,
     * for the text index). */

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, MapType, StructField, StructType}
 
 /**
  * Similarity search over an embedding column (`Array[Float]`) — the
@@ -759,12 +763,6 @@ object Similarity {
     * the shape the 16-centroid oracle gates pin. Past it: two-level
     * [[graft.functions.DotTopKGrouped]] over the top-`nProbe` coarse
     * groups, ties (dot desc, cid asc) — O(√nCentroids-ish) per row. */
-  /** [[probeList]], package-visible for [[VectorStore]]'s pushable
-    * probe-cell pre-filter. */
-  private[operators] def probeCells(cents: Seq[(Int, Array[Long])],
-                                    nProbe: Int): Column =
-    probeList(cents, nProbe)
-
   private def probeList(cents: Seq[(Int, Array[Long])], nProbe: Int): Column =
     if (cents.length <= FlatCentroidMax) {
       val scored = cents.map { case (cid, c) =>
@@ -795,29 +793,73 @@ object Similarity {
               lloydIters: Int = 0): DataFrame = {
     val seeds = ivfCentroids(emb, resolveCentroids(emb, nCentroids))
     val cents = if (lloydIters > 0) ivfRefine(emb, seeds, lloydIters) else seeds
-    ivfServe(ivfAssign(emb, cents), cents, queries, k, nProbe)
+    ivfServe(ivfAssign(emb, cents), probeBatch(queries, cents, nProbe), k)
   }
+
+  /** One IVF serve's query batch, collected ONCE: a `(qid, qv,
+    * centroid_id)` row per query and probe cell. Every consumer of the
+    * batch in a serve — [[VectorStore]]'s probe-cell prefilter and the
+    * probe join — reads these same rows, so a non-deterministic query
+    * frame cannot make them disagree. */
+  private[operators] final case class ProbeBatch(probes: Seq[Row], schema: StructType) {
+
+    /** The distinct probe cells. */
+    def cells: Seq[Int] = probes.map(_.getInt(2)).distinct.sorted
+
+    /** Rough size of the batch as a plan literal. */
+    def bytes: Long = probes.map(r => 16L + Option(r.getSeq[Any](1)).fold(0)(_.size) * 8L).sum
+
+    /** `cell → [(qid, qv)]` as one map literal, duplicates kept. */
+    def byCell: Column = {
+      val entry = StructType(schema.fields.take(2))
+      val m = probes.groupBy(_.getInt(2)).map { case (c, rs) => c -> rs.map(r => Row(r.get(0), r.get(1))) }
+      org.apache.spark.sql.graftbridge.Bridge.column(Literal.create(m,
+        MapType(IntegerType, ArrayType(entry, containsNull = false), valueContainsNull = false)))
+    }
+  }
+
+  /** [[ProbeBatch]] of `queries` (`vec_id`, `v`). The probe lists are
+    * computed in the collected projection; over a local relation it
+    * folds at optimization, so a local batch costs no Spark job. A null
+    * probe list contributes no rows. */
+  private[operators] def probeBatch(queries: DataFrame, cents: Seq[(Int, Array[Long])],
+                                    nProbe: Int): ProbeBatch = {
+    val q = queries.select(col("vec_id").as("qid"), col("v").as("qv"),
+      probeList(cents, nProbe).as("probes"))
+    val probes = q.collect().toSeq.flatMap { r =>
+      Option(r.getSeq[Int](2)).toSeq.flatten.map(c => Row(r.get(0), r.get(1), c))
+    }
+    ProbeBatch(probes, StructType(q.schema.fields.take(2) :+
+      StructField("centroid_id", IntegerType, nullable = false)))
+  }
+
+  /** Above this many bytes a probe batch is not inlined as a plan
+    * literal ([[ProbeBatch.byCell]]) — every task would carry it — and
+    * the probe rows broadcast instead. */
+  private[operators] val InlineProbeBytes = 64L << 10
 
   /** The shared IVF serve core over an already-ASSIGNED corpus —
     * [[ivfTopK]]/[[ivfFilteredTopK]] build the assignment on the fly;
     * [[VectorStore]] replays this exact plan over its stored one, so
     * store-served results are bit-equal by construction. */
-  private[operators] def ivfServe(assigned: DataFrame,
-      cents: Seq[(Int, Array[Long])], queries: DataFrame, k: Int,
-      nProbe: Int): DataFrame = {
-    // probes materialized as a column BEFORE the explode:
-    // InferFiltersFromGenerate duplicates a generator-child expression
-    // into an inferred size()>0 filter, which would triple-evaluate the
-    // probe scan if exploded directly
-    val qProbes = queries
-      .withColumn("probes", probeList(cents, nProbe))
-      .select(col("vec_id").as("qid"), col("v").as("qv"),
-        explode(col("probes")).as("centroid_id"))
+  private[operators] def ivfServe(assigned: DataFrame, batch: ProbeBatch, k: Int): DataFrame = {
+    val probed =
+      if (batch.bytes <= InlineProbeBytes)
+        // the batch as a map literal exploded over the candidates: no
+        // broadcast exchange. explode_outer, because a generator's
+        // inferred not-null filter is pushed below an on-the-fly
+        // assignment and would run its argmax twice; a row in a cell no
+        // query probes gets a null qid, which the self-match filter drops
+        assigned.select(col("vec_id"), col("v"),
+            explode_outer(batch.byCell(col("centroid_id"))).as("q"))
+          .select(col("vec_id"), col("v"), col("q.qid").as("qid"), col("q.qv").as("qv"))
+      else // the same collected rows, never a re-read of the query frame
+        assigned.join(broadcast(assigned.sparkSession.createDataFrame(
+          batch.probes.asJava, batch.schema)), Seq("centroid_id"))
     // (qid, nid) is unique by construction — every neighbor sits in
     // exactly one cell and a query's probe list is distinct — so no
     // dedup pass is needed between the join and the rank
-    val scoredCand = assigned
-      .join(broadcast(qProbes), Seq("centroid_id"))
+    val scoredCand = probed
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"), dotInt("qv", "v").as("dot"))
     // rank via the window, NOT the bounded collectTopK aggregate: the
@@ -856,7 +898,7 @@ object Similarity {
                       lloydIters: Int = 0): DataFrame = {
     val seeds = ivfCentroids(emb, resolveCentroids(emb, nCentroids))
     val cents = if (lloydIters > 0) ivfRefine(emb, seeds, lloydIters) else seeds
-    ivfServe(ivfAssign(emb, cents).filter(pred), cents, queries, k, nProbe)
+    ivfServe(ivfAssign(emb, cents).filter(pred), probeBatch(queries, cents, nProbe), k)
   }
 
   /** [[ivfTopK]] over a CALLER-SUPPLIED centroid set — the from-scratch
@@ -867,7 +909,7 @@ object Similarity {
     * re-rank over `emb`, centroids fixed. */
   def ivfTopKWith(emb: DataFrame, cents: Seq[(Int, Array[Long])],
                   queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame =
-    ivfServe(ivfAssign(emb, cents), cents, queries, k, nProbe)
+    ivfServe(ivfAssign(emb, cents), probeBatch(queries, cents, nProbe), k)
 
   /** [[ivfFilteredTopK]] over a caller-supplied centroid set (see
     * [[ivfTopKWith]]) — the from-scratch twin of a mutated
@@ -876,7 +918,7 @@ object Similarity {
   def ivfFilteredTopKWith(emb: DataFrame, cents: Seq[(Int, Array[Long])],
                           queries: DataFrame, k: Int, pred: Column,
                           nProbe: Int = 4): DataFrame =
-    ivfServe(ivfAssign(emb, cents).filter(pred), cents, queries, k, nProbe)
+    ivfServe(ivfAssign(emb, cents).filter(pred), probeBatch(queries, cents, nProbe), k)
 
   /**
    * IVF-blocked kNN JOIN: the k nearest neighbors (by exact integer

@@ -222,7 +222,8 @@ private[graft] object StoreSwap {
       resolve(fsOf(s, path), swap(path))
       val srcs = treeSources(s, path, "meta")
       srcs.isEmpty || {
-        val m = readTree(s, srcs, s"$path/meta").select("n_rows", "fingerprint").collect()(0)
+        val m = ParquetFooters.collectSmall(
+          readTree(s, srcs, s"$path/meta").select("n_rows", "fingerprint"))(0)
         val (n0, fp0) = (m.getLong(0), m.getString(1))
         val fpNow = TableMemo.contentKey(corpus).getOrElse("")
         if (fp0.nonEmpty && fpNow.nonEmpty) fpNow != fp0 else corpus.count() != n0

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType, StructField, StructType}
 import graft.operators.CheckpointScope.Scoped
 
 /**
@@ -401,11 +405,27 @@ object TextAnalysis {
     tfExplode(docs, "ws", Seq("doc_id", "dl"), "term")
 
   /** Fold corpus-stats partials into the `(n_docs, avgdl)` row the
-    * scorers consume — the single place the truncating avgdl division
-    * happens (so N merged partials replay the one-shot number). */
+    * scorers consume — with its driver-side twin [[bm25StatsOf]], the
+    * only place the truncating avgdl division happens (so N merged
+    * partials replay the one-shot number). */
   private[operators] def bm25Stats(partials: DataFrame): DataFrame =
     partials.agg(sum("n_docs").as("n_docs"),
       expr("div(sum(dl_sum), sum(n_docs))").as("avgdl"))
+
+  /** [[bm25Stats]] of `(n_docs, dl_sum)` partial rows already on the
+    * driver: summed here, null-skipping like Spark's `sum`, into a
+    * one-row local frame whose `avgdl` is the same `div` — so it folds
+    * at optimization (no job) and fails as [[bm25Stats]] does when
+    * `n_docs` sums to 0. */
+  private[operators] def bm25StatsOf(s: SparkSession, partials: Seq[Row]): DataFrame = {
+    def total(i: Int): java.lang.Long = {
+      val xs = partials.flatMap(r => Option(r.getAs[java.lang.Long](i)))
+      if (xs.isEmpty) null else xs.map(_.longValue).sum
+    }
+    val schema = StructType(Seq("n_docs", "dl_sum").map(StructField(_, LongType)))
+    s.createDataFrame(Seq(Row(total(0), total(1))).asJava, schema)
+      .select(col("n_docs"), expr("div(dl_sum, n_docs)").as("avgdl"))
+  }
 
   def bm25TopK(df: DataFrame, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
@@ -446,10 +466,13 @@ object TextAnalysis {
    * `n_terms` = how many query terms contributed.
    *
    * Scale shape: the corpus is NEVER shuffled on the default path —
-   * the query table is query-log-scale and broadcast (its distinct
-   * terms filter the posting explode map-side; so is the
-   * vocabulary-scale df table and the 2-number corpus stats). The only
-   * exchange is the `(query_id, doc_id)` partial-aggregated sum,
+   * the query table is query-log-scale: collected once, its distinct
+   * terms prefilter the postings and ride into the broadcast
+   * query-term-scale df table as a `term → query_ids` literal (a batch
+   * above [[InlineQueryBytes]] broadcasts as rows instead), and the
+   * 2-number corpus stats are plan literals. The only corpus-side
+   * exchanges are the df count of the query terms and the
+   * `(query_id, doc_id)` partial-aggregated sum,
    * bounded by the surviving posting lists of the query terms, then a
    * bounded CollectTopK per query (k·partitions rows to the driver
    * merge). For a query table too large to broadcast (batch eval
@@ -464,41 +487,63 @@ object TextAnalysis {
     bm25DocTopKFrom(queries, pairs, bm25Stats(partial), k, broadcastQueries)
   }
 
+  /** Above this many bytes of `(term, query_id)` entries a query batch
+    * is not inlined as a plan literal — every task would carry it — and
+    * the entries broadcast instead. */
+  private[operators] val InlineQueryBytes = 64L << 10
+
   /** [[bm25DocTopK]] over an ALREADY-MATERIALIZED corpus projection —
     * the serve path of [[PostingsStore]]: `pairs`/`stats` come from
     * parquet instead of a tokenize pass, everything downstream is the
     * identical scoring plan (so store-served results are bit-equal to
     * from-scratch by construction — gated end-to-end anyway by
-    * `postings_equiv`). */
+    * `postings_equiv`). `stats` (one `(n_docs, avgdl)` row) and, by
+    * default, the query batch are collected when the serve is built;
+    * a local frame of either costs no job. */
   private[operators] def bm25DocTopKFrom(queries: DataFrame, pairs: DataFrame,
       stats: DataFrame, k: Int, broadcastQueries: Boolean): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
-    // NOTE (r19 optimization round): a query-term prefilter — collect
-    // the distinct query terms and push `term IN (...)` into both
-    // corpus passes (df aggregate + scored join) — was implemented,
-    // oracle-verified result-identical (df per term is invariant under
-    // restricting to a term subset), and MEASURED OUT: the retrieval
-    // fixture's query vocabulary covers 99.8% of postings rows (probe:
-    // 125,981 of 126,231 survive the IN), so nothing prunes, and the
-    // collect + literal-heavy plan added ~0.3-0.5 s per serve at bench
-    // scale. Worth revisiting only for selective query sets over a
-    // term-range-clustered store, where the IN prunes whole files.
-    val dfreq = pairs.groupBy("term").agg(count(lit(1)).as("df"))
-    val qterms0 = queries.select(col("query_id"),
-      explode(array_distinct(tokens(col("qtext")))).as("term"))
-    val qterms = if (broadcastQueries) broadcast(qterms0) else qterms0
+    // the one-row corpus stats as literals: no stats join, no broadcast
+    val st = stats.collect()(0)
+    val Seq(nDocs, avgdl) = stats.schema.fields.indices.map(i =>
+      Bridge.column(Literal.create(st.get(i), stats.schema(i).dataType)))
     // positive-idf vocabulary joins FIRST: stopword posting lists (the
     // corpus-scale ones) drop map-side, so neither the broadcast-hash
-    // probe nor the non-broadcast term shuffle ever carries them. The
-    // stats crossJoin sits INSIDE the broadcast build (not on the
-    // probe side): it is one row, and folding it here keeps the
-    // df-positivity filter ahead of the corpus join — the broadcast
-    // pool builds the stats and df exchanges concurrently either way,
-    // the df build just waits one tiny job for the stats row
-    val dfreqPos = dfreq.crossJoin(broadcast(stats))
+    // probe nor the non-broadcast term shuffle ever carries them
+    def dfreqPos(p: DataFrame): DataFrame = p.groupBy("term").agg(count(lit(1)).as("df"))
+      .select(col("term"), col("df"), nDocs.as("n_docs"), avgdl.as("avgdl"))
       .filter(expr("div(n_docs, df) >= 2"))
-    val scored = pairs.join(broadcast(dfreqPos), "term")
-      .join(qterms, "term")
+    val q = queries.select(col("query_id"), array_distinct(tokens(col("qtext"))).as("terms"))
+    // the query batch, collected ONCE: a (query_id, term) entry per
+    // distinct term of each query, duplicate ids kept (a projection over
+    // a local relation folds at optimization: no job)
+    val entries = Option.when(broadcastQueries)(q.collect().toSeq.flatMap(r =>
+      Option(r.getSeq[String](1)).toSeq.flatten.map(t => Row(r.get(0), t))))
+    val matched = entries.filter(_.map(_.getString(1).length + 8L).sum <= InlineQueryBytes) match {
+      case Some(es) =>
+        // the query terms prefilter the postings: df per term is
+        // invariant under restricting to a term subset, and on a
+        // term-range-clustered store the pushed IN skips whole files;
+        // the batch collect yields the terms, so it costs no collect of
+        // its own. `term → query_ids` is one map literal exploded over
+        // the (query-term-sized) df side instead of a broadcast join —
+        // explode_outer, because a generator's inferred not-null filter
+        // would be pushed below the df aggregate onto every posting
+        // row; every df term is a key, so no null row arises
+        val byTerm = es.groupBy(_.getString(1)).map { case (t, rs) => t -> rs.map(_.get(0)) }
+        val ids = Bridge.column(Literal.create(byTerm, MapType(StringType,
+          ArrayType(q.schema(0).dataType, containsNull = true), valueContainsNull = false)))
+        val p = pairs.filter(col("term").isInCollection(byTerm.keys))
+        p.join(broadcast(dfreqPos(p).withColumn("query_id", explode_outer(ids(col("term"))))), "term")
+      case None =>
+        // above the budget, the same collected rows broadcast; without
+        // `broadcastQueries` the query side is never collected
+        val qterms = entries.fold(q.select(col("query_id"), explode(col("terms")).as("term")))(es =>
+          broadcast(queries.sparkSession.createDataFrame(es.asJava,
+            StructType(Seq(q.schema(0), StructField("term", StringType))))))
+        pairs.join(broadcast(dfreqPos(pairs)), "term").join(qterms, "term")
+    }
+    val scored = matched
       .withColumn("score_e6", expr(
         s"""(length(bin(div(n_docs, df))) - 1) *
             div(tf * $Bm25K1p1E4 * 1000000,

@@ -46,14 +46,17 @@ import StoreSwap.BaseDir
  * the stored table, so store-served results are bit-equal by
  * construction (`ann_store_equiv` gates it end-to-end; the lifecycle
  * twins `ann_store_append`/`ann_store_delete` gate the mutated store
- * against [[Similarity.ivfTopKWith]] replays); the one addition is the
- * probe-cell PRE-FILTER: the query batch's distinct probe cells
- * (driver-bounded by the centroid count) are inlined as a pushable
- * `centroid_id IN (...)` predicate ahead of the probe join, which the
- * join spelling alone cannot push into the scan. The FILTERED variant
- * composes a metadata predicate the same pre-filter way
- * ([[Similarity.ivfFilteredTopK]]'s contract: one full-corpus index
- * serves every predicate).
+ * against [[Similarity.ivfTopKWith]] replays). A serve collects the
+ * query batch ONCE with its probe lists ([[Similarity.probeBatch]]; a
+ * local batch folds at optimization and costs no job) and reads the
+ * centroids from the driver-side row cache
+ * ([[ParquetFooters.collectSmall]]). Those same rows feed the one
+ * addition over the from-scratch plan, the probe-cell PRE-FILTER: the
+ * batch's distinct probe cells as a pushable `centroid_id IN (...)`
+ * predicate on the assignment scan, which the probe join alone cannot
+ * push. The FILTERED variant composes a metadata predicate the same
+ * pre-filter way ([[Similarity.ivfFilteredTopK]]'s contract: one
+ * full-corpus index serves every predicate).
  */
 object VectorStore {
 
@@ -196,10 +199,11 @@ object VectorStore {
 
   /** The stored centroid table, driver-side (model-scale by the IVF
     * contract — the same collect [[Similarity.ivfCentroids]] performs
-    * at build time). */
+    * at build time); a warm read is a [[ParquetFooters.collectSmall]]
+    * hit, no Spark job. */
   def centroids(s: SparkSession, path: String): Seq[(Int, Array[Long])] =
-    Store.tree(s, path, "centroids", Long.MaxValue)
-      .select("centroid_id", "v").collect()
+    ParquetFooters.collectSmall(Store.tree(s, path, "centroids", Long.MaxValue)
+      .select("centroid_id", "v"))
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
 
@@ -239,40 +243,18 @@ object VectorStore {
                    k: Int, pred: Column, nProbe: Int = 4): DataFrame =
     serve(s, path, queries, k, nProbe, Some(pred), Long.MaxValue)
 
-  private def serve(s: SparkSession, path: String, queries0: DataFrame,
+  private def serve(s: SparkSession, path: String, queries: DataFrame,
                     k: Int, nProbe: Int, pred: Option[Column],
                     bound: Long): DataFrame = {
-    // materialize the query batch ONCE: the collected probe-cell
-    // prefilter and the serve-side probe list must come from the SAME
-    // rows — a re-evaluated non-deterministic query frame could produce
-    // a prefilter inconsistent with the probes actually joined,
-    // silently dropping candidate cells. A frame that is ALREADY
-    // materialized (a local relation, or an RDD-backed frame whose RDD
-    // is persisted or checkpointed, e.g. a caller-side checkpoint)
-    // satisfies the same-rows requirement by construction — skip the
-    // extra localCheckpoint job, so a gate serving several phases from
-    // one query batch pays the materialization once, not per serve. An
-    // RDD-backed frame over an unpersisted RDD recomputes per job, so
-    // it is checkpointed like any other plan.
-    val queries = queries0.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD
-          if lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-            lr.rdd.isCheckpointed => queries0
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => queries0
-      case _ => CheckpointScope.checkpoint(queries0)
-    }
-    val cents = centroids(s, path)
-    // the query batch's distinct probe cells, inlined as ONE pushable
-    // IN predicate: the cell-range-clustered files outside it never
-    // open (footer stats). Driver-bounded: ≤ min(|queries|·nProbe,
+    val batch = Similarity.probeBatch(queries, centroids(s, path), nProbe)
+    // the batch's distinct probe cells, inlined as ONE pushable IN
+    // predicate: the cell-range-clustered files outside it never open
+    // (footer stats). Driver-bounded: ≤ min(|queries|·nProbe,
     // |centroids|) ints — query-log × model scale, never corpus scale.
-    val cells = queries
-      .select(explode(Similarity.probeCells(cents, nProbe)).as("centroid_id"))
-      .distinct().collect().map(_.getInt(0))
     val assigned0 = assignmentAsOf(s, path, bound)
-      .filter(col("centroid_id").isInCollection(cells))
+      .filter(col("centroid_id").isInCollection(batch.cells))
     val assigned = pred.map(assigned0.filter).getOrElse(assigned0)
-    Similarity.ivfServe(assigned, cents, queries, k, nProbe)
+    Similarity.ivfServe(assigned, batch, k)
   }
 
   /** Has the BUILD corpus changed since [[build]] captured it? The

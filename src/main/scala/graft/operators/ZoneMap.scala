@@ -12,7 +12,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
@@ -88,14 +89,7 @@ object ZoneMap {
 
   private def bareParquetFiles(df: DataFrame): Option[Seq[FileStatus]] =
     df.queryExecution.analyzed match {
-      case lr: LogicalRelation if !lr.isStreaming => lr.relation match {
-        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
-            fs.partitionSchema.isEmpty => fs.location match {
-          case idx: PartitioningAwareFileIndex => Some(idx.allFiles())
-          case _ => None
-        }
-        case _ => None
-      }
+      case ParquetFooters.Scan(fs, files) if fs.partitionSchema.isEmpty => Some(files)
       case _ => None
     }
 
@@ -132,7 +126,9 @@ object ZoneMap {
  * time), so each footer is cached under that key in one fixed-size LRU
  * shared by every reader ([[ZoneMap]], [[readParquet]]); a file rewritten
  * in place changes its length or modification time and is read afresh.
- * Cache misses are read in parallel on a small daemon pool.
+ * Cache misses are read in parallel on a small daemon pool. Beside the
+ * footers, a second LRU keeps the collected rows of small store
+ * relations under the same file identity ([[collectSmall]]).
  */
 private[graft] object ParquetFooters {
 
@@ -174,6 +170,73 @@ private[graft] object ParquetFooters {
   private def read(st: FileStatus, conf: Configuration): ParquetMetadata = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
     try reader.getFooter finally reader.close()
+  }
+
+  /** A non-streaming parquet file scan: its relation and the files its
+    * index listed. */
+  object Scan {
+    def unapply(plan: LogicalPlan): Option[(HadoopFsRelation, Seq[FileStatus])] = plan match {
+      case lr: LogicalRelation if !lr.isStreaming => lr.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          fs.location match {
+            case idx: PartitioningAwareFileIndex => Some((fs, idx.allFiles()))
+            case _ => None
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** Relations the row cache admits: their footers count at most this
+    * many rows and uncompressed bytes in all. */
+  private val SmallRows = 10000L
+  private val SmallBytes = 4L << 20
+
+  /** Relations whose rows the cache keeps. */
+  private val CacheRelations = 64
+
+  private val rowCache = new java.util.LinkedHashMap[String, Array[Row]](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Array[Row]]): Boolean =
+      size() > CacheRelations
+  }
+
+  /**
+   * `df.collect()` for a small store relation — centroids, stats
+   * partials, marker lists, the build identity — answered on a warm
+   * read without a Spark job.
+   *
+   * Invariant: the rows are the ones `df.collect()` returns now. A
+   * deterministic plan whose every leaf is a parquet file scan is a
+   * function of its canonical plan and its files' (path, length,
+   * modification time), the [[TableMemo.contentKey]] fingerprint; the
+   * rows are cached under that key when the files' footers count at
+   * most [[SmallRows]] rows and [[SmallBytes]] bytes. A file rewritten
+   * in place or a file added to or removed from the listing changes
+   * the key. Any other plan is collected as is.
+   */
+  def collectSmall(df: DataFrame): Array[Row] = {
+    val plan = df.queryExecution.optimizedPlan
+    val files = plan.collectLeaves().map {
+      case Scan(_, fs) => Some(fs)
+      case _ => None
+    }
+    val small = plan.deterministic && files.nonEmpty && files.forall(_.isDefined) && {
+      try {
+        val blocks = of(files.flatten.flatten.distinct, df.sparkSession.sessionState.newHadoopConf())
+          .flatMap(_.getBlocks.asScala)
+        blocks.map(_.getRowCount).sum <= SmallRows && blocks.map(_.getTotalByteSize).sum <= SmallBytes
+      } catch { case NonFatal(_) => false }
+    }
+    (if (small) TableMemo.contentKey(df) else None) match {
+      case None => df.collect()
+      case Some(key) =>
+        rowCache.synchronized(Option(rowCache.get(key))).getOrElse {
+          val rows = df.collect()
+          rowCache.synchronized(rowCache.put(key, rows))
+          rows
+        }
+    }
   }
 
   /**
