@@ -17,9 +17,12 @@ import graft.zorder.{IntRange, ZOrder}
  *  - A point is `(id: Long, x: Int, y: Int)` plus the derived Morton key
  *    `zkey` (`Bucket.java:40-47` analog).
  *  - The data layout is Parquet, range-partitioned AND sorted by `zkey`:
- *    Parquet row-group min/max statistics on `zkey` (and on raw x/y) then
+ *    Parquet footer min/max statistics on `zkey` (and on raw x/y) then
  *    act as the reference's quad-tree index — file/row-group skipping
- *    replaces the index-table probe (`Index.java:144-164`).
+ *    replaces the index-table probe (`Index.java:144-164`): every read
+ *    goes through [[ParquetFooters.readParquet]], whose file index
+ *    plans only the files whose footers can match the pushed filters,
+ *    and the executors skip row groups within them.
  *  - Every query returns a `DataFrame` and stays fully distributed; the
  *    reference's client-side materialization (`Client.java:78-82`) is the
  *    anti-pattern this design avoids — at 100 TB nothing may fold into

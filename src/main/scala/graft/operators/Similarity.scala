@@ -821,13 +821,14 @@ object Similarity {
   /** [[ProbeBatch]] of `queries` (`vec_id`, `v`). The probe lists are
     * computed in the collected projection; over a local relation it
     * folds at optimization, so a local batch costs no Spark job. A null
-    * probe list contributes no rows. */
+    * query vector or probe list contributes no rows. */
   private[operators] def probeBatch(queries: DataFrame, cents: Seq[(Int, Array[Long])],
                                     nProbe: Int): ProbeBatch = {
     val q = queries.select(col("vec_id").as("qid"), col("v").as("qv"),
       probeList(cents, nProbe).as("probes"))
     val probes = q.collect().toSeq.flatMap { r =>
-      Option(r.getSeq[Int](2)).toSeq.flatten.map(c => Row(r.get(0), r.get(1), c))
+      if (r.isNullAt(1)) Nil
+      else Option(r.getSeq[Int](2)).toSeq.flatten.map(c => Row(r.get(0), r.get(1), c))
     }
     ProbeBatch(probes, StructType(q.schema.fields.take(2) :+
       StructField("centroid_id", IntegerType, nullable = false)))

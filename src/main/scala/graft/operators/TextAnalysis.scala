@@ -407,16 +407,18 @@ object TextAnalysis {
   /** Fold corpus-stats partials into the `(n_docs, avgdl)` row the
     * scorers consume — with its driver-side twin [[bm25StatsOf]], the
     * only place the truncating avgdl division happens (so N merged
-    * partials replay the one-shot number). */
+    * partials replay the one-shot number). An empty corpus (`n_docs`
+    * 0, e.g. every document taken down) has a null `avgdl`, as a corpus
+    * with no partial rows does, so every score is null and a serve
+    * returns no rows. */
   private[operators] def bm25Stats(partials: DataFrame): DataFrame =
     partials.agg(sum("n_docs").as("n_docs"),
-      expr("div(sum(dl_sum), sum(n_docs))").as("avgdl"))
+      expr("div(sum(dl_sum), nullif(sum(n_docs), 0))").as("avgdl"))
 
   /** [[bm25Stats]] of `(n_docs, dl_sum)` partial rows already on the
     * driver: summed here, null-skipping like Spark's `sum`, into a
     * one-row local frame whose `avgdl` is the same `div` — so it folds
-    * at optimization (no job) and fails as [[bm25Stats]] does when
-    * `n_docs` sums to 0. */
+    * at optimization (no job) and gives [[bm25Stats]]' row. */
   private[operators] def bm25StatsOf(s: SparkSession, partials: Seq[Row]): DataFrame = {
     def total(i: Int): java.lang.Long = {
       val xs = partials.flatMap(r => Option(r.getAs[java.lang.Long](i)))
@@ -424,7 +426,7 @@ object TextAnalysis {
     }
     val schema = StructType(Seq("n_docs", "dl_sum").map(StructField(_, LongType)))
     s.createDataFrame(Seq(Row(total(0), total(1))).asJava, schema)
-      .select(col("n_docs"), expr("div(dl_sum, n_docs)").as("avgdl"))
+      .select(col("n_docs"), expr("div(dl_sum, nullif(n_docs, 0))").as("avgdl"))
   }
 
   def bm25TopK(df: DataFrame, k: Int = 5): DataFrame = {

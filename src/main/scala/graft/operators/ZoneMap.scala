@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.concurrent.{Executors, ThreadFactory}
 
+import scala.annotation.nowarn
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
@@ -9,15 +10,21 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.{
-  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetToSparkSchemaConverter}
+  ParquetFileFormat, ParquetFilters, ParquetOptions, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -124,7 +131,8 @@ object ZoneMap {
  * Parquet footers read on the driver, and the engine's store reads built
  * on them. Files are immutable under their (path, length, modification
  * time), so each footer is cached under that key in one fixed-size LRU
- * shared by every reader ([[ZoneMap]], [[readParquet]]); a file rewritten
+ * shared by every reader ([[ZoneMap]], [[readParquet]] and its file
+ * index); a file rewritten
  * in place changes its length or modification time and is read afresh.
  * Cache misses are read in parallel on a small daemon pool. Beside the
  * footers, a second LRU keeps the collected rows of small store
@@ -240,7 +248,9 @@ private[graft] object ParquetFooters {
   }
 
   /**
-   * `spark.read.parquet(paths: _*)` without Spark's schema-inference job.
+   * `spark.read.parquet(paths: _*)` without Spark's schema-inference job,
+   * over a [[FooterIndex]] that lists only the files a scan's pushed
+   * filters can match.
    *
    * Invariant: the DataFrame has the schema Spark's own inference gives,
    * taken from the same file, and building it submits no Spark job.
@@ -249,42 +259,126 @@ private[graft] object ParquetFooters {
    * non-hidden files directly under the paths. This lists the paths on
    * the driver, picks that file, converts its footer (the schema Spark
    * wrote there, else the session's parquet-to-Spark conversion) and
-   * hands the result to the reader as its schema. The footer comes from
-   * the shared cache, so a warm read costs one listing per path.
+   * builds the relation over that schema, made nullable as Spark does
+   * for a given schema. The listing is handed to the index, so each path
+   * is listed once per read; the footer comes from the shared cache.
    *
    * It falls back to plain `spark.read.parquet` (keeping Spark's errors
    * and semantics) when `spark.sql.parquet.mergeSchema` is on, when a
    * path is a glob or cannot be listed, when the listing holds a
-   * `_metadata`/`_common_metadata` summary file or a `k=v` partition
-   * directory, when no data file sits directly under the paths, and
-   * when the footer cannot be read.
+   * `_metadata`/`_common_metadata` summary file, a `k=v` partition
+   * directory or a streaming sink's `_spark_metadata` log, when no data
+   * file sits directly under the paths, when the footer cannot be read,
+   * and when the schema repeats a column name.
    */
   def readParquet(s: SparkSession, paths: String*): DataFrame =
-    footerSchema(s, paths) match {
-      case Some(schema) => s.read.schema(schema).parquet(paths: _*)
+    footerListing(s, paths) match {
+      case Some((schema, leaves)) => s.baseRelationToDataFrame(new FooterIndex(s, leaves, schema).relation)
       case None => s.read.parquet(paths: _*)
     }
 
-  private def footerSchema(s: SparkSession, paths: Seq[String]): Option[StructType] = {
+  /** The schema Spark would infer for `paths` and every path's qualified
+    * root with the leaf files Spark's listing finds under it, in its
+    * order; None where [[readParquet]] falls back. */
+  private def footerListing(s: SparkSession, paths: Seq[String])
+      : Option[(StructType, Seq[(Path, Array[FileStatus])])] = {
     val sql = s.sessionState.conf
     if (paths.isEmpty || sql.isParquetSchemaMergingEnabled ||
         paths.exists(_.exists("{}[]*?\\".contains(_)))) None
     else try {
       val conf = s.sessionState.newHadoopConf()
-      val top = paths.map { p =>
+      val roots = paths.map { p =>
         val root = new Path(p)
         val fs = root.getFileSystem(conf)
-        fs -> visible(fs.listStatus(fs.makeQualified(root)))
+        val qualified = fs.makeQualified(root)
+        val listed = fs.listStatus(qualified)
+        val top = visible(listed)
+        (qualified, listed, top, top ++ top.filter(_.isDirectory).flatMap(d => below(fs, d.getPath)))
       }
-      val entries = top.flatMap { case (fs, sts) =>
-        sts ++ sts.filter(_.isDirectory).flatMap(d => below(fs, d.getPath))
-      }
-      if (entries.exists(summaryOrPartition)) None
-      else top.flatMap(_._2).filter(_.isFile).sortBy(_.getPath.toString).headOption.map { st =>
-        ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, of(Seq(st), conf).head),
+      if (roots.exists { case (_, listed, _, entries) =>
+            entries.exists(summaryOrPartition) || listed.exists(_.getPath.getName == "_spark_metadata") }) None
+      else roots.flatMap(_._3).filter(_.isFile).sortBy(_.getPath.toString).headOption.flatMap { st =>
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, of(Seq(st), conf).head),
           new ParquetToSparkSchemaConverter(sql))
+        val names = schema.fieldNames.map(n => if (sql.caseSensitiveAnalysis) n else n.toLowerCase)
+        Option.when(names.distinct.length == names.length)(
+          (schema, roots.map { case (root, _, _, entries) => root -> entries.filter(_.isFile).toArray }))
       }
     } catch { case NonFatal(_) => None }
+  }
+
+  /**
+   * A store read's file index: Spark's [[InMemoryFileIndex]] over the
+   * listing [[readParquet]] took (served from a per-read
+   * [[FileStatusCache]] holding it, so Spark does not list again), whose
+   * `listFiles` leaves out the files whose footers cannot match the
+   * scan's pushed data filters. `allFiles` still lists every file, so
+   * [[Scan]], [[ZoneMap]], [[collectSmall]] and `TableMemo.contentKey`
+   * see the whole tree.
+   *
+   * Invariant: the driver drops exactly the files in which the executor
+   * would skip every row group, so answers are unchanged by
+   * construction. Per file it builds the predicate the executor's
+   * row-group skip builds — the filters `FileSourceScanExec` pushes,
+   * through `ParquetFilters` over the file's own footer schema with the
+   * session's pushdown settings — and keeps the file when
+   * `RowGroupFilter` keeps one of its row groups by their statistics.
+   * It lists every file when no filter translates, when
+   * `spark.sql.parquet.filterPushdown` is off, when a footer cannot be
+   * read or a predicate cannot be built, and when the listing holds more
+   * files than the footer cache keeps ([[CacheFiles]]), where each read
+   * would evict its own footers and read them all again on the driver.
+   */
+  private final class FooterIndex(s: SparkSession, leaves: Seq[(Path, Array[FileStatus])],
+                                  schema: StructType)
+      extends InMemoryFileIndex(s, leaves.map(_._1), Map.empty, Some(schema), new Listed(leaves)) {
+
+    lazy val relation: HadoopFsRelation = HadoopFsRelation(this, partitionSchema, Bridge.asNullable(schema),
+      None, new ParquetFileFormat, Map.empty)(s)
+
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val dirs = super.listFiles(partitionFilters, dataFilters)
+      matching(dirs.flatMap(_.files.map(_.fileStatus)), Bridge.pushedFilters(relation, dataFilters)) match {
+        case Some(keep) => dirs.map(d => d.copy(files = d.files.filter(f => keep(f.fileStatus.getPath))))
+        case None => dirs
+      }
+    }
+
+    /** The files whose footers may hold a row passing `pushed`; None
+      * keeps every file. */
+    private def matching(files: Seq[FileStatus], pushed: Seq[Filter]): Option[Set[Path]] = {
+      val sql = s.sessionState.conf
+      if (pushed.isEmpty || !sql.parquetFilterPushDown || files.size > CacheFiles) None
+      else try {
+        val footers = of(files, s.sessionState.newHadoopConf())
+        Some(files.zip(footers).collect { case (st, f) if mayMatch(f, pushed, sql) => st.getPath }.toSet)
+      } catch { case NonFatal(_) => None }
+    }
+  }
+
+  /** Whether a row group of the file with `footer` survives the
+    * statistics skip of the predicate the executor builds for `pushed`. */
+  @nowarn("cat=deprecation")
+  private def mayMatch(footer: ParquetMetadata, pushed: Seq[Filter], sql: SQLConf): Boolean = {
+    val meta = footer.getFileMetaData
+    val rebase = DataSourceUtils.datetimeRebaseSpec(meta.getKeyValueMetaData.get,
+      new ParquetOptions(Map.empty[String, String], sql).datetimeRebaseModeInRead)
+    val filters = new ParquetFilters(meta.getSchema, sql.parquetFilterPushDownDate,
+      sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
+      sql.parquetFilterPushDownStringPredicate, sql.parquetFilterPushDownInFilterThreshold,
+      sql.caseSensitiveAnalysis, rebase)
+    pushed.flatMap(filters.createFilter).reduceOption(FilterApi.and).forall(p =>
+      !RowGroupFilter.filterRowGroups(FilterCompat.get(p), footer.getBlocks, meta.getSchema).isEmpty)
+  }
+
+  /** One read's listing as Spark's listing cache, keyed by root path. */
+  private final class Listed(leaves: Seq[(Path, Array[FileStatus])]) extends FileStatusCache {
+    private val byRoot = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+    leaves.foreach { case (root, files) => byRoot.put(root, files) }
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Option(byRoot.get(path))
+    override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = byRoot.put(path, files)
+    override def invalidateAll(): Unit = byRoot.clear()
   }
 
   /** The entries Spark's file listing keeps: it drops names starting

@@ -19,10 +19,12 @@ import graft.zorder.{IntRange, ZOrder3, ZRanges, ZRanges3}
  * store's point schema: int columns `x`, `y` beside a long `zkey`) gains
  * an OR of tight z-key intervals from [[graft.zorder.ZRanges]]. The raw
  * predicates are kept verbatim, so the rewrite is pure pruning —
- * correctness NEVER depends on it (SURVEY §7.3); its effect is that the
- * Parquet reader can skip files/row groups whose zkey min/max stats miss
- * every interval, exactly like the reference skipping non-intersecting
- * buckets.
+ * correctness NEVER depends on it (SURVEY §7.3); its effect is that a
+ * store read skips the files (on the driver, through
+ * [[graft.operators.ParquetFooters.readParquet]]'s file index) and the
+ * row groups (in the executors' Parquet reader) whose zkey min/max
+ * stats miss every interval, exactly like the reference skipping
+ * non-intersecting buckets.
  *
  * Soundness of the injected conjunct: the rule only fires when the
  * `zkey` attribute carries the `graft.zorder` metadata marker that

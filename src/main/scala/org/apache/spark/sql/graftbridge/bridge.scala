@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, FileSourceConstantMetadataAttribute}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils}
+import org.apache.spark.sql.sources.{BaseRelation, Filter}
 
 /**
  * Minimal bridge into Spark's `private[sql]` Column/Expression conversion
@@ -14,6 +16,23 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `t` with every field, element and value nullable, at any depth: the
+    * data schema Spark gives a file relation read with a given schema. */
+  def asNullable(t: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    t.asNullable
+
+  /** The data source filters a file scan of `relation` hands its reader
+    * for the scan's `dataFilters`, translated as `FileSourceScanExec`
+    * translates them (`DataSourceStrategy.translateFilter`, constant
+    * metadata-column filters left out). */
+  def pushedFilters(relation: BaseRelation, dataFilters: Seq[Expression]): Seq[Filter] = {
+    val nested = DataSourceUtils.supportNestedPredicatePushdown(relation)
+    dataFilters.filterNot(_.references.exists {
+      case FileSourceConstantMetadataAttribute(_) => true
+      case _ => false
+    }).flatMap(DataSourceStrategy.translateFilter(_, nested))
+  }
 
   /** Catalyst's `private[sql]` bounded top-k aggregate (a size-`num`
     * priority queue per group, map-side combinable — the TakeOrdered

@@ -340,6 +340,26 @@ class PostingsStoreSpec extends SparkSpec {
     PostingsStore.drop(spark, tmp)
   }
 
+  test("a term-equality probe reads a single postings file") {
+    val docs = spark.range(200)
+      .select(col("id").as("doc_id"), concat(lit("w"), format_string("%03d", col("id"))).as("text"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-postings-onefile").toString
+    // one term-range file per shuffle partition
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try PostingsStore.build(docs, tmp)
+    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val all = PostingsStore.postings(spark, tmp)
+    assert(all.inputFiles.length > 1)
+    val probe = all.filter(col("term") === "w042")
+    assert(probe.collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(42L))
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val files = plans.collect(probe.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+    }
+    assert(files === Seq(1L))
+    PostingsStore.drop(spark, tmp)
+  }
+
   test("takedown probes the doclens sidecar with a pushed doc_id predicate, never the postings") {
     // 200 docs so the sidecar spans multiple doc-id-clustered files;
     // a single-doc takedown must (a) plan its length probe over the

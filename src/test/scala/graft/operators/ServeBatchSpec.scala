@@ -120,6 +120,17 @@ class ServeBatchSpec extends SparkSpec {
     assert(jobs <= 2, s"$jobs jobs")
   }
 
+  test("a null IVF query vector probes no cell and gets no rows, from the store and from scratch") {
+    val q = Seq((1L, Option.empty[Seq[Long]]), (2L, Some(embRows(2L)))).toDF("vec_id", "v")
+    assert(Similarity.probeBatch(q, cents, 2).probes.map(_.get(0)).toSet === Set(2L))
+    val served = rows(VectorStore.topK(spark, vpath, q, 5, nProbe = 2))
+    assert(served.map(_.head) === Set(2L))
+    assert(served === rows(Similarity.ivfTopKWith(liveEmb(Long.MaxValue), cents, q, 5, nProbe = 2)))
+    val nullOnly = q.filter(col("vec_id") === 1L)
+    assert(rows(VectorStore.topK(spark, vpath, nullOnly, 5, nProbe = 2)).isEmpty)
+    assert(rows(Similarity.ivfTopK(emb, nullOnly, 5, nCentroids = 8, nProbe = 2)).isEmpty)
+  }
+
   // ---- text: 60 docs over a skewed 30-word vocabulary, built over 40,
   // 20 appended at op 1, three taken down at op 2
   private val words = (0 until 30).map(i => s"w$i")
@@ -201,17 +212,16 @@ class ServeBatchSpec extends SparkSpec {
     assert(jobs <= 5, s"$jobs jobs")
   }
 
-  test("a serve over a store with every document taken down fails as the stats read does") {
+  test("a serve over a store with every document taken down answers as an empty corpus does") {
     val p = Files.createTempDirectory("graft-serve-empty").toString
     PostingsStore.build(docs.take(4).toDF("doc_id", "text"), p)
     PostingsStore.deleteDocs(spark, p, (0L until 4L).toDF("doc_id"), 1L)
     val q = Seq((1L, "w1 w2")).toDF("query_id", "qtext")
-    val statsErr = intercept[ArithmeticException](
-      PostingsStore.stats(spark, p).collect())
-    val serveErr = intercept[ArithmeticException](
-      PostingsStore.bm25DocTopK(spark, p, q, 5).collect())
-    assert(statsErr.getMessage.contains("DIVIDE_BY_ZERO"))
-    assert(serveErr.getMessage.contains("DIVIDE_BY_ZERO"))
+    val empty = docs.take(0).toDF("doc_id", "text")
+    assert(rows(PostingsStore.stats(spark, p)) === Set(Seq(0L, null)))
+    assert(rows(TextAnalysis.bm25Stats(TextAnalysis.bm25Corpus(empty)._2)) === Set(Seq(0L, null)))
+    assert(rows(PostingsStore.bm25DocTopK(spark, p, q, 5)).isEmpty)
+    assert(rows(TextAnalysis.bm25DocTopK(q, empty, 5)).isEmpty)
     assert(rows(PostingsStore.bm25DocTopKAsOf(spark, p, q, 5, 0L)) ===
       rows(TextAnalysis.bm25DocTopK(q, docs.take(4).toDF("doc_id", "text"), 5)))
   }

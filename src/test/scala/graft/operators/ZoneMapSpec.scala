@@ -164,10 +164,16 @@ class ZoneMapSpec extends SparkSpec {
         brute(oracle3, q, k))
     }
     // the counter does count probes: the same far query on a derived
-    // frame walks the ladder, one job per round
-    val (_, ladder) = jobsDuring(PointStore.knn(derived(scan2), Int.MaxValue, Int.MaxValue, 3,
-      initialRadius = 1))
-    assert(ladder >= 10, s"ladder probes: $ladder")
+    // frame walks the ladder, one job per round. A probe window no file
+    // footer can match is planned over no file and submits no job, so
+    // the count runs with parquet filter pushdown (and file skipping) off
+    def ladder(): Int = jobsDuring(PointStore.knn(derived(scan2), Int.MaxValue, Int.MaxValue, 3,
+      initialRadius = 1))._2
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    val unpruned = try ladder() finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+    assert(unpruned >= 10, s"ladder probes: $unpruned")
+    val pruned = ladder()
+    assert(pruned <= 2, s"ladder probes with file skipping: $pruned")
   }
 
   test("footers without coordinate statistics fall back to the ladder and stay exact") {
