@@ -327,16 +327,14 @@ object EmbeddingQueries {
       // (r20, guide §1.2 — serve skips re-materializing a LogicalRDD)
       val qs = graft.operators.CheckpointScope.checkpoint(
         e.filter(col("vec_id") < NQueries))
-      val (tmp, schema) = graft.streaming.StreamMeter.setup {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stream-vstore").toString
-        graft.operators.VectorStore.build(
-          e.filter(col("vec_id") % 5 =!= 0), s"$tmp/store",
-          nCentroids = IvfCentroids)
-        s.read.parquet(s"$dir/embeddings.parquet")
-          .filter(col("vec_id") % 5 === 0)
-          .repartition(2).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-vstore").toString
+      graft.operators.VectorStore.build(
+        e.filter(col("vec_id") % 5 =!= 0), s"$tmp/store",
+        nCentroids = IvfCentroids)
+      s.read.parquet(s"$dir/embeddings.parquet")
+        .filter(col("vec_id") % 5 === 0)
+        .repartition(2).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -356,11 +354,8 @@ object EmbeddingQueries {
         graft.operators.VectorStore.topK(s, s"$tmp/store", qs, K, IvfProbe),
         "compacted"))
       val res = eagerRows(s, out)
-      graft.streaming.StreamMeter.setup {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-      }
+      val p = new org.apache.hadoop.fs.Path(tmp)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       res
     }),
     // topic model over the same refined clustering: per-(topic, label)
@@ -503,11 +498,9 @@ object EmbeddingQueries {
     "stream_semantic" -> ((s, dir) => {
       val e = emb(s, dir)
       val prior = e.filter(col("vec_id") % 4 < 3)
-      val (tmp, schema) = graft.streaming.StreamMeter.setup {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sem").toString
-        e.filter(col("vec_id") % 4 === 3).repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sem").toString
+      e.filter(col("vec_id") % 4 === 3).repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -534,7 +527,7 @@ object EmbeddingQueries {
       // resolve the filesystem FROM the path: FileSystem.get(conf) is
       // the default fs, which misdirects the delete under any
       // non-local fs.defaultFS
-      graft.streaming.StreamMeter.setup { fs.delete(tmpPath, true) }
+      fs.delete(tmpPath, true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DataQuality, Html, Perceptron, PointStore, TextAnalysis}
-import graft.streaming.{StreamMeter, StreamingIngest}
+import graft.streaming.StreamingIngest
 import graft.zorder.IntRange
 
 /**
@@ -32,21 +32,18 @@ object StreamingQueries {
   private val gates: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_ingest_range" -> ((s, dir) => {
       import org.apache.hadoop.fs.{FileUtil, Path}
-      // harness staging (metered separately for bench attribution): the
-      // file stream source wants a DIRECTORY to watch; the source table
-      // may itself be a file OR a directory-shaped parquet dataset —
-      // FileUtil.copy handles both recursively (a bare Files.copy of a
+      // the file stream source wants a DIRECTORY to watch; the source
+      // table may itself be a file OR a directory-shaped parquet dataset
+      // — FileUtil.copy handles both recursively (a bare Files.copy of a
       // directory would copy an empty dir and the gate would silently
       // compare an empty store)
-      val (tmp, fs, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-gate").toString
-        val conf = s.sparkContext.hadoopConfiguration
-        val src = new Path(s"$dir/events.parquet")
-        val fs = src.getFileSystem(conf)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        FileUtil.copy(fs, src, fs, new Path(s"$tmp/in/events.parquet"), false, conf)
-        (tmp, fs, s.read.parquet(s"$dir/events.parquet").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-gate").toString
+      val conf = s.sparkContext.hadoopConfiguration
+      val src = new Path(s"$dir/events.parquet")
+      val fs = src.getFileSystem(conf)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      FileUtil.copy(fs, src, fs, new Path(s"$tmp/in/events.parquet"), false, conf)
+      val schema = s.read.parquet(s"$dir/events.parquet").schema
       val stream = s.readStream.schema(schema).parquet(s"$tmp/in")
       val q = StreamingIngest.start(stream, s"$tmp/store", s"$tmp/stats",
         s"$tmp/ckpt", splitThreshold = 100000L)
@@ -56,11 +53,11 @@ object StreamingQueries {
           sum(col("x").cast("long")).as("x_sum"),
           sum(col("y").cast("long")).as("y_sum"))
       // evaluate EAGERLY so the full temp tree (store copy, checkpoint)
-      // can be deleted before returning — otherwise every Verify/Bench
-      // run leaks a store-sized copy in /tmp
+      // can be deleted before returning — no gate run may leave a
+      // store-sized copy in /tmp
       val rows = agg.collect().toSeq
       val outSchema = agg.schema
-      StreamMeter.setup { fs.delete(new Path(tmp), true) }
+      fs.delete(new Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -75,15 +72,13 @@ object StreamingQueries {
     // the 2-D store (the reference's put path, lifted).
     "stream_ingest_box3" -> ((s, dir) => {
       import org.apache.hadoop.fs.{FileUtil, Path}
-      val (tmp, fs, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-gate3").toString
-        val conf = s.sparkContext.hadoopConfiguration
-        val src = new Path(s"$dir/events.parquet")
-        val fs = src.getFileSystem(conf)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        FileUtil.copy(fs, src, fs, new Path(s"$tmp/in/events.parquet"), false, conf)
-        (tmp, fs, s.read.parquet(s"$dir/events.parquet").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-gate3").toString
+      val conf = s.sparkContext.hadoopConfiguration
+      val src = new Path(s"$dir/events.parquet")
+      val fs = src.getFileSystem(conf)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      FileUtil.copy(fs, src, fs, new Path(s"$tmp/in/events.parquet"), false, conf)
+      val schema = s.read.parquet(s"$dir/events.parquet").schema
       val stream = s.readStream.schema(schema).parquet(s"$tmp/in")
       val q = StreamingIngest.start(stream, s"$tmp/store", s"$tmp/stats",
         s"$tmp/ckpt", splitThreshold = 100000L,
@@ -97,7 +92,7 @@ object StreamingQueries {
           sum(col("t").cast("long")).as("t_sum"))
       val rows = agg.collect().toSeq
       val outSchema = agg.schema
-      StreamMeter.setup { fs.delete(new Path(tmp), true) }
+      fs.delete(new Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -113,15 +108,13 @@ object StreamingQueries {
     // unless watermark bookkeeping, window assignment, or append-mode
     // finalization is broken, which is the gate.
     "stream_hourly" -> ((s, dir) => {
-      val (tmp, maxTs, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-hourly").toString
-        val src = graft.sources.EventTime.events(s, dir)
-          .select(expr("timestamp_micros(div(ts, 1000))").as("event_time"),
-            col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"))
-        src.write.parquet(s"$tmp/in")
-        (tmp, src.agg(max(col("event_time"))).head().getTimestamp(0),
-          s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-hourly").toString
+      val src = graft.sources.EventTime.events(s, dir)
+        .select(expr("timestamp_micros(div(ts, 1000))").as("event_time"),
+          col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"))
+      src.write.parquet(s"$tmp/in")
+      val maxTs = src.agg(max(col("event_time"))).head().getTimestamp(0)
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema).parquet(s"$tmp/in")
       val agg = stream
         .withWatermark("event_time", "10 minutes")
@@ -145,10 +138,8 @@ object StreamingQueries {
       val res = s.read.parquet(s"$tmp/out")
       val rows = res.collect().toSeq
       val outSchema = res.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -162,15 +153,13 @@ object StreamingQueries {
     // into its four window starts — streaming window ASSIGNMENT,
     // watermark bookkeeping, and append finalization are all gated.
     "stream_sliding" -> ((s, dir) => {
-      val (tmp, maxTs, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-sliding").toString
-        val src = graft.sources.EventTime.events(s, dir)
-          .select(expr("timestamp_micros(div(ts, 1000))").as("event_time"),
-            col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"))
-        src.write.parquet(s"$tmp/in")
-        (tmp, src.agg(max(col("event_time"))).head().getTimestamp(0),
-          s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-sliding").toString
+      val src = graft.sources.EventTime.events(s, dir)
+        .select(expr("timestamp_micros(div(ts, 1000))").as("event_time"),
+          col("event_type"), expr("cast(round(value*100) as bigint)").as("cents"))
+      src.write.parquet(s"$tmp/in")
+      val maxTs = src.agg(max(col("event_time"))).head().getTimestamp(0)
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema).parquet(s"$tmp/in")
       val agg = stream
         .withWatermark("event_time", "10 minutes")
@@ -195,10 +184,8 @@ object StreamingQueries {
       val res = s.read.parquet(s"$tmp/out")
       val rows = res.collect().toSeq
       val outSchema = res.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -216,15 +203,13 @@ object StreamingQueries {
     // emitted. The oracle replays training doc-by-doc and scores the
     // same extracted text in batch.
     "stream_classify" -> ((s, dir) => {
-      val (tmp, schema, w) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-classify").toString
-        val docs = s.read.parquet(s"$dir/documents.parquet")
-        val w = Perceptron.ipmTrain(docs)
-        docs.withColumn("html", expr(HtmlQueries.FixtureHtmlSql))
-          .select("doc_id", "html")
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema, w)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-classify").toString
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val w = Perceptron.ipmTrain(docs)
+      docs.withColumn("html", expr(HtmlQueries.FixtureHtmlSql))
+        .select("doc_id", "html")
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = Html.extract(stream)
@@ -240,10 +225,8 @@ object StreamingQueries {
       val res = s.read.parquet(s"$tmp/out")
       val rows = res.collect().toSeq
       val outSchema = res.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -258,13 +241,11 @@ object StreamingQueries {
     // into the dedup, so the surviving-row arrival order — the one
     // nondeterministic degree of freedom — cannot affect the result.
     "stream_dedup" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-dedup").toString
-        s.read.parquet(s"$dir/events.parquet")
-          .select("user_id", "event_type")
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-dedup").toString
+      s.read.parquet(s"$dir/events.parquet")
+        .select("user_id", "event_type")
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.dropDuplicates("user_id", "event_type")
@@ -277,10 +258,8 @@ object StreamingQueries {
         .groupBy("event_type").agg(count(lit(1)).as("n_users"))
       val rows = agg.collect().toSeq
       val outSchema = agg.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -300,33 +279,31 @@ object StreamingQueries {
     // pins exactly the batch distinct over the source. Double-emission
     // from lost/evicted state inflates n_users and fails the oracle.
     "stream_dedup_wm" -> ((s, dir) => {
-      val (tmp, schema, delaySec) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-dedupwm").toString
-        val ev = graft.sources.EventTime.events(s, dir)
-          .select(col("user_id"), col("event_type"),
-            expr("timestamp_micros(div(ts, 1000))").as("event_time"))
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("event_time"))
-        val sliced = ev.withColumn("slice", ntile(4).over(w)).cache()
-        val Row2 = sliced.agg(
-          (unix_timestamp(max(col("event_time"))) -
-            unix_timestamp(min(col("event_time")))).as("span")).collect()(0)
-        val delaySec = math.max(1L, Row2.getLong(0) / 2)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        (1 to 4).foreach { k =>
-          val own = sliced.filter(col("slice") === k)
-          val lateDups = sliced.filter(col("slice") === k - 1 &&
-            col("user_id") % 3 === 0)
-          own.unionByName(lateDups).drop("slice")
-            .coalesce(1).write.parquet(s"$tmp/stage$k")
-          // one file per batch, arrival order = slice order
-          val part = new java.io.File(s"$tmp/stage$k").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          Files.copy(part.toPath,
-            java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
-        }
-        sliced.unpersist()
-        (tmp, s.read.parquet(s"$tmp/in").schema, delaySec)
+      val tmp = Files.createTempDirectory("graft-stream-dedupwm").toString
+      val ev = graft.sources.EventTime.events(s, dir)
+        .select(col("user_id"), col("event_type"),
+          expr("timestamp_micros(div(ts, 1000))").as("event_time"))
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("event_time"))
+      val sliced = ev.withColumn("slice", ntile(4).over(w)).cache()
+      val Row2 = sliced.agg(
+        (unix_timestamp(max(col("event_time"))) -
+          unix_timestamp(min(col("event_time")))).as("span")).collect()(0)
+      val delaySec = math.max(1L, Row2.getLong(0) / 2)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      (1 to 4).foreach { k =>
+        val own = sliced.filter(col("slice") === k)
+        val lateDups = sliced.filter(col("slice") === k - 1 &&
+          col("user_id") % 3 === 0)
+        own.unionByName(lateDups).drop("slice")
+          .coalesce(1).write.parquet(s"$tmp/stage$k")
+        // one file per batch, arrival order = slice order
+        val part = new java.io.File(s"$tmp/stage$k").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath,
+          java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
       }
+      sliced.unpersist()
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false").parquet(s"$tmp/in")
@@ -343,10 +320,8 @@ object StreamingQueries {
         .groupBy("event_type").agg(count(lit(1)).as("n_users"))
       val rows = agg.collect().toSeq
       val outSchema = agg.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -369,15 +344,13 @@ object StreamingQueries {
     // whole-store count/sum, kNN id+dist2 sums), not just counts.
     "compact_equiv" -> ((s, dir) => {
       import org.apache.hadoop.fs.{FileUtil, Path}
-      val (tmp, fs, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-compact-equiv").toString
-        val conf = s.sparkContext.hadoopConfiguration
-        val src = new Path(s"$dir/events.parquet")
-        val fs = src.getFileSystem(conf)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        FileUtil.copy(fs, src, fs, new Path(s"$tmp/in/events.parquet"), false, conf)
-        (tmp, fs, s.read.parquet(s"$dir/events.parquet").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-compact-equiv").toString
+      val conf = s.sparkContext.hadoopConfiguration
+      val src = new Path(s"$dir/events.parquet")
+      val fs = src.getFileSystem(conf)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      FileUtil.copy(fs, src, fs, new Path(s"$tmp/in/events.parquet"), false, conf)
+      val schema = s.read.parquet(s"$dir/events.parquet").schema
       val stream = s.readStream.schema(schema).parquet(s"$tmp/in")
       val q = StreamingIngest.start(stream, s"$tmp/store", s"$tmp/stats",
         s"$tmp/ckpt", splitThreshold = 1000000L)
@@ -431,7 +404,7 @@ object StreamingQueries {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("knn_d2_sum",
           org.apache.spark.sql.types.LongType, nullable = false)))
-      StreamMeter.setup { fs.delete(new Path(tmp), true) }
+      fs.delete(new Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(Seq(pre, post)).asJava),
@@ -467,41 +440,39 @@ object StreamingQueries {
     // (over-eager eviction), duplicate pair (replayed emission), or
     // late-filtered row (delay bookkeeping) each breaks the hash.
     "stream_join" -> ((s, dir) => {
-      val (tmp, schema, delaySec) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-join").toString
-        val ev = graft.sources.EventTime.events(s, dir)
-          .filter(col("event_type").isin("view", "click", "purchase"))
-          .select(col("user_id"), col("event_type"),
-            expr("timestamp_micros(div(ts, 1000))").as("event_time"))
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("event_time"))
-        val sliced = ev.withColumn("slice", ntile(4).over(w))
-          // demotion: late-by-one-slot arrival, original event time
-          .withColumn("arrival",
-            when(col("user_id") % 3 === 0, col("slice") + 1).otherwise(col("slice")))
-          .cache()
-        val span = sliced.agg(
-          (unix_timestamp(max(col("event_time"))) -
-            unix_timestamp(min(col("event_time")))).as("span")).collect()(0).getLong(0)
-        val delaySec = math.max(1L, span / 2)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/imp"))
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/conv"))
-        (1 to 5).foreach { k =>
-          // one file per arrival slot per side, empty slots included, so
-          // the two maxFilesPerTrigger=1 sources advance in lockstep
-          Seq("imp" -> (col("event_type") === "view"),
-              "conv" -> (col("event_type") =!= "view")).foreach { case (side, p) =>
-            sliced.filter(col("arrival") === k && p)
-              .select("user_id", "event_type", "event_time")
-              .coalesce(1).write.parquet(s"$tmp/stage-$side$k")
-            val part = new java.io.File(s"$tmp/stage-$side$k").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            Files.copy(part.toPath,
-              java.nio.file.Paths.get(f"$tmp/$side/slice$k%04d.parquet"))
-          }
+      val tmp = Files.createTempDirectory("graft-stream-join").toString
+      val ev = graft.sources.EventTime.events(s, dir)
+        .filter(col("event_type").isin("view", "click", "purchase"))
+        .select(col("user_id"), col("event_type"),
+          expr("timestamp_micros(div(ts, 1000))").as("event_time"))
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("event_time"))
+      val sliced = ev.withColumn("slice", ntile(4).over(w))
+        // demotion: late-by-one-slot arrival, original event time
+        .withColumn("arrival",
+          when(col("user_id") % 3 === 0, col("slice") + 1).otherwise(col("slice")))
+        .cache()
+      val span = sliced.agg(
+        (unix_timestamp(max(col("event_time"))) -
+          unix_timestamp(min(col("event_time")))).as("span")).collect()(0).getLong(0)
+      val delaySec = math.max(1L, span / 2)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/imp"))
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/conv"))
+      (1 to 5).foreach { k =>
+        // one file per arrival slot per side, empty slots included, so
+        // the two maxFilesPerTrigger=1 sources advance in lockstep
+        Seq("imp" -> (col("event_type") === "view"),
+            "conv" -> (col("event_type") =!= "view")).foreach { case (side, p) =>
+          sliced.filter(col("arrival") === k && p)
+            .select("user_id", "event_type", "event_time")
+            .coalesce(1).write.parquet(s"$tmp/stage-$side$k")
+          val part = new java.io.File(s"$tmp/stage-$side$k").listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          Files.copy(part.toPath,
+            java.nio.file.Paths.get(f"$tmp/$side/slice$k%04d.parquet"))
         }
-        sliced.unpersist()
-        (tmp, s.read.parquet(s"$tmp/imp").schema, delaySec)
       }
+      sliced.unpersist()
+      val schema = s.read.parquet(s"$tmp/imp").schema
       val imp = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false").parquet(s"$tmp/imp")
@@ -532,10 +503,8 @@ object StreamingQueries {
           sum(expr("lag_ns div 1000000000")).as("lag_s_sum"))
       val rows = agg.collect().toSeq
       val outSchema = agg.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -559,53 +528,51 @@ object StreamingQueries {
     // window could still match) or a swallowed unmatched impression
     // both break the hash.
     "stream_join_outer" -> ((s, dir) => {
-      val (tmp, schema, delaySec) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-joinout").toString
-        val ev = graft.sources.EventTime.events(s, dir)
-          .filter(col("event_type").isin("view", "click", "purchase"))
-          .select(col("user_id"), col("event_type"),
-            expr("timestamp_micros(div(ts, 1000))").as("event_time"))
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("event_time"))
-        val sliced = ev.withColumn("slice", ntile(4).over(w))
-          .withColumn("arrival",
-            when(col("user_id") % 3 === 0, col("slice") + 1).otherwise(col("slice")))
-          .cache()
-        val mm = sliced.agg(
-          unix_timestamp(max(col("event_time"))).as("mx"),
-          (unix_timestamp(max(col("event_time"))) -
-            unix_timestamp(min(col("event_time")))).as("span")).collect()(0)
-        val delaySec = math.max(1L, mm.getLong(1) / 2)
-        // sentinel epoch: far enough that real windows + delay all
-        // close under watermark = sentinel - delay
-        val sentinelTs = new java.sql.Timestamp(
-          (mm.getLong(0) + 4 * delaySec + 12 * 3600) * 1000L)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/imp"))
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/conv"))
-        import s.implicits._
-        (1 to 6).foreach { k =>
-          // DISTINCT sentinel users per side (-1 impressions, -2
-          // conversions): the two sentinels land at the same instant
-          // and must not match each other — they exist only to advance
-          // both sources' watermarks (min policy) past every real
-          // impression's window
-          Seq("imp" -> -1L, "conv" -> -2L).foreach { case (side, sentUser) =>
-            val p = if (side == "imp") col("event_type") === "view"
-                    else col("event_type") =!= "view"
-            val part =
-              if (k <= 5) sliced.filter(col("arrival") === k && p)
-                .select("user_id", "event_type", "event_time")
-              else Seq((sentUser, "__sentinel", sentinelTs))
-                .toDF("user_id", "event_type", "event_time")
-            part.coalesce(1).write.parquet(s"$tmp/stage-$side$k")
-            val f = new java.io.File(s"$tmp/stage-$side$k").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            Files.copy(f.toPath,
-              java.nio.file.Paths.get(f"$tmp/$side/slice$k%04d.parquet"))
-          }
+      val tmp = Files.createTempDirectory("graft-stream-joinout").toString
+      val ev = graft.sources.EventTime.events(s, dir)
+        .filter(col("event_type").isin("view", "click", "purchase"))
+        .select(col("user_id"), col("event_type"),
+          expr("timestamp_micros(div(ts, 1000))").as("event_time"))
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("event_time"))
+      val sliced = ev.withColumn("slice", ntile(4).over(w))
+        .withColumn("arrival",
+          when(col("user_id") % 3 === 0, col("slice") + 1).otherwise(col("slice")))
+        .cache()
+      val mm = sliced.agg(
+        unix_timestamp(max(col("event_time"))).as("mx"),
+        (unix_timestamp(max(col("event_time"))) -
+          unix_timestamp(min(col("event_time")))).as("span")).collect()(0)
+      val delaySec = math.max(1L, mm.getLong(1) / 2)
+      // sentinel epoch: far enough that real windows + delay all
+      // close under watermark = sentinel - delay
+      val sentinelTs = new java.sql.Timestamp(
+        (mm.getLong(0) + 4 * delaySec + 12 * 3600) * 1000L)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/imp"))
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/conv"))
+      import s.implicits._
+      (1 to 6).foreach { k =>
+        // DISTINCT sentinel users per side (-1 impressions, -2
+        // conversions): the two sentinels land at the same instant
+        // and must not match each other — they exist only to advance
+        // both sources' watermarks (min policy) past every real
+        // impression's window
+        Seq("imp" -> -1L, "conv" -> -2L).foreach { case (side, sentUser) =>
+          val p = if (side == "imp") col("event_type") === "view"
+                  else col("event_type") =!= "view"
+          val part =
+            if (k <= 5) sliced.filter(col("arrival") === k && p)
+              .select("user_id", "event_type", "event_time")
+            else Seq((sentUser, "__sentinel", sentinelTs))
+              .toDF("user_id", "event_type", "event_time")
+          part.coalesce(1).write.parquet(s"$tmp/stage-$side$k")
+          val f = new java.io.File(s"$tmp/stage-$side$k").listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          Files.copy(f.toPath,
+            java.nio.file.Paths.get(f"$tmp/$side/slice$k%04d.parquet"))
         }
-        sliced.unpersist()
-        (tmp, s.read.parquet(s"$tmp/imp").schema, delaySec)
       }
+      sliced.unpersist()
+      val schema = s.read.parquet(s"$tmp/imp").schema
       val imp = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false").parquet(s"$tmp/imp")
@@ -638,10 +605,8 @@ object StreamingQueries {
           coalesce(sum(expr("lag_ns div 1000000000")), lit(0L)).as("lag_s_sum"))
       val rows = agg.collect().toSeq
       val outSchema = agg.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -660,13 +625,11 @@ object StreamingQueries {
     // production stream would add a watermark to bound the state store;
     // the gate's corpus is finite.)
     "stream_curate" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-curate").toString
-        s.read.parquet(s"$dir/documents.parquet")
-          .select("doc_id", "text")
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-curate").toString
+      s.read.parquet(s"$dir/documents.parquet")
+        .select("doc_id", "text")
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val curated = stream
@@ -683,10 +646,8 @@ object StreamingQueries {
       val res = s.read.parquet(s"$tmp/out").select("fp")
       val rows = res.collect().toSeq
       val outSchema = res.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -716,25 +677,23 @@ object StreamingQueries {
     // the full marker/put sequence interplay, online.
     "stream_takedown" -> ((s, dir) => {
       import org.apache.hadoop.fs.Path
-      val (tmp, fs, mSchema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-takedown").toString
-        val base = PointStore.points(
-            s.read.parquet(s"$dir/events.parquet"),
-            col("event_id"), expr("cast(floor(value*100) as int)"),
-            col("user_id"))
-          .withColumn("put_seq", lit(0L))
-        PointStore.write(base, s"$tmp/store")
-        PointStore.append(base.filter(col("id") % 10 === 0)
-          .withColumn("put_seq", lit(2L)), s"$tmp/store")
-        base.filter(col("id") % 5 === 0)
-          .select(col("id"), col("x"), col("y"), lit(1L).as("put_seq"))
-          .coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        base.filter(col("id") % 3 === 0)
-          .select(col("id"), col("x"), col("y"), lit(3L).as("put_seq"))
-          .coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        val fs = new Path(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
-        (tmp, fs, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-takedown").toString
+      val base = PointStore.points(
+          s.read.parquet(s"$dir/events.parquet"),
+          col("event_id"), expr("cast(floor(value*100) as int)"),
+          col("user_id"))
+        .withColumn("put_seq", lit(0L))
+      PointStore.write(base, s"$tmp/store")
+      PointStore.append(base.filter(col("id") % 10 === 0)
+        .withColumn("put_seq", lit(2L)), s"$tmp/store")
+      base.filter(col("id") % 5 === 0)
+        .select(col("id"), col("x"), col("y"), lit(1L).as("put_seq"))
+        .coalesce(1).write.mode("append").parquet(s"$tmp/in")
+      base.filter(col("id") % 3 === 0)
+        .select(col("id"), col("x"), col("y"), lit(3L).as("put_seq"))
+        .coalesce(1).write.mode("append").parquet(s"$tmp/in")
+      val fs = new Path(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val mSchema = s.read.parquet(s"$tmp/in").schema
       val store = PointStore.open(s, s"$tmp/store")
       val stream = s.readStream.schema(mSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -775,7 +734,7 @@ object StreamingQueries {
           "total_cnt", "total_id_sum", "knn_id_sum", "knn_d2_sum").map(n =>
           org.apache.spark.sql.types.StructField(n,
             org.apache.spark.sql.types.LongType, nullable = false)))
-      StreamMeter.setup { fs.delete(new Path(tmp), true) }
+      fs.delete(new Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(
@@ -791,28 +750,26 @@ object StreamingQueries {
     // duplicates are invisible — at-least-once in, exactly-once out)
     "stream_takedown_range" -> ((s, dir) => {
       import org.apache.hadoop.fs.Path
-      val (tmp, fs, mSchema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-rtakedown").toString
-        val base = PointStore.points(
-            s.read.parquet(s"$dir/events.parquet"),
-            col("event_id"), expr("cast(floor(value*100) as int)"),
-            col("user_id"))
-          .withColumn("put_seq", lit(0L))
-        PointStore.write(base, s"$tmp/store")
-        PointStore.append(base.filter(col("id") % 10 === 0)
-          .withColumn("put_seq", lit(2L)), s"$tmp/store")
-        locally {
-          import s.implicits._
-          Seq((0, 15000, 0, 70, 1L))
-            .toDF("xmin", "xmax", "ymin", "ymax", "put_seq")
-            .coalesce(1).write.mode("append").parquet(s"$tmp/in")
-          Seq((12000, 40000, 50, 130, 3L))
-            .toDF("xmin", "xmax", "ymin", "ymax", "put_seq")
-            .coalesce(1).write.mode("append").parquet(s"$tmp/in")
-        }
-        val fs = new Path(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
-        (tmp, fs, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-rtakedown").toString
+      val base = PointStore.points(
+          s.read.parquet(s"$dir/events.parquet"),
+          col("event_id"), expr("cast(floor(value*100) as int)"),
+          col("user_id"))
+        .withColumn("put_seq", lit(0L))
+      PointStore.write(base, s"$tmp/store")
+      PointStore.append(base.filter(col("id") % 10 === 0)
+        .withColumn("put_seq", lit(2L)), s"$tmp/store")
+      locally {
+        import s.implicits._
+        Seq((0, 15000, 0, 70, 1L))
+          .toDF("xmin", "xmax", "ymin", "ymax", "put_seq")
+          .coalesce(1).write.mode("append").parquet(s"$tmp/in")
+        Seq((12000, 40000, 50, 130, 3L))
+          .toDF("xmin", "xmax", "ymin", "ymax", "put_seq")
+          .coalesce(1).write.mode("append").parquet(s"$tmp/in")
       }
+      val fs = new Path(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val mSchema = s.read.parquet(s"$tmp/in").schema
       val store = PointStore.open(s, s"$tmp/store")
       val stream = s.readStream.schema(mSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -856,7 +813,7 @@ object StreamingQueries {
           "total_cnt", "total_id_sum", "knn_id_sum", "knn_d2_sum").map(n =>
           org.apache.spark.sql.types.StructField(n,
             org.apache.spark.sql.types.LongType, nullable = false)))
-      StreamMeter.setup { fs.delete(new Path(tmp), true) }
+      fs.delete(new Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(
@@ -864,13 +821,11 @@ object StreamingQueries {
     }),
 
     "stream_dq" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-dq").toString
-        s.read.parquet(s"$dir/events.parquet")
-          .select("event_id", "event_type", "value")
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-dq").toString
+      s.read.parquet(s"$dir/events.parquet")
+        .select("event_id", "event_type", "value")
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val rules = Seq(
@@ -893,10 +848,8 @@ object StreamingQueries {
         .groupBy("check_name").agg(sum(col("n_bad")).as("n_bad"))
       val rows = merged.collect().toSeq
       val outSchema = merged.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -910,17 +863,15 @@ object StreamingQueries {
     // trending-terms loop: O(d·w) state per batch, exact top-k probed
     // through the merged sketch.
     "stream_topk" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-topk").toString
-        s.read.parquet(s"$dir/documents.parquet")
-          .withColumn("text", expr(SketchQueries.AugSql))
-          .select("doc_id", "text")
-          // two microbatches: the merge law needs >= 2 partials; the
-          // vocabulary-widened fixture makes every extra batch a full
-          // ~200k-term hashing pass, so no more than the law requires
-          .repartition(2).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-topk").toString
+      s.read.parquet(s"$dir/documents.parquet")
+        .withColumn("text", expr(SketchQueries.AugSql))
+        .select("doc_id", "text")
+        // two microbatches: the merge law needs >= 2 partials; the
+        // vocabulary-widened fixture makes every extra batch a full
+        // ~200k-term hashing pass, so no more than the law requires
+        .repartition(2).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -937,10 +888,8 @@ object StreamingQueries {
         s.read.parquet(s"$tmp/in"), merged, 20)
       val rows = probed.collect().toSeq
       val outSchema = probed.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -970,28 +919,26 @@ object StreamingQueries {
     // leaked state merges them, and either fails the hash.
     "stream_sessionize" -> ((s, dir) => {
       val gap = 86400L * 1000000000L
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-sess").toString
-        val ev = graft.sources.EventTime.events(s, dir)
-          .select(col("user_id"), col("ts"))
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"))
-        val sliced = ev.withColumn("slice", ntile(4).over(w)).cache()
-        val maxTs = sliced.agg(max(col("ts"))).collect()(0).getLong(0)
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        (1 to 5).foreach { k =>
-          val part =
-            if (k <= 4) sliced.filter(col("slice") === k).drop("slice")
-            else ev.select(col("user_id")).distinct()
-              .withColumn("ts", lit(maxTs + 2 * gap + 1))
-          part.coalesce(1).write.parquet(s"$tmp/stage$k")
-          val f = new java.io.File(s"$tmp/stage$k").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          Files.copy(f.toPath,
-            java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
-        }
-        sliced.unpersist()
-        (tmp, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-sess").toString
+      val ev = graft.sources.EventTime.events(s, dir)
+        .select(col("user_id"), col("ts"))
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"))
+      val sliced = ev.withColumn("slice", ntile(4).over(w)).cache()
+      val maxTs = sliced.agg(max(col("ts"))).collect()(0).getLong(0)
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      (1 to 5).foreach { k =>
+        val part =
+          if (k <= 4) sliced.filter(col("slice") === k).drop("slice")
+          else ev.select(col("user_id")).distinct()
+            .withColumn("ts", lit(maxTs + 2 * gap + 1))
+        part.coalesce(1).write.parquet(s"$tmp/stage$k")
+        val f = new java.io.File(s"$tmp/stage$k").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(f.toPath,
+          java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
       }
+      sliced.unpersist()
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       import s.implicits._
@@ -1006,10 +953,8 @@ object StreamingQueries {
         .select("user_id", "session_start", "n_events", "duration_s")
       val rows = res.collect().toSeq
       val outSchema = res.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1025,13 +970,11 @@ object StreamingQueries {
     // the oracle is exactly the batch quantile_sketch replay, and
     // equality IS the merge law.
     "stream_quantiles" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-quant").toString
-        s.read.parquet(s"$dir/events.parquet")
-          .select(col("event_id"), expr("cast(round(value*100) as bigint)").as("cents"))
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-quant").toString
+      s.read.parquet(s"$dir/events.parquet")
+        .select(col("event_id"), expr("cast(round(value*100) as bigint)").as("cents"))
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1047,10 +990,8 @@ object StreamingQueries {
       val probed = graft.operators.QuantileSketch.probeLeafCounts(merged)
       val rows = probed.collect().toSeq
       val outSchema = probed.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1065,14 +1006,12 @@ object StreamingQueries {
     // analog of HLL's max-idempotence). Oracle = the batch kmv_sketch
     // replay itself.
     "stream_kmv" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-kmv").toString
-        s.read.parquet(s"$dir/documents.parquet")
-          .withColumn("text", expr(SketchQueries.AugSql))
-          .select("doc_id", "text")
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-kmv").toString
+      s.read.parquet(s"$dir/documents.parquet")
+        .withColumn("text", expr(SketchQueries.AugSql))
+        .select("doc_id", "text")
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1087,10 +1026,8 @@ object StreamingQueries {
         s.read.parquet(s"$tmp/sketch"))
       val rows = merged.collect().toSeq
       val outSchema = merged.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1107,27 +1044,25 @@ object StreamingQueries {
     // equal the one-shot full-union flood: a dropped batch, doubled
     // fold, or contraction error each breaks the hash.
     "stream_cc" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-cc").toString
-        // prior graph = the block cycles; its labels seed state b0
-        graft.operators.LinkGraph.components(HtmlQueries.ccPriorEdges(s, dir))
-          .write.parquet(s"$tmp/labels/b0")
-        graft.operators.CheckpointScope.releaseAll()
-        // the chain batch arrives as three time-ordered slices
-        val chain = HtmlQueries.ccChainEdges(s, dir)
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("src"))
-        val sliced = chain.withColumn("slice", ntile(3).over(w))
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        (1 to 3).foreach { k =>
-          sliced.filter(col("slice") === k).select("src", "dst")
-            .coalesce(1).write.parquet(s"$tmp/stage$k")
-          val part = new java.io.File(s"$tmp/stage$k").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          Files.copy(part.toPath,
-            java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
-        }
-        (tmp, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-cc").toString
+      // prior graph = the block cycles; its labels seed state b0
+      graft.operators.LinkGraph.components(HtmlQueries.ccPriorEdges(s, dir))
+        .write.parquet(s"$tmp/labels/b0")
+      graft.operators.CheckpointScope.releaseAll()
+      // the chain batch arrives as three time-ordered slices
+      val chain = HtmlQueries.ccChainEdges(s, dir)
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("src"))
+      val sliced = chain.withColumn("slice", ntile(3).over(w))
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      (1 to 3).foreach { k =>
+        sliced.filter(col("slice") === k).select("src", "dst")
+          .coalesce(1).write.parquet(s"$tmp/stage$k")
+        val part = new java.io.File(s"$tmp/stage$k").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath,
+          java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
       }
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1169,10 +1104,8 @@ object StreamingQueries {
       }
       val rows = rowsPre ++ roster("post").collect().toSeq
       val outSchema = pre.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1190,22 +1123,20 @@ object StreamingQueries {
     // by ONE truncating division over the summed partials — per-batch
     // truncation would diverge) each breaks the hash.
     "stream_postings" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-postings").toString
-        val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
-        val sliced = d.withColumn("slice", ntile(4).over(w))
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        (1 to 4).foreach { k =>
-          sliced.filter(col("slice") === k).select("doc_id", "text")
-            .coalesce(1).write.parquet(s"$tmp/stage$k")
-          val part = new java.io.File(s"$tmp/stage$k").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          Files.copy(part.toPath,
-            java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
-        }
-        (tmp, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-postings").toString
+      val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
+      val sliced = d.withColumn("slice", ntile(4).over(w))
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      (1 to 4).foreach { k =>
+        sliced.filter(col("slice") === k).select("doc_id", "text")
+          .coalesce(1).write.parquet(s"$tmp/stage$k")
+        val part = new java.io.File(s"$tmp/stage$k").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath,
+          java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet"))
       }
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1234,10 +1165,8 @@ object StreamingQueries {
       graft.operators.PostingsStore.compact(s, s"$tmp/store")
       val rows = rowsPre ++ phaseAgg("compacted").collect().toSeq
       val outSchema = streamed.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1251,27 +1180,25 @@ object StreamingQueries {
     // history the bounds slice IS the batch subtree layout the stream
     // already wrote: nothing is rewritten or versioned to serve it
     "stream_postings_asof" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-pasof").toString
-        val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
-        val sliced = d.withColumn("slice", ntile(3).over(w))
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        (1 to 3).foreach { k =>
-          sliced.filter(col("slice") === k).select("doc_id", "text")
-            .coalesce(1).write.parquet(s"$tmp/stage$k")
-          val part = new java.io.File(s"$tmp/stage$k").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dest = java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet")
-          Files.copy(part.toPath, dest)
-          // pin delivery order: batch id k-1 must carry slice k (the
-          // file source orders by mtime; same-millisecond copies would
-          // leave the as-of bounds racing the tie-break)
-          Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
-        }
-        (tmp, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-pasof").toString
+      val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
+      val sliced = d.withColumn("slice", ntile(3).over(w))
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      (1 to 3).foreach { k =>
+        sliced.filter(col("slice") === k).select("doc_id", "text")
+          .coalesce(1).write.parquet(s"$tmp/stage$k")
+        val part = new java.io.File(s"$tmp/stage$k").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        val dest = java.nio.file.Paths.get(f"$tmp/in/slice$k%04d.parquet")
+        Files.copy(part.toPath, dest)
+        // pin delivery order: batch id k-1 must carry slice k (the
+        // file source orders by mtime; same-millisecond copies would
+        // leave the as-of bounds racing the tie-break)
+        Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 60000L))
       }
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1305,10 +1232,8 @@ object StreamingQueries {
           s, s"$tmp/store", qs, 10), "live"))
       val rows = out.collect().toSeq
       val outSchema = out.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1324,26 +1249,24 @@ object StreamingQueries {
     // the one-shot replay over the LAST-WRITER corpus; the redelivered
     // batch must not move it; the fold must be result-invisible
     "stream_postings_reindex" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-reidx").toString
-        val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
-        graft.operators.PostingsStore.build(d, s"$tmp/store")
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        // two update waves over disjoint doc subsets, delivered in order
-        Seq(10 -> "updza updzb", 15 -> "updzc").zipWithIndex.foreach {
-          case ((m, extra), i) =>
-            d.filter(col("doc_id") % m === 0)
-              .select(col("doc_id"), concat(col("text"), lit(" " + extra)).as("text"))
-              .coalesce(1).write.parquet(s"$tmp/stage$m")
-            val part = new java.io.File(s"$tmp/stage$m").listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            val dest = java.nio.file.Paths.get(f"$tmp/in/upd$i%04d.parquet")
-            Files.copy(part.toPath, dest)
-            Files.setLastModifiedTime(dest,
-              java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        }
-        (tmp, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-reidx").toString
+      val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
+      graft.operators.PostingsStore.build(d, s"$tmp/store")
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      // two update waves over disjoint doc subsets, delivered in order
+      Seq(10 -> "updza updzb", 15 -> "updzc").zipWithIndex.foreach {
+        case ((m, extra), i) =>
+          d.filter(col("doc_id") % m === 0)
+            .select(col("doc_id"), concat(col("text"), lit(" " + extra)).as("text"))
+            .coalesce(1).write.parquet(s"$tmp/stage$m")
+          val part = new java.io.File(s"$tmp/stage$m").listFiles()
+            .filter(_.getName.endsWith(".parquet")).head
+          val dest = java.nio.file.Paths.get(f"$tmp/in/upd$i%04d.parquet")
+          Files.copy(part.toPath, dest)
+          Files.setLastModifiedTime(dest,
+            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
       }
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1384,10 +1307,8 @@ object StreamingQueries {
       graft.operators.PostingsStore.compact(s, s"$tmp/store")
       val rows = rowsMid ++ phaseAgg("folded").collect().toSeq
       val outSchema = streamed.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
@@ -1404,21 +1325,19 @@ object StreamingQueries {
     // through markers + negative partials; 'compacted' after the
     // physical fold — both must equal the filtered-corpus replay.
     "stream_postings_takedown" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-ptd").toString
-        val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
-        graft.operators.PostingsStore.build(d, s"$tmp/store")
-        Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
-        Seq(5, 7).zipWithIndex.foreach { case (m, i) =>
-          d.filter(col("doc_id") % m === 0).select("doc_id")
-            .coalesce(1).write.parquet(s"$tmp/stage$m")
-          val part = new java.io.File(s"$tmp/stage$m").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          Files.copy(part.toPath,
-            java.nio.file.Paths.get(f"$tmp/in/del$i%04d.parquet"))
-        }
-        (tmp, s.read.parquet(s"$tmp/in").schema)
+      val tmp = Files.createTempDirectory("graft-stream-ptd").toString
+      val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
+      graft.operators.PostingsStore.build(d, s"$tmp/store")
+      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+      Seq(5, 7).zipWithIndex.foreach { case (m, i) =>
+        d.filter(col("doc_id") % m === 0).select("doc_id")
+          .coalesce(1).write.parquet(s"$tmp/stage$m")
+        val part = new java.io.File(s"$tmp/stage$m").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath,
+          java.nio.file.Paths.get(f"$tmp/in/del$i%04d.parquet"))
       }
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1441,10 +1360,8 @@ object StreamingQueries {
       val (streamed, outSchema) = phaseRows("streamed")
       graft.operators.PostingsStore.compact(s, s"$tmp/store")
       val (compacted, _) = phaseRows("compacted")
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(
@@ -1452,16 +1369,14 @@ object StreamingQueries {
     }),
 
     "stream_hll" -> ((s, dir) => {
-      val (tmp, schema) = StreamMeter.setup {
-        val tmp = Files.createTempDirectory("graft-stream-hll").toString
-        // same vocabulary-widening fixture as the batch sketch gates
-        // (the raw corpus is ~31 distinct terms — small-range regime)
-        s.read.parquet(s"$dir/documents.parquet")
-          .withColumn("text", expr(SketchQueries.AugSql))
-          .select("doc_id", "text")
-          .repartition(4).write.parquet(s"$tmp/in")
-        (tmp, s.read.parquet(s"$tmp/in").schema)
-      }
+      val tmp = Files.createTempDirectory("graft-stream-hll").toString
+      // same vocabulary-widening fixture as the batch sketch gates
+      // (the raw corpus is ~31 distinct terms — small-range regime)
+      s.read.parquet(s"$dir/documents.parquet")
+        .withColumn("text", expr(SketchQueries.AugSql))
+        .select("doc_id", "text")
+        .repartition(4).write.parquet(s"$tmp/in")
+      val schema = s.read.parquet(s"$tmp/in").schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
       val q = stream.writeStream
@@ -1477,10 +1392,8 @@ object StreamingQueries {
       val est = graft.operators.Sketches.hllEstimate(merged)
       val rows = est.collect().toSeq
       val outSchema = est.schema
-      StreamMeter.setup {
-        org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
+      org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(tmp), true)
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)

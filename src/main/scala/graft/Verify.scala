@@ -21,9 +21,9 @@ object Verify {
       // driver tables carry TIMESTAMP(NANOS) which Spark 4 otherwise
       // rejects; nanos surface as BIGINT (ordering-equivalent)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same session shape as Bench: with the extensions loaded, every
-      // oracle comparison ALSO gates the ZOrderPruningRule's soundness
-      // (a pruning rule that dropped rows would hash-mismatch here)
+      // with the extensions loaded, every oracle comparison ALSO gates
+      // the ZOrderPruningRule's soundness (a pruning rule that dropped
+      // rows would hash-mismatch here)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -193,8 +193,7 @@ object Analytics {
    * true adversarial input — EVERY point on the front — the output
    * itself is corpus-sized and any exact algorithm's totally-ordered
    * emit is output-bound; the local pass guarantees the global window
-   * is bounded by that output, not by the pre-filter's looseness
-   * (measured in `tools/probe_r13_skyline.scala`).
+   * is bounded by that output, not by the pre-filter's looseness.
    *
    * Output: `(id, x, y)` — the non-dominated points.
    */

@@ -12,14 +12,14 @@ import org.apache.spark.sql.DataFrame
  * still reads (the final CC label table, a survivors id-list) can only
  * be freed once the caller has materialized the result. Without a hook
  * for that moment, every such query run in a long-lived session leaves
- * its result-lineage blocks resident forever (~20 blocks across one
- * 124-key sweep, measured round 10).
+ * its result-lineage blocks resident forever.
  *
  * The hook is [[releaseAll]]: call it when the results consumed so far
  * are materialized (written to a sink, collected) and no DataFrame
  * returned earlier will be re-executed. Verify calls it after writing
- * each query's parquet; Bench calls it after each measured run; a
- * resident service would call it at its own request boundaries.
+ * each query's parquet; a resident service calls it at its own request
+ * boundaries. After the call, no gate leaves a persisted RDD behind
+ * (`ContractSpec` checks this for every registered query).
  * Checkpointed frames CANNOT be re-executed after release — a local
  * checkpoint has no lineage to recompute from — which is exactly why
  * the release point is the caller's to choose, not the operator's.

@@ -891,12 +891,11 @@ object Dedup {
    *  - the hashed projection is localCheckpointed ONCE and shared by
    *    its three consumers (dup inventory, dup starts, final join) —
    *    the [[nightly]] pattern; without it each consumer re-tokenizes
-   *    and re-hashes the corpus. The checkpoint's blocks live until the
-   *    returned plan is consumed and the Dataset garbage-collects (the
-   *    operator cannot unpersist what its result still reads) — a
-   *    RESIDENT service calling this repeatedly should drop dead blocks
-   *    between calls (`spark.sparkContext.getPersistentRDDs` sweep, as
-   *    `graft.Bench` does) or isolate calls per job;
+   *    and re-hashes the corpus. The checkpoint is registered with
+   *    [[CheckpointScope]]: its blocks live until the caller has
+   *    consumed the returned plan and calls
+   *    [[CheckpointScope.releaseAll]] (the operator cannot unpersist
+   *    what its result still reads);
    *  - the gram-frequency table aggregates per-document DISTINCT grams
    *    (`array_distinct` before the explode, so intra-doc repeats never
    *    inflate the exchange) — gram-vocabulary scale, map-side
@@ -1314,37 +1313,6 @@ object Dedup {
       charFanOut(txt, allText)
     }
   }
-
-  // stage-level probe hooks for tools/probe_r14_spanchars.scala —
-  // expose the private char-machinery stages so the probe can time
-  // each exchange in isolation (not part of the public surface)
-  private[graft] def probeCharTxt(df: DataFrame): DataFrame = charTxt(df)
-  private[graft] def probeCharReps(txt: DataFrame, k: Int): DataFrame =
-    charReps(txt, k).scopedCheckpoint()
-  private[graft] def probeCharDup(active: DataFrame, minDf: Int): DataFrame =
-    active.select(col("min_doc"), col("m"), explode(expr("array_distinct(ghs)")).as("gh"))
-      .groupBy("gh")
-      .agg(sum(col("m")).as("df"), min(col("min_doc")).as("keeper_doc"))
-      .filter(col("df") >= minDf)
-  private[graft] def probeCharStarts(active: DataFrame, dup: DataFrame): DataFrame =
-    active.select(col("min_doc"), posexplode(col("ghs")))
-      .toDF("min_doc", "i", "gh")
-      .join(dup, "gh")
-      .groupBy("min_doc")
-      .agg(sort_array(collect_list(col("i").cast("long"))).as("ss_all"),
-        sort_array(collect_list(
-          when(col("keeper_doc") =!= col("min_doc"), col("i").cast("long"))))
-          .as("ss_keep"))
-  private[graft] def probeCharPerText(active: DataFrame, starts: DataFrame): DataFrame =
-    active.join(starts, Seq("min_doc"), "left")
-      .withColumn("ss_all",
-        coalesce(col("ss_all"), expr("cast(array() as array<bigint>)")))
-      .withColumn("ss_keep",
-        coalesce(col("ss_keep"), expr("cast(array() as array<bigint>)")))
-      .select(col("tkey"), col("min_doc"), col("n").cast("long").as("n_chars"))
-  private[graft] def probeCharFan(txt: DataFrame, reps: DataFrame,
-      k: Int, minDf: Int): DataFrame =
-    charFanOut(txt, charMachinery(reps, k, minDf))
 
   /**
    * 60-bit SimHash over the distinct word set: per bit position, words

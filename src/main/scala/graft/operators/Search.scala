@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions._
  * The corpus is never exchanged: two scans (df, candidates) plus a
  * tokenize-only pass for verification. For an ALL-stopword phrase the
  * rarest term is still corpus-frequent and the candidate broadcast is
- * the binding constraint — the degenerate probe is documented in
- * `tools/probe_r13_phrase.scala`.
+ * the binding constraint.
  */
 object Search {
 

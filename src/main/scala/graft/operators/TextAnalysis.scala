@@ -1225,7 +1225,7 @@ object TextAnalysis {
   /** The memoized training pass behind [[wordpieceTrain]] and
     * [[wordpieceVocab]]: the collected merge list is model-scale
     * (≤ `rounds` rows), so caching it on the corpus content key means
-    * a bench run where the train gate and the encode gate see the same
+    * a session where the train gate and the encode gate see the same
     * corpus trains ONCE — previously each call re-ran the full
     * per-round aggregate loop. */
   private def wordpieceMerges(df: DataFrame, rounds: Int)

@@ -325,32 +325,24 @@ class PostingsStoreSpec extends SparkSpec {
     PostingsStore.drop(spark, tmp)
   }
 
-  test("a term-equality probe prunes by parquet min/max on the clustered layout") {
+  test("a term-equality probe reads a single postings file") {
     // 200 docs, each a single distinct word -> term-range files carry
     // disjoint term ranges; probing one term must push the filter to
-    // the scan (file skipping then follows from footer stats)
-    val docs = spark.range(200)
-      .select(col("id").as("doc_id"), concat(lit("w"), format_string("%03d", col("id"))).as("text"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-postings-spec2").toString
-    PostingsStore.build(docs, tmp)
-    val probe = PostingsStore.postings(spark, tmp).filter(col("term") === "w042")
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(term), EqualTo(term,w042)]"), plan)
-    assert(probe.collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(42L))
-    PostingsStore.drop(spark, tmp)
-  }
-
-  test("a term-equality probe reads a single postings file") {
-    val docs = spark.range(200)
+    // the scan, and footer stats then skip every other file. The build
+    // runs on its own session with coalescing off (build uses the
+    // frame's session), so it writes one term-range file per shuffle
+    // partition and the shared session's conf never changes
+    val noCoalesce = spark.newSession()
+    noCoalesce.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val docs = noCoalesce.range(200)
       .select(col("id").as("doc_id"), concat(lit("w"), format_string("%03d", col("id"))).as("text"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-postings-onefile").toString
-    // one term-range file per shuffle partition
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try PostingsStore.build(docs, tmp)
-    finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    PostingsStore.build(docs, tmp)
     val all = PostingsStore.postings(spark, tmp)
     assert(all.inputFiles.length > 1)
     val probe = all.filter(col("term") === "w042")
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [IsNotNull(term), EqualTo(term,w042)]"), plan)
     assert(probe.collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(42L))
     val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
     val files = plans.collect(probe.queryExecution.executedPlan) {
