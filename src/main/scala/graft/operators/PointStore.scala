@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,86 +88,104 @@ object PointStore {
   /**
    * Exact k-nearest-neighbor with deterministic (dist², id) tie order —
    * the reference's best-first search (`Client.java:92-152`) re-expressed
-   * as probe jobs over a square window around the query point (analog
-   * of `Client.java:118-126`) plus a final `TakeOrderedAndProject`
-   * (`orderBy(dist2, id).limit(k)`), which Spark executes as a
-   * distributed per-partition top-k + small driver merge: no full sort,
-   * no driver materialization of candidates. Rows with a null x or y
-   * have no distance and are never returned. Distances are exact while
-   * dist² fits a Long (query and points within 2^31 of each other).
+   * as rounds of `orderBy(dist2, id).limit(k)` over a square window
+   * around the query point (analog of `Client.java:118-126`), which Spark
+   * executes as a distributed per-partition top-k + small driver merge
+   * (`TakeOrderedAndProject`): no full sort, no driver materialization
+   * of candidates. Rows with a null x or y have no distance and are
+   * never returned. Distances are exact while dist² fits a Long (query
+   * and points within 2^31 of each other). Distance ties are KEPT up to
+   * k results (the reference's TreeSet silently drops equidistant
+   * points, `Client.java:94-101` — documented divergence, SURVEY §2.1).
    *
-   * INVARIANT: the final window's radius is at least the true k-th
-   * distance, so it holds every row of the answer, ties included — the
-   * reference's termination invariant (`Client.java:131-134`). A probe
-   * window holding ≥ k rows bounds the k-th distance by its own k-th
-   * distance; see [[knnRadius]] for how the windows are chosen.
-   * Distance ties are KEPT up to k results (the reference's TreeSet
-   * silently drops equidistant points, `Client.java:94-101` — documented
-   * divergence, SURVEY §2.1).
-   *
-   * TERMINATION: on a bare store scan (`PointStore.open(..).df`) the
-   * footer zone map ([[ZoneMap]]) seeds the search, and it submits AT
-   * MOST ONE probe job before the final scan: the probe radius is the
-   * one expected to hold ~2k rows at the local density, and a probe
-   * holding fewer than k rows jumps straight to the zone map's cap,
-   * which holds ≥ k rows by the footers' counts. On any other frame
-   * (derived frames, [[PointStore#live]], [[PointStore#snapshotAsOf]])
-   * the probe radius starts at `initialRadius` and grows ×8 until the
-   * window covers every Int coordinate — AT MOST 12 probes
-   * (8^11 > 2^32), each collecting k scalars; there either the window
-   * holds ≥ k rows or the frame has fewer than k rows with
-   * coordinates, all of which that window takes. No exit can return
-   * a partial window (specs: "knn widening loop is probe-bounded",
-   * "knn probe jobs").
+   * TERMINATION, as in [[nearest]]: on a bare store scan
+   * (`PointStore.open(..).df`) the footer zone map ([[ZoneMap]]) seeds
+   * the search, and the query costs ONE Spark job when its probe answers
+   * (the returned frame is then local, so collecting it submits none),
+   * else the probe plus the final scan. On any other frame (derived
+   * frames, [[PointStore#live]], [[PointStore#snapshotAsOf]]) the window
+   * starts at `initialRadius` and grows ×8 — AT MOST 12 rounds
+   * (8^11 > 2^32), each of which may answer the same way; no exit can
+   * return a partial window (specs: "knn widening loop is
+   * probe-bounded", "knn probe jobs").
    */
-  def knn(pts: DataFrame, qx: Int, qy: Int, k: Int, initialRadius: Int = 64): DataFrame = {
-    def window(r: Long): DataFrame = rangeQuery(pts, around(qx, r), around(qy, r))
-    val d2 = dist2(col("x"), col("y"), qx, qy)
-    window(knnRadius(pts, Seq("x", "y"), Seq(qx, qy), k, initialRadius, window, d2))
-      .withColumn("dist2", d2)
-      .orderBy(col("dist2"), col("id"))
-      .limit(k)
-      .select("id", "x", "y", "dist2")
-  }
+  def knn(pts: DataFrame, qx: Int, qy: Int, k: Int, initialRadius: Int = 64): DataFrame =
+    nearest(pts, Seq("x", "y"), Seq(qx, qy), k, initialRadius,
+      r => rangeQuery(pts, around(qx, r), around(qy, r)), "dist2", dist2(col("x"), col("y"), qx, qy))
 
   /** `[q - r, q + r]` clamped to the Int range. */
   private[operators] def around(q: Int, r: Long): IntRange =
     IntRange(math.max(Int.MinValue.toLong, q - r).toInt, math.min(Int.MaxValue.toLong, q + r).toInt)
 
+  /** The largest r whose r² fits a Long: ⌊√Long.MaxValue⌋. */
+  private val MaxSquarable = 3037000499L
+
   /**
-   * The radius of the final kNN window around `q` over the coordinate
-   * columns `coords`. One probe job per round: the k smallest window
-   * distances give both the saturation check (fewer than k rows =>
-   * widen) and the k-th bound. A bare parquet scan starts from its
-   * [[ZoneMap]]'s probe radius and falls back on its cap, so it probes
-   * at most once; any other frame, or a scan whose footers lack
-   * statistics, walks the ×8 ladder from `initialRadius`. The window
-   * of the returned radius holds the whole answer: when fewer than k
-   * rows have coordinates it covers every Int coordinate, which takes
-   * exactly the rows with coordinates.
+   * The exact k nearest rows of `pts` to `q` over the coordinate columns
+   * `coords`, as `(id, coords..., distName)` in (`dist`, id) order — the
+   * search [[knn]] and [[SpatioTemporal.knn3]] share. Every round runs
+   * the final plan at a window radius r:
+   * `window(r).withColumn(distName, dist).orderBy(distName, id).limit(k)`.
+   *
+   * INVARIANT: a round answers the query when its window holds ≥ k rows
+   * and its k-th distance fits the window's inscribed ball (d²ₖ ≤ r²):
+   * every row outside the window lies beyond the ball, so strictly
+   * farther than the k-th, and the window's top k in (dist², id) order
+   * are the global top k, ties included — the reference's termination
+   * test (`Client.java:131-134`) with the ball as the scanned region. A
+   * round whose window covers every Int coordinate answers too: it holds
+   * every row with coordinates. An answering round's rows come back as a
+   * local relation with the plan's schema. Otherwise the k-th distance
+   * bounds the answer's radius (a window holding ≥ k rows puts k rows
+   * within it), as does a [[ZoneMap]]'s cap, and the final plan at that
+   * radius comes back unexecuted.
+   *
+   * TERMINATION: a bare parquet scan starts from its zone map's probe
+   * radius (sized so its ball holds ~2k rows) and probes at most once:
+   * 1 job when the probe answers, else the probe plus the final scan at
+   * the k-th distance's radius or, when the probe holds fewer than k
+   * rows, at the cap, which holds ≥ k rows by the footers' counts; no
+   * probe at all when the probe radius reaches the cap or fewer than k
+   * rows have coordinates. Any other frame, or a scan whose footers lack
+   * statistics, walks the ×8 ladder from `initialRadius` until a round
+   * answers or holds ≥ k rows; the round at the radius covering every
+   * Int coordinate always answers.
    */
-  private[operators] def knnRadius(pts: DataFrame, coords: Seq[String], q: Seq[Int], k: Int,
-                                   initialRadius: Int, window: Long => DataFrame,
-                                   dist: Column): Long = {
+  private[operators] def nearest(pts: DataFrame, coords: Seq[String], q: Seq[Int], k: Int,
+                                 initialRadius: Int, window: Long => DataFrame,
+                                 distName: String, dist: Column): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val full = q.map(v => math.max(v.toLong - Int.MinValue, Int.MaxValue.toLong - v)).max
+    def top(r: Long): DataFrame = window(r).withColumn(distName, dist)
+      .orderBy(col(distName), col("id")).limit(k)
+      .select((("id" +: coords) :+ distName).map(col): _*)
     def radius(d2: Long): Long = math.min(math.ceil(math.sqrt(d2.toDouble)).toLong + 1, full)
-    def kth(r: Long): Option[Long] = {
-      val top = window(r).select(dist.as("d2")).orderBy("d2").limit(k).collect()
-      Option.when(top.length >= k)(top.last.getLong(0))
+    /** One collected round at `r`: the answer, or else the k-th distance
+      * when the window holds ≥ k rows. */
+    def round(r: Long): Either[Option[Long], DataFrame] = {
+      val plan = top(r)
+      val rows = plan.collect()
+      val kth = Option.when(rows.length >= k)(rows.last.getLong(coords.size + 1))
+      if (r >= full || kth.exists(d2 => r > MaxSquarable || d2 <= r * r))
+        Right(pts.sparkSession.createDataFrame(rows.toSeq.asJava, plan.schema))
+      else Left(kth)
     }
-    ZoneMap.of(pts, coords) match {
-      case Some(zones) => zones.knnStart(q, k) match {
-        case None => full
-        case Some((probe, zoneCap)) =>
-          val cap = math.min(zoneCap, full)
-          if (probe >= cap) cap else kth(probe).map(d2 => math.min(radius(d2), cap)).getOrElse(cap)
-      }
+    ZoneMap.of(pts, coords).map(_.knnStart(q, k)) match {
+      case Some(None) => top(full)
+      case Some(Some((probe, zoneCap))) =>
+        val cap = math.min(zoneCap, full)
+        if (probe >= cap) top(cap)
+        else round(probe) match {
+          case Right(answer) => answer
+          case Left(kth) => top(kth.fold(cap)(d2 => math.min(radius(d2), cap)))
+        }
       case None =>
-        var r = math.max(1L, initialRadius.toLong)
-        var bound = kth(r)
-        while (bound.isEmpty && r < full) { r = math.min(r * 8, full); bound = kth(r) }
-        bound.map(radius).getOrElse(full)
+        @tailrec def climb(r: Long): DataFrame = round(r) match {
+          case Right(answer) => answer
+          case Left(None) => climb(math.min(r * 8, full))
+          case Left(Some(d2)) => top(radius(d2))
+        }
+        climb(math.max(1L, initialRadius.toLong))
     }
   }
 

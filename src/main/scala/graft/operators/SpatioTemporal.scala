@@ -93,8 +93,9 @@ object SpatioTemporal {
     PointStore.adaptiveStats(pts, threshold, statsDepth, baseDepth,
       driverRowCap, keyCol = "z3")
 
-  /** Squared Euclidean distance to a fixed 3-D query point, exact in
-    * Long arithmetic while it fits (21-bit coordinates: d² ≤ 3·2⁴² ≪ 2⁶³). */
+  /** Squared Euclidean distance to a fixed 3-D query point in Long
+    * arithmetic. Cubes clamp only to the Int range, so it is exact while
+    * dx² + dy² + dt² fits a Long (every offset below 1.75·10⁹). */
   def dist3(qx: Int, qy: Int, qt: Int): Column = {
     val dx = col("x").cast("long") - qx.toLong
     val dy = col("y").cast("long") - qy.toLong
@@ -104,33 +105,29 @@ object SpatioTemporal {
 
   /**
    * Exact 3-D kNN with deterministic (dist², id) tie order — the 2-D
-   * search ([[PointStore.knn]]) lifted to the octree store: probe a cube
-   * around the query until it holds ≥ k points, then the k-th in-cube
-   * distance bounds the true k-th, so the final cube
-   * `[q ± ceil(sqrt(kth))]` is a guaranteed superset of the answer;
-   * finish with a distributed top-k (TakeOrderedAndProject — no global
-   * sort, no driver candidate set; the driver sees only k scalars per
-   * probe). Rows with a null x, y or t are never returned; cubes clamp
-   * to the Int range only, so queries and rows outside the codec's
-   * domain are answered by the raw predicates.
+   * search ([[PointStore.knn]]) lifted to the octree store: rounds of a
+   * distributed top-k (`TakeOrderedAndProject` — no global sort, no
+   * driver candidate set; the driver receives at most k rows per round)
+   * over a cube around the query point. A round whose cube holds ≥ k
+   * rows with the k-th inside the cube's inscribed ball is the answer;
+   * otherwise the k-th in-cube distance bounds the true k-th, so the
+   * cube `[q ± ceil(sqrt(kth))]` is a guaranteed superset of the answer.
+   * Rows with a null x, y or t are never returned; cubes clamp to the
+   * Int range only, so queries and rows outside the codec's domain are
+   * answered by the raw predicates.
    *
-   * TERMINATION, as in [[PointStore.knnRadius]]: a bare store scan
+   * TERMINATION, as in [[PointStore.nearest]]: a bare store scan
    * (`SpatioTemporal.open(..).df`) is seeded from its footer zone map
-   * and submits AT MOST ONE probe job before the final scan; any other
-   * frame walks the ×8 ladder from `initialRadius` to the cube covering
-   * every Int coordinate, AT MOST 12 probes.
+   * and costs ONE Spark job when its probe answers (the returned frame
+   * is then local), else the probe plus the final scan; any other frame
+   * walks the ×8 ladder from `initialRadius` to the cube covering every
+   * Int coordinate, AT MOST 12 rounds, each of which may answer.
    */
   def knn3(pts: DataFrame, qx: Int, qy: Int, qt: Int, k: Int,
-           initialRadius: Int = 64): DataFrame = {
-    def cube(r: Long): DataFrame = rangeQuery3(pts,
-      PointStore.around(qx, r), PointStore.around(qy, r), PointStore.around(qt, r))
-    cube(PointStore.knnRadius(pts, Seq("x", "y", "t"), Seq(qx, qy, qt), k,
-        initialRadius, cube, dist3(qx, qy, qt)))
-      .withColumn("dist3", dist3(qx, qy, qt))
-      .orderBy(col("dist3"), col("id"))
-      .limit(k)
-      .select("id", "x", "y", "t", "dist3")
-  }
+           initialRadius: Int = 64): DataFrame =
+    PointStore.nearest(pts, Seq("x", "y", "t"), Seq(qx, qy, qt), k, initialRadius,
+      r => rangeQuery3(pts, PointStore.around(qx, r), PointStore.around(qy, r), PointStore.around(qt, r)),
+      "dist3", dist3(qx, qy, qt))
 
   def open(spark: org.apache.spark.sql.SparkSession, path: String): SpatioTemporalStore =
     new SpatioTemporalStore(spark, path)

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.StructType
  * plays the role of MD-HBase's bucket index in kNN: the boxes bound
  * where the data near a query lies and how dense it is there, so the
  * search can start at a radius that fits the data
- * ([[PointStore.knnRadius]]).
+ * ([[PointStore.nearest]]).
  *
  * The footers come from [[ParquetFooters]]' cache, so a file rewritten
  * in place (new length or modification time) is read afresh.
@@ -43,9 +43,11 @@ final class ZoneMap private (zones: IndexedSeq[ZoneMap.Zone]) {
 
   /**
    * Where an exact kNN search for `k` rows around `q` starts:
-   * `(probe, cap)` window radii. `probe` is the radius expected to hold
-   * ~2k rows at the density of the row groups containing `q` (of the
-   * nearest one when none does). `cap` needs no probe: the row groups
+   * `(probe, cap)` window radii. `probe` is the radius whose window's
+   * inscribed ball — the region a probe can answer from — is expected to
+   * hold ~2k rows at the density of the row groups containing `q` (of
+   * the nearest one when none does); the ball fills [[ballShare]] of the
+   * window (π/4 in 2-D, π/6 in 3-D). `cap` needs no probe: the row groups
    * with the nearest farthest corners that together hold ≥ k rows put
    * k rows within the last one's farthest-corner distance, so the window
    * of that radius holds the whole answer. None when the zones hold
@@ -66,7 +68,8 @@ final class ZoneMap private (zones: IndexedSeq[ZoneMap.Zone]) {
       val inside = zones.filter(gap(_) == 0.0)
       val near = if (inside.nonEmpty) inside else Seq(zones.minBy(gap))
       val volume = near.map(z => dims.map(i => z.hi(i) - z.lo(i) + 1.0).product).sum
-      val side = math.pow(2.0 * k * volume / near.map(_.rows).sum, 1.0 / dims.size)
+      val side = math.pow(2.0 * k * volume / (near.map(_.rows).sum * ZoneMap.ballShare(dims.size)),
+        1.0 / dims.size)
       val probe = math.ceil(near.map(gap).max + side / 2).toLong
       Some((math.max(1L, probe), cap))
     }
@@ -79,6 +82,11 @@ object ZoneMap {
     * coordinates are all non-null (row count minus each coordinate's
     * null count); `lo`/`hi` bound every non-null coordinate value. */
   private[operators] final case class Zone(rows: Long, lo: IndexedSeq[Long], hi: IndexedSeq[Long])
+
+  /** The share of a `d`-dimensional cube its inscribed ball fills:
+    * π/4 for a square, π/6 for a cube. */
+  private[operators] def ballShare(d: Int): Double =
+    if (d < 2) 1.0 else ballShare(d - 2) * math.Pi / (2 * d)
 
   /** The zone map of `df` over the integral columns `cols`, when `df`
     * is a bare parquet scan (a non-streaming, unpartitioned parquet

@@ -6,6 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs — one session per JVM (suites run
@@ -35,6 +38,28 @@ trait SparkSpec extends AnyFunSuite {
       assert(starts.contains(marker), "listener never saw the marker job")
       (out, starts.asScala.count(_ != marker))
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the executed plans, as text, of the Spark SQL
+    * actions it ran. A marker action run after `body` flushes the
+    * listener bus, as in [[jobsDuring]]. */
+  def plansDuring[T](body: => T): (T, Seq[String]) = {
+    val marker = "graft-plans-marker"
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!plans.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(plans.asScala.exists(_.contains(marker)), "listener never saw the marker action")
+      (out, plans.asScala.filterNot(_.contains(marker)).toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }
 

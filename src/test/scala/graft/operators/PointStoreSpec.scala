@@ -94,7 +94,7 @@ class PointStoreSpec extends SparkSpec {
     // every point sits near the origin; the query sits at the far
     // corner with initialRadius=1, so the ×8 ladder must climb all the
     // way (1, 8, 64, … clamped at Int.MaxValue — ≤ ⌈log8 2^31⌉+1 = 12
-    // probes by construction, each a k-scalar collect) before the
+    // probes by construction, each collecting at most k rows) before the
     // window finally covers the cluster. Termination is structural
     // (the radius strictly grows to the clamp, where the window is the
     // whole domain), and the answer must still be the exact brute-force

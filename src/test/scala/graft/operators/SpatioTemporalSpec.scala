@@ -27,15 +27,31 @@ class SpatioTemporalSpec extends SparkSpec {
 
   test("knn3 equals brute force with (dist2, id) tie order; plans as distributed top-k") {
     val k = 10
-    val q = SpatioTemporal.knn3(pts, 25000, 75, 800, k)
+    val (q, plans) = plansDuring(SpatioTemporal.knn3(pts, 25000, 75, 800, k))
     val got = q.collect().map(r => (r.getLong(0), r.getLong(4)))
     val brute = pts.select(col("id"), SpatioTemporal.dist3(25000, 75, 800).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .sortBy { case (id, d) => (d, id) }.take(k)
     assert(got.toSeq == brute.toSeq)
-    val plan = q.queryExecution.executedPlan.toString
+    // the rounds knn3 runs are the plans that do the work: when one
+    // answers, the returned frame is a local relation
+    assert(plans.nonEmpty)
+    for (plan <- plans) {
+      assert(plan.contains("TakeOrderedAndProject"), plan)
+      assert(!plan.contains("SortExec"), plan)
+    }
+    // a round whose k-th lies beyond its ball returns the final scan
+    // unexecuted: eight cube corners at distance² 300 from the query,
+    // outside the radius-10 round's ball
+    import spark.implicits._
+    val corners = for (x <- Seq(-10, 10); y <- Seq(-10, 10); t <- Seq(-10, 10)) yield (x, y, t)
+    val cube = SpatioTemporal.points3(corners.zipWithIndex.map { case ((x, y, t), i) => (i.toLong, x, y, t) }
+      .toDF("pid", "px", "py", "pt"), col("pid"), col("px"), col("py"), col("pt"))
+    val fallback = SpatioTemporal.knn3(cube, 0, 0, 0, 3, initialRadius = 10)
+    val plan = fallback.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("SortExec"), plan)
+    assert(fallback.select("id").collect().map(_.getLong(0)).toSeq === Seq(0L, 1L, 2L))
   }
 
   test("z3 interval predicates reach the Parquet scan of a clustered store") {

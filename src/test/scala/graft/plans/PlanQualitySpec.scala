@@ -31,9 +31,25 @@ class PlanQualitySpec extends SparkSpec {
     val pts = PointStore.points(
       spark.read.parquet(sf("sf0.01") + "/part.parquet"),
       col("p_partkey"), col("p_size"), expr("cast(floor(p_retailprice) as int)"))
-    val plan = PointStore.knn(pts, 25, 950, 10).queryExecution.executedPlan.toString
+    // the rounds knn runs are the plans that do the work: when one
+    // answers, the returned frame is a local relation
+    val (_, plans) = plansDuring(PointStore.knn(pts, 25, 950, 10))
+    assert(plans.nonEmpty)
+    for (plan <- plans) {
+      assert(plan.contains("TakeOrderedAndProject"), plan)
+      assert(!plan.contains("SortExec"), plan)
+    }
+    // a round whose k-th lies beyond its ball returns the final scan
+    // unexecuted: four corners at distance² 200 from the query, outside
+    // the radius-10 round's ball
+    import spark.implicits._
+    val corners = PointStore.points(Seq((1L, 10, 10), (2L, -10, 10), (3L, 10, -10), (4L, -10, -10))
+      .toDF("pid", "px", "py"), col("pid"), col("px"), col("py"))
+    val fallback = PointStore.knn(corners, 0, 0, 2, initialRadius = 10)
+    val plan = fallback.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("SortExec"), plan)
+    assert(fallback.select("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
   }
 
   test("small-dimension joins broadcast (no shuffle of the big side's join key)") {
