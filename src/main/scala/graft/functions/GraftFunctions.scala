@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -20,10 +21,10 @@ object GraftFunctions {
     Bridge.column(ZOrderKey(Bridge.expression(x), Bridge.expression(y)))
 
   /** x coordinate of a Morton key. */
-  def zorder_x(z: Column): Column = Bridge.column(ZOrderX(Bridge.expression(z)))
+  def zorder_x(z: Column): Column = Bridge.column(ZOrderDim(Bridge.expression(z), 1))
 
   /** y coordinate of a Morton key. */
-  def zorder_y(z: Column): Column = Bridge.column(ZOrderY(Bridge.expression(z)))
+  def zorder_y(z: Column): Column = Bridge.column(ZOrderDim(Bridge.expression(z), 0))
 
   /** 3-D (spatio-temporal) Morton key of three 21-bit coordinates. */
   def zorder3(x: Column, y: Column, t: Column): Column =
@@ -73,25 +74,24 @@ object GraftFunctions {
   def simhash_agg(h: Column, bits: Int = 60): Column =
     Bridge.column(SimHashAgg(Bridge.expression(h), bits).toAggregateExpression())
 
+  /** The engine's SQL functions as (name, implementing class, builder):
+    * [[register]] and [[graft.plans.GraftExtensions]] both expose
+    * exactly this table. */
+  private[graft] val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("zorder", classOf[ZOrderKey], es => ZOrderKey(es.head, es(1))),
+    ("zorder_x", classOf[ZOrderDim], es => ZOrderDim(es.head, 1)),
+    ("zorder_y", classOf[ZOrderDim], es => ZOrderDim(es.head, 0)),
+    ("zorder3", classOf[ZOrder3Key], es => ZOrder3Key(es.head, es(1), es(2))),
+    ("zorder3_x", classOf[ZOrder3Dim], es => ZOrder3Dim(es.head, 2)),
+    ("zorder3_y", classOf[ZOrder3Dim], es => ZOrder3Dim(es.head, 1)),
+    ("zorder3_t", classOf[ZOrder3Dim], es => ZOrder3Dim(es.head, 0)),
+    ("dot_long", classOf[DotLong], es => DotLong(es.head, es(1))),
+    ("sorted_floor", classOf[SortedFloor], es => SortedFloor(es.head, es(1))),
+    ("simhash_agg", classOf[SimHashAgg], es => SimHashAgg(es.head).toAggregateExpression()),
+    ("nfc_normalize", classOf[NfcNormalize], es => NfcNormalize(es.head)))
+
   /** Register the engine functions for SQL use in this session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("zorder", es => ZOrderKey(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("zorder_x", es => ZOrderX(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zorder_y", es => ZOrderY(es.head), "built-in")
-    reg.createOrReplaceTempFunction("zorder3",
-      es => ZOrder3Key(es.head, es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("zorder3_x", es => ZOrder3Dim(es.head, 2), "built-in")
-    reg.createOrReplaceTempFunction("zorder3_y", es => ZOrder3Dim(es.head, 1), "built-in")
-    reg.createOrReplaceTempFunction("zorder3_t", es => ZOrder3Dim(es.head, 0), "built-in")
-    reg.createOrReplaceTempFunction("dot_long", es => DotLong(es.head, es(1)), "built-in")
-    // keep this surface identical to GraftExtensions — both registration
-    // paths must expose the same SQL functions
-    reg.createOrReplaceTempFunction("sorted_floor",
-      es => SortedFloor(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash_agg",
-      es => SimHashAgg(es.head).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalize(es.head), "built-in")
+  def register(spark: SparkSession): Unit = sqlFunctions.foreach { case (name, _, build) =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "built-in")
   }
 }

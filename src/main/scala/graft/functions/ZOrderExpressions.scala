@@ -35,33 +35,21 @@ case class ZOrderKey(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `zorder_x(z)`: the x coordinate de-interleaved from a Morton key
-  * (reference `Utils.java:61-73`, `bitwiseUnzip`[0]). */
-case class ZOrderX(child: Expression)
+/** Dimension extractor of a 2-D Morton key: `shift` = 1 for x
+  * (`zorder_x`), 0 for y (`zorder_y`) — the bit within each pair
+  * (reference `Utils.java:61-73`, `bitwiseUnzip`). */
+case class ZOrderDim(child: Expression, shift: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
+  require(shift == 0 || shift == 1, s"shift out of range: $shift")
   override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "zorder_x"
+  override def prettyName: String = Seq("zorder_y", "zorder_x")(shift)
   override protected def nullSafeEval(z: Any): Any =
-    ZOrder.elimGap(z.asInstanceOf[Long] >>> 1)
+    ZOrder.elimGap(z.asInstanceOf[Long] >>> shift)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, z => s"graft.zorder.ZOrder.elimGap($z >>> 1)")
-  override protected def withNewChildInternal(c: Expression): ZOrderX = copy(c)
-}
-
-/** `zorder_y(z)`: the y coordinate de-interleaved from a Morton key. */
-case class ZOrderY(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "zorder_y"
-  override protected def nullSafeEval(z: Any): Any =
-    ZOrder.elimGap(z.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, z => s"graft.zorder.ZOrder.elimGap($z)")
-  override protected def withNewChildInternal(c: Expression): ZOrderY = copy(c)
+    defineCodeGen(ctx, ev, z => s"graft.zorder.ZOrder.elimGap($z >>> $shift)")
+  override protected def withNewChildInternal(c: Expression): ZOrderDim = copy(child = c)
 }
 
 /** `zorder3(x, y, t)`: 3-D Morton key of three non-negative 21-bit

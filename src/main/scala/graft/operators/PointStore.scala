@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.zorder.{IntRange, ZOrder}
+import graft.zorder.{IntRange, ZCodec, ZOrder, ZRanges}
 
 /**
  * The engine's multi-dimensional point store: the Spark-native
@@ -57,20 +57,21 @@ object PointStore {
       y.cast("int").as("y")) ++ extra: _*)
       .withColumn("zkey", zorder(col("x"), col("y")).as("zkey", ZkeyMetadata))
 
-  /** Combined predicate for an inclusive 2-D rectangle: raw x/y bounds
-    * (correctness) AND a union of tight zkey intervals from the budgeted
-    * quad decomposition ([[graft.zorder.ZRanges]]) — pruning-only, a
-    * guaranteed superset of the rectangle's z-image, pushed to Parquet
-    * for row-group skipping. A rectangle reaching negative coordinates
-    * skips the interval conjunct: the codec covers only the
-    * non-negative quadrant, so only the raw predicates can be trusted
-    * there (the pruning rule's negative-domain bail). */
-  def rangeFilter(rx: IntRange, ry: IntRange): Column = {
-    val raw = col("x").between(rx.min, rx.max) && col("y").between(ry.min, ry.max)
-    if (rx.min < 0 || ry.min < 0) raw
-    else raw && graft.zorder.ZRanges.decompose(rx, ry, 16)
-      .map { case (lo, hi) => col("zkey").between(lo, hi) }
-      .reduce(_ || _)
+  /** Inclusive 2-D rectangle predicate ([[boxFilter]] over `zkey`). */
+  def rangeFilter(rx: IntRange, ry: IntRange): Column =
+    boxFilter(ZOrder, "zkey", Seq("x", "y"), Seq(rx, ry))
+
+  /** Combined predicate for an inclusive box over the int columns
+    * `coords`: raw per-column bounds (correctness) AND the box's cover
+    * ([[graft.zorder.ZRanges.cover]]) as a union of `key` intervals —
+    * pruning-only, a guaranteed superset of the box's z-image, pushed
+    * to Parquet for file and row-group skipping. A box outside the
+    * codec's domain has no cover and keeps the raw bounds alone. */
+  private[operators] def boxFilter(codec: ZCodec, key: String, coords: Seq[String],
+                                   box: Seq[IntRange]): Column = {
+    val raw = coords.zip(box).map { case (c, r) => col(c).between(r.min, r.max) }.reduce(_ && _)
+    ZRanges.cover(box, codec).fold(raw)(ranges =>
+      raw && ranges.map { case (lo, hi) => col(key).between(lo, hi) }.reduce(_ || _))
   }
 
   /** 2-D rectangle query, inclusive bounds (`Client.java:76-83`,
@@ -192,8 +193,12 @@ object PointStore {
   /** Uniform-depth bucket statistics — the reference's index table
     * (`Index.java:44-57`) derived by grouping on the zkey prefix.
     * One shuffle with map-side partial counts. */
-  def indexStats(pts: DataFrame, prefixLen: Int): DataFrame =
-    pts.groupBy(bucket_key(col("zkey"), prefixLen).as("bucket_key"))
+  def indexStats(pts: DataFrame, prefixLen: Int): DataFrame = bucketStats(pts, "zkey", prefixLen)
+
+  /** Per-bucket row counts of the prefixes of length `prefixLen` of the
+    * key column `key`. */
+  private[operators] def bucketStats(pts: DataFrame, key: String, prefixLen: Int): DataFrame =
+    pts.groupBy(bucket_key(col(key), prefixLen).as("bucket_key"))
       .agg(count(lit(1)).as("bucket_size"))
       .select(col("bucket_key"),
         bucket_name(col("bucket_key"), prefixLen).as("bucket_name"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.zorder.{IntRange, ZRanges3}
+import graft.zorder.{IntRange, ZOrder3}
 
 /**
  * Spatio-temporal point store: the 2-D point-store layout lifted to
@@ -15,13 +15,13 @@ import graft.zorder.{IntRange, ZRanges3}
  * layout the same query scans every epoch of the matching region.
  *
  * Same architecture as [[PointStore]]: raw per-dimension predicates
- * carry correctness; the budgeted octree interval union
- * ([[graft.zorder.ZRanges3]]) is pruning-only and conservative.
+ * carry correctness; the budgeted z3 interval union
+ * ([[graft.zorder.ZRanges]]) is pruning-only and conservative.
  */
 object SpatioTemporal {
 
   /** Marks a column as a genuine `zorder3(x, y, t)` key — the soundness
-    * gate for [[graft.plans.ZOrderPruningRule]]'s octree arm (persisted
+    * gate for [[graft.plans.ZOrderPruningRule]] on z3 (persisted
     * through parquet in the footer schema). */
   val Z3Metadata: org.apache.spark.sql.types.Metadata =
     new org.apache.spark.sql.types.MetadataBuilder()
@@ -38,28 +38,16 @@ object SpatioTemporal {
     * partitions), the octree analog of [[PointStore.write]].
     * `numPartitions = 0` keeps the incoming partitioning and only sorts
     * within partitions (the small-append shape used by streaming
-    * ingest, mirroring [[PointStore.write]]'s default). */
+    * ingest); unlike [[PointStore.write]], which range-partitions by
+    * zkey at 0 too. */
   def write(pts: DataFrame, path: String, numPartitions: Int): Unit = {
     val p = if (numPartitions > 0) pts.repartitionByRange(numPartitions, col("z3")) else pts
     p.sortWithinPartitions("z3").write.mode("overwrite").parquet(path)
   }
 
-  /** Inclusive 3-D box predicate: raw x/y/t bounds (correctness) AND
-    * the budgeted octree z3-interval union (pruning-only superset of
-    * the box's z3-image, pushed to Parquet for row-group skipping).
-    * A box leaving the codec's 21-bit domain skips the interval
-    * conjunct: out-of-domain coordinates wrap in the codec, so only
-    * the raw predicates can be trusted there (same bail rule as the
-    * 2-D pruning rule's negative-domain case). */
-  def rangeFilter3(rx: IntRange, ry: IntRange, rt: IntRange): Column = {
-    val raw = col("x").between(rx.min, rx.max) && col("y").between(ry.min, ry.max) &&
-      col("t").between(rt.min, rt.max)
-    val inDomain = Seq(rx, ry, rt).forall(r => r.min >= 0 && r.max <= graft.zorder.ZOrder3.MaxCoord)
-    if (!inDomain) raw
-    else raw && ZRanges3.decompose(rx, ry, rt, 16)
-      .map { case (lo, hi) => col("z3").between(lo, hi) }
-      .reduce(_ || _)
-  }
+  /** Inclusive 3-D box predicate ([[PointStore.boxFilter]] over `z3`). */
+  def rangeFilter3(rx: IntRange, ry: IntRange, rt: IntRange): Column =
+    PointStore.boxFilter(ZOrder3, "z3", Seq("x", "y", "t"), Seq(rx, ry, rt))
 
   /** 3-D box query, inclusive bounds on every dimension. */
   def rangeQuery3(pts: DataFrame, rx: IntRange, ry: IntRange, rt: IntRange): DataFrame =
@@ -69,7 +57,7 @@ object SpatioTemporal {
     * prunes to the file/row-group whose stats cover the key; raw
     * predicates carry correctness. */
   def get3(pts: DataFrame, x: Int, y: Int, t: Int): DataFrame =
-    pts.filter(col("z3") === lit(graft.zorder.ZOrder3.zorder3(x, y, t)) &&
+    pts.filter(col("z3") === lit(ZOrder3.zorder3(x, y, t)) &&
       col("x") === x && col("y") === y && col("t") === t)
 
   /** Uniform-depth octree bucket statistics — [[PointStore.indexStats]]
@@ -77,11 +65,7 @@ object SpatioTemporal {
     * dimension under the constant leading 0 bit). One shuffle with
     * map-side partial counts. */
   def indexStats3(pts: DataFrame, prefixLen: Int): DataFrame =
-    pts.groupBy(bucket_key(col("z3"), prefixLen).as("bucket_key"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .select(col("bucket_key"),
-        bucket_name(col("bucket_key"), prefixLen).as("bucket_name"),
-        col("bucket_size"))
+    PointStore.bucketStats(pts, "z3", prefixLen)
 
   /** Variable-depth (maySplit-analog) octree bucket stats — the 3-D
     * twin of [[PointStore.adaptiveStats]]: recursively split any bucket

@@ -7,79 +7,65 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.functions.{DotLong, ZOrder3Dim, ZOrder3Key, ZOrderKey, ZOrderX, ZOrderY}
-import graft.zorder.{IntRange, ZOrder3, ZRanges, ZRanges3}
+import graft.functions.GraftFunctions
+import graft.zorder.{IntRange, ZOrder, ZOrder3, ZRanges}
 
 /**
- * Optimizer rule injecting z-key interval predicates into 2-D range
- * filters over point-store relations — the Catalyst re-expression of the
+ * Optimizer rule injecting z-key interval predicates into box filters
+ * over point-store relations — the Catalyst re-expression of the
  * reference's index-probe pruning (`Index.java:144-164`; SURVEY §4 P2).
  *
- * A `Filter` whose top-level conjuncts bound both `x` and `y` (the
- * store's point schema: int columns `x`, `y` beside a long `zkey`) gains
- * an OR of tight z-key intervals from [[graft.zorder.ZRanges]]. The raw
+ * A `Filter` over a marked layout — `zkey` over int `x`, `y`
+ * ([[graft.operators.PointStore.points]]) or `z3` over int `x`, `y`,
+ * `t` ([[graft.operators.SpatioTemporal.points3]]) — whose top-level
+ * conjuncts bound every coordinate gains an OR of tight key intervals,
+ * the box's cover from [[graft.zorder.ZRanges.cover]]. The raw
  * predicates are kept verbatim, so the rewrite is pure pruning —
  * correctness NEVER depends on it (SURVEY §7.3); its effect is that a
  * store read skips the files (on the driver, through
  * [[graft.operators.ParquetFooters.readParquet]]'s file index) and the
- * row groups (in the executors' Parquet reader) whose zkey min/max
+ * row groups (in the executors' Parquet reader) whose key min/max
  * stats miss every interval, exactly like the reference skipping
  * non-intersecting buckets.
  *
- * Soundness of the injected conjunct: the rule only fires when the
- * `zkey` attribute carries the `graft.zorder` metadata marker that
- * [[graft.operators.PointStore.points]] attaches (persisted through
- * parquet), i.e. when zkey is genuinely `zorder(x, y)` — a user
- * relation that merely happens to have x/y/zkey columns is never
- * rewritten. Given that, the conjunct only drops a row where `zkey` is
- * NULL or outside the intervals: zkey is NULL only when x or y is
- * (null-intolerant derivation) — and the existing x/y bounds (present
- * by construction of the match) already drop those rows; non-null
- * zkeys of in-rectangle points are covered by the decomposition's
- * soundness guarantee.
+ * Soundness of the injected conjunct: the rule only fires when the key
+ * attribute carries its layout's metadata marker (`graft.zorder` or
+ * `graft.zorder3`, persisted through parquet), i.e. when the key is
+ * genuinely the codec's key of the coordinates — a user relation that
+ * merely happens to have x/y/zkey columns is never rewritten — and when
+ * the box lies in the codec's domain (else [[graft.zorder.ZRanges.cover]]
+ * gives none). Given that, the conjunct only drops a row whose key is
+ * NULL or outside the intervals: the key is NULL only when a coordinate
+ * is (null-intolerant derivation) — and the coordinate bounds (present
+ * by construction of the match) already drop those rows; non-null keys
+ * of in-box points are covered by the decomposition's soundness
+ * guarantee.
  *
- * Idempotent: skips filters already referencing `zkey`.
+ * Idempotent: skips filters already referencing the key.
  */
-object ZOrderPruningRule extends Rule[LogicalPlan] {
+object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val MaxRanges = 16
+  /** The marked layouts: (key column, its metadata marker, the int
+    * coordinates it interleaves, codec). */
+  private val Layouts = Seq(
+    ("zkey", "graft.zorder", Seq("x", "y"), ZOrder),
+    ("z3", "graft.zorder3", Seq("x", "y", "t"), ZOrder3))
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
       val conjuncts = splitConjunctivePredicates(cond)
-      def intAttr(name: String) =
-        child.output.find(a => a.name == name && a.dataType == IntegerType)
-      def keyAttr(name: String, marker: String) =
-        child.output.find(a => a.name == name && a.dataType == LongType &&
+      val pruning = for {
+        (key, marker, coords, codec) <- Layouts
+        z <- child.output.find(a => a.name == key && a.dataType == LongType &&
           a.metadata.contains(marker))
-
-      // 2-D quad arm: (x, y) bounded, marked zkey present
-      val quad = (intAttr("x"), intAttr("y"), keyAttr("zkey", "graft.zorder")) match {
-        case (Some(x), Some(y), Some(z)) if !cond.references.contains(z) =>
-          (boundsOf(conjuncts, x), boundsOf(conjuncts, y)) match {
-            case (Some(rx), Some(ry)) =>
-              Some(intervalPred(z, ZRanges.decompose(rx, ry, MaxRanges)))
-            case _ => None
-          }
-        case _ => None
-      }
-      // 3-D octree arm: (x, y, t) bounded within the 21-bit codec
-      // domain (out-of-domain coordinates wrap in the codec; rows the
-      // raw predicates keep are in-domain only when the BOX is, so the
-      // conjunct is sound exactly then — the 3-D analog of the
-      // negative-domain bail below), marked z3 present
-      val octree = (intAttr("x"), intAttr("y"), intAttr("t"),
-          keyAttr("z3", "graft.zorder3")) match {
-        case (Some(x), Some(y), Some(t), Some(z)) if !cond.references.contains(z) =>
-          (boundsOf(conjuncts, x), boundsOf(conjuncts, y), boundsOf(conjuncts, t)) match {
-            case (Some(rx), Some(ry), Some(rt))
-                if Seq(rx, ry, rt).forall(_.max <= ZOrder3.MaxCoord) =>
-              Some(intervalPred(z, ZRanges3.decompose(rx, ry, rt, MaxRanges)))
-            case _ => None
-          }
-        case _ => None
-      }
-      (quad.toSeq ++ octree.toSeq).foldLeft(cond)(And) match {
+        if !cond.references.contains(z)
+        box = coords.flatMap(c => child.output
+          .find(a => a.name == c && a.dataType == IntegerType)
+          .flatMap(boundsOf(conjuncts, _)))
+        if box.size == coords.size
+        ranges <- ZRanges.cover(box, codec)
+      } yield intervalPred(z, ranges)
+      pruning.foldLeft(cond)(And) match {
         case same if same eq cond => f
         case augmented => Filter(augmented, child)
       }
@@ -92,11 +78,6 @@ object ZOrderPruningRule extends Rule[LogicalPlan] {
       }
       .reduceOption[Expression](Or)
       .getOrElse(Literal.FalseLiteral) // empty decomposition: empty box
-
-  private def splitConjunctivePredicates(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjunctivePredicates(l) ++ splitConjunctivePredicates(r)
-    case other => Seq(other)
-  }
 
   /** Closed int bounds for `attr` implied by top-level conjuncts, if both
     * sides are bounded. Only literal comparisons count. */
@@ -128,21 +109,14 @@ object ZOrderPruningRule extends Rule[LogicalPlan] {
         asInt(l).foreach { v => lo = math.max(lo, v); hi = math.min(hi, v); sawLo = true; sawHi = true }
       case _ =>
     }
-    // A negative lower bound means the query rectangle leaves the
-    // non-negative domain the z-order codec is defined on. Nothing stops
-    // a marked relation from holding negative coordinates (their zkeys
-    // interleave sign bits and fall outside any decomposition), so a
-    // clamped conjunct would silently drop rows the raw predicates keep.
-    // Pruning is optional — bail instead of clamping (SURVEY §7.3:
-    // correctness must never depend on this rule).
-    if (sawLo && sawHi && lo >= 0 && lo <= hi) Some(IntRange(lo, hi)) else None
+    if (sawLo && sawHi && lo <= hi) Some(IntRange(lo, hi)) else None
   }
 }
 
 /**
  * Session extensions registering the engine's Catalyst surface:
- * the [[ZOrderPruningRule]] optimizer rule and the `zorder` /
- * `zorder_x` / `zorder_y` SQL functions.
+ * the [[ZOrderPruningRule]] optimizer rule and the SQL functions of
+ * [[graft.functions.GraftFunctions.sqlFunctions]].
  *
  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)…`
  * or `spark.sql.extensions=graft.plans.GraftExtensions`.
@@ -150,39 +124,8 @@ object ZOrderPruningRule extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ZOrderPruningRule)
-    e.injectFunction((FunctionIdentifier("zorder"),
-      new ExpressionInfo(classOf[ZOrderKey].getName, "zorder"),
-      (es: Seq[Expression]) => ZOrderKey(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("zorder_x"),
-      new ExpressionInfo(classOf[ZOrderX].getName, "zorder_x"),
-      (es: Seq[Expression]) => ZOrderX(es.head)))
-    e.injectFunction((FunctionIdentifier("zorder_y"),
-      new ExpressionInfo(classOf[ZOrderY].getName, "zorder_y"),
-      (es: Seq[Expression]) => ZOrderY(es.head)))
-    e.injectFunction((FunctionIdentifier("zorder3"),
-      new ExpressionInfo(classOf[ZOrder3Key].getName, "zorder3"),
-      (es: Seq[Expression]) => ZOrder3Key(es.head, es(1), es(2))))
-    e.injectFunction((FunctionIdentifier("zorder3_x"),
-      new ExpressionInfo(classOf[ZOrder3Dim].getName, "zorder3_x"),
-      (es: Seq[Expression]) => ZOrder3Dim(es.head, 2)))
-    e.injectFunction((FunctionIdentifier("zorder3_y"),
-      new ExpressionInfo(classOf[ZOrder3Dim].getName, "zorder3_y"),
-      (es: Seq[Expression]) => ZOrder3Dim(es.head, 1)))
-    e.injectFunction((FunctionIdentifier("zorder3_t"),
-      new ExpressionInfo(classOf[ZOrder3Dim].getName, "zorder3_t"),
-      (es: Seq[Expression]) => ZOrder3Dim(es.head, 0)))
-    e.injectFunction((FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-      (es: Seq[Expression]) => DotLong(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("sorted_floor"),
-      new ExpressionInfo(classOf[graft.functions.SortedFloor].getName, "sorted_floor"),
-      (es: Seq[Expression]) => graft.functions.SortedFloor(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("simhash_agg"),
-      new ExpressionInfo(classOf[graft.functions.SimHashAgg].getName, "simhash_agg"),
-      (es: Seq[Expression]) =>
-        graft.functions.SimHashAgg(es.head).toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, "nfc_normalize"),
-      (es: Seq[Expression]) => graft.functions.NfcNormalize(es.head)))
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -2,10 +2,7 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -54,8 +51,12 @@ object StreamingIngest {
    *  - `keyCol`: the clustered key column name (its min/max drive the
    *    footer-metadata split probe and the stats bucketing);
    *  - `derive`: batch rows → keyed point rows;
-   *  - `write`: the key-clustered layout writer (partitions = 0 keeps
-   *    the incoming partitioning, sort-only — the per-batch shape).
+   *  - `write`: the key-clustered layout writer; `partitions > 0`
+   *    range-partitions by the key into that many files. At 0 (the
+   *    per-batch call) the stock layouts differ: [[PointStore.write]]
+   *    still range-partitions by zkey over the session's shuffle
+   *    partitions, [[graft.operators.SpatioTemporal.write]] keeps the
+   *    incoming partitioning and only sorts within it.
    */
   final case class IngestLayout(keyCol: String,
                                 derive: DataFrame => DataFrame,
@@ -322,12 +323,16 @@ object StreamingIngest {
   private val TxName = """(.+)-(\d+)-of-(\d+)\.parquet""".r
   private val IngestPrefix = """ingest-(\d+)""".r
 
-  /** Data-file names of a store dir (excludes markers/hidden files). */
-  private def dataFileNames(fs: FileSystem, store: Path): Seq[String] =
+  /** Data files of a store dir (excludes markers/hidden files). */
+  private def dataFiles(fs: FileSystem, store: Path): Seq[FileStatus] =
     if (!fs.exists(store)) Nil
-    else fs.listStatus(store).map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-      .toIndexedSeq
+    else fs.listStatus(store).toIndexedSeq.filter { st =>
+      val n = st.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  private def dataFileNames(fs: FileSystem, store: Path): Seq[String] =
+    dataFiles(fs, store).map(_.getPath.getName)
 
   /** The newest ingest generation id present, if any. Batches publish
     * sequentially, so only this generation can be in-flight or pending
@@ -451,69 +456,31 @@ object StreamingIngest {
   // Minor compaction (file-local split) — footer-metadata probe
   // ---------------------------------------------------------------------
 
-  /** Serializable carrier for the Hadoop configuration used by the
-    * distributed footer probe (Configuration itself is not
-    * java-serializable; this is the standard write()/readFields shim). */
-  private class SerializableHadoopConf(@transient var value: Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  /** (rows, key min/max) of ONE file's footer — no data scan. Key
-    * bounds come from row-group column statistics; a file whose stats
-    * are absent reports None and is left alone (conservative). */
-  private def readFooter(file: String, conf: Configuration, keyCol: String)
-      : (String, Long, Option[(Long, Long)]) = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
+  /** Per-file (rows, key min/max) of the data files in `dir` (only
+    * those named in `only`, when given), from their Parquet FOOTERS
+    * through [[ParquetFooters.of]]'s cache — no data scan, no Spark job.
+    * Key bounds come from row-group column statistics; a file with any
+    * row group lacking them reports None and is left alone
+    * (conservative). */
+  private def footerMeta(spark: SparkSession, dir: Path, keyCol: String,
+                         only: Option[Seq[String]]): Seq[(Path, Long, Option[(Long, Long)])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = dataFiles(dir.getFileSystem(conf), dir)
+      .filter(st => only.forall(_.contains(st.getPath.getName)))
+    files.zip(ParquetFooters.of(files, conf)).map { case (st, footer) =>
+      val blocks = footer.getBlocks.asScala.toSeq
       val zranges = blocks.flatMap { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == keyCol).flatMap { c =>
-          val st = c.getStatistics
-          if (st == null || st.isEmpty || !st.hasNonNullValue) None
-          else Some((st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-            st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+          val stats = c.getStatistics
+          if (stats == null || stats.isEmpty || !stats.hasNonNullValue) None
+          else Some((stats.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            stats.genericGetMax.asInstanceOf[java.lang.Long].longValue))
         }
       }
       val zr = if (zranges.isEmpty || zranges.length != blocks.length) None
         else Some((zranges.map(_._1).min, zranges.map(_._2).max))
-      (file, rows, zr)
-    } finally reader.close()
-  }
-
-  /** Below this many files the probe stays a driver loop — a Spark job
-    * costs more than it saves. */
-  private val FooterProbeSerialMax = 16
-
-  /** Per-file (rows, zkey min/max) from Parquet FOOTERS. DISTRIBUTED
-    * past [[FooterProbeSerialMax]] files: at store scale (millions of
-    * files) a serial driver loop over footers would dominate batch
-    * maintenance time. */
-  private def footerMeta(spark: SparkSession, dir: Path, keyCol: String)
-      : Seq[(Path, Long, Option[(Long, Long)])] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = dir.getFileSystem(conf)
-    val files = dataFileNames(fs, dir).map(n => new Path(dir, n).toString)
-    val metas =
-      if (files.length <= FooterProbeSerialMax) files.map(readFooter(_, conf, keyCol))
-      else {
-        val ser = new SerializableHadoopConf(conf)
-        val parts = math.max(1,
-          math.min(files.length / 64 + 1, spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(files, parts)
-          .map(f => readFooter(f, ser.value, keyCol)).collect().toIndexedSeq
-      }
-    metas.map { case (f, rows, zr) => (new Path(f), rows, zr) }
+      (new Path(dir, st.getPath.getName), blocks.map(_.getRowCount).sum, zr)
+    }
   }
 
   /**
@@ -545,14 +512,13 @@ object StreamingIngest {
     if (onlyFiles.exists(_.isEmpty)) return
     val fs = fsOf(spark, storePath)
     val dest = new Path(storePath)
-    val oversized = footerMeta(spark, dest, layout.keyCol)
-      .filter { case (p, n, zr) =>
+    val oversized = footerMeta(spark, dest, layout.keyCol, onlyFiles)
+      .filter { case (_, n, zr) =>
         n > threshold &&
           // a file whose rows all share one zkey cannot be range-split —
           // rewriting it would churn forever; it is one logical bucket
           // (the reference's max-depth case, Index.java:200-203)
-          zr.exists { case (lo, hi) => lo != hi } &&
-          onlyFiles.forall(_.contains(p.getName))
+          zr.exists { case (lo, hi) => lo != hi }
       }
     // replay convergence per source: a complete split set means the
     // rewrite already happened (just drop the source); a partial set is

@@ -18,7 +18,14 @@ package graft.zorder
  * (Stanford bit-twiddling hacks; also in the reference at
  * `Utils.java:49-59` for the 16→32 case).
  */
-object ZOrder {
+object ZOrder extends ZCodec {
+
+  val dims = 2
+  val bits = 31
+
+  def key(coords: Seq[Int]): Long = zorder(coords(0), coords(1))
+
+  def coord(z: Long, dim: Int): Int = elimGap(z >>> (1 - dim))
 
   /** Spread the 32 bits of `v` onto the even bit positions (0,2,...,62). */
   def makeGap(v: Int): Long = {
@@ -72,19 +79,6 @@ object ZOrder {
   def bucketMax(key: Long, prefixLen: Int): Long =
     (key & makeMask(prefixLen)) | ~makeMask(prefixLen)
 
-  /** The bucket's rectangle: de-interleave its min and max z-keys,
-    * clamped to the valid coordinate domain [0, 2^31-1] (a prefix
-    * shorter than 2 bits nominally covers z-space whose coordinates
-    * overflow 31 bits; the reference never sees this because its
-    * bootstrap bucket starts at prefix length 2, `Index.java:96-99`).
-    * Reference: `Index.java:124-134` (`toRanges`). */
-  def bucketRect(key: Long, prefixLen: Int): (IntRange, IntRange) = {
-    def clamp(v: Int): Int = if (v < 0) Int.MaxValue else v
-    val (xmin, ymin) = unzorder(bucketMin(key, prefixLen))
-    val (xmax, ymax) = unzorder(bucketMax(key, prefixLen))
-    (IntRange(clamp(xmin), clamp(xmax)), IntRange(clamp(ymin), clamp(ymax)))
-  }
-
   /** Render a bucket name as its binary prefix plus `*` wildcards, e.g.
     * prefixLen=3 of key 0b011... → `"011*****..."` (64 chars total).
     * Reference: `Utils.java:161-182` (`toString(key, pl)`). */
@@ -94,6 +88,42 @@ object ZOrder {
     while (i < prefixLen) { bits.append((key >>> (63 - i)) & 1L); i += 1 }
     while (i < 64) { bits.append('*'); i += 1 }
     bits.toString
+  }
+}
+
+/**
+ * A Morton codec: `dims` non-negative coordinates of `bits` bits each,
+ * interleaved MSB-first into the low `dims * bits` bits of a key. Every
+ * key of in-domain coordinates therefore starts with the all-zero
+ * prefix of length [[rootPrefix]], the cell holding the whole domain
+ * `[0, maxCoord]^dims`; a prefix of `rootPrefix + dims * k` bits fixes
+ * the top k bits of every coordinate (MD-HBase's quad-tree buckets,
+ * `Index.java:124-134`, in any number of dimensions).
+ * [[ZRanges.decompose]] works on this contract alone.
+ */
+trait ZCodec {
+  def dims: Int
+  def bits: Int
+
+  /** The key of `coords` (one per dimension, each in `[0, maxCoord]`). */
+  def key(coords: Seq[Int]): Long
+
+  /** Coordinate `dim` of `key` (inverse of [[key]] per dimension),
+    * dimension 0 holding the highest bit of each interleaved group. */
+  def coord(key: Long, dim: Int): Int
+
+  final def maxCoord: Int = ((1L << bits) - 1).toInt
+
+  final def rootPrefix: Int = 64 - dims * bits
+
+  /** The box of the cell named by (key, prefixLen): the coordinates of
+    * its minimum and maximum keys. Defined for `prefixLen >= rootPrefix`;
+    * a shorter prefix names z-space whose coordinates overflow `bits`
+    * (MD-HBase's bootstrap bucket starts at the root prefix too,
+    * `Index.java:96-99`). */
+  final def cellBox(key: Long, prefixLen: Int): Seq[IntRange] = {
+    val (lo, hi) = (ZOrder.bucketMin(key, prefixLen), ZOrder.bucketMax(key, prefixLen))
+    (0 until dims).map(d => IntRange(coord(lo, d), coord(hi, d)))
   }
 }
 

@@ -21,10 +21,17 @@ package graft.zorder
  * oracle re-derives keys by per-bit summation in SQL, so the ladder
  * constants are double-checked independently.
  */
-object ZOrder3 {
+object ZOrder3 extends ZCodec {
+
+  val dims = 3
+  val bits = 21
 
   /** Coordinates must fit in 21 bits: [0, 2^21 - 1]. */
-  val MaxCoord: Int = (1 << 21) - 1
+  val MaxCoord: Int = maxCoord
+
+  def key(coords: Seq[Int]): Long = zorder3(coords(0), coords(1), coords(2))
+
+  def coord(z: Long, dim: Int): Int = elimGap3(z >>> (2 - dim))
 
   /** Spread the low 21 bits of `v` onto bit positions 0, 3, 6, …, 60. */
   def makeGap3(v: Int): Long = {

@@ -93,7 +93,7 @@ class ZOrderSpec extends AnyFunSuite {
     // Index.java:96-99)
     forAll(coord, coord, Gen.chooseNum(2, 64)) { (x, y, pl) =>
       val z = zorder(x, y)
-      val (rx, ry) = bucketRect(z, pl)
+      val Seq(rx, ry) = cellBox(z, pl)
       // the point that produced the key lies inside its bucket's rectangle
       assert(rx.include(x) && ry.include(y))
       // bucket interval bounds are consistent

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ZRanges3Spec extends AnyFunSuite {
 
   private def checkBox(rx: IntRange, ry: IntRange, rt: IntRange, maxRanges: Int): Unit = {
-    val ranges = ZRanges3.decompose(rx, ry, rt, maxRanges)
+    val ranges = ZRanges.decompose(Seq(rx, ry, rt), ZOrder3, maxRanges)
     assert(ranges.nonEmpty)
     assert(ranges.size <= maxRanges, s"${ranges.size} > $maxRanges")
     ranges.sliding(2).foreach {
@@ -25,7 +25,7 @@ class ZRanges3Spec extends AnyFunSuite {
       (IntRange(7, 7), IntRange(0, 30), IntRange(13, 14)),
       (IntRange(12, 19), IntRange(12, 19), IntRange(12, 19)))
     for ((rx, ry, rt) <- boxes; maxRanges <- Seq(1, 4, 16, 64)) {
-      val ranges = ZRanges3.decompose(rx, ry, rt, maxRanges)
+      val ranges = ZRanges.decompose(Seq(rx, ry, rt), ZOrder3, maxRanges)
       checkBox(rx, ry, rt, maxRanges)
       for (x <- rx.min to rx.max; y <- ry.min to ry.max; t <- rt.min to rt.max) {
         val z = ZOrder3.zorder3(x, y, t)
@@ -44,7 +44,7 @@ class ZRanges3Spec extends AnyFunSuite {
         IntRange(math.min(a, b), math.max(a, b))
       }
       val (rx, ry, rt) = (rng(), rng(), rng())
-      val ranges = ZRanges3.decompose(rx, ry, rt, 16)
+      val ranges = ZRanges.decompose(Seq(rx, ry, rt), ZOrder3, 16)
       checkBox(rx, ry, rt, 16)
       for (_ <- 1 to 200) {
         val x = rx.min + rnd.nextInt(rx.max - rx.min + 1)
@@ -63,9 +63,9 @@ class ZRanges3Spec extends AnyFunSuite {
       rs.map { case (lo, hi) => BigInt(hi) - BigInt(lo) + 1 }.sum
     val loose = volume(Seq((ZOrder3.zorder3(rx.min, ry.min, rt.min),
       ZOrder3.zorder3(rx.max, ry.max, rt.max))))
-    val v1 = volume(ZRanges3.decompose(rx, ry, rt, 1))
-    val v16 = volume(ZRanges3.decompose(rx, ry, rt, 16))
-    val v256 = volume(ZRanges3.decompose(rx, ry, rt, 256))
+    val v1 = volume(ZRanges.decompose(Seq(rx, ry, rt), ZOrder3, 1))
+    val v16 = volume(ZRanges.decompose(Seq(rx, ry, rt), ZOrder3, 16))
+    val v256 = volume(ZRanges.decompose(Seq(rx, ry, rt), ZOrder3, 256))
     assert(v1 <= loose)
     assert(v16 <= v1)
     assert(v256 <= v16)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ZRangesSpec extends AnyFunSuite {
 
   private def checkRect(rx: IntRange, ry: IntRange, maxRanges: Int): Unit = {
-    val ranges = ZRanges.decompose(rx, ry, maxRanges)
+    val ranges = ZRanges.decompose(Seq(rx, ry), ZOrder, maxRanges)
     assert(ranges.nonEmpty)
     assert(ranges.size <= maxRanges, s"${ranges.size} > $maxRanges")
     // sorted, disjoint, non-adjacent
@@ -25,7 +25,7 @@ class ZRangesSpec extends AnyFunSuite {
       (IntRange(7, 7), IntRange(0, 30)),
       (IntRange(12, 19), IntRange(12, 19)))
     for ((rx, ry) <- rects; maxRanges <- Seq(1, 4, 16, 64)) {
-      val ranges = ZRanges.decompose(rx, ry, maxRanges)
+      val ranges = ZRanges.decompose(Seq(rx, ry), ZOrder, maxRanges)
       checkRect(rx, ry, maxRanges)
       for (x <- rx.min to rx.max; y <- ry.min to ry.max) {
         val z = ZOrder.zorder(x, y)
@@ -40,9 +40,9 @@ class ZRangesSpec extends AnyFunSuite {
     def volume(rs: Seq[(Long, Long)]): BigInt =
       rs.map { case (lo, hi) => BigInt(hi) - BigInt(lo) + 1 }.sum
     val loose = volume(Seq((ZOrder.zorder(rx.min, ry.min), ZOrder.zorder(rx.max, ry.max))))
-    val v1 = volume(ZRanges.decompose(rx, ry, 1))
-    val v16 = volume(ZRanges.decompose(rx, ry, 16))
-    val v256 = volume(ZRanges.decompose(rx, ry, 256))
+    val v1 = volume(ZRanges.decompose(Seq(rx, ry), ZOrder, 1))
+    val v16 = volume(ZRanges.decompose(Seq(rx, ry), ZOrder, 16))
+    val v256 = volume(ZRanges.decompose(Seq(rx, ry), ZOrder, 256))
     assert(v1 <= loose)
     assert(v16 <= v1)
     assert(v256 <= v16)
@@ -57,7 +57,7 @@ class ZRangesSpec extends AnyFunSuite {
       val y1 = rnd.nextInt(Int.MaxValue); val y2 = rnd.nextInt(Int.MaxValue)
       val rx = IntRange(math.min(x1, x2), math.max(x1, x2))
       val ry = IntRange(math.min(y1, y2), math.max(y1, y2))
-      val ranges = ZRanges.decompose(rx, ry, 16)
+      val ranges = ZRanges.decompose(Seq(rx, ry), ZOrder, 16)
       checkRect(rx, ry, 16)
       // sample interior points
       for (_ <- 1 to 200) {
@@ -71,7 +71,7 @@ class ZRangesSpec extends AnyFunSuite {
 
   test("degenerate: single cell decomposes to one exact interval") {
     val z = ZOrder.zorder(12345, 67890)
-    assert(ZRanges.decompose(IntRange(12345, 12345), IntRange(67890, 67890), 16) ===
+    assert(ZRanges.decompose(Seq(IntRange(12345, 12345), IntRange(67890, 67890)), ZOrder, 16) ===
       Seq((z, z)))
   }
 }
