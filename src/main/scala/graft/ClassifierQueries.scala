@@ -23,27 +23,19 @@ object ClassifierQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // the learned model itself: 129 integer weights (128 hash buckets +
     // bias) after 10 mixing epochs
-    "perceptron_train" -> ((s, dir) =>
-      Perceptron.model(s, Perceptron.ipmTrain(docs(s, dir)))),
+    Gate("perceptron_train", (s, dir) =>
+      Perceptron.model(s, Perceptron.ipmTrain(docs(s, dir))),
+      s"""${Perceptron.oracleCore()}
+SELECT CAST(r.range - 1 AS BIGINT) AS bucket, m.w[r.range] AS wgt
+FROM mix${Perceptron.Epochs} m, range(1, ${N + 1}) r"""),
     // the model APPLIED: per-document integer margin, sign prediction,
     // label and correctness — the filter stage a curation pipeline
     // would gate admission on
-    "perceptron_score" -> ((s, dir) =>
-      Perceptron.score(docs(s, dir), Perceptron.ipmTrain(docs(s, dir))))
-  )
-
-  private val N = Perceptron.Buckets + 1
-
-  val oracle: Map[String, String] = Map(
-    "perceptron_train" ->
-      s"""${Perceptron.oracleCore()}
-SELECT CAST(r.range - 1 AS BIGINT) AS bucket, m.w[r.range] AS wgt
-FROM mix${Perceptron.Epochs} m, range(1, ${N + 1}) r""",
-
-    "perceptron_score" ->
+    Gate("perceptron_score", (s, dir) =>
+      Perceptron.score(docs(s, dir), Perceptron.ipmTrain(docs(s, dir))),
       s"""${Perceptron.oracleCore()},
 sc AS (SELECT d.doc_id, d.y,
     CAST(list_sum(list_transform(range(1, ${N + 1}), i -> m.w[i] * d.x[i])) AS BIGINT) AS margin
@@ -52,6 +44,8 @@ SELECT doc_id, margin,
   CASE WHEN margin > 0 THEN 1 ELSE -1 END AS pred,
   CAST(y AS INT) AS label,
   CASE WHEN (CASE WHEN margin > 0 THEN 1 ELSE -1 END) = y THEN 1 ELSE 0 END AS correct
-FROM sc"""
+FROM sc""")
   )
+
+  private val N = Perceptron.Buckets + 1
 }

@@ -69,24 +69,58 @@ object CurationQueries {
     size(ws) >= 30 &&
       size(array_distinct(ws)).cast("long") * 1000 >= size(ws).cast("long") * 500
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "repetition_stats" -> ((s, dir) => Curation.repetitionStats(docs(s, dir))),
-    "pii_redact" -> ((s, dir) => Curation.redactPii(docs(s, dir))),
-    "sample_stratified" -> ((s, dir) =>
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("repetition_stats", (s, dir) => Curation.repetitionStats(docs(s, dir)),
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
+b AS (SELECT doc_id, list_transform(range(1, len(ws)), i -> ws[i]||' '||ws[i+1]) AS bg
+      FROM w WHERE len(ws) >= 2)
+SELECT doc_id, CAST(len(bg) AS BIGINT) AS n_bigrams,
+  CAST(len(list_distinct(bg)) AS BIGINT) AS n_distinct_bigrams,
+  CAST(((len(bg) - len(list_distinct(bg))) * 1000) // len(bg) AS BIGINT) AS rep_e3
+FROM b"""),
+
+    Gate("pii_redact", (s, dir) => Curation.redactPii(docs(s, dir)),
+      s"""SELECT doc_id,
+  CAST(len(regexp_extract_all(text, '$Em')) AS BIGINT) AS n_emails,
+  CAST(len(regexp_extract_all(regexp_replace(text, '$Em', '<EMAIL>', 'g'), '$Dg')) AS BIGINT) AS n_digit_runs,
+  regexp_replace(regexp_replace(text, '$Em', '<EMAIL>', 'g'), '$Dg', '<NUM>', 'g') AS redacted
+FROM documents"""),
+
+    Gate("sample_stratified", (s, dir) =>
       Curation.stratifiedSample(docs(s, dir), "lang", SampleRates, SampleDefault)
-        .select("doc_id", "lang")),
-    "source_cap" -> ((s, dir) => Curation.sourceCap(docs(s, dir), SourceCapN)),
+        .select("doc_id", "lang"),
+      """SELECT doc_id, lang FROM documents
+WHERE CAST(('0x' || substr(md5('smp:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 <
+  CASE lang WHEN 'en' THEN 100 WHEN 'de' THEN 300 WHEN 'fr' THEN 500 ELSE 400 END"""),
+
+    Gate("source_cap", (s, dir) => Curation.sourceCap(docs(s, dir), SourceCapN),
+      """SELECT doc_id, source, rn FROM (
+  SELECT doc_id, source,
+    CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rn
+  FROM documents)
+WHERE rn <= 10"""),
     // weight-proportional priority sample (k smallest md5-hash/weight
     // priorities, weight = token count) — TakeOrdered, never a global
     // sort; exact integers both engines replay bit-for-bit
-    "weighted_sample" -> ((s, dir) =>
-      Curation.weightedSample(docs(s, dir), WsampleK)),
-    "token_histogram" -> ((s, dir) => Curation.tokenHistogram(docs(s, dir), HistBucket)),
+    Gate("weighted_sample", (s, dir) =>
+      Curation.weightedSample(docs(s, dir), WsampleK),
+      s"""WITH w AS (SELECT doc_id,
+    greatest(1, CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT)) AS w,
+    CAST(('0x' || substr(md5('wsmp:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
+  FROM documents)
+SELECT doc_id, w, (h * 1000000) // w AS pri
+FROM w ORDER BY pri, doc_id LIMIT $WsampleK"""),
+
+    Gate("token_histogram", (s, dir) => Curation.tokenHistogram(docs(s, dir), HistBucket),
+      """WITH s AS (SELECT len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_tokens FROM documents)
+SELECT CAST((n_tokens // 25) * 25 AS BIGINT) AS bucket,
+  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens_total
+FROM s GROUP BY 1"""),
     // snapshot diff against a deterministically mutated next release:
     // every 13th doc removed, every remaining 7th edited, every 17th
     // re-added under a shifted id — added/removed/changed per doc,
     // fingerprints projected before the one doc_id-keyed join
-    "corpus_diff" -> ((s, dir) => {
+    Gate("corpus_diff", (s, dir) => {
       val prev = docs(s, dir).select("doc_id", "text")
       val next = prev.filter(col("doc_id") % 13 =!= 0)
         .withColumn("text", when(col("doc_id") % 7 === 0,
@@ -95,85 +129,247 @@ object CurationQueries {
           .select((col("doc_id") + 1000000L).as("doc_id"),
             concat(lit("new "), col("doc_id")).as("text")))
       Curation.corpusDiff(prev, next)
-    }),
+    },
+      """WITH nx AS (
+  SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' edited' ELSE text END AS text
+  FROM documents WHERE doc_id % 13 <> 0
+  UNION ALL
+  SELECT doc_id + 1000000 AS doc_id, 'new ' || doc_id AS text
+  FROM documents WHERE doc_id % 17 = 0),
+j AS (SELECT coalesce(p.doc_id, n.doc_id) AS doc_id,
+    CASE WHEN p.doc_id IS NULL THEN 'added'
+         WHEN n.doc_id IS NULL THEN 'removed'
+         WHEN md5(p.text) <> md5(n.text) THEN 'changed'
+         ELSE 'unchanged' END AS status
+  FROM documents p FULL OUTER JOIN nx n ON n.doc_id = p.doc_id)
+SELECT doc_id, status FROM j WHERE status <> 'unchanged'"""),
     // deterministic training-shard assignment (reproducible global
     // shuffle: hash shard + in-shard rank)
-    "shard_assign" -> ((s, dir) => Curation.shardAssign(docs(s, dir), NShards)),
+    Gate("shard_assign", (s, dir) => Curation.shardAssign(docs(s, dir), NShards),
+      s"""WITH sh AS (SELECT doc_id,
+    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
+  FROM documents)
+SELECT doc_id, CAST(h % $NShards AS INT) AS shard,
+  CAST(row_number() OVER (PARTITION BY h % $NShards ORDER BY h, doc_id) AS BIGINT) AS pos
+FROM sh"""),
     // per-language mixture accounting with integer permille token share
-    "mixture_report" -> ((s, dir) => Curation.mixtureReport(docs(s, dir))),
+    Gate("mixture_report", (s, dir) => Curation.mixtureReport(docs(s, dir)),
+      """WITH s AS (SELECT lang AS stratum,
+    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens
+  FROM documents),
+m AS (SELECT stratum, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
+  FROM s GROUP BY 1)
+SELECT stratum, n_docs, n_tokens,
+  CAST((n_tokens * 1000) // (sum(n_tokens) OVER ()) AS BIGINT) AS tokens_e3
+FROM m"""),
     // benchmark decontamination: 5-gram overlap of every corpus doc
     // against the (broadcast) eval-set shingle table
-    "decontam_overlap" -> ((s, dir) => {
+    Gate("decontam_overlap", (s, dir) => {
       val d = docs(s, dir)
       Curation.decontaminate(d.filter(!evalPred), d.filter(evalPred), DecontamK)
-    }),
+    },
+      decontamSql),
     // span-level decontamination: every matched eval 3-gram occurrence
     // with exact token index and [start, end) char offsets into the
     // whitespace-collapsed normalized text — redact spans, keep docs
-    "decontam_spans" -> ((s, dir) => {
+    Gate("decontam_spans", (s, dir) => {
       val d = docs(s, dir)
       Curation.decontaminateSpans(d.filter(!evalPred), d.filter(evalPred), DecontamSpansK)
-    }),
+    },
+      // offset-exact span oracle: char offsets recomputed independently
+      // from token-prefix joins (length of the first i-1 tokens + one
+      // separating space), occurrences NOT deduplicated
+      s"""WITH dwords AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
+ev AS (SELECT doc_id FROM documents
+  WHERE CAST(('0x' || substr(md5('eval:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 < $EvalPermille),
+evsh AS (SELECT DISTINCT unnest(list_transform(range(1, len(ws)-${DecontamSpansK - 2}),
+    i -> array_to_string(list_slice(ws, CAST(i AS INT), CAST(i+${DecontamSpansK - 1} AS INT)), ' '))) AS sh
+  FROM dwords JOIN ev USING (doc_id) WHERE len(ws) >= $DecontamSpansK),
+pos AS (SELECT doc_id, s.i - 1 AS start_tok, s.off AS start_char, s.sh AS sh FROM (
+  SELECT d.doc_id, unnest(list_transform(range(1, len(ws)-${DecontamSpansK - 2}),
+    i -> {'i': i,
+          'off': CASE WHEN i = 1 THEN 0
+                 ELSE length(array_to_string(list_slice(ws, 1, CAST(i-1 AS INT)), ' ')) + 1 END,
+          'sh': array_to_string(list_slice(ws, CAST(i AS INT), CAST(i+${DecontamSpansK - 1} AS INT)), ' ')})) AS s
+  FROM dwords d
+  WHERE len(ws) >= $DecontamSpansK
+    AND NOT EXISTS (SELECT 1 FROM ev WHERE ev.doc_id = d.doc_id)))
+SELECT p.doc_id, CAST(p.start_tok AS BIGINT) AS start_tok,
+  CAST(p.start_char AS BIGINT) AS start_char,
+  CAST(p.start_char + length(p.sh) AS BIGINT) AS end_char, p.sh AS sh
+FROM pos p JOIN evsh e ON p.sh = e.sh"""),
     // same decontamination semantics in the eval-side-too-big-to-
     // broadcast shape: a Catalyst bloom filter over the eval shingle
     // hashes prefilters the corpus side before the exchange, the join
     // re-verifies exactly — result bit-identical to decontam_overlap
-    "decontam_bloom" -> ((s, dir) => {
+    Gate("decontam_bloom", (s, dir) => {
       val d = docs(s, dir)
       Curation.decontaminateAtScale(d.filter(!evalPred), d.filter(evalPred), DecontamK)
-    }),
+    },
+      // the bloom-prefiltered path is value-identical by construction
+      // (bloom has no false negatives; positives are exactly re-verified),
+      // so it is gated against the SAME oracle
+      decontamSql),
     // token-stream packing: per-shard concatenation offsets + training-
     // sequence index (the final layout step before shard export)
-    "pack_offsets" -> ((s, dir) =>
-      Curation.packOffsets(docs(s, dir), NShards, PackSeqLen)),
+    Gate("pack_offsets", (s, dir) =>
+      Curation.packOffsets(docs(s, dir), NShards, PackSeqLen),
+      s"""WITH sh AS (SELECT doc_id,
+    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
+    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens
+  FROM documents),
+w AS (SELECT doc_id, CAST(h % $NShards AS INT) AS shard, n_tokens,
+    sum(n_tokens) OVER (PARTITION BY h % $NShards ORDER BY h, doc_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS end_off
+  FROM sh)
+SELECT doc_id, shard, n_tokens,
+  CAST(end_off - n_tokens AS BIGINT) AS start_off,
+  CAST((end_off - n_tokens) // $PackSeqLen AS BIGINT) AS seq_idx
+FROM w"""),
     // whole-document best-fit-decreasing packing: no document crosses a
     // sequence boundary, BFD minimizes the padding a naive packing pays
     // (spec-pinned <= the arrival-order baseline); fully deterministic
     // (eff desc, doc_id order; highest-fill-that-fits, ties to the
     // lowest bin), so a recursive-CTE oracle replays every placement
-    "pack_bestfit" -> ((s, dir) =>
-      Curation.packBestFit(docs(s, dir), NShards, PackSeqLen)),
+    Gate("pack_bestfit", (s, dir) =>
+      Curation.packBestFit(docs(s, dir), NShards, PackSeqLen),
+      // BFD replayed step by step ([[packBestFitCte]]): rank documents
+      // (eff desc, doc_id) within each shard, then a recursive CTE
+      // carries the open-bin fill list — the chosen bin is the max fill
+      // still fitting (list_position = first index on ties, the engine's
+      // strict-greater walk), else a new bin opens. start_off = the
+      // chosen bin's fill before placement.
+      s"""$packBestFitCte
+SELECT doc_id, shard, eff AS n_tokens, bin_idx, start_off FROM rec"""),
     // the padding audit over the BFD packing: per shard, bins used and
     // the exact pad-fraction (permillion) a training run would pay
-    "pack_padding" -> ((s, dir) =>
+    Gate("pack_padding", (s, dir) =>
       Curation.packPadding(
-        Curation.packBestFit(docs(s, dir), NShards, PackSeqLen), PackSeqLen)),
+        Curation.packBestFit(docs(s, dir), NShards, PackSeqLen), PackSeqLen),
+      // rollup of the same recursive placement chain: bins = max index +
+      // 1 per shard, padding = unfilled slots per million (truncating //)
+      s"""$packBestFitCte
+SELECT shard, CAST(max(bin_idx) + 1 AS BIGINT) AS n_bins,
+  CAST(((CAST(max(bin_idx) + 1 AS BIGINT) * $PackSeqLen - sum(eff)) * 1000000)
+    // (CAST(max(bin_idx) + 1 AS BIGINT) * $PackSeqLen) AS BIGINT) AS padding_e6
+FROM rec GROUP BY shard"""),
     // provenance inverse of pack_offsets: training sequence -> the
     // documents feeding it, with exact per-sequence token contributions
-    "seq_provenance" -> ((s, dir) =>
-      Curation.seqProvenance(docs(s, dir), NShards, PackSeqLen)),
+    Gate("seq_provenance", (s, dir) =>
+      Curation.seqProvenance(docs(s, dir), NShards, PackSeqLen),
+      s"""WITH sh AS (SELECT doc_id,
+    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
+    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens
+  FROM documents),
+w AS (SELECT doc_id, CAST(h % $NShards AS INT) AS shard, n_tokens,
+    CAST(sum(n_tokens) OVER (PARTITION BY h % $NShards ORDER BY h, doc_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS end_off
+  FROM sh),
+pv AS (SELECT doc_id, shard, n_tokens,
+    end_off - n_tokens AS start_off, end_off
+  FROM w WHERE n_tokens > 0),
+e AS (SELECT doc_id, shard, start_off, end_off,
+    unnest(range(start_off // $PackSeqLen, (end_off - 1) // $PackSeqLen + 1)) AS seq_idx
+  FROM pv)
+SELECT shard, CAST(seq_idx AS BIGINT) AS seq_idx, doc_id,
+  CAST(least(end_off, (seq_idx + 1) * $PackSeqLen) -
+       greatest(start_off, seq_idx * $PackSeqLen) AS BIGINT) AS n_tokens_in_seq
+FROM e"""),
     // token-budget selection: the best-quality ordered prefix within a
     // fixed training-token budget, via histogram cutoff — no global sort
-    "budget_select" -> ((s, dir) =>
-      Curation.budgetSelect(docs(s, dir), BudgetTokens)),
+    Gate("budget_select", (s, dir) =>
+      Curation.budgetSelect(docs(s, dir), BudgetTokens),
+      // oracle spells the SEMANTICS (one global ordered-prefix window);
+      // the engine computes the same rows via the histogram cutoff
+      s"""WITH q AS (SELECT doc_id,
+    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,
+    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
+  FROM documents),
+w AS (SELECT doc_id, n_tokens, quality_e3,
+    sum(n_tokens) OVER (ORDER BY quality_e3 DESC, doc_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+  FROM q)
+SELECT doc_id, n_tokens, quality_e3 FROM w WHERE cum <= $BudgetTokens"""),
     // mixture control: per-language token budgets, best documents
     // first within each language — per-group histogram cutoffs, no
     // corpus-wide window or sort
-    "mixture_select" -> ((s, dir) =>
-      Curation.mixtureSelect(docs(s, dir), MixtureBudgets.toMap, "lang")),
+    Gate("mixture_select", (s, dir) =>
+      Curation.mixtureSelect(docs(s, dir), MixtureBudgets.toMap, "lang"),
+      // per-group twin of budget_select's oracle: the window partitions
+      // by language and the budget comes from the shared constant table
+      {
+        val caseSql = MixtureBudgets
+          .map { case (g, b) => s"WHEN '$g' THEN $b" }.mkString(" ")
+        s"""WITH q AS (SELECT doc_id, lang,
+    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,
+    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
+  FROM documents),
+w AS (SELECT doc_id, lang, n_tokens, quality_e3,
+    sum(n_tokens) OVER (PARTITION BY lang ORDER BY quality_e3 DESC, doc_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+    CASE lang $caseSql ELSE -1 END AS budget
+  FROM q)
+SELECT doc_id, lang, n_tokens, quality_e3 FROM w WHERE cum <= budget"""
+      }),
     // DSIR-style importance weights: hashed-token-bucket target/raw
     // ratio, target = the standard quality gate over the token array
-    "importance_weights" -> ((s, dir) =>
-      TextAnalysis.importanceWeights(docs(s, dir), qualityTargetPred, IwBuckets)),
+    Gate("importance_weights", (s, dir) =>
+      TextAnalysis.importanceWeights(docs(s, dir), qualityTargetPred, IwBuckets),
+      importanceSql),
     // the resampling consumer: top-100 raw documents by importance
     // weight (ties to lowest doc_id) — the selected training subset
-    "importance_sample" -> ((s, dir) =>
+    Gate("importance_sample", (s, dir) =>
       TextAnalysis.importanceWeights(docs(s, dir), qualityTargetPred, IwBuckets)
-        .orderBy(col("weight_e6").desc, col("doc_id")).limit(IwSampleN)),
+        .orderBy(col("weight_e6").desc, col("doc_id")).limit(IwSampleN),
+      s"""WITH iw AS ($importanceSql)
+SELECT * FROM iw ORDER BY weight_e6 DESC, doc_id LIMIT $IwSampleN"""),
 
     // k-anonymity release gate: hierarchical quasi-identifier
     // generalization, each row published at its first k-reaching
     // ladder level (see Curation.kAnonymize)
-    "k_anonymity" -> ((s, dir) =>
+    Gate("k_anonymity", (s, dir) =>
       Curation.kAnonymize(s.read.parquet(s"$dir/customer.parquet"),
-        KAnonK, KAnonBand)),
+        KAnonK, KAnonBand),
+      // the generalization-ladder spelling is identical on both sides:
+      // cohort sizes at each lattice level, first level reaching k wins
+      s"""WITH r AS MATERIALIZED (SELECT c_custkey AS id, c_nationkey AS nat,
+    c_mktsegment AS seg,
+    CAST(floor(c_acctbal / $KAnonBand.0) AS BIGINT) AS band FROM customer),
+l0 AS (SELECT nat, seg, band, count(*) AS c FROM r GROUP BY 1, 2, 3),
+l1 AS (SELECT nat, seg, count(*) AS c FROM r GROUP BY 1, 2),
+l2 AS (SELECT nat, count(*) AS c FROM r GROUP BY 1),
+ch AS (SELECT r.id, r.nat, r.seg, r.band,
+    CASE WHEN l0.c >= $KAnonK THEN 0 WHEN l1.c >= $KAnonK THEN 1
+         WHEN l2.c >= $KAnonK THEN 2 ELSE 3 END AS lvl
+  FROM r JOIN l0 ON r.nat IS NOT DISTINCT FROM l0.nat
+      AND r.seg IS NOT DISTINCT FROM l0.seg
+      AND r.band IS NOT DISTINCT FROM l0.band
+    JOIN l1 ON r.nat IS NOT DISTINCT FROM l1.nat
+      AND r.seg IS NOT DISTINCT FROM l1.seg
+    JOIN l2 ON r.nat IS NOT DISTINCT FROM l2.nat)
+SELECT lvl, CASE WHEN lvl <= 2 THEN nat END AS p_nat,
+  CASE WHEN lvl <= 1 THEN seg END AS p_seg,
+  CASE WHEN lvl = 0 THEN band END AS p_band,
+  count(*) AS n, CAST(sum(id) AS BIGINT) AS id_sum
+FROM ch GROUP BY 1, 2, 3, 4"""),
 
     // the END-TO-END curation pipeline, composed in the order a real
     // corpus build runs it: content gates (quality + repetition) →
     // deterministic stratified sample → per-source cap (ranked over the
     // post-filter survivors) → transitive dedup-loser removal. One
     // gated query proving the stages compose without semantic drift.
-    "pipeline_curate" -> (curated _),
+    Gate("pipeline_curate", (curated _),
+      // stage order mirrors the engine exactly: content gates → sample →
+      // per-source rank over the post-filter survivors → cluster-loser
+      // anti-join (clusters from the shared recursive reachability CTEs)
+      s"""${TextQueries.recursiveSigCte},
+${TextQueries.clusterCte},
+$curateCtes
+SELECT doc_id, lang, source, n_tokens FROM ccap c
+WHERE rn <= $SourceCapN
+  AND NOT EXISTS (SELECT 1 FROM clus WHERE clus.doc_id = c.doc_id AND clus.doc_id <> clus.cluster_id)"""),
 
     // the full RELEASE build on top of the curated set: drop the eval
     // documents themselves and every document contaminated by eval
@@ -181,7 +377,7 @@ object CurationQueries {
     // survivors (histogram cutoff — no global sort), then assign the
     // shipped set its reproducible shard/position layout. The capstone
     // composition: a user runs the complete corpus release as ONE query.
-    "pipeline_release" -> ((s, dir) => {
+    Gate("pipeline_release", (s, dir) => {
       val d = docs(s, dir)
       val cur = curated(s, dir).select("doc_id")
       val contam = Curation.decontaminate(d.filter(!evalPred), d.filter(evalPred), DecontamK)
@@ -203,7 +399,37 @@ object CurationQueries {
       graft.operators.Dedup.unpersistCheckpointed(clean)
       graft.operators.Dedup.unpersistCheckpointed(budgeted)
       out
-    })
+    },
+      // the release capstone: curate (shared CTEs) → drop eval +
+      // contaminated docs → quality-ordered token budget → shard layout
+      s"""${TextQueries.recursiveSigCte},
+${TextQueries.clusterCte},
+$curateCtes,
+rcur AS (SELECT doc_id FROM ccap c
+  WHERE rn <= $SourceCapN
+    AND NOT EXISTS (SELECT 1 FROM clus WHERE clus.doc_id = c.doc_id AND clus.doc_id <> clus.cluster_id)),
+rdsh AS (SELECT DISTINCT doc_id, unnest(list_transform(range(1, len(ws)-3),
+    i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4])) AS sh
+  FROM dwords WHERE len(ws) >= $DecontamK),
+rev AS (SELECT doc_id FROM documents
+  WHERE CAST(('0x' || substr(md5('eval:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 < $EvalPermille),
+revsh AS (SELECT DISTINCT sh FROM rdsh JOIN rev USING (doc_id)),
+rcon AS (SELECT DISTINCT d.doc_id FROM rdsh d JOIN revsh USING (sh)
+  WHERE NOT EXISTS (SELECT 1 FROM rev WHERE rev.doc_id = d.doc_id)),
+rclean AS (SELECT doc_id FROM rcur
+  WHERE NOT EXISTS (SELECT 1 FROM rev WHERE rev.doc_id = rcur.doc_id)
+    AND NOT EXISTS (SELECT 1 FROM rcon WHERE rcon.doc_id = rcur.doc_id)),
+rw AS (SELECT q.doc_id,
+    sum(q.n_tokens) OVER (ORDER BY q.quality_e3 DESC, q.doc_id
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+  FROM cq q JOIN rclean USING (doc_id)),
+rsel AS (SELECT doc_id FROM rw WHERE cum <= $ReleaseBudget),
+rh AS (SELECT doc_id,
+    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
+  FROM rsel)
+SELECT doc_id, CAST(h % $NShards AS INT) AS shard,
+  CAST(row_number() OVER (PARTITION BY h % $NShards ORDER BY h, doc_id) AS BIGINT) AS pos
+FROM rh""")
   )
 
   /** The shared curate composition (gate `pipeline_curate`, reused as
@@ -274,272 +500,6 @@ rec AS (
     END AS fills
   FROM rec r JOIN rk n ON n.shard = r.shard AND n.rk = r.rk + 1)"""
 
-  val oracle: Map[String, String] = Map(
-    "repetition_stats" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
-b AS (SELECT doc_id, list_transform(range(1, len(ws)), i -> ws[i]||' '||ws[i+1]) AS bg
-      FROM w WHERE len(ws) >= 2)
-SELECT doc_id, CAST(len(bg) AS BIGINT) AS n_bigrams,
-  CAST(len(list_distinct(bg)) AS BIGINT) AS n_distinct_bigrams,
-  CAST(((len(bg) - len(list_distinct(bg))) * 1000) // len(bg) AS BIGINT) AS rep_e3
-FROM b""",
-
-    "pii_redact" ->
-      s"""SELECT doc_id,
-  CAST(len(regexp_extract_all(text, '$Em')) AS BIGINT) AS n_emails,
-  CAST(len(regexp_extract_all(regexp_replace(text, '$Em', '<EMAIL>', 'g'), '$Dg')) AS BIGINT) AS n_digit_runs,
-  regexp_replace(regexp_replace(text, '$Em', '<EMAIL>', 'g'), '$Dg', '<NUM>', 'g') AS redacted
-FROM documents""",
-
-    // the generalization-ladder spelling is identical on both sides:
-    // cohort sizes at each lattice level, first level reaching k wins
-    "k_anonymity" ->
-      s"""WITH r AS MATERIALIZED (SELECT c_custkey AS id, c_nationkey AS nat,
-    c_mktsegment AS seg,
-    CAST(floor(c_acctbal / $KAnonBand.0) AS BIGINT) AS band FROM customer),
-l0 AS (SELECT nat, seg, band, count(*) AS c FROM r GROUP BY 1, 2, 3),
-l1 AS (SELECT nat, seg, count(*) AS c FROM r GROUP BY 1, 2),
-l2 AS (SELECT nat, count(*) AS c FROM r GROUP BY 1),
-ch AS (SELECT r.id, r.nat, r.seg, r.band,
-    CASE WHEN l0.c >= $KAnonK THEN 0 WHEN l1.c >= $KAnonK THEN 1
-         WHEN l2.c >= $KAnonK THEN 2 ELSE 3 END AS lvl
-  FROM r JOIN l0 ON r.nat IS NOT DISTINCT FROM l0.nat
-      AND r.seg IS NOT DISTINCT FROM l0.seg
-      AND r.band IS NOT DISTINCT FROM l0.band
-    JOIN l1 ON r.nat IS NOT DISTINCT FROM l1.nat
-      AND r.seg IS NOT DISTINCT FROM l1.seg
-    JOIN l2 ON r.nat IS NOT DISTINCT FROM l2.nat)
-SELECT lvl, CASE WHEN lvl <= 2 THEN nat END AS p_nat,
-  CASE WHEN lvl <= 1 THEN seg END AS p_seg,
-  CASE WHEN lvl = 0 THEN band END AS p_band,
-  count(*) AS n, CAST(sum(id) AS BIGINT) AS id_sum
-FROM ch GROUP BY 1, 2, 3, 4""",
-
-    "sample_stratified" ->
-      """SELECT doc_id, lang FROM documents
-WHERE CAST(('0x' || substr(md5('smp:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 <
-  CASE lang WHEN 'en' THEN 100 WHEN 'de' THEN 300 WHEN 'fr' THEN 500 ELSE 400 END""",
-
-    "weighted_sample" ->
-      s"""WITH w AS (SELECT doc_id,
-    greatest(1, CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT)) AS w,
-    CAST(('0x' || substr(md5('wsmp:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
-  FROM documents)
-SELECT doc_id, w, (h * 1000000) // w AS pri
-FROM w ORDER BY pri, doc_id LIMIT $WsampleK""",
-
-    "source_cap" ->
-      """SELECT doc_id, source, rn FROM (
-  SELECT doc_id, source,
-    CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) AS rn
-  FROM documents)
-WHERE rn <= 10""",
-
-    "shard_assign" ->
-      s"""WITH sh AS (SELECT doc_id,
-    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
-  FROM documents)
-SELECT doc_id, CAST(h % $NShards AS INT) AS shard,
-  CAST(row_number() OVER (PARTITION BY h % $NShards ORDER BY h, doc_id) AS BIGINT) AS pos
-FROM sh""",
-
-    "importance_weights" -> importanceSql,
-
-    "importance_sample" ->
-      s"""WITH iw AS ($importanceSql)
-SELECT * FROM iw ORDER BY weight_e6 DESC, doc_id LIMIT $IwSampleN""",
-
-    "decontam_overlap" -> decontamSql,
-
-    // the bloom-prefiltered path is value-identical by construction
-    // (bloom has no false negatives; positives are exactly re-verified),
-    // so it is gated against the SAME oracle
-    "decontam_bloom" -> decontamSql,
-
-    // offset-exact span oracle: char offsets recomputed independently
-    // from token-prefix joins (length of the first i-1 tokens + one
-    // separating space), occurrences NOT deduplicated
-    "decontam_spans" ->
-      s"""WITH dwords AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
-ev AS (SELECT doc_id FROM documents
-  WHERE CAST(('0x' || substr(md5('eval:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 < $EvalPermille),
-evsh AS (SELECT DISTINCT unnest(list_transform(range(1, len(ws)-${DecontamSpansK - 2}),
-    i -> array_to_string(list_slice(ws, CAST(i AS INT), CAST(i+${DecontamSpansK - 1} AS INT)), ' '))) AS sh
-  FROM dwords JOIN ev USING (doc_id) WHERE len(ws) >= $DecontamSpansK),
-pos AS (SELECT doc_id, s.i - 1 AS start_tok, s.off AS start_char, s.sh AS sh FROM (
-  SELECT d.doc_id, unnest(list_transform(range(1, len(ws)-${DecontamSpansK - 2}),
-    i -> {'i': i,
-          'off': CASE WHEN i = 1 THEN 0
-                 ELSE length(array_to_string(list_slice(ws, 1, CAST(i-1 AS INT)), ' ')) + 1 END,
-          'sh': array_to_string(list_slice(ws, CAST(i AS INT), CAST(i+${DecontamSpansK - 1} AS INT)), ' ')})) AS s
-  FROM dwords d
-  WHERE len(ws) >= $DecontamSpansK
-    AND NOT EXISTS (SELECT 1 FROM ev WHERE ev.doc_id = d.doc_id)))
-SELECT p.doc_id, CAST(p.start_tok AS BIGINT) AS start_tok,
-  CAST(p.start_char AS BIGINT) AS start_char,
-  CAST(p.start_char + length(p.sh) AS BIGINT) AS end_char, p.sh AS sh
-FROM pos p JOIN evsh e ON p.sh = e.sh""",
-
-    "pack_offsets" ->
-      s"""WITH sh AS (SELECT doc_id,
-    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
-    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens
-  FROM documents),
-w AS (SELECT doc_id, CAST(h % $NShards AS INT) AS shard, n_tokens,
-    sum(n_tokens) OVER (PARTITION BY h % $NShards ORDER BY h, doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS end_off
-  FROM sh)
-SELECT doc_id, shard, n_tokens,
-  CAST(end_off - n_tokens AS BIGINT) AS start_off,
-  CAST((end_off - n_tokens) // $PackSeqLen AS BIGINT) AS seq_idx
-FROM w""",
-
-    // BFD replayed step by step ([[packBestFitCte]]): rank documents
-    // (eff desc, doc_id) within each shard, then a recursive CTE
-    // carries the open-bin fill list — the chosen bin is the max fill
-    // still fitting (list_position = first index on ties, the engine's
-    // strict-greater walk), else a new bin opens. start_off = the
-    // chosen bin's fill before placement.
-    "pack_bestfit" ->
-      s"""$packBestFitCte
-SELECT doc_id, shard, eff AS n_tokens, bin_idx, start_off FROM rec""",
-
-    // rollup of the same recursive placement chain: bins = max index +
-    // 1 per shard, padding = unfilled slots per million (truncating //)
-    "pack_padding" ->
-      s"""$packBestFitCte
-SELECT shard, CAST(max(bin_idx) + 1 AS BIGINT) AS n_bins,
-  CAST(((CAST(max(bin_idx) + 1 AS BIGINT) * $PackSeqLen - sum(eff)) * 1000000)
-    // (CAST(max(bin_idx) + 1 AS BIGINT) * $PackSeqLen) AS BIGINT) AS padding_e6
-FROM rec GROUP BY shard""",
-
-    "seq_provenance" ->
-      s"""WITH sh AS (SELECT doc_id,
-    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
-    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens
-  FROM documents),
-w AS (SELECT doc_id, CAST(h % $NShards AS INT) AS shard, n_tokens,
-    CAST(sum(n_tokens) OVER (PARTITION BY h % $NShards ORDER BY h, doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS end_off
-  FROM sh),
-pv AS (SELECT doc_id, shard, n_tokens,
-    end_off - n_tokens AS start_off, end_off
-  FROM w WHERE n_tokens > 0),
-e AS (SELECT doc_id, shard, start_off, end_off,
-    unnest(range(start_off // $PackSeqLen, (end_off - 1) // $PackSeqLen + 1)) AS seq_idx
-  FROM pv)
-SELECT shard, CAST(seq_idx AS BIGINT) AS seq_idx, doc_id,
-  CAST(least(end_off, (seq_idx + 1) * $PackSeqLen) -
-       greatest(start_off, seq_idx * $PackSeqLen) AS BIGINT) AS n_tokens_in_seq
-FROM e""",
-
-    // per-group twin of budget_select's oracle: the window partitions
-    // by language and the budget comes from the shared constant table
-    "mixture_select" -> {
-      val caseSql = MixtureBudgets
-        .map { case (g, b) => s"WHEN '$g' THEN $b" }.mkString(" ")
-      s"""WITH q AS (SELECT doc_id, lang,
-    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,
-    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
-  FROM documents),
-w AS (SELECT doc_id, lang, n_tokens, quality_e3,
-    sum(n_tokens) OVER (PARTITION BY lang ORDER BY quality_e3 DESC, doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-    CASE lang $caseSql ELSE -1 END AS budget
-  FROM q)
-SELECT doc_id, lang, n_tokens, quality_e3 FROM w WHERE cum <= budget"""
-    },
-
-    // oracle spells the SEMANTICS (one global ordered-prefix window);
-    // the engine computes the same rows via the histogram cutoff
-    "budget_select" ->
-      s"""WITH q AS (SELECT doc_id,
-    CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,
-    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
-  FROM documents),
-w AS (SELECT doc_id, n_tokens, quality_e3,
-    sum(n_tokens) OVER (ORDER BY quality_e3 DESC, doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM q)
-SELECT doc_id, n_tokens, quality_e3 FROM w WHERE cum <= $BudgetTokens""",
-
-    "mixture_report" ->
-      """WITH s AS (SELECT lang AS stratum,
-    CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens
-  FROM documents),
-m AS (SELECT stratum, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-  FROM s GROUP BY 1)
-SELECT stratum, n_docs, n_tokens,
-  CAST((n_tokens * 1000) // (sum(n_tokens) OVER ()) AS BIGINT) AS tokens_e3
-FROM m""",
-
-    "token_histogram" ->
-      """WITH s AS (SELECT len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_tokens FROM documents)
-SELECT CAST((n_tokens // 25) * 25 AS BIGINT) AS bucket,
-  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens_total
-FROM s GROUP BY 1""",
-
-    "corpus_diff" ->
-      """WITH nx AS (
-  SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' edited' ELSE text END AS text
-  FROM documents WHERE doc_id % 13 <> 0
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, 'new ' || doc_id AS text
-  FROM documents WHERE doc_id % 17 = 0),
-j AS (SELECT coalesce(p.doc_id, n.doc_id) AS doc_id,
-    CASE WHEN p.doc_id IS NULL THEN 'added'
-         WHEN n.doc_id IS NULL THEN 'removed'
-         WHEN md5(p.text) <> md5(n.text) THEN 'changed'
-         ELSE 'unchanged' END AS status
-  FROM documents p FULL OUTER JOIN nx n ON n.doc_id = p.doc_id)
-SELECT doc_id, status FROM j WHERE status <> 'unchanged'""",
-
-    // stage order mirrors the engine exactly: content gates → sample →
-    // per-source rank over the post-filter survivors → cluster-loser
-    // anti-join (clusters from the shared recursive reachability CTEs)
-    "pipeline_curate" ->
-      s"""${TextQueries.recursiveSigCte},
-${TextQueries.clusterCte},
-$curateCtes
-SELECT doc_id, lang, source, n_tokens FROM ccap c
-WHERE rn <= $SourceCapN
-  AND NOT EXISTS (SELECT 1 FROM clus WHERE clus.doc_id = c.doc_id AND clus.doc_id <> clus.cluster_id)""",
-
-    // the release capstone: curate (shared CTEs) → drop eval +
-    // contaminated docs → quality-ordered token budget → shard layout
-    "pipeline_release" ->
-      s"""${TextQueries.recursiveSigCte},
-${TextQueries.clusterCte},
-$curateCtes,
-rcur AS (SELECT doc_id FROM ccap c
-  WHERE rn <= $SourceCapN
-    AND NOT EXISTS (SELECT 1 FROM clus WHERE clus.doc_id = c.doc_id AND clus.doc_id <> clus.cluster_id)),
-rdsh AS (SELECT DISTINCT doc_id, unnest(list_transform(range(1, len(ws)-3),
-    i -> ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4])) AS sh
-  FROM dwords WHERE len(ws) >= $DecontamK),
-rev AS (SELECT doc_id FROM documents
-  WHERE CAST(('0x' || substr(md5('eval:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 1000 < $EvalPermille),
-revsh AS (SELECT DISTINCT sh FROM rdsh JOIN rev USING (doc_id)),
-rcon AS (SELECT DISTINCT d.doc_id FROM rdsh d JOIN revsh USING (sh)
-  WHERE NOT EXISTS (SELECT 1 FROM rev WHERE rev.doc_id = d.doc_id)),
-rclean AS (SELECT doc_id FROM rcur
-  WHERE NOT EXISTS (SELECT 1 FROM rev WHERE rev.doc_id = rcur.doc_id)
-    AND NOT EXISTS (SELECT 1 FROM rcon WHERE rcon.doc_id = rcur.doc_id)),
-rw AS (SELECT q.doc_id,
-    sum(q.n_tokens) OVER (ORDER BY q.quality_e3 DESC, q.doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM cq q JOIN rclean USING (doc_id)),
-rsel AS (SELECT doc_id FROM rw WHERE cum <= $ReleaseBudget),
-rh AS (SELECT doc_id,
-    CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
-  FROM rsel)
-SELECT doc_id, CAST(h % $NShards AS INT) AS shard,
-  CAST(row_number() OVER (PARTITION BY h % $NShards ORDER BY h, doc_id) AS BIGINT) AS pos
-FROM rh"""
-  )
-
   /** DSIR importance-weight oracle: hashed-token-bucket counts over the
     * raw corpus and the quality-gated target subset, add-one-smoothed
     * integer ratio per bucket, tf-weighted per-document mean. Shares
@@ -580,7 +540,7 @@ GROUP BY c.doc_id"""
 
   /** The curate stage's oracle CTEs, shared by `pipeline_curate` and
     * `pipeline_release` (assumes `dwords` from the signature CTEs).
-    * Lazy: referenced from `oracle`, which initializes first. */
+    * Lazy: read by `gates`, which is declared above it. */
   private lazy val curateCtes =
     s"""cq AS (SELECT doc_id,
     CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,

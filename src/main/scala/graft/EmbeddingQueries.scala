@@ -92,31 +92,48 @@ object EmbeddingQueries {
   private val MmrK = 8
   private val MmrC = 20
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // exact ANN baseline: top-k by integer inner product, per query
-    "ann_topk_ip" -> ((s, dir) => {
+    Gate("ann_topk_ip", (s, dir) => {
       val e = emb(s, dir)
       Similarity.ipTopK(e, e.filter(col("vec_id") < NQueries), K)
-    }),
+    },
+      s"""WITH $intCte,
+$exactTopCte
+SELECT qid, nid, dot, rank FROM extop"""),
     // blocked embedding near-dup pairs
-    "emb_near_pairs" -> ((s, dir) =>
-      Similarity.nearDupPairs(emb(s, dir), NearDupMinDot)),
+    Gate("emb_near_pairs", (s, dir) =>
+      Similarity.nearDupPairs(emb(s, dir), NearDupMinDot),
+      s"""WITH $intCte,
+p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, CAST(sum(a.ev * b.ev) AS BIGINT) AS dot
+  FROM iex a JOIN iex b ON a.i = b.i AND a.label = b.label AND a.vec_id < b.vec_id
+  GROUP BY 1, 2)
+SELECT id_a, id_b, dot FROM p WHERE dot >= $NearDupMinDot"""),
     // approximate ANN: LSH buckets + exact re-rank — deterministic and
     // fully oracle-gated (md5-derived hyperplanes)
-    "ann_lsh_topk" -> ((s, dir) => {
+    Gate("ann_lsh_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.lshTopK(e, e.filter(col("vec_id") < NQueries), Dim, K,
         LshTables, LshBits, LshSeed,
         queriesWithinEmb = Some(col("vec_id") < NQueries))
-    }),
+    },
+      s"""WITH $intCte,
+$lshCte
+SELECT qid, nid, dot, rank FROM lshtop"""),
     // IVF approximate ANN: deterministic hash-order centroids + fused-argmax
     // assignment + nProbe probing + exact re-rank — every step integer
     // and order-pinned, so the full pipeline is oracle-gated
-    "ann_ivf_topk" -> ((s, dir) => {
+    Gate("ann_ivf_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < NQueries), K,
         nCentroids = IvfCentroids, nProbe = IvfProbe)
-    }),
+    },
+      // IVF oracle: hash-order seed centroids (cid by vec_id rank),
+      // assignment = argmax dot with ties to the LOWEST cid (DotArgmax's
+      // strict-greater rule), probes = top-nProbe centroids per query with
+      // ties to the HIGHEST cid (the engine's struct sort compares (d,
+      // cid) descending), then exact re-rank of probed-cell members.
+      ivfOracleFull),
     // IVF with one deterministic integer Lloyd iteration refining the
     // hash-order seeds — the centroid update (truncating-division cell
     // means) is exact integer arithmetic, so the refined pipeline stays
@@ -125,22 +142,32 @@ object EmbeddingQueries {
     // one index serves every predicate) answers queries restricted to
     // a metadata slice — the predicate prunes the cell assignment
     // BEFORE the probe join (pre-filter strategy)
-    "ann_filtered_topk" -> ((s, dir) => {
+    Gate("ann_filtered_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.ivfFilteredTopK(e, e.filter(col("vec_id") < NQueries), K,
         col("vec_id") % 3 === 1, nCentroids = IvfCentroids, nProbe = IvfProbe)
-    }),
-    "ann_ivf_kmeans_topk" -> ((s, dir) => {
+    },
+      ivfOracleFiltered),
+
+    Gate("ann_ivf_kmeans_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < NQueries), K,
         nCentroids = IvfCentroids, nProbe = IvfProbe, lloydIters = 1)
-    }),
+    },
+      // IVF + one Lloyd iteration: cell means by truncating integer
+      // division (HUGEINT sum // count, cast back), empty cells keep
+      // their seed, then the same assign/probe/re-rank over the refined
+      // centroid components.
+      s"""WITH $intCte,
+$ivfSeedCte,
+$kmeansAssignCte,
+${ivfTopSql("ad2", "assign2")}"""),
     // MATERIALIZED ANN index (the postings-store discipline on the
     // vector surface): centroids + cell-range-clustered assignment
     // written once, retrievals served from the store with the query
     // batch's probe cells pushed into the scan — plain AND filtered
     // serving must equal the from-scratch twins exactly
-    "ann_store_equiv" -> ((s, dir) => {
+    Gate("ann_store_equiv", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -162,13 +189,24 @@ object EmbeddingQueries {
           graft.operators.VectorStore.filteredTopK(s, tmp, qs, K, fpred, IvfProbe),
           "served_f"))
       eagerThenDrop(s, out, tmp)
-    }),
+    },
+      // the materialized ANN index must be result-invisible: the
+      // store-served plain and filtered retrievals each collapse to the
+      // same aggregate as their from-scratch twins
+      s"""WITH base AS MATERIALIZED ($ivfOracleFull),
+fbase AS MATERIALIZED ($ivfOracleFiltered),
+a AS (${phaseAggSelect("base")}),
+f AS (${phaseAggSelect("fbase")})
+SELECT 'direct' AS phase, * FROM a
+UNION ALL SELECT 'served' AS phase, * FROM a
+UNION ALL SELECT 'direct_f' AS phase, * FROM f
+UNION ALL SELECT 'served_f' AS phase, * FROM f"""),
     // STORE TAKEDOWN: a deleted embedding leaves retrieval immediately
     // (marker side table, no index rewrite) — the served results equal
     // the from-scratch pipeline over the corpus minus the deleted ids
     // (same full-corpus centroids: markers filter the assignment only),
     // plain AND composed with a metadata predicate
-    "ann_store_delete" -> ((s, dir) => {
+    Gate("ann_store_delete", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -194,12 +232,24 @@ object EmbeddingQueries {
           graft.operators.VectorStore.filteredTopK(s, tmp, qs, K, fpred,
             IvfProbe), "served_f"))
       eagerThenDrop(s, out, tmp)
-    }),
+    },
+      // a mutated store must serve the from-scratch pipeline over the
+      // corpus minus the takedown slice — same centroids (markers filter
+      // the assignment only); the filtered phase composes both predicates
+      s"""WITH base AS MATERIALIZED (${ivfOracleOver(candPred = " AND a.vec_id % 7 <> 3")}),
+fbase AS MATERIALIZED (${ivfOracleOver(
+        candPred = " AND a.vec_id % 7 <> 3 AND a.vec_id % 3 = 1")}),
+a AS (${phaseAggSelect("base")}),
+f AS (${phaseAggSelect("fbase")})
+SELECT 'direct' AS phase, * FROM a
+UNION ALL SELECT 'served' AS phase, * FROM a
+UNION ALL SELECT 'direct_f' AS phase, * FROM f
+UNION ALL SELECT 'served_f' AS phase, * FROM f"""),
     // STORE APPEND: new vectors join the EXISTING centroids' cells (the
     // incremental-index contract — re-clustering is an explicit
     // rebuild), so the served result equals assigning the UNION corpus
     // to the prior-corpus centroids (Similarity.ivfTopKWith)
-    "ann_store_append" -> ((s, dir) => {
+    Gate("ann_store_append", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -218,13 +268,20 @@ object EmbeddingQueries {
         .unionByName(storePhase(
           graft.operators.VectorStore.topK(s, tmp, qs, K, IvfProbe), "served"))
       eagerThenDrop(s, out, tmp)
-    }),
+    },
+      // an appended store serves the UNION corpus assigned to the PRIOR
+      // corpus's centroids (seeds picked from the prior slice only)
+      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
+        seedWhere = "WHERE vec_id % 5 <> 0")}),
+a AS (${phaseAggSelect("base")})
+SELECT 'direct' AS phase, * FROM a
+UNION ALL SELECT 'served' AS phase, * FROM a"""),
     // STORE LIFECYCLE capstone: build on a prior corpus, append a
     // batch, take down a slice, serve, COMPACT (fold batches + markers
     // to one clustered base), serve again — compaction must be
     // result-invisible and both serves must equal the from-scratch
     // replay (prior centroids, union corpus, takedown as a predicate)
-    "ann_store_lifecycle" -> ((s, dir) => {
+    Gate("ann_store_lifecycle", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -250,12 +307,22 @@ object EmbeddingQueries {
       val out = direct.unionByName(pre).unionByName(storePhase(
         graft.operators.VectorStore.topK(s, tmp, qs, K, IvfProbe), "post"))
       eagerThenDrop(s, out, tmp)
-    }),
+    },
+      // build-on-prior + append + takedown, served before AND after the
+      // compaction fold — all three phases equal the one replay (prior
+      // seeds, union corpus, takedown as a candidate predicate)
+      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
+        seedWhere = "WHERE vec_id % 5 <> 0",
+        candPred = " AND a.vec_id % 7 <> 3")}),
+a AS (${phaseAggSelect("base")})
+SELECT 'direct' AS phase, * FROM a
+UNION ALL SELECT 'pre' AS phase, * FROM a
+UNION ALL SELECT 'post' AS phase, * FROM a"""),
     // STORE AS-OF: snapshot serving at each operation bound — before
     // the append (prior corpus only), after it (union), after the
     // takedown (minus the deleted slice) — pure path selection over
     // batch subtrees + versioned markers, no manifests, no rewrites
-    "ann_store_asof" -> ((s, dir) => {
+    Gate("ann_store_asof", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -277,7 +344,22 @@ object EmbeddingQueries {
         .unionByName(storePhase(
           graft.operators.VectorStore.topKAsOf(s, tmp, qs, K, IvfProbe, 2L), "b2"))
       eagerThenDrop(s, out, tmp)
-    }),
+    },
+      // snapshot serving at each operation bound: prior corpus only
+      // (before the append), union (after it), minus the takedown slice
+      s"""WITH b0t AS MATERIALIZED (${ivfOracleOver(
+        seedWhere = "WHERE vec_id % 5 <> 0",
+        candPred = " AND a.vec_id % 5 <> 0")}),
+b1t AS MATERIALIZED (${ivfOracleOver(seedWhere = "WHERE vec_id % 5 <> 0")}),
+b2t AS MATERIALIZED (${ivfOracleOver(
+        seedWhere = "WHERE vec_id % 5 <> 0",
+        candPred = " AND a.vec_id % 7 <> 3")}),
+a0 AS (${phaseAggSelect("b0t")}),
+a1 AS (${phaseAggSelect("b1t")}),
+a2 AS (${phaseAggSelect("b2t")})
+SELECT 'b0' AS phase, * FROM a0
+UNION ALL SELECT 'b1' AS phase, * FROM a1
+UNION ALL SELECT 'b2' AS phase, * FROM a2"""),
     // RE-CLUSTER: the documented centroid-drift path — an explicit
     // IN-PLACE rebuild over the store's own live vectors (vectors() =
     // assignment minus markers). Crash-safe by the build contract:
@@ -285,7 +367,7 @@ object EmbeddingQueries {
     // swap replaces them only after the marker. Served results equal
     // the from-scratch pipeline over the LIVE corpus with RE-TRAINED
     // seeds — batches and takedowns fold into the new base
-    "ann_store_recluster" -> ((s, dir) => {
+    Gate("ann_store_recluster", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -309,7 +391,15 @@ object EmbeddingQueries {
         .unionByName(storePhase(
           graft.operators.VectorStore.topK(s, tmp, qs, K, IvfProbe), "served"))
       eagerThenDrop(s, out, tmp)
-    }),
+    },
+      // after the in-place re-cluster the store IS a fresh index over the
+      // live corpus: seeds re-picked from it, takedowns folded out
+      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
+        seedWhere = "WHERE vec_id % 7 <> 3",
+        candPred = " AND a.vec_id % 7 <> 3")}),
+a AS (${phaseAggSelect("base")})
+SELECT 'direct' AS phase, * FROM a
+UNION ALL SELECT 'served' AS phase, * FROM a"""),
     // ONLINE ANN-index maintenance — the streamed twin of the
     // ann_store_* lifecycle: a prior corpus indexed offline, the
     // remaining fifth arriving as foreachBatch micro-batches appended
@@ -319,7 +409,7 @@ object EmbeddingQueries {
     // batch-id-independent final state (all appends precede the
     // takedown on the op axis) the result is split-invariant, so both
     // phases share the one-shot lifecycle replay
-    "stream_ann_store" -> ((s, dir) => {
+    Gate("stream_ann_store", (s, dir) => {
       val e = emb(s, dir)
       // materialize the query batch ONCE per gate: every serve phase
       // (and the direct replays) consumes the same 10 rows; without
@@ -357,11 +447,20 @@ object EmbeddingQueries {
       val p = new org.apache.hadoop.fs.Path(tmp)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       res
-    }),
+    },
+      // the streamed lifecycle's final state is batch-split-invariant
+      // (every append precedes the takedown on the op axis), so both its
+      // phases share the one-shot lifecycle replay
+      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
+        seedWhere = "WHERE vec_id % 5 <> 0",
+        candPred = " AND a.vec_id % 7 <> 3")}),
+a AS (${phaseAggSelect("base")})
+SELECT 'streamed' AS phase, * FROM a
+UNION ALL SELECT 'compacted' AS phase, * FROM a"""),
     // topic model over the same refined clustering: per-(topic, label)
     // membership counts — what topic-balanced mixture selection reads;
     // one assignment pass (fused argmax) + one model-scale aggregate
-    "topic_profile" -> ((s, dir) => {
+    Gate("topic_profile", (s, dir) => {
       val e = emb(s, dir)
       val cents = Similarity.ivfRefine(e,
         Similarity.ivfCentroids(e, IvfCentroids), 1)
@@ -370,26 +469,59 @@ object EmbeddingQueries {
           .select(col("vec_id"), col("label")), "vec_id")
         .groupBy(col("centroid_id").cast("int").as("topic"), col("label"))
         .agg(count(lit(1)).as("n_vecs"))
-    }),
+    },
+      // topic model over the refined clustering: per-(topic, label)
+      // memberships — the cluster-composition report topic-balanced
+      // mixture selection reads (SemDeDup/topic-mixing shape)
+      s"""WITH $intCte,
+$ivfSeedCte,
+$kmeansAssignCte
+SELECT CAST(a.cid AS INT) AS topic, e.label,
+  CAST(count(*) AS BIGINT) AS n_vecs
+FROM assign2 a JOIN embeddings e ON e.vec_id = a.vec_id
+GROUP BY 1, 2"""),
     // Product quantization: per-subspace integer-Lloyd codebooks (same
     // deterministic hash-order seeds as IVF), L2 code assignment — the
     // 128x-compressed ANN index representation, fully oracle-gated
-    "pq_codes" -> ((s, dir) => {
+    Gate("pq_codes", (s, dir) => {
       val e = emb(s, dir)
       Similarity.pqEncode(e, Similarity.pqCodebooks(e, PqM, PqCodes, PqIters))
-    }),
+    },
+      // PQ codes pivoted to one column per subspace — pins every
+      // assignment of the trained codebooks
+      s"""WITH $intCte,
+$pqCte
+SELECT vec_id,
+  ${(0 until PqM).map(s =>
+        s"CAST(max(CASE WHEN sub = $s THEN code END) AS INT) AS c$s").mkString(",\n  ")}
+FROM pasn2 GROUP BY vec_id"""),
     // PQ asymmetric-distance (ADC) top-k: queries score the corpus
     // through m table lookups per vector, never touching the original
     // embeddings — approximate scores, exact integer arithmetic
-    "ann_pq_topk" -> ((s, dir) => {
+    Gate("ann_pq_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.pqTopK(e, e.filter(col("vec_id") < NQueries), K,
         PqM, PqCodes, PqIters)
-    }),
+    },
+      // ADC: per-query partial-dot table against the refined codebooks,
+      // summed through each vector's codes; ties (score desc, nid asc)
+      s"""WITH $intCte,
+$pqCte,
+pqd AS (SELECT x.vec_id AS qid, (x.i-1)//${Dim / PqM} AS sub, c.cid AS code,
+    CAST(sum(x.ev*c.ev) AS BIGINT) AS pdot
+  FROM iex x JOIN pcex2 c ON c.i = x.i WHERE x.vec_id < $NQueries GROUP BY 1, 2, 3),
+padc AS (SELECT q.qid, a.vec_id AS nid, CAST(sum(q.pdot) AS BIGINT) AS score
+  FROM pasn2 a JOIN pqd q ON q.sub = a.sub AND q.code = a.code AND a.vec_id <> q.qid
+  GROUP BY 1, 2)
+SELECT qid, nid, score, CAST(rank AS INT) AS rank FROM (
+    SELECT qid, nid, score,
+      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
+    FROM padc)
+WHERE rank <= $K"""),
     // recall of PQ-ADC top-k against the exact baseline, per query —
     // the measured quality of the compressed index at this operating
     // point (same proof shape as ann_lsh_recall / ann_ivf_recall)
-    "ann_pq_recall" -> ((s, dir) => {
+    Gate("ann_pq_recall", (s, dir) => {
       val e = emb(s, dir)
       val pred = col("vec_id") < NQueries
       val q = e.filter(pred)
@@ -399,25 +531,74 @@ object EmbeddingQueries {
       q.select(col("vec_id").as("qid"))
         .join(exact.join(approx, Seq("qid", "nid")), Seq("qid"), "left")
         .groupBy("qid").agg(count(col("nid")).as("hits"))
-    }),
+    },
+      s"""WITH $intCte,
+$exactTopCte,
+$pqCte,
+pqd AS (SELECT x.vec_id AS qid, (x.i-1)//${Dim / PqM} AS sub, c.cid AS code,
+    CAST(sum(x.ev*c.ev) AS BIGINT) AS pdot
+  FROM iex x JOIN pcex2 c ON c.i = x.i WHERE x.vec_id < $NQueries GROUP BY 1, 2, 3),
+padc AS (SELECT q.qid, a.vec_id AS nid, CAST(sum(q.pdot) AS BIGINT) AS score
+  FROM pasn2 a JOIN pqd q ON q.sub = a.sub AND q.code = a.code AND a.vec_id <> q.qid
+  GROUP BY 1, 2),
+pqtop AS (SELECT qid, nid FROM (
+    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
+    FROM padc)
+  WHERE rank <= $K)
+SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
+FROM ie q LEFT JOIN (
+  SELECT e.qid, e.nid FROM extop e JOIN pqtop l ON e.qid = l.qid AND e.nid = l.nid) j
+  ON j.qid = q.vec_id
+WHERE q.vec_id < $NQueries
+GROUP BY 1"""),
     // IVFPQ: the probe restricts each query to nProbe cells, ADC
     // scores the survivors from codes alone — the composition
     // trillion-scale serving uses, gated end to end
-    "ann_ivfpq_topk" -> ((s, dir) => {
+    Gate("ann_ivfpq_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.ivfPqTopK(e, e.filter(col("vec_id") < NQueries), K,
         IvfCentroids, IvfProbe, PqM, PqCodes, PqIters)
-    }),
+    },
+      // IVFPQ: IVF probes (seed centroids, ties cid-desc) restrict the
+      // candidates; ADC scores them through the PQ codes; rank ties
+      // nid-asc — the full composition, one oracle
+      s"""WITH $intCte,
+$ivfSeedCte,
+$pqCte,
+${ivfPqAdcCte()}
+SELECT qid, nid, score, CAST(rank AS INT) AS rank FROM (
+    SELECT qid, nid, score,
+      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
+    FROM ipqsc)
+WHERE rank <= $K"""),
     // IVFPQ + exact refine: ADC nominates top-RerankC per query, only
     // those rows touch original vectors for the exact re-rank — the
     // production recall-recovery stage (same shape as lshTopK's)
-    "ann_ivfpq_rerank_topk" -> ((s, dir) => {
+    Gate("ann_ivfpq_rerank_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.ivfPqRerankTopK(e, e.filter(col("vec_id") < NQueries), K,
         RerankC, IvfCentroids, RerankProbe, PqM, PqCodes, PqIters)
-    }),
+    },
+      // refine stage: ADC cut at RerankC (ties score desc, nid asc), then
+      // exact dots for ONLY those rows, re-ranked (dot desc, nid asc)
+      s"""WITH $intCte,
+$ivfSeedCte,
+$pqCte,
+${ivfPqAdcCte(RerankProbe)},
+pqcut AS (SELECT qid, nid FROM (
+    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
+    FROM ipqsc)
+  WHERE rn <= $RerankC),
+rrsc AS (SELECT c.qid, c.nid, CAST(sum(a.ev * b2.ev) AS BIGINT) AS dot
+  FROM pqcut c JOIN iex a ON a.vec_id = c.qid JOIN iex b2 ON b2.vec_id = c.nid AND b2.i = a.i
+  GROUP BY 1, 2)
+SELECT qid, nid, dot, CAST(rank AS INT) AS rank FROM (
+    SELECT qid, nid, dot,
+      row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
+    FROM rrsc)
+WHERE rank <= $K"""),
     // gated recall of the refined IVFPQ path against the exact baseline
-    "ann_ivfpq_rerank_recall" -> ((s, dir) => {
+    Gate("ann_ivfpq_rerank_recall", (s, dir) => {
       val e = emb(s, dir)
       val pred = col("vec_id") < NQueries
       val q = e.filter(pred)
@@ -428,26 +609,64 @@ object EmbeddingQueries {
       q.select(col("vec_id").as("qid"))
         .join(exact.join(approx, Seq("qid", "nid")), Seq("qid"), "left")
         .groupBy("qid").agg(count(col("nid")).as("hits"))
-    }),
+    },
+      s"""WITH $intCte,
+$exactTopCte,
+$ivfSeedCte,
+$pqCte,
+${ivfPqAdcCte(RerankProbe)},
+pqcut AS (SELECT qid, nid FROM (
+    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
+    FROM ipqsc)
+  WHERE rn <= $RerankC),
+rrsc AS (SELECT c.qid, c.nid, CAST(sum(a.ev * b2.ev) AS BIGINT) AS dot
+  FROM pqcut c JOIN iex a ON a.vec_id = c.qid JOIN iex b2 ON b2.vec_id = c.nid AND b2.i = a.i
+  GROUP BY 1, 2),
+rrtop AS (SELECT qid, nid FROM (
+    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
+    FROM rrsc)
+  WHERE rank <= $K)
+SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
+FROM ie q LEFT JOIN (
+  SELECT e.qid, e.nid FROM extop e JOIN rrtop l ON e.qid = l.qid AND e.nid = l.nid) j
+  ON j.qid = q.vec_id
+WHERE q.vec_id < $NQueries
+GROUP BY 1"""),
     // IVF-blocked kNN JOIN: k nearest neighbors for EVERY vector — the
     // whole-corpus semantic-dedup/clustering primitive; no broadcast,
     // one equi-join on the cell id. Both consumers (here and
     // semantic_dedup) read the ONE materialized-per-process edge table —
     // the ANN-join-once shape of a real pipeline
-    "knn_join_emb" -> ((s, dir) =>
-      Similarity.sharedKnnJoin(emb(s, dir), dir, KJoin, IvfCentroids, IvfProbe)),
+    Gate("knn_join_emb", (s, dir) =>
+      Similarity.sharedKnnJoin(emb(s, dir), dir, KJoin, IvfCentroids, IvfProbe),
+      // kNN join: the same IVF probe/candidate/re-rank tail with the
+      // query predicate removed — every vector is a query
+      s"""WITH $intCte,
+$ivfSeedCte,
+${ivfTopSql("ad", "assign", qPred = "", k = KJoin)}"""),
     // semantic dedup: kNN-join edges above the near-dup dot threshold →
     // connected components → (vec_id, cluster_id = min reachable id).
     // The embedding-space twin of dedup_clusters: paraphrase-level
     // duplicates that share no n-grams collapse here. Oracle = the
     // kNN-join CTE + the same recursive min-reachability shape.
-    "semantic_dedup" -> ((s, dir) =>
+    Gate("semantic_dedup", (s, dir) =>
       Similarity.sharedSemanticClusters(emb(s, dir), dir, KJoin,
-        IvfCentroids, IvfProbe, NearDupMinDot)),
+        IvfCentroids, IvfProbe, NearDupMinDot),
+      // the kNN-join tail (qPred empty = every vector queries) feeds the
+      // same recursive min-id reachability the text cluster oracle uses
+      s"""WITH RECURSIVE $intCte,
+$ivfSeedCte,
+${ivfTopSql("ad", "assign", qPred = "", k = KJoin, wrapAs = Some("kj"))},
+sp AS (SELECT qid, nid FROM kj WHERE dot >= $NearDupMinDot AND qid < nid),
+sedges AS (SELECT qid AS src, nid AS dst FROM sp UNION ALL SELECT nid, qid FROM sp),
+sreach AS (SELECT src AS id, src AS r FROM sedges
+  UNION
+  SELECT e.dst, r.r FROM sreach r JOIN sedges e ON e.src = r.id)
+SELECT id AS vec_id, min(r) AS cluster_id FROM sreach GROUP BY id"""),
     // embedding-corpus survivors after semantic cluster resolution —
     // Dedup.keepersFrom works on any (doc_id, cluster_id) map, so the
     // embedding-space keeper is the same anti-join shape as the text one
-    "semantic_keepers" -> ((s, dir) => {
+    Gate("semantic_keepers", (s, dir) => {
       val e = emb(s, dir)
       graft.operators.Dedup.keepersFrom(
         e.withColumnRenamed("vec_id", "doc_id"),
@@ -455,7 +674,18 @@ object EmbeddingQueries {
           IvfCentroids, IvfProbe, NearDupMinDot)
           .withColumnRenamed("vec_id", "doc_id"))
         .withColumnRenamed("doc_id", "vec_id")
-    }),
+    },
+      s"""WITH RECURSIVE $intCte,
+$ivfSeedCte,
+${ivfTopSql("ad", "assign", qPred = "", k = KJoin, wrapAs = Some("kj"))},
+sp AS (SELECT qid, nid FROM kj WHERE dot >= $NearDupMinDot AND qid < nid),
+sedges AS (SELECT qid AS src, nid AS dst FROM sp UNION ALL SELECT nid, qid FROM sp),
+sreach AS (SELECT src AS id, src AS r FROM sedges
+  UNION
+  SELECT e.dst, r.r FROM sreach r JOIN sedges e ON e.src = r.id),
+sclus AS (SELECT id, min(r) AS cluster_id FROM sreach GROUP BY id)
+SELECT e.vec_id FROM embeddings e
+WHERE NOT EXISTS (SELECT 1 FROM sclus c WHERE c.id = e.vec_id AND c.id <> c.cluster_id)"""),
     // multimodal dedup capstone: a document ships only if it is the
     // canonical member in BOTH spaces — text (LSH-verified shingle
     // clusters) and embedding (semantic clusters); paraphrases that
@@ -463,7 +693,7 @@ object EmbeddingQueries {
     // copies with drifted embeddings fall to the text side. Both
     // cluster maps come from their memoized tables — this gate is two
     // anti-join-shaped consumers, not a recompute
-    "dedup_multimodal" -> ((s, dir) => {
+    Gate("dedup_multimodal", (s, dir) => {
       val d = s.read.parquet(s"$dir/documents.parquet")
       // text-cluster params come from TextQueries so the engine and the
       // oracle (built from TextQueries' CTEs) can never drift apart
@@ -476,17 +706,40 @@ object EmbeddingQueries {
         .select(col("vec_id").as("doc_id"))
       d.join(textLosers.union(semLosers).distinct(), Seq("doc_id"), "left_anti")
         .select("doc_id")
-    }),
+    },
+      // multimodal capstone oracle: the text cluster chain (recursive
+      // shingle CTEs from TextQueries) plus the semantic cluster chain,
+      // survivors = canonical in both
+      s"""${TextQueries.recursiveSigCte},
+${TextQueries.clusterCte},
+$intCte,
+$ivfSeedCte,
+${ivfTopSql("ad", "assign", qPred = "", k = KJoin, wrapAs = Some("kj"))},
+sp AS (SELECT qid, nid FROM kj WHERE dot >= $NearDupMinDot AND qid < nid),
+sedges AS (SELECT qid AS src, nid AS dst FROM sp UNION ALL SELECT nid, qid FROM sp),
+sreach AS (SELECT src AS id, src AS r FROM sedges
+  UNION
+  SELECT e.dst, r.r FROM sreach r JOIN sedges e ON e.src = r.id),
+sclus AS (SELECT id, min(r) AS cluster_id FROM sreach GROUP BY id),
+mmlosers AS (SELECT doc_id FROM clus WHERE doc_id <> cluster_id
+  UNION SELECT id AS doc_id FROM sclus WHERE id <> cluster_id)
+SELECT d.doc_id FROM documents d
+WHERE NOT EXISTS (SELECT 1 FROM mmlosers l WHERE l.doc_id = d.doc_id)"""),
     // incremental semantic dedup: a fourth of the embedding corpus plays
     // the incoming batch, deduped against the other three quarters'
     // shipped IVF index — batch probes join PRIOR cells only, never
     // prior×prior (the embedding twin of dedup_incremental)
-    "semantic_incremental" -> ((s, dir) => {
+    Gate("semantic_incremental", (s, dir) => {
       val e = emb(s, dir)
       Similarity.semanticIncremental(
         e.filter(col("vec_id") % 4 === 3), e.filter(col("vec_id") % 4 < 3),
         s"$dir|prior=vid%4<3", NearDupMinDot, IvfCentroids, IvfProbe)
-    }),
+    },
+      // incremental oracle: prior-corpus hash-order seeds, prior-only
+      // assignment (ties to LOWEST cid — DotArgmax), new-batch probes
+      // (ties to HIGHEST cid — the engine's struct-desc sort), exact
+      // re-rank of probed prior cells, anti-join of qualifying losers
+      semanticIncrementalOracle),
     // ONLINE semantic dedup: the new quarter arrives as four
     // microbatches; each batch foreachBatch-dedups against the FIXED
     // prior corpus (memoized IVF assignment — built once, reused by
@@ -495,7 +748,7 @@ object EmbeddingQueries {
     // split, so the gate shares semantic_incremental's oracle — what
     // it adds is proof that the streaming plumbing (foreachBatch,
     // checkpointing, append sink) preserves the batch semantics.
-    "stream_semantic" -> ((s, dir) => {
+    Gate("stream_semantic", (s, dir) => {
       val e = emb(s, dir)
       val prior = e.filter(col("vec_id") % 4 < 3)
       val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sem").toString
@@ -531,23 +784,47 @@ object EmbeddingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      semanticIncrementalOracle),
     // symmetric int8 quantization audit (amax scale + quantized-vector
     // fingerprint + L1 reconstruction error), exact integer arithmetic
-    "emb_quantize" -> ((s, dir) => Similarity.quantizeInt8(emb(s, dir))),
+    Gate("emb_quantize", (s, dir) => Similarity.quantizeInt8(emb(s, dir)),
+      // int8 quantization audit: per-vector max-abs scale, md5 fingerprint
+      // of the quantized vector (pins every element), and exact-integer L1
+      // reconstruction error — `//` and Spark's `div` both truncate toward
+      // zero, so the arithmetic is engine-identical including negatives
+      s"""WITH $intCte,
+qa AS (SELECT vec_id, v,
+    greatest(list_max(list_transform(v, x -> abs(x))), 1) AS amax
+  FROM ie),
+qq AS (SELECT vec_id, amax, v,
+    list_transform(v, x -> (x * 127) // amax) AS q
+  FROM qa)
+SELECT vec_id, CAST(amax AS BIGINT) AS amax,
+  md5(array_to_string(list_transform(q, y -> CAST(y AS VARCHAR)), ',')) AS q_fp,
+  CAST(list_sum(list_transform(range(1, len(v)+1),
+    i -> abs(v[i] - (q[i] * amax) // 127))) AS BIGINT) AS err_l1
+FROM qq"""),
     // signed random projection 64 → 16: per-vector fingerprint pins
     // every projected component; pure per-row fused-kernel work
-    "emb_project" -> ((s, dir) => {
+    Gate("emb_project", (s, dir) => {
       val p = Similarity.randomProject(emb(s, dir), Dim, ProjDim)
       p.select(col("vec_id"),
         expr("md5(concat_ws(',', transform(p, y -> cast(y as string))))").as("p_fp"),
         expr("aggregate(p, cast(0 as bigint), (acc, x) -> acc + abs(x))").as("l1"))
-    }),
+    },
+      // md5-parity ±1 matrix (pm) → projected components (pr) — the
+      // oracle twin of Similarity.projectionMatrix/randomProject
+      s"""WITH $intCte,
+$projCte
+SELECT vec_id, md5(string_agg(CAST(p AS VARCHAR), ',' ORDER BY j)) AS p_fp,
+  CAST(sum(abs(p)) AS BIGINT) AS l1
+FROM pr GROUP BY vec_id"""),
     // how much neighbor structure the 2× reduction keeps RAW: top-k in
     // the projected space vs exact 64-dim top-k (same proof shape as
     // ann_lsh_recall — the JL lemma, measured; the gate pins whatever
     // the operating point yields)
-    "emb_project_recall" -> ((s, dir) => {
+    Gate("emb_project_recall", (s, dir) => {
       val e = emb(s, dir)
       val pred = col("vec_id") < NQueries
       val pr = Similarity.randomProject(e, Dim, ProjDim)
@@ -557,17 +834,40 @@ object EmbeddingQueries {
       e.filter(pred).select(col("vec_id").as("qid"))
         .join(exact.join(approx, Seq("qid", "nid")), Seq("qid"), "left")
         .groupBy("qid").agg(count(col("nid")).as("hits"))
-    }),
+    },
+      s"""WITH $intCte,
+$projCte,
+$exactTopCte,
+pd AS (SELECT q.vec_id AS qid, n.vec_id AS nid, CAST(sum(q.p * n.p) AS BIGINT) AS dot
+  FROM pr q JOIN pr n ON n.j = q.j AND n.vec_id <> q.vec_id
+  WHERE q.vec_id < $NQueries GROUP BY 1, 2),
+ptop AS (SELECT qid, nid FROM (
+    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM pd)
+  WHERE rn <= $K)
+SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
+FROM ie q LEFT JOIN (
+  SELECT e.qid, e.nid FROM extop e JOIN ptop l ON e.qid = l.qid AND e.nid = l.nid) j
+  ON j.qid = q.vec_id
+WHERE q.vec_id < $NQueries
+GROUP BY 1"""),
     // the projection's production shape: coarse top-C shortlist in the
     // projected space, exact re-rank of only those pairs (full-
     // precision reads O(queries·C) at any corpus size)
-    "emb_project_rerank_topk" -> ((s, dir) => {
+    Gate("emb_project_rerank_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.projectRerankTopK(e, e.filter(col("vec_id") < NQueries),
         Dim, ProjDim, K, ProjC)
-    }),
+    },
+      s"""WITH $intCte,
+$projCte,
+$projCandCte
+SELECT qid, nid, dot, rank FROM (
+  SELECT qid, nid, dot,
+    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
+  FROM prsc)
+WHERE rank <= $K"""),
     // gated recall of the project→shortlist→re-rank path
-    "emb_project_rerank_recall" -> ((s, dir) => {
+    Gate("emb_project_rerank_recall", (s, dir) => {
       val e = emb(s, dir)
       val pred = col("vec_id") < NQueries
       val q = e.filter(pred)
@@ -577,30 +877,86 @@ object EmbeddingQueries {
       q.select(col("vec_id").as("qid"))
         .join(exact.join(approx, Seq("qid", "nid")), Seq("qid"), "left")
         .groupBy("qid").agg(count(col("nid")).as("hits"))
-    }),
+    },
+      s"""WITH $intCte,
+$projCte,
+$projCandCte,
+$exactTopCte,
+prtop AS (SELECT qid, nid FROM (
+    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM prsc)
+  WHERE rn <= $K)
+SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
+FROM ie q LEFT JOIN (
+  SELECT e.qid, e.nid FROM extop e JOIN prtop l ON e.qid = l.qid AND e.nid = l.nid) j
+  ON j.qid = q.vec_id
+WHERE q.vec_id < $NQueries
+GROUP BY 1"""),
     // diversity-balanced selection: every semantic neighborhood (IVF
     // cell) capped at its best-scoring members — bounded top-k
     // aggregate per cell, no window (doc_id aligns with vec_id in the
     // fixtures, so document quality scores the vectors)
-    "diversity_sample" -> ((s, dir) => {
+    Gate("diversity_sample", (s, dir) => {
       val scores = graft.operators.TextAnalysis.stats(
           s.read.parquet(s"$dir/documents.parquet"))
         .select(col("doc_id").as("vec_id"), col("quality_e3").as("score"))
       Similarity.diversitySample(emb(s, dir), scores, DiversityPerCell, IvfCentroids)
-    }),
+    },
+      // diversity oracle: the IVF assignment CTEs + per-cell quality rank
+      // (score desc, vec_id — the CollectTopK struct order), capped
+      s"""WITH $intCte,
+$ivfSeedCte,
+q AS (SELECT doc_id AS vec_id,
+    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS score
+  FROM documents),
+r AS (SELECT a.vec_id, a.cid, q.score,
+    row_number() OVER (PARTITION BY a.cid ORDER BY q.score DESC, a.vec_id) AS rank
+  FROM assign a JOIN q USING (vec_id))
+SELECT vec_id, CAST(cid AS INT) AS centroid_id, score, CAST(rank AS BIGINT) AS rank
+FROM r WHERE rank <= $DiversityPerCell"""),
 
     // diversity-aware retrieval: greedy MMR over the exact top-C
     // shortlist — each pick maximizes λ·rel − (1−λ)·maxSimToPicked in
     // exact λ-scaled integers; per-query greedy is partition-local
     // after one shuffle on qid (the oracle replays every pick with a
     // recursive CTE)
-    "mmr_rerank_topk" -> ((s, dir) => {
+    Gate("mmr_rerank_topk", (s, dir) => {
       val e = emb(s, dir)
       Similarity.mmrRerankTopK(e, e.filter(col("vec_id") < NQueries), MmrK, MmrC)
-    }),
+    },
+      // greedy MMR replay: `rel` is the exact top-C shortlist, `ps` the
+      // candidate-pair dots, and the recursive `sel` carries the picked
+      // list — each step scores every remaining candidate (correlated
+      // max over sims to the picked set) and QUALIFY keeps the argmax
+      // with the engine's (score desc, nid asc) tie rule
+      s"""WITH RECURSIVE $intCte,
+allsc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, CAST(sum(a.ev * b.ev) AS BIGINT) AS dot
+  FROM iex a JOIN iex b ON a.i = b.i AND b.vec_id <> a.vec_id
+  WHERE a.vec_id < $NQueries GROUP BY 1, 2),
+rel AS (SELECT qid, nid, dot FROM (
+    SELECT qid, nid, dot, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM allsc)
+  WHERE rn <= $MmrC),
+ps AS (SELECT r1.qid, r1.nid AS a, r2.nid AS b, CAST(sum(x.ev * y.ev) AS BIGINT) AS dot
+  FROM rel r1 JOIN rel r2 ON r2.qid = r1.qid AND r2.nid <> r1.nid
+  JOIN iex x ON x.vec_id = r1.nid JOIN iex y ON y.vec_id = r2.nid AND y.i = x.i
+  GROUP BY 1, 2, 3),
+sel AS (
+  SELECT qid, 1 AS step, nid, 7*dot AS sc10, [nid] AS picked FROM (
+    SELECT qid, nid, dot, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM rel)
+  WHERE rn = 1
+  UNION ALL
+  SELECT qid, step + 1, nid, sc10, list_append(picked, nid) FROM (
+    SELECT s.qid, s.step, s.picked, c.nid,
+      7*c.dot - 3*(SELECT max(p.dot) FROM ps p
+                   WHERE p.qid = s.qid AND p.a = c.nid AND list_contains(s.picked, p.b)) AS sc10
+    FROM sel s JOIN rel c ON c.qid = s.qid AND NOT list_contains(s.picked, c.nid)
+    WHERE s.step < $MmrK)
+  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sc10 DESC, nid) = 1
+)
+SELECT qid, CAST(step AS INT) AS rank, nid, sc10 FROM sel"""),
     // gated recall metric: per query, how many of the LSH top-k appear
     // in the exact top-k (zero-hit queries included — 10 rows always)
-    "ann_lsh_recall" -> ((s, dir) => {
+    Gate("ann_lsh_recall", (s, dir) => {
       val e = emb(s, dir)
       val pred = col("vec_id") < NQueries
       val q = e.filter(pred)
@@ -611,12 +967,21 @@ object EmbeddingQueries {
       q.select(col("vec_id").as("qid"))
         .join(exact.join(approx, Seq("qid", "nid")), Seq("qid"), "left")
         .groupBy("qid").agg(count(col("nid")).as("hits"))
-    }),
+    },
+      s"""WITH $intCte,
+$exactTopCte,
+$lshCte
+SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
+FROM ie q LEFT JOIN (
+  SELECT e.qid, e.nid FROM extop e JOIN lshtop l ON e.qid = l.qid AND e.nid = l.nid) j
+  ON j.qid = q.vec_id
+WHERE q.vec_id < $NQueries
+GROUP BY 1"""),
     // cross-modal composition: retrieval restricted to QUALITY-GATED
     // documents (doc_id aligns with vec_id in the fixtures) — the
     // "search only the curated corpus" shape; neighbor side shrinks to
     // the survivor set before any scoring work happens
-    "ann_quality_topk" -> ((s, dir) => {
+    Gate("ann_quality_topk", (s, dir) => {
       val e = emb(s, dir)
       val good = graft.operators.TextAnalysis.stats(
           s.read.parquet(s"$dir/documents.parquet"))
@@ -624,10 +989,27 @@ object EmbeddingQueries {
         .select(col("doc_id").as("vec_id"))
       Similarity.ipTopK(e.join(good, "vec_id"),
         e.filter(col("vec_id") < NQueries), K)
-    }),
+    },
+      s"""WITH $intCte,
+goodq AS (SELECT doc_id FROM (
+    SELECT doc_id,
+      len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
+      (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
+        // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
+    FROM documents)
+  WHERE n_tokens >= 30 AND quality_e3 >= 500),
+p AS (SELECT a.vec_id AS qid, b.vec_id AS nid, CAST(sum(a.ev * b.ev) AS BIGINT) AS dot
+  FROM iex a JOIN iex b ON a.i = b.i AND b.vec_id <> a.vec_id
+  WHERE a.vec_id < $NQueries AND b.vec_id IN (SELECT doc_id FROM goodq)
+  GROUP BY 1, 2)
+SELECT qid, nid, dot, rank FROM (
+  SELECT qid, nid, dot,
+    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
+  FROM p)
+WHERE rank <= $K"""),
     // same gated metric for the IVF path — the nProbe/nCentroids
     // operating point's recall@k is an oracle-checked integer
-    "ann_ivf_recall" -> ((s, dir) => {
+    Gate("ann_ivf_recall", (s, dir) => {
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") < NQueries)
       val exact = Similarity.ipTopK(e, q, K).select(col("qid"), col("nid"))
@@ -636,8 +1018,47 @@ object EmbeddingQueries {
       q.select(col("vec_id").as("qid"))
         .join(exact.join(approx, Seq("qid", "nid")), Seq("qid"), "left")
         .groupBy("qid").agg(count(col("nid")).as("hits"))
-    })
+    },
+      s"""WITH $intCte,
+$exactTopCte,
+$ivfSeedCte,
+${ivfTopSql("ad", "assign", wrapAs = Some("ivftop"))}
+SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
+FROM ie q LEFT JOIN (
+  SELECT e.qid, e.nid FROM extop e JOIN ivftop l ON e.qid = l.qid AND e.nid = l.nid) j
+  ON j.qid = q.vec_id
+WHERE q.vec_id < $NQueries
+GROUP BY 1""")
   )
+
+  /** semantic_incremental's oracle, shared by stream_semantic: against a
+    * FIXED prior the streamed per-batch union equals the batch
+    * incremental result. */
+  private lazy val semanticIncrementalOracle =
+    s"""WITH $intCte,
+cent AS (SELECT vec_id AS cvid, row_number() OVER (ORDER BY vec_id) - 1 AS cid
+  FROM (SELECT vec_id FROM ie WHERE vec_id % 4 < 3
+        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $IvfCentroids)),
+cex AS (SELECT c.cid, x.i, x.ev FROM cent c JOIN iex x ON x.vec_id = c.cvid),
+pad AS (SELECT x.vec_id, c.cid, CAST(sum(x.ev * c.ev) AS BIGINT) AS dot
+  FROM iex x JOIN cex c ON c.i = x.i WHERE x.vec_id % 4 < 3 GROUP BY 1, 2),
+passign AS (SELECT vec_id, cid FROM (
+    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn FROM pad)
+  WHERE rn = 1),
+nad AS (SELECT x.vec_id, c.cid, CAST(sum(x.ev * c.ev) AS BIGINT) AS dot
+  FROM iex x JOIN cex c ON c.i = x.i WHERE x.vec_id % 4 = 3 GROUP BY 1, 2),
+probes AS (SELECT vec_id AS qid, cid FROM (
+    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid DESC) AS rn FROM nad)
+  WHERE rn <= $IvfProbe),
+cand AS (SELECT DISTINCT p.qid, a.vec_id AS nid
+  FROM probes p JOIN passign a ON a.cid = p.cid),
+sc AS (SELECT c.qid, c.nid, CAST(sum(a.ev * b2.ev) AS BIGINT) AS dot
+  FROM cand c JOIN iex a ON a.vec_id = c.qid JOIN iex b2 ON b2.vec_id = c.nid AND b2.i = a.i
+  GROUP BY 1, 2),
+losers AS (SELECT DISTINCT qid FROM sc WHERE dot >= $NearDupMinDot)
+SELECT e.vec_id FROM embeddings e
+WHERE e.vec_id % 4 = 3
+  AND NOT EXISTS (SELECT 1 FROM losers l WHERE l.qid = e.vec_id)"""
 
   /** Shared oracle CTE: fixed-point embeddings + positional expansion. */
   /** Oracle CTEs for the signed random projection: `pm` is the
@@ -856,492 +1277,4 @@ extop AS (SELECT qid, nid, dot, rank FROM (
       row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
     FROM p)
   WHERE rank <= $K)"""
-
-  // against a FIXED prior the streamed per-batch union equals the batch
-  // incremental result, so the streaming gate shares its oracle
-  val oracle: Map[String, String] = oracleBase +
-    ("stream_semantic" -> oracleBase("semantic_incremental"))
-
-  private lazy val oracleBase: Map[String, String] = Map(
-    "ann_topk_ip" ->
-      s"""WITH $intCte,
-$exactTopCte
-SELECT qid, nid, dot, rank FROM extop""",
-
-    // greedy MMR replay: `rel` is the exact top-C shortlist, `ps` the
-    // candidate-pair dots, and the recursive `sel` carries the picked
-    // list — each step scores every remaining candidate (correlated
-    // max over sims to the picked set) and QUALIFY keeps the argmax
-    // with the engine's (score desc, nid asc) tie rule
-    "mmr_rerank_topk" ->
-      s"""WITH RECURSIVE $intCte,
-allsc AS (SELECT a.vec_id AS qid, b.vec_id AS nid, CAST(sum(a.ev * b.ev) AS BIGINT) AS dot
-  FROM iex a JOIN iex b ON a.i = b.i AND b.vec_id <> a.vec_id
-  WHERE a.vec_id < $NQueries GROUP BY 1, 2),
-rel AS (SELECT qid, nid, dot FROM (
-    SELECT qid, nid, dot, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM allsc)
-  WHERE rn <= $MmrC),
-ps AS (SELECT r1.qid, r1.nid AS a, r2.nid AS b, CAST(sum(x.ev * y.ev) AS BIGINT) AS dot
-  FROM rel r1 JOIN rel r2 ON r2.qid = r1.qid AND r2.nid <> r1.nid
-  JOIN iex x ON x.vec_id = r1.nid JOIN iex y ON y.vec_id = r2.nid AND y.i = x.i
-  GROUP BY 1, 2, 3),
-sel AS (
-  SELECT qid, 1 AS step, nid, 7*dot AS sc10, [nid] AS picked FROM (
-    SELECT qid, nid, dot, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM rel)
-  WHERE rn = 1
-  UNION ALL
-  SELECT qid, step + 1, nid, sc10, list_append(picked, nid) FROM (
-    SELECT s.qid, s.step, s.picked, c.nid,
-      7*c.dot - 3*(SELECT max(p.dot) FROM ps p
-                   WHERE p.qid = s.qid AND p.a = c.nid AND list_contains(s.picked, p.b)) AS sc10
-    FROM sel s JOIN rel c ON c.qid = s.qid AND NOT list_contains(s.picked, c.nid)
-    WHERE s.step < $MmrK)
-  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sc10 DESC, nid) = 1
-)
-SELECT qid, CAST(step AS INT) AS rank, nid, sc10 FROM sel""",
-
-    // int8 quantization audit: per-vector max-abs scale, md5 fingerprint
-    // of the quantized vector (pins every element), and exact-integer L1
-    // reconstruction error — `//` and Spark's `div` both truncate toward
-    // zero, so the arithmetic is engine-identical including negatives
-    "emb_quantize" ->
-      s"""WITH $intCte,
-qa AS (SELECT vec_id, v,
-    greatest(list_max(list_transform(v, x -> abs(x))), 1) AS amax
-  FROM ie),
-qq AS (SELECT vec_id, amax, v,
-    list_transform(v, x -> (x * 127) // amax) AS q
-  FROM qa)
-SELECT vec_id, CAST(amax AS BIGINT) AS amax,
-  md5(array_to_string(list_transform(q, y -> CAST(y AS VARCHAR)), ',')) AS q_fp,
-  CAST(list_sum(list_transform(range(1, len(v)+1),
-    i -> abs(v[i] - (q[i] * amax) // 127))) AS BIGINT) AS err_l1
-FROM qq""",
-
-    // md5-parity ±1 matrix (pm) → projected components (pr) — the
-    // oracle twin of Similarity.projectionMatrix/randomProject
-    "emb_project" ->
-      s"""WITH $intCte,
-$projCte
-SELECT vec_id, md5(string_agg(CAST(p AS VARCHAR), ',' ORDER BY j)) AS p_fp,
-  CAST(sum(abs(p)) AS BIGINT) AS l1
-FROM pr GROUP BY vec_id""",
-
-    "emb_project_recall" ->
-      s"""WITH $intCte,
-$projCte,
-$exactTopCte,
-pd AS (SELECT q.vec_id AS qid, n.vec_id AS nid, CAST(sum(q.p * n.p) AS BIGINT) AS dot
-  FROM pr q JOIN pr n ON n.j = q.j AND n.vec_id <> q.vec_id
-  WHERE q.vec_id < $NQueries GROUP BY 1, 2),
-ptop AS (SELECT qid, nid FROM (
-    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM pd)
-  WHERE rn <= $K)
-SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
-FROM ie q LEFT JOIN (
-  SELECT e.qid, e.nid FROM extop e JOIN ptop l ON e.qid = l.qid AND e.nid = l.nid) j
-  ON j.qid = q.vec_id
-WHERE q.vec_id < $NQueries
-GROUP BY 1""",
-
-    "emb_project_rerank_topk" ->
-      s"""WITH $intCte,
-$projCte,
-$projCandCte
-SELECT qid, nid, dot, rank FROM (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
-  FROM prsc)
-WHERE rank <= $K""",
-
-    "emb_project_rerank_recall" ->
-      s"""WITH $intCte,
-$projCte,
-$projCandCte,
-$exactTopCte,
-prtop AS (SELECT qid, nid FROM (
-    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rn FROM prsc)
-  WHERE rn <= $K)
-SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
-FROM ie q LEFT JOIN (
-  SELECT e.qid, e.nid FROM extop e JOIN prtop l ON e.qid = l.qid AND e.nid = l.nid) j
-  ON j.qid = q.vec_id
-WHERE q.vec_id < $NQueries
-GROUP BY 1""",
-
-    "emb_near_pairs" ->
-      s"""WITH $intCte,
-p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, CAST(sum(a.ev * b.ev) AS BIGINT) AS dot
-  FROM iex a JOIN iex b ON a.i = b.i AND a.label = b.label AND a.vec_id < b.vec_id
-  GROUP BY 1, 2)
-SELECT id_a, id_b, dot FROM p WHERE dot >= $NearDupMinDot""",
-
-    "ann_lsh_topk" ->
-      s"""WITH $intCte,
-$lshCte
-SELECT qid, nid, dot, rank FROM lshtop""",
-
-    // IVF oracle: hash-order seed centroids (cid by vec_id rank),
-    // assignment = argmax dot with ties to the LOWEST cid (DotArgmax's
-    // strict-greater rule), probes = top-nProbe centroids per query with
-    // ties to the HIGHEST cid (the engine's struct sort compares (d,
-    // cid) descending), then exact re-rank of probed-cell members.
-    "ann_ivf_topk" -> ivfOracleFull,
-
-    "ann_filtered_topk" -> ivfOracleFiltered,
-
-    // the materialized ANN index must be result-invisible: the
-    // store-served plain and filtered retrievals each collapse to the
-    // same aggregate as their from-scratch twins
-    "ann_store_equiv" ->
-      s"""WITH base AS MATERIALIZED ($ivfOracleFull),
-fbase AS MATERIALIZED ($ivfOracleFiltered),
-a AS (${phaseAggSelect("base")}),
-f AS (${phaseAggSelect("fbase")})
-SELECT 'direct' AS phase, * FROM a
-UNION ALL SELECT 'served' AS phase, * FROM a
-UNION ALL SELECT 'direct_f' AS phase, * FROM f
-UNION ALL SELECT 'served_f' AS phase, * FROM f""",
-
-    // a mutated store must serve the from-scratch pipeline over the
-    // corpus minus the takedown slice — same centroids (markers filter
-    // the assignment only); the filtered phase composes both predicates
-    "ann_store_delete" ->
-      s"""WITH base AS MATERIALIZED (${ivfOracleOver(candPred = " AND a.vec_id % 7 <> 3")}),
-fbase AS MATERIALIZED (${ivfOracleOver(
-        candPred = " AND a.vec_id % 7 <> 3 AND a.vec_id % 3 = 1")}),
-a AS (${phaseAggSelect("base")}),
-f AS (${phaseAggSelect("fbase")})
-SELECT 'direct' AS phase, * FROM a
-UNION ALL SELECT 'served' AS phase, * FROM a
-UNION ALL SELECT 'direct_f' AS phase, * FROM f
-UNION ALL SELECT 'served_f' AS phase, * FROM f""",
-
-    // an appended store serves the UNION corpus assigned to the PRIOR
-    // corpus's centroids (seeds picked from the prior slice only)
-    "ann_store_append" ->
-      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
-        seedWhere = "WHERE vec_id % 5 <> 0")}),
-a AS (${phaseAggSelect("base")})
-SELECT 'direct' AS phase, * FROM a
-UNION ALL SELECT 'served' AS phase, * FROM a""",
-
-    // build-on-prior + append + takedown, served before AND after the
-    // compaction fold — all three phases equal the one replay (prior
-    // seeds, union corpus, takedown as a candidate predicate)
-    "ann_store_lifecycle" ->
-      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
-        seedWhere = "WHERE vec_id % 5 <> 0",
-        candPred = " AND a.vec_id % 7 <> 3")}),
-a AS (${phaseAggSelect("base")})
-SELECT 'direct' AS phase, * FROM a
-UNION ALL SELECT 'pre' AS phase, * FROM a
-UNION ALL SELECT 'post' AS phase, * FROM a""",
-
-    // after the in-place re-cluster the store IS a fresh index over the
-    // live corpus: seeds re-picked from it, takedowns folded out
-    "ann_store_recluster" ->
-      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
-        seedWhere = "WHERE vec_id % 7 <> 3",
-        candPred = " AND a.vec_id % 7 <> 3")}),
-a AS (${phaseAggSelect("base")})
-SELECT 'direct' AS phase, * FROM a
-UNION ALL SELECT 'served' AS phase, * FROM a""",
-
-    // the streamed lifecycle's final state is batch-split-invariant
-    // (every append precedes the takedown on the op axis), so both its
-    // phases share the one-shot lifecycle replay
-    "stream_ann_store" ->
-      s"""WITH base AS MATERIALIZED (${ivfOracleOver(
-        seedWhere = "WHERE vec_id % 5 <> 0",
-        candPred = " AND a.vec_id % 7 <> 3")}),
-a AS (${phaseAggSelect("base")})
-SELECT 'streamed' AS phase, * FROM a
-UNION ALL SELECT 'compacted' AS phase, * FROM a""",
-
-    // snapshot serving at each operation bound: prior corpus only
-    // (before the append), union (after it), minus the takedown slice
-    "ann_store_asof" ->
-      s"""WITH b0t AS MATERIALIZED (${ivfOracleOver(
-        seedWhere = "WHERE vec_id % 5 <> 0",
-        candPred = " AND a.vec_id % 5 <> 0")}),
-b1t AS MATERIALIZED (${ivfOracleOver(seedWhere = "WHERE vec_id % 5 <> 0")}),
-b2t AS MATERIALIZED (${ivfOracleOver(
-        seedWhere = "WHERE vec_id % 5 <> 0",
-        candPred = " AND a.vec_id % 7 <> 3")}),
-a0 AS (${phaseAggSelect("b0t")}),
-a1 AS (${phaseAggSelect("b1t")}),
-a2 AS (${phaseAggSelect("b2t")})
-SELECT 'b0' AS phase, * FROM a0
-UNION ALL SELECT 'b1' AS phase, * FROM a1
-UNION ALL SELECT 'b2' AS phase, * FROM a2""",
-
-    // IVF + one Lloyd iteration: cell means by truncating integer
-    // division (HUGEINT sum // count, cast back), empty cells keep
-    // their seed, then the same assign/probe/re-rank over the refined
-    // centroid components.
-    "ann_ivf_kmeans_topk" ->
-      s"""WITH $intCte,
-$ivfSeedCte,
-$kmeansAssignCte,
-${ivfTopSql("ad2", "assign2")}""",
-
-    // topic model over the refined clustering: per-(topic, label)
-    // memberships — the cluster-composition report topic-balanced
-    // mixture selection reads (SemDeDup/topic-mixing shape)
-    "topic_profile" ->
-      s"""WITH $intCte,
-$ivfSeedCte,
-$kmeansAssignCte
-SELECT CAST(a.cid AS INT) AS topic, e.label,
-  CAST(count(*) AS BIGINT) AS n_vecs
-FROM assign2 a JOIN embeddings e ON e.vec_id = a.vec_id
-GROUP BY 1, 2""",
-
-    // PQ codes pivoted to one column per subspace — pins every
-    // assignment of the trained codebooks
-    "pq_codes" ->
-      s"""WITH $intCte,
-$pqCte
-SELECT vec_id,
-  ${(0 until PqM).map(s =>
-        s"CAST(max(CASE WHEN sub = $s THEN code END) AS INT) AS c$s").mkString(",\n  ")}
-FROM pasn2 GROUP BY vec_id""",
-
-    // ADC: per-query partial-dot table against the refined codebooks,
-    // summed through each vector's codes; ties (score desc, nid asc)
-    "ann_pq_topk" ->
-      s"""WITH $intCte,
-$pqCte,
-pqd AS (SELECT x.vec_id AS qid, (x.i-1)//${Dim / PqM} AS sub, c.cid AS code,
-    CAST(sum(x.ev*c.ev) AS BIGINT) AS pdot
-  FROM iex x JOIN pcex2 c ON c.i = x.i WHERE x.vec_id < $NQueries GROUP BY 1, 2, 3),
-padc AS (SELECT q.qid, a.vec_id AS nid, CAST(sum(q.pdot) AS BIGINT) AS score
-  FROM pasn2 a JOIN pqd q ON q.sub = a.sub AND q.code = a.code AND a.vec_id <> q.qid
-  GROUP BY 1, 2)
-SELECT qid, nid, score, CAST(rank AS INT) AS rank FROM (
-    SELECT qid, nid, score,
-      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-    FROM padc)
-WHERE rank <= $K""",
-
-    "ann_pq_recall" ->
-      s"""WITH $intCte,
-$exactTopCte,
-$pqCte,
-pqd AS (SELECT x.vec_id AS qid, (x.i-1)//${Dim / PqM} AS sub, c.cid AS code,
-    CAST(sum(x.ev*c.ev) AS BIGINT) AS pdot
-  FROM iex x JOIN pcex2 c ON c.i = x.i WHERE x.vec_id < $NQueries GROUP BY 1, 2, 3),
-padc AS (SELECT q.qid, a.vec_id AS nid, CAST(sum(q.pdot) AS BIGINT) AS score
-  FROM pasn2 a JOIN pqd q ON q.sub = a.sub AND q.code = a.code AND a.vec_id <> q.qid
-  GROUP BY 1, 2),
-pqtop AS (SELECT qid, nid FROM (
-    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-    FROM padc)
-  WHERE rank <= $K)
-SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
-FROM ie q LEFT JOIN (
-  SELECT e.qid, e.nid FROM extop e JOIN pqtop l ON e.qid = l.qid AND e.nid = l.nid) j
-  ON j.qid = q.vec_id
-WHERE q.vec_id < $NQueries
-GROUP BY 1""",
-
-    // IVFPQ: IVF probes (seed centroids, ties cid-desc) restrict the
-    // candidates; ADC scores them through the PQ codes; rank ties
-    // nid-asc — the full composition, one oracle
-    "ann_ivfpq_topk" ->
-      s"""WITH $intCte,
-$ivfSeedCte,
-$pqCte,
-${ivfPqAdcCte()}
-SELECT qid, nid, score, CAST(rank AS INT) AS rank FROM (
-    SELECT qid, nid, score,
-      row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rank
-    FROM ipqsc)
-WHERE rank <= $K""",
-
-    // refine stage: ADC cut at RerankC (ties score desc, nid asc), then
-    // exact dots for ONLY those rows, re-ranked (dot desc, nid asc)
-    "ann_ivfpq_rerank_topk" ->
-      s"""WITH $intCte,
-$ivfSeedCte,
-$pqCte,
-${ivfPqAdcCte(RerankProbe)},
-pqcut AS (SELECT qid, nid FROM (
-    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-    FROM ipqsc)
-  WHERE rn <= $RerankC),
-rrsc AS (SELECT c.qid, c.nid, CAST(sum(a.ev * b2.ev) AS BIGINT) AS dot
-  FROM pqcut c JOIN iex a ON a.vec_id = c.qid JOIN iex b2 ON b2.vec_id = c.nid AND b2.i = a.i
-  GROUP BY 1, 2)
-SELECT qid, nid, dot, CAST(rank AS INT) AS rank FROM (
-    SELECT qid, nid, dot,
-      row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
-    FROM rrsc)
-WHERE rank <= $K""",
-
-    "ann_ivfpq_rerank_recall" ->
-      s"""WITH $intCte,
-$exactTopCte,
-$ivfSeedCte,
-$pqCte,
-${ivfPqAdcCte(RerankProbe)},
-pqcut AS (SELECT qid, nid FROM (
-    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-    FROM ipqsc)
-  WHERE rn <= $RerankC),
-rrsc AS (SELECT c.qid, c.nid, CAST(sum(a.ev * b2.ev) AS BIGINT) AS dot
-  FROM pqcut c JOIN iex a ON a.vec_id = c.qid JOIN iex b2 ON b2.vec_id = c.nid AND b2.i = a.i
-  GROUP BY 1, 2),
-rrtop AS (SELECT qid, nid FROM (
-    SELECT qid, nid, row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
-    FROM rrsc)
-  WHERE rank <= $K)
-SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
-FROM ie q LEFT JOIN (
-  SELECT e.qid, e.nid FROM extop e JOIN rrtop l ON e.qid = l.qid AND e.nid = l.nid) j
-  ON j.qid = q.vec_id
-WHERE q.vec_id < $NQueries
-GROUP BY 1""",
-
-    // kNN join: the same IVF probe/candidate/re-rank tail with the
-    // query predicate removed — every vector is a query
-    "knn_join_emb" ->
-      s"""WITH $intCte,
-$ivfSeedCte,
-${ivfTopSql("ad", "assign", qPred = "", k = KJoin)}""",
-
-    // the kNN-join tail (qPred empty = every vector queries) feeds the
-    // same recursive min-id reachability the text cluster oracle uses
-    "semantic_dedup" ->
-      s"""WITH RECURSIVE $intCte,
-$ivfSeedCte,
-${ivfTopSql("ad", "assign", qPred = "", k = KJoin, wrapAs = Some("kj"))},
-sp AS (SELECT qid, nid FROM kj WHERE dot >= $NearDupMinDot AND qid < nid),
-sedges AS (SELECT qid AS src, nid AS dst FROM sp UNION ALL SELECT nid, qid FROM sp),
-sreach AS (SELECT src AS id, src AS r FROM sedges
-  UNION
-  SELECT e.dst, r.r FROM sreach r JOIN sedges e ON e.src = r.id)
-SELECT id AS vec_id, min(r) AS cluster_id FROM sreach GROUP BY id""",
-
-    "semantic_keepers" ->
-      s"""WITH RECURSIVE $intCte,
-$ivfSeedCte,
-${ivfTopSql("ad", "assign", qPred = "", k = KJoin, wrapAs = Some("kj"))},
-sp AS (SELECT qid, nid FROM kj WHERE dot >= $NearDupMinDot AND qid < nid),
-sedges AS (SELECT qid AS src, nid AS dst FROM sp UNION ALL SELECT nid, qid FROM sp),
-sreach AS (SELECT src AS id, src AS r FROM sedges
-  UNION
-  SELECT e.dst, r.r FROM sreach r JOIN sedges e ON e.src = r.id),
-sclus AS (SELECT id, min(r) AS cluster_id FROM sreach GROUP BY id)
-SELECT e.vec_id FROM embeddings e
-WHERE NOT EXISTS (SELECT 1 FROM sclus c WHERE c.id = e.vec_id AND c.id <> c.cluster_id)""",
-
-    // multimodal capstone oracle: the text cluster chain (recursive
-    // shingle CTEs from TextQueries) plus the semantic cluster chain,
-    // survivors = canonical in both
-    "dedup_multimodal" ->
-      s"""${TextQueries.recursiveSigCte},
-${TextQueries.clusterCte},
-$intCte,
-$ivfSeedCte,
-${ivfTopSql("ad", "assign", qPred = "", k = KJoin, wrapAs = Some("kj"))},
-sp AS (SELECT qid, nid FROM kj WHERE dot >= $NearDupMinDot AND qid < nid),
-sedges AS (SELECT qid AS src, nid AS dst FROM sp UNION ALL SELECT nid, qid FROM sp),
-sreach AS (SELECT src AS id, src AS r FROM sedges
-  UNION
-  SELECT e.dst, r.r FROM sreach r JOIN sedges e ON e.src = r.id),
-sclus AS (SELECT id, min(r) AS cluster_id FROM sreach GROUP BY id),
-mmlosers AS (SELECT doc_id FROM clus WHERE doc_id <> cluster_id
-  UNION SELECT id AS doc_id FROM sclus WHERE id <> cluster_id)
-SELECT d.doc_id FROM documents d
-WHERE NOT EXISTS (SELECT 1 FROM mmlosers l WHERE l.doc_id = d.doc_id)""",
-
-    // diversity oracle: the IVF assignment CTEs + per-cell quality rank
-    // (score desc, vec_id — the CollectTopK struct order), capped
-    "diversity_sample" ->
-      s"""WITH $intCte,
-$ivfSeedCte,
-q AS (SELECT doc_id AS vec_id,
-    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS score
-  FROM documents),
-r AS (SELECT a.vec_id, a.cid, q.score,
-    row_number() OVER (PARTITION BY a.cid ORDER BY q.score DESC, a.vec_id) AS rank
-  FROM assign a JOIN q USING (vec_id))
-SELECT vec_id, CAST(cid AS INT) AS centroid_id, score, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= $DiversityPerCell""",
-
-    // incremental oracle: prior-corpus hash-order seeds, prior-only
-    // assignment (ties to LOWEST cid — DotArgmax), new-batch probes
-    // (ties to HIGHEST cid — the engine's struct-desc sort), exact
-    // re-rank of probed prior cells, anti-join of qualifying losers
-    "semantic_incremental" ->
-      s"""WITH $intCte,
-cent AS (SELECT vec_id AS cvid, row_number() OVER (ORDER BY vec_id) - 1 AS cid
-  FROM (SELECT vec_id FROM ie WHERE vec_id % 4 < 3
-        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $IvfCentroids)),
-cex AS (SELECT c.cid, x.i, x.ev FROM cent c JOIN iex x ON x.vec_id = c.cvid),
-pad AS (SELECT x.vec_id, c.cid, CAST(sum(x.ev * c.ev) AS BIGINT) AS dot
-  FROM iex x JOIN cex c ON c.i = x.i WHERE x.vec_id % 4 < 3 GROUP BY 1, 2),
-passign AS (SELECT vec_id, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn FROM pad)
-  WHERE rn = 1),
-nad AS (SELECT x.vec_id, c.cid, CAST(sum(x.ev * c.ev) AS BIGINT) AS dot
-  FROM iex x JOIN cex c ON c.i = x.i WHERE x.vec_id % 4 = 3 GROUP BY 1, 2),
-probes AS (SELECT vec_id AS qid, cid FROM (
-    SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid DESC) AS rn FROM nad)
-  WHERE rn <= $IvfProbe),
-cand AS (SELECT DISTINCT p.qid, a.vec_id AS nid
-  FROM probes p JOIN passign a ON a.cid = p.cid),
-sc AS (SELECT c.qid, c.nid, CAST(sum(a.ev * b2.ev) AS BIGINT) AS dot
-  FROM cand c JOIN iex a ON a.vec_id = c.qid JOIN iex b2 ON b2.vec_id = c.nid AND b2.i = a.i
-  GROUP BY 1, 2),
-losers AS (SELECT DISTINCT qid FROM sc WHERE dot >= $NearDupMinDot)
-SELECT e.vec_id FROM embeddings e
-WHERE e.vec_id % 4 = 3
-  AND NOT EXISTS (SELECT 1 FROM losers l WHERE l.qid = e.vec_id)""",
-
-    "ann_lsh_recall" ->
-      s"""WITH $intCte,
-$exactTopCte,
-$lshCte
-SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
-FROM ie q LEFT JOIN (
-  SELECT e.qid, e.nid FROM extop e JOIN lshtop l ON e.qid = l.qid AND e.nid = l.nid) j
-  ON j.qid = q.vec_id
-WHERE q.vec_id < $NQueries
-GROUP BY 1""",
-
-    "ann_quality_topk" ->
-      s"""WITH $intCte,
-goodq AS (SELECT doc_id FROM (
-    SELECT doc_id,
-      len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
-      (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
-        // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
-    FROM documents)
-  WHERE n_tokens >= 30 AND quality_e3 >= 500),
-p AS (SELECT a.vec_id AS qid, b.vec_id AS nid, CAST(sum(a.ev * b.ev) AS BIGINT) AS dot
-  FROM iex a JOIN iex b ON a.i = b.i AND b.vec_id <> a.vec_id
-  WHERE a.vec_id < $NQueries AND b.vec_id IN (SELECT doc_id FROM goodq)
-  GROUP BY 1, 2)
-SELECT qid, nid, dot, rank FROM (
-  SELECT qid, nid, dot,
-    row_number() OVER (PARTITION BY qid ORDER BY dot DESC, nid) AS rank
-  FROM p)
-WHERE rank <= $K""",
-
-    "ann_ivf_recall" ->
-      s"""WITH $intCte,
-$exactTopCte,
-$ivfSeedCte,
-${ivfTopSql("ad", "assign", wrapAs = Some("ivftop"))}
-SELECT q.vec_id AS qid, CAST(count(j.nid) AS BIGINT) AS hits
-FROM ie q LEFT JOIN (
-  SELECT e.qid, e.nid FROM extop e JOIN ivftop l ON e.qid = l.qid AND e.nid = l.nid) j
-  ON j.qid = q.vec_id
-WHERE q.vec_id < $NQueries
-GROUP BY 1"""
-  )
 }

@@ -19,8 +19,8 @@ object FusionQueries {
 
   private val K = 10
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "hybrid_rrf_topk" -> ((s, dir) => {
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("hybrid_rrf_topk", (s, dir) => {
       val d = TextQueries.retDocs(s, dir)
       val qs = d
         .select(col("doc_id").as("query_id"),
@@ -33,13 +33,9 @@ object FusionQueries {
       val sem = Similarity.ipTopK(e, e.filter(col("vec_id") % 29 === 0), K)
         .select(col("qid").as("query_id"), col("nid").as("doc_id"), col("rank"))
       Fusion.rrfFuse(Seq(lex, sem), Fusion.RrfK, K)
-    })
-  )
-
-  val oracle: Map[String, String] = Map(
-    "hybrid_rrf_topk" ->
+    },
       s"""WITH lex AS (SELECT query_id, doc_id, rank
-  FROM (${TextQueries.oracle("bm25_doc_topk")})),
+  FROM (${Gate.sql(TextQueries.gates, "bm25_doc_topk")})),
 sem AS (SELECT query_id, doc_id, rank FROM (
   WITH ${EmbeddingQueries.intCte},
   sp AS (SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
@@ -59,6 +55,6 @@ f AS (SELECT query_id, doc_id, CAST(sum(contrib) AS BIGINT) AS rrf_e6,
   FROM u GROUP BY query_id, doc_id)
 SELECT query_id, doc_id, rrf_e6, n_lists, CAST(rn AS BIGINT) AS rank
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY rrf_e6 DESC, doc_id) AS rn FROM f)
-WHERE rn <= $K"""
+WHERE rn <= $K""")
   )
 }

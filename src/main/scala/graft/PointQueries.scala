@@ -12,7 +12,7 @@ import graft.zorder.{IntRange, ZOrder}
  * The point-store query inventory (SURVEY §2.1/§2.2/§2.8) registered for
  * the driver's DuckDB-oracle correctness gate. Each query derives 2-D
  * integer points from the driver tables (FIXTURES.md §B) and exercises
- * one reference operator; `oracle` holds the equivalent ANSI SQL —
+ * one reference operator; each gate's oracle is the equivalent ANSI SQL —
  * including an independent pure-SQL re-implementation of the Morton
  * interleave (the same public mask-ladder, so the bit codec itself is
  * cross-checked end-to-end).
@@ -79,75 +79,147 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
   private val QX = 25; private val QY = 950; private val K = 10
   private val STATS_PL = 46
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // E1/X1 — the codec itself, cross-checked against the SQL ladder
-    "zorder_key" -> ((s, dir) =>
-      partPoints(s, dir).select(col("id"), col("zkey"))),
+    Gate("zorder_key", (s, dir) =>
+      partPoints(s, dir).select(col("id"), col("zkey")),
+      s"""$partLadder SELECT id, zkey FROM zpts"""),
 
     // E1 inverse — zorder_x/zorder_y decode gated against an
     // independent SQL bit-compress ladder
-    "zorder_roundtrip" -> ((s, dir) => {
+    Gate("zorder_roundtrip", (s, dir) => {
       val p = partPoints(s, dir)
       p.select(col("id"), col("x"), col("y"),
         graft.functions.GraftFunctions.zorder_x(col("zkey")).as("rx"),
         graft.functions.GraftFunctions.zorder_y(col("zkey")).as("ry"))
-    }),
+    },
+      s"""$partLadder,
+unz AS (SELECT id, x, y,
+  (zkey >> 1) & 6148914691236517205 AS gx, zkey & 6148914691236517205 AS gy FROM zpts),
+c1 AS (SELECT id, x, y, ((gx | (gx>>1)) & 3689348814741910323) AS gx1, ((gy | (gy>>1)) & 3689348814741910323) AS gy1 FROM unz),
+c2 AS (SELECT id, x, y, ((gx1 | (gx1>>2)) & 1085102592571150095) AS gx2, ((gy1 | (gy1>>2)) & 1085102592571150095) AS gy2 FROM c1),
+c3 AS (SELECT id, x, y, ((gx2 | (gx2>>4)) & 71777214294589695) AS gx3, ((gy2 | (gy2>>4)) & 71777214294589695) AS gy3 FROM c2),
+c4 AS (SELECT id, x, y, ((gx3 | (gx3>>8)) & 281470681808895) AS gx4, ((gy3 | (gy3>>8)) & 281470681808895) AS gy4 FROM c3),
+c5 AS (SELECT id, x, y, ((gx4 | (gx4>>16)) & 4294967295) AS gx5, ((gy4 | (gy4>>16)) & 4294967295) AS gy5 FROM c4)
+SELECT id, x, y, CAST(gx5 AS INT) AS rx, CAST(gy5 AS INT) AS ry FROM c5"""),
 
     // E1 3-D extension — spatio-temporal Morton key over events
     // (x = value-derived, y = user, t = 21-bit event id), gated against
     // a per-bit summation oracle that shares NO constants with the
     // Scala mask ladder
-    "zorder3_key" -> ((s, dir) =>
-      events3(s, dir).select(col("id"), col("z3"))),
+    Gate("zorder3_key", (s, dir) =>
+      events3(s, dir).select(col("id"), col("z3")),
+      // 3-D codec oracle: per-bit summation (x bit → position 3i+2, y →
+      // 3i+1, t → 3i) — derives the key with no shared mask constants
+      s"""$z3Src,
+z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
+    + (((y >> b.range) & 1) << (3*b.range + 1))
+    + (((t >> b.range) & 1) << (3*b.range)) AS part
+  FROM z3src, range(0, 21) b)
+SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id"""),
 
-    "zorder3_roundtrip" -> ((s, dir) =>
+    Gate("zorder3_roundtrip", (s, dir) =>
       events3(s, dir).select(col("id"), col("x"), col("y"), col("t"),
         zorder3_x(col("z3")).as("rx"),
         zorder3_y(col("z3")).as("ry"),
-        zorder3_t(col("z3")).as("rt"))),
+        zorder3_t(col("z3")).as("rt")),
+      s"""$z3Src,
+z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
+    + (((y >> b.range) & 1) << (3*b.range + 1))
+    + (((t >> b.range) & 1) << (3*b.range)) AS part
+  FROM z3src, range(0, 21) b),
+z3k AS (SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id),
+z3r AS (SELECT z3k.id,
+    CAST(sum(((z3 >> (3*b.range + 2)) & 1) << b.range) AS INT) AS rx,
+    CAST(sum(((z3 >> (3*b.range + 1)) & 1) << b.range) AS INT) AS ry,
+    CAST(sum(((z3 >> (3*b.range)) & 1) << b.range) AS INT) AS rt
+  FROM z3k, range(0, 21) b GROUP BY z3k.id)
+SELECT s.id, CAST(s.x AS INT) AS x, CAST(s.y AS INT) AS y, CAST(s.t AS INT) AS t,
+  r.rx, r.ry, r.rt
+FROM z3src s JOIN z3r r ON s.id = r.id"""),
 
     // O3 3-D extension — spatio-temporal box query (raw predicates +
     // budgeted octree z3-interval pruning)
-    "range_query_3d" -> ((s, dir) =>
+    Gate("range_query_3d", (s, dir) =>
       graft.operators.SpatioTemporal.rangeQuery3(
           events3(s, dir), RX, RY, RT3)
-        .select(col("id"), col("x"), col("y"), col("t"))),
+        .select(col("id"), col("x"), col("y"), col("t")),
+      s"""SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x, CAST(user_id AS INT) AS y,
+  CAST(event_id % 2097152 AS INT) AS t
+FROM events
+WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
+  AND user_id BETWEEN ${RY.min} AND ${RY.max}
+  AND (event_id % 2097152) BETWEEN ${RT3.min} AND ${RT3.max}"""),
 
     // O5 3-D extension — exact spatio-temporal kNN (expanding-cube
     // probe + distributed top-k, deterministic (dist², id) ties)
-    "knn_3d" -> ((s, dir) =>
-      graft.operators.SpatioTemporal.knn3(events3(s, dir), QX3, QY3, QT3, K)),
+    Gate("knn_3d", (s, dir) =>
+      graft.operators.SpatioTemporal.knn3(events3(s, dir), QX3, QY3, QT3, K),
+      s"""WITH p3 AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+  CAST(user_id AS BIGINT) AS y, CAST(event_id % 2097152 AS BIGINT) AS t FROM events)
+SELECT id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, CAST(t AS INT) AS t,
+  CAST((x - $QX3)*(x - $QX3) + (y - $QY3)*(y - $QY3) + (t - $QT3)*(t - $QT3) AS BIGINT) AS dist3
+FROM p3 ORDER BY dist3, id LIMIT $K"""),
 
     // O2 3-D extension — exact (x, y, t) lookup via z3 equality
-    "get_point_3d" -> ((s, dir) =>
+    Gate("get_point_3d", (s, dir) =>
       graft.operators.SpatioTemporal.get3(events3(s, dir), GX3, GY3, GT3)
-        .select("id", "x", "y", "t")),
+        .select("id", "x", "y", "t"),
+      s"""SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x,
+  CAST(user_id AS INT) AS y, CAST(event_id % 2097152 AS INT) AS t
+FROM events
+WHERE CAST(floor(value*100) AS INT) = $GX3 AND user_id = $GY3
+  AND (event_id % 2097152) = $GT3"""),
 
     // O6 3-D extension — uniform-depth octree bucket stats
-    "index_stats_3d" -> ((s, dir) =>
-      graft.operators.SpatioTemporal.indexStats3(events3(s, dir), STATS3_PL)),
+    Gate("index_stats_3d", (s, dir) =>
+      graft.operators.SpatioTemporal.indexStats3(events3(s, dir), STATS3_PL),
+      s"""$z3Src,
+z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
+    + (((y >> b.range) & 1) << (3*b.range + 1))
+    + (((t >> b.range) & 1) << (3*b.range)) AS part
+  FROM z3src, range(0, 21) b),
+z3k AS (SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id),
+b3 AS (SELECT z3 & CAST(${maskLit(STATS3_PL)} AS BIGINT) AS bucket_key, count(*) AS bucket_size
+  FROM z3k GROUP BY 1)
+SELECT bucket_key,
+  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, $STATS3_PL), repeat('*', ${64 - STATS3_PL})) AS bucket_name,
+  bucket_size
+FROM b3"""),
 
     // O3 — rectangle query
-    "range_query" -> ((s, dir) =>
+    Gate("range_query", (s, dir) =>
       PointStore.rangeQuery(eventsPoints(s, dir), RX, RY)
-        .select(col("id"), col("x"), col("y"))),
+        .select(col("id"), col("x"), col("y")),
+      s"""SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x, CAST(user_id AS INT) AS y
+FROM events
+WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
+  AND user_id BETWEEN ${RY.min} AND ${RY.max}"""),
 
     // O4 — range count (grouped, so the result is a real aggregation)
-    "range_count" -> ((s, dir) =>
+    Gate("range_count", (s, dir) =>
       PointStore.rangeQuery(eventsPoints(s, dir, Seq("event_type")), RX, RY)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))),
+        .groupBy(col("event_type")).agg(count(lit(1)).as("cnt")),
+      s"""SELECT event_type, count(*) AS cnt
+FROM events
+WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
+  AND user_id BETWEEN ${RY.min} AND ${RY.max}
+GROUP BY event_type"""),
 
     // O2 — exact point lookup: all ids at (GX, GY)
-    "get_point" -> ((s, dir) =>
+    Gate("get_point", (s, dir) =>
       PointStore.get(partPoints(s, dir), GX, GY)
-        .select(col("id"), col("x"), col("y"))),
+        .select(col("id"), col("x"), col("y")),
+      s"""SELECT p_partkey AS id, p_size AS x, CAST(floor(p_retailprice) AS INT) AS y
+FROM part
+WHERE p_size = $GX AND CAST(floor(p_retailprice) AS INT) = $GY"""),
 
     // the SET-oriented generalization of O3: 60 query rectangles of
     // widely varying sizes joined against the point set in one pass,
     // as an equi-join on adaptive grid cells (graft.operators
     // .SpatialJoin) — never a nested loop; the id-sum pins the exact
     // matched multiset per rectangle
-    "spatial_join_count" -> ((s, dir) => {
+    Gate("spatial_join_count", (s, dir) => {
       val pts = s.read.parquet(s"$dir/events.parquet").select(
         col("event_id").as("id"),
         expr("cast(floor(value*100) as int)").as("x"),
@@ -160,11 +232,27 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
           ((col("doc_id") * 13) % 120).as("ymin"),
           ((col("doc_id") * 13) % 120 + 3 + (col("doc_id") % 7) * 15).as("ymax"))
       graft.operators.SpatialJoin.joinCount(pts, rects)
-    }),
+    },
+      """WITH r AS (SELECT doc_id AS rect_id,
+    (doc_id * 97) % 45000 AS xmin,
+    (doc_id * 97) % 45000 + 200 + (doc_id % 17) * 600 AS xmax,
+    (doc_id * 13) % 120 AS ymin,
+    (doc_id * 13) % 120 + 3 + (doc_id % 7) * 15 AS ymax
+  FROM documents WHERE doc_id < 60),
+p AS (SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x, user_id AS y FROM events)
+SELECT r.rect_id, CAST(count(p.id) AS BIGINT) AS n_points,
+  CAST(coalesce(sum(p.id), 0) AS BIGINT) AS id_sum
+FROM r LEFT JOIN p ON p.x BETWEEN r.xmin AND r.xmax AND p.y BETWEEN r.ymin AND r.ymax
+GROUP BY r.rect_id"""),
 
     // O5 — exact kNN, deterministic (dist2, id) tie order
-    "knn" -> ((s, dir) =>
-      PointStore.knn(partPoints(s, dir), QX, QY, K)),
+    Gate("knn", (s, dir) =>
+      PointStore.knn(partPoints(s, dir), QX, QY, K),
+      s"""SELECT p_partkey AS id, p_size AS x, CAST(floor(p_retailprice) AS INT) AS y,
+  (CAST(p_size AS BIGINT) - $QX) * (CAST(p_size AS BIGINT) - $QX)
+  + (CAST(floor(p_retailprice) AS BIGINT) - $QY) * (CAST(floor(p_retailprice) AS BIGINT) - $QY) AS dist2
+FROM part
+ORDER BY dist2, id LIMIT $K"""),
 
     // O5 tie fixture (SURVEY §2.1): collinear points x = n_nationkey on
     // y = 0, query (12, 0), k = 4 — x=10 and x=14 are equidistant at the
@@ -172,92 +260,191 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
     // id, pinning the documented divergence from the reference's lossy
     // TreeSet (Client.java:94-101), which silently DROPS an equidistant
     // point instead of ranking it
-    "knn_ties" -> ((s, dir) => {
+    Gate("knn_ties", (s, dir) => {
       val pts = PointStore.points(s.read.parquet(s"$dir/nation.parquet"),
         col("n_nationkey"), col("n_nationkey"), lit(0))
       PointStore.knn(pts, 12, 0, 4)
-    }),
+    },
+      """SELECT CAST(n_nationkey AS BIGINT) AS id, CAST(n_nationkey AS INT) AS x, CAST(0 AS INT) AS y,
+  (CAST(n_nationkey AS BIGINT) - 12) * (CAST(n_nationkey AS BIGINT) - 12) AS dist2
+FROM nation
+ORDER BY dist2, id LIMIT 4"""),
 
     // O6/E3 — index inspection: uniform-depth bucket stats + name format
-    "index_stats" -> ((s, dir) =>
-      PointStore.indexStats(eventsPoints(s, dir), STATS_PL)),
+    Gate("index_stats", (s, dir) =>
+      PointStore.indexStats(eventsPoints(s, dir), STATS_PL),
+      s"""$eventsLadder,
+buckets AS (SELECT zkey & CAST(${maskLit(STATS_PL)} AS BIGINT) AS bucket_key, count(*) AS bucket_size FROM zpts GROUP BY 1)
+SELECT bucket_key,
+  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, $STATS_PL), repeat('*', ${64 - STATS_PL})) AS bucket_name,
+  bucket_size
+FROM buckets"""),
 
     // O1 — upsert semantics: keep-last per (x, y, id) over the put log
-    "upsert_last" -> ((s, dir) => {
+    Gate("upsert_last", (s, dir) => {
       val putLog = PointStore.points(
         s.read.parquet(s"$dir/events.parquet"),
         col("user_id"), col("user_id") % 25, col("user_id") / 25,
         Seq(col("ts"), col("event_id"), col("value")))
       PointStore.latest(putLog, Seq(col("ts"), col("event_id")))
         .select(col("id"), col("x"), col("y"), col("value").as("last_value"))
-    }),
+    },
+      """SELECT user_id AS id, CAST(user_id % 25 AS INT) AS x, CAST(user_id // 25 AS INT) AS y, last_value
+FROM (
+  SELECT user_id, value AS last_value,
+    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+  FROM events
+) WHERE rn = 1"""),
 
     // O6/P7 — variable-depth (maySplit-analog) adaptive index stats
-    "index_adaptive" -> ((s, dir) =>
+    Gate("index_adaptive", (s, dir) =>
       PointStore.adaptiveStats(eventsPoints(s, dir),
-        threshold = 500L, statsDepth = 48, baseDepth = 2)),
+        threshold = 500L, statsDepth = 48, baseDepth = 2),
+      // the reference's recursive maySplit as a recursive CTE: split any
+      // bucket over the threshold until depth 48 (DuckDB disallows
+      // left-shifting negatives, hence the -(1 << s) mask spelling)
+      {
+        val recur = s"""WITH RECURSIVE ${eventsLadder.stripPrefix("WITH ")},
+split(bucket_key, prefix_len, bucket_size) AS (
+  SELECT zkey & (-(CAST(1 AS BIGINT) << 62)), 2, count(*) FROM zpts GROUP BY 1
+  UNION ALL
+  SELECT child.k, s.prefix_len + 1, (
+      SELECT count(*) FROM zpts
+      WHERE (zkey & (-(CAST(1 AS BIGINT) << (64 - (s.prefix_len + 1))))) = child.k)
+  FROM split s,
+    LATERAL (SELECT s.bucket_key | (CAST(c.c AS BIGINT) << (63 - s.prefix_len)) AS k
+             FROM (VALUES (0), (1)) c(c)) child
+  WHERE s.bucket_size > 500 AND s.prefix_len < 48
+)
+SELECT bucket_key, prefix_len,
+  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, prefix_len), repeat('*', 64 - prefix_len)) AS bucket_name,
+  bucket_size
+FROM split
+WHERE bucket_size > 0 AND (bucket_size <= 500 OR prefix_len = 48)"""
+        recur
+      }),
 
     // O6/P7 3-D extension — the same recursive split over the octree
     // key (one z3 prefix bit at a time; three bits = one refinement
     // level per dimension), vs the same recursive-CTE oracle shape
-    "index_adaptive_3d" -> ((s, dir) =>
+    Gate("index_adaptive_3d", (s, dir) =>
       graft.operators.SpatioTemporal.adaptiveStats3(events3(s, dir),
-        threshold = 500L, statsDepth = 48, baseDepth = 2)),
+        threshold = 500L, statsDepth = 48, baseDepth = 2),
+      // the same maySplit recursion over the 3-D octree key: the per-bit
+      // summation CTE derives z3, then any bucket over the threshold
+      // splits one prefix bit at a time down to depth 48
+      s"""WITH RECURSIVE ${z3Src.stripPrefix("WITH ")},
+z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
+    + (((y >> b.range) & 1) << (3*b.range + 1))
+    + (((t >> b.range) & 1) << (3*b.range)) AS part
+  FROM z3src, range(0, 21) b),
+z3k AS (SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id),
+split(bucket_key, prefix_len, bucket_size) AS (
+  SELECT z3 & (-(CAST(1 AS BIGINT) << 62)), 2, count(*) FROM z3k GROUP BY 1
+  UNION ALL
+  SELECT child.k, s.prefix_len + 1, (
+      SELECT count(*) FROM z3k
+      WHERE (z3 & (-(CAST(1 AS BIGINT) << (64 - (s.prefix_len + 1))))) = child.k)
+  FROM split s,
+    LATERAL (SELECT s.bucket_key | (CAST(c.c AS BIGINT) << (63 - s.prefix_len)) AS k
+             FROM (VALUES (0), (1)) c(c)) child
+  WHERE s.bucket_size > 500 AND s.prefix_len < 48
+)
+SELECT bucket_key, prefix_len,
+  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, prefix_len), repeat('*', 64 - prefix_len)) AS bucket_name,
+  bucket_size
+FROM split
+WHERE bucket_size > 0 AND (bucket_size <= 500 OR prefix_len = 48)"""),
 
     // S2 — as-of (getRowOrBefore) routing against a bucket-stats table
-    "stats_asof" -> ((s, dir) => {
+    Gate("stats_asof", (s, dir) => {
       val pts = eventsPoints(s, dir)
       val stats = PointStore.indexStats(pts, STATS_PL)
         .filter(col("bucket_size") >= 100)
       val probes = pts.filter(col("id") % 100 === 0).select(col("id"), col("zkey"))
       StatsTable.asofLookup(s, probes, "zkey", stats, "bucket_key")
         .select(col("id"), col("bucket_key"))
-    }),
+    },
+      s"""$eventsLadder,
+buckets AS (SELECT zkey & CAST(${maskLit(STATS_PL)} AS BIGINT) AS k, count(*) AS n FROM zpts GROUP BY 1),
+big AS (SELECT k FROM buckets WHERE n >= 100),
+probes AS (SELECT id, zkey FROM zpts WHERE id % 100 = 0)
+SELECT p.id, (SELECT max(k) FROM big b WHERE b.k <= p.zkey) AS bucket_key
+FROM probes p"""),
 
     // distance self-join: all event-point pairs within Euclidean r=20
     // — grid cells of side r, 3x3-neighborhood equi-join, exact dist²
     // verify; each unordered pair exactly once by construction. The
     // oracle is the brute-force quadratic join — the gate proves the
     // grid decomposition loses and invents nothing
-    "distance_join" -> ((s, dir) => {
+    Gate("distance_join", (s, dir) => {
       val pts = s.read.parquet(s"$dir/events.parquet").select(
         col("event_id").as("id"),
         expr("cast(floor(value*100) as int)").as("x"),
         col("user_id").cast("int").as("y"))
       graft.operators.SpatialJoin.distanceJoin(pts, 20L)
-    }),
+    },
+      """WITH p AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events)
+SELECT a.id AS id_a, b.id AS id_b,
+  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
+FROM p a JOIN p b ON a.id < b.id
+WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 400"""),
 
     // spatial kNN JOIN: every point's 3 nearest neighbors within r=20
     // — the per-row generalization of the single-query knn verb; grid
     // candidates + map-side-bounded per-key top-k; brute-force window
     // oracle proves both the candidate coverage and the tie order
-    "knn_join_spatial" -> ((s, dir) => {
+    Gate("knn_join_spatial", (s, dir) => {
       val pts = s.read.parquet(s"$dir/events.parquet").select(
         col("event_id").as("id"),
         expr("cast(floor(value*100) as int)").as("x"),
         col("user_id").cast("int").as("y"))
       graft.operators.SpatialJoin.knnWithinJoin(pts, 20L, 3)
-    }),
+    },
+      """WITH p AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events),
+pairs AS (SELECT a.id AS id_a, b.id AS id_b,
+    (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
+  FROM p a JOIN p b ON a.id <> b.id
+  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 400),
+r AS (SELECT *, row_number() OVER (PARTITION BY id_a ORDER BY dist2, id_b) AS rn
+  FROM pairs)
+SELECT id_a, id_b, dist2, CAST(rn AS BIGINT) AS rk FROM r WHERE rn <= 3"""),
 
     // spatio-temporal distance self-join: event pairs within r=150 in
     // (x, y, t) — the 27-cell-neighborhood generalization; brute-force
     // quadratic oracle again proves the grid loses/invents nothing
-    "distance_join_3d" -> ((s, dir) => {
+    Gate("distance_join_3d", (s, dir) => {
       val pts = s.read.parquet(s"$dir/events.parquet").select(
         col("event_id").as("id"),
         expr("cast(floor(value*100) as int)").as("x"),
         col("user_id").cast("int").as("y"),
         expr("cast(event_id % 2097152 as int)").as("t"))
       graft.operators.SpatialJoin.distanceJoin3(pts, 150L)
-    }),
+    },
+      """WITH p AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y, CAST(event_id % 2097152 AS BIGINT) AS t FROM events)
+SELECT a.id AS id_a, b.id AS id_b,
+  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+    + (a.t - b.t) * (a.t - b.t) AS dist2
+FROM p a JOIN p b ON a.id < b.id
+WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+    + (a.t - b.t) * (a.t - b.t) <= 22500"""),
 
     // 2-D skyline over part points (size, price both minimized — the
     // "smallest and cheapest" Pareto front); bucket-prefilter plan,
     // NOT-EXISTS dominance oracle
-    "skyline" -> ((s, dir) =>
+    Gate("skyline", (s, dir) =>
       graft.operators.Analytics.skyline(
         partPoints(s, dir).select(col("id"), col("x"), col("y")),
-        bucketWidth = 4L)),
+        bucketWidth = 4L),
+      """WITH p0 AS (SELECT CAST(p_size AS BIGINT) AS x,
+    CAST(floor(p_retailprice) AS BIGINT) AS y, min(p_partkey) AS id
+  FROM part GROUP BY 1, 2)
+SELECT id, x, y FROM p0 p
+WHERE NOT EXISTS (SELECT 1 FROM p0 q
+  WHERE q.x <= p.x AND q.y <= p.y AND (q.x < p.x OR q.y < p.y))"""),
 
     // TOMBSTONE DELETE EQUIVALENCE — the takedown/GDPR verb neither the
     // reference nor a naive 100-TB store has (SURVEY §2.1; Client.java:
@@ -272,7 +459,7 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
     // markers. The oracle emits the aggregates once per phase from the
     // filtered source rows, so a lost/resurrection-failed/duplicated row
     // breaks the phase that introduced it while the other still matches.
-    "delete_equiv" -> ((s, dir) => {
+    Gate("delete_equiv", (s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-delete-equiv").toString
       val base = eventsPoints(s, dir).withColumn("put_seq", lit(0L))
       PointStore.write(base, s"$tmp/store")
@@ -321,7 +508,31 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(Seq(logical, folded)).asJava),
         outSchema)
-    }),
+    },
+      // the live multiset after delete + resurrect, aggregated once per
+      // phase: keys id%5=0 are deleted, the id%10=0 half re-put later
+      // (they must survive the marker) — identical rows for both phases
+      // pins logical-read exactness AND fold result-invisibility
+      s"""WITH pts AS MATERIALIZED (
+  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events
+  WHERE event_id % 5 <> 0 OR event_id % 10 = 0),
+r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
+    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
+    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
+  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
+    AND y BETWEEN ${RY.min} AND ${RY.max}),
+t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
+k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
+    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
+  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
+        FROM pts ORDER BY d2, id LIMIT 10)),
+phases(phase) AS (VALUES ('logical'), ('folded'))
+SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
+  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
+FROM phases, r, t, k"""),
 
     // RANGE (predicate) DELETE EQUIVALENCE — region takedown without
     // enumerating ids: one rectangle marker kills every inside row
@@ -330,7 +541,7 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
     // The read side compiles markers into ONE pushed-down x/y/seq
     // predicate (no join); phases 'logical' and 'folded' must both
     // equal the filtered-source oracle
-    "delete_range_equiv" -> ((s, dir) => {
+    Gate("delete_range_equiv", (s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-delrange").toString
       val base = eventsPoints(s, dir).withColumn("put_seq", lit(0L))
       PointStore.write(base, s"$tmp/store")
@@ -381,7 +592,33 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(Seq(logical, folded)).asJava),
         outSchema)
-    }),
+    },
+      // the live multiset after region delete + inside re-put: outside
+      // rows untouched, inside rows survive only via the seq-2 re-put
+      // (id % 2 = 0) — identical rows for both phases pins the compiled
+      // predicate's exactness AND the fold's result-invisibility
+      s"""WITH pts AS MATERIALIZED (
+  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events
+  WHERE NOT (CAST(floor(value*100) AS BIGINT) BETWEEN 20000 AND 26000
+             AND user_id BETWEEN 50 AND 90)
+     OR event_id % 2 = 0),
+r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
+    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
+    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
+  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
+    AND y BETWEEN ${RY.min} AND ${RY.max}),
+t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
+k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
+    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
+  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
+        FROM pts ORDER BY d2, id LIMIT 10)),
+phases(phase) AS (VALUES ('logical'), ('folded'))
+SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
+  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
+FROM phases, r, t, k"""),
 
     // SNAPSHOT (time-travel) READS — the same put/delete/re-put history
     // as delete_equiv, read back AS OF each sequence bound: asof0 must
@@ -390,7 +627,7 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
     // Both side tables are append-only with monotone sequences, so a
     // snapshot is two predicates over data already on disk — history
     // costs zero rewrites (PointStore.snapshotAsOf scaladoc).
-    "snapshot_asof" -> ((s, dir) => {
+    Gate("snapshot_asof", (s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-snapshot").toString
       val base = eventsPoints(s, dir).withColumn("put_seq", lit(0L))
       PointStore.write(base, s"$tmp/store")
@@ -436,301 +673,13 @@ zpts AS (SELECT $ex id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, (gx5<<1) | gy5
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         outSchema)
-    })
-  )
-
-  private def maskLit(pl: Int): String = ZOrder.makeMask(pl).toString
-
-  /** Source CTE for the 3-D codec oracle — the SQL twin of [[events3]]. */
-  private val z3Src =
-    """WITH z3src AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-  CAST(user_id AS BIGINT) AS y, CAST(event_id % 2097152 AS BIGINT) AS t FROM events)"""
-
-  val oracle: Map[String, String] = Map(
-    "zorder_key" ->
-      s"""$partLadder SELECT id, zkey FROM zpts""",
-
-    "zorder_roundtrip" ->
-      s"""$partLadder,
-unz AS (SELECT id, x, y,
-  (zkey >> 1) & 6148914691236517205 AS gx, zkey & 6148914691236517205 AS gy FROM zpts),
-c1 AS (SELECT id, x, y, ((gx | (gx>>1)) & 3689348814741910323) AS gx1, ((gy | (gy>>1)) & 3689348814741910323) AS gy1 FROM unz),
-c2 AS (SELECT id, x, y, ((gx1 | (gx1>>2)) & 1085102592571150095) AS gx2, ((gy1 | (gy1>>2)) & 1085102592571150095) AS gy2 FROM c1),
-c3 AS (SELECT id, x, y, ((gx2 | (gx2>>4)) & 71777214294589695) AS gx3, ((gy2 | (gy2>>4)) & 71777214294589695) AS gy3 FROM c2),
-c4 AS (SELECT id, x, y, ((gx3 | (gx3>>8)) & 281470681808895) AS gx4, ((gy3 | (gy3>>8)) & 281470681808895) AS gy4 FROM c3),
-c5 AS (SELECT id, x, y, ((gx4 | (gx4>>16)) & 4294967295) AS gx5, ((gy4 | (gy4>>16)) & 4294967295) AS gy5 FROM c4)
-SELECT id, x, y, CAST(gx5 AS INT) AS rx, CAST(gy5 AS INT) AS ry FROM c5""",
-
-    // 3-D codec oracle: per-bit summation (x bit → position 3i+2, y →
-    // 3i+1, t → 3i) — derives the key with no shared mask constants
-    "zorder3_key" ->
-      s"""$z3Src,
-z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
-    + (((y >> b.range) & 1) << (3*b.range + 1))
-    + (((t >> b.range) & 1) << (3*b.range)) AS part
-  FROM z3src, range(0, 21) b)
-SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id""",
-
-    "zorder3_roundtrip" ->
-      s"""$z3Src,
-z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
-    + (((y >> b.range) & 1) << (3*b.range + 1))
-    + (((t >> b.range) & 1) << (3*b.range)) AS part
-  FROM z3src, range(0, 21) b),
-z3k AS (SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id),
-z3r AS (SELECT z3k.id,
-    CAST(sum(((z3 >> (3*b.range + 2)) & 1) << b.range) AS INT) AS rx,
-    CAST(sum(((z3 >> (3*b.range + 1)) & 1) << b.range) AS INT) AS ry,
-    CAST(sum(((z3 >> (3*b.range)) & 1) << b.range) AS INT) AS rt
-  FROM z3k, range(0, 21) b GROUP BY z3k.id)
-SELECT s.id, CAST(s.x AS INT) AS x, CAST(s.y AS INT) AS y, CAST(s.t AS INT) AS t,
-  r.rx, r.ry, r.rt
-FROM z3src s JOIN z3r r ON s.id = r.id""",
-
-    "range_query_3d" ->
-      s"""SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x, CAST(user_id AS INT) AS y,
-  CAST(event_id % 2097152 AS INT) AS t
-FROM events
-WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
-  AND user_id BETWEEN ${RY.min} AND ${RY.max}
-  AND (event_id % 2097152) BETWEEN ${RT3.min} AND ${RT3.max}""",
-
-    "get_point_3d" ->
-      s"""SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x,
-  CAST(user_id AS INT) AS y, CAST(event_id % 2097152 AS INT) AS t
-FROM events
-WHERE CAST(floor(value*100) AS INT) = $GX3 AND user_id = $GY3
-  AND (event_id % 2097152) = $GT3""",
-
-    "index_stats_3d" ->
-      s"""$z3Src,
-z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
-    + (((y >> b.range) & 1) << (3*b.range + 1))
-    + (((t >> b.range) & 1) << (3*b.range)) AS part
-  FROM z3src, range(0, 21) b),
-z3k AS (SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id),
-b3 AS (SELECT z3 & CAST(${maskLit(STATS3_PL)} AS BIGINT) AS bucket_key, count(*) AS bucket_size
-  FROM z3k GROUP BY 1)
-SELECT bucket_key,
-  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, $STATS3_PL), repeat('*', ${64 - STATS3_PL})) AS bucket_name,
-  bucket_size
-FROM b3""",
-
-    "knn_3d" ->
-      s"""WITH p3 AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-  CAST(user_id AS BIGINT) AS y, CAST(event_id % 2097152 AS BIGINT) AS t FROM events)
-SELECT id, CAST(x AS INT) AS x, CAST(y AS INT) AS y, CAST(t AS INT) AS t,
-  CAST((x - $QX3)*(x - $QX3) + (y - $QY3)*(y - $QY3) + (t - $QT3)*(t - $QT3) AS BIGINT) AS dist3
-FROM p3 ORDER BY dist3, id LIMIT $K""",
-
-    "range_query" ->
-      s"""SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x, CAST(user_id AS INT) AS y
-FROM events
-WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
-  AND user_id BETWEEN ${RY.min} AND ${RY.max}""",
-
-    "range_count" ->
-      s"""SELECT event_type, count(*) AS cnt
-FROM events
-WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
-  AND user_id BETWEEN ${RY.min} AND ${RY.max}
-GROUP BY event_type""",
-
-    "spatial_join_count" ->
-      """WITH r AS (SELECT doc_id AS rect_id,
-    (doc_id * 97) % 45000 AS xmin,
-    (doc_id * 97) % 45000 + 200 + (doc_id % 17) * 600 AS xmax,
-    (doc_id * 13) % 120 AS ymin,
-    (doc_id * 13) % 120 + 3 + (doc_id % 7) * 15 AS ymax
-  FROM documents WHERE doc_id < 60),
-p AS (SELECT event_id AS id, CAST(floor(value*100) AS INT) AS x, user_id AS y FROM events)
-SELECT r.rect_id, CAST(count(p.id) AS BIGINT) AS n_points,
-  CAST(coalesce(sum(p.id), 0) AS BIGINT) AS id_sum
-FROM r LEFT JOIN p ON p.x BETWEEN r.xmin AND r.xmax AND p.y BETWEEN r.ymin AND r.ymax
-GROUP BY r.rect_id""",
-
-    "get_point" ->
-      s"""SELECT p_partkey AS id, p_size AS x, CAST(floor(p_retailprice) AS INT) AS y
-FROM part
-WHERE p_size = $GX AND CAST(floor(p_retailprice) AS INT) = $GY""",
-
-    "knn" ->
-      s"""SELECT p_partkey AS id, p_size AS x, CAST(floor(p_retailprice) AS INT) AS y,
-  (CAST(p_size AS BIGINT) - $QX) * (CAST(p_size AS BIGINT) - $QX)
-  + (CAST(floor(p_retailprice) AS BIGINT) - $QY) * (CAST(floor(p_retailprice) AS BIGINT) - $QY) AS dist2
-FROM part
-ORDER BY dist2, id LIMIT $K""",
-
-    "knn_ties" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS id, CAST(n_nationkey AS INT) AS x, CAST(0 AS INT) AS y,
-  (CAST(n_nationkey AS BIGINT) - 12) * (CAST(n_nationkey AS BIGINT) - 12) AS dist2
-FROM nation
-ORDER BY dist2, id LIMIT 4""",
-
-    "index_stats" ->
-      s"""$eventsLadder,
-buckets AS (SELECT zkey & CAST(${maskLit(STATS_PL)} AS BIGINT) AS bucket_key, count(*) AS bucket_size FROM zpts GROUP BY 1)
-SELECT bucket_key,
-  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, $STATS_PL), repeat('*', ${64 - STATS_PL})) AS bucket_name,
-  bucket_size
-FROM buckets""",
-
-    "upsert_last" ->
-      """SELECT user_id AS id, CAST(user_id % 25 AS INT) AS x, CAST(user_id // 25 AS INT) AS y, last_value
-FROM (
-  SELECT user_id, value AS last_value,
-    row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-) WHERE rn = 1""",
-
-    // the reference's recursive maySplit as a recursive CTE: split any
-    // bucket over the threshold until depth 48 (DuckDB disallows
-    // left-shifting negatives, hence the -(1 << s) mask spelling)
-    "index_adaptive" -> {
-      val recur = s"""WITH RECURSIVE ${eventsLadder.stripPrefix("WITH ")},
-split(bucket_key, prefix_len, bucket_size) AS (
-  SELECT zkey & (-(CAST(1 AS BIGINT) << 62)), 2, count(*) FROM zpts GROUP BY 1
-  UNION ALL
-  SELECT child.k, s.prefix_len + 1, (
-      SELECT count(*) FROM zpts
-      WHERE (zkey & (-(CAST(1 AS BIGINT) << (64 - (s.prefix_len + 1))))) = child.k)
-  FROM split s,
-    LATERAL (SELECT s.bucket_key | (CAST(c.c AS BIGINT) << (63 - s.prefix_len)) AS k
-             FROM (VALUES (0), (1)) c(c)) child
-  WHERE s.bucket_size > 500 AND s.prefix_len < 48
-)
-SELECT bucket_key, prefix_len,
-  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, prefix_len), repeat('*', 64 - prefix_len)) AS bucket_name,
-  bucket_size
-FROM split
-WHERE bucket_size > 0 AND (bucket_size <= 500 OR prefix_len = 48)"""
-      recur
     },
-
-    // the same maySplit recursion over the 3-D octree key: the per-bit
-    // summation CTE derives z3, then any bucket over the threshold
-    // splits one prefix bit at a time down to depth 48
-    "index_adaptive_3d" ->
-      s"""WITH RECURSIVE ${z3Src.stripPrefix("WITH ")},
-z3bits AS (SELECT id, (((x >> b.range) & 1) << (3*b.range + 2))
-    + (((y >> b.range) & 1) << (3*b.range + 1))
-    + (((t >> b.range) & 1) << (3*b.range)) AS part
-  FROM z3src, range(0, 21) b),
-z3k AS (SELECT id, CAST(sum(part) AS BIGINT) AS z3 FROM z3bits GROUP BY id),
-split(bucket_key, prefix_len, bucket_size) AS (
-  SELECT z3 & (-(CAST(1 AS BIGINT) << 62)), 2, count(*) FROM z3k GROUP BY 1
-  UNION ALL
-  SELECT child.k, s.prefix_len + 1, (
-      SELECT count(*) FROM z3k
-      WHERE (z3 & (-(CAST(1 AS BIGINT) << (64 - (s.prefix_len + 1))))) = child.k)
-  FROM split s,
-    LATERAL (SELECT s.bucket_key | (CAST(c.c AS BIGINT) << (63 - s.prefix_len)) AS k
-             FROM (VALUES (0), (1)) c(c)) child
-  WHERE s.bucket_size > 500 AND s.prefix_len < 48
-)
-SELECT bucket_key, prefix_len,
-  concat(substring(lpad(bin(bucket_key), 64, '0'), 1, prefix_len), repeat('*', 64 - prefix_len)) AS bucket_name,
-  bucket_size
-FROM split
-WHERE bucket_size > 0 AND (bucket_size <= 500 OR prefix_len = 48)""",
-
-    "stats_asof" ->
-      s"""$eventsLadder,
-buckets AS (SELECT zkey & CAST(${maskLit(STATS_PL)} AS BIGINT) AS k, count(*) AS n FROM zpts GROUP BY 1),
-big AS (SELECT k FROM buckets WHERE n >= 100),
-probes AS (SELECT id, zkey FROM zpts WHERE id % 100 = 0)
-SELECT p.id, (SELECT max(k) FROM big b WHERE b.k <= p.zkey) AS bucket_key
-FROM probes p""",
-
-    "distance_join" ->
-      """WITH p AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events)
-SELECT a.id AS id_a, b.id AS id_b,
-  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-FROM p a JOIN p b ON a.id < b.id
-WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 400""",
-
-    "knn_join_spatial" ->
-      """WITH p AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events),
-pairs AS (SELECT a.id AS id_a, b.id AS id_b,
-    (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-  FROM p a JOIN p b ON a.id <> b.id
-  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 400),
-r AS (SELECT *, row_number() OVER (PARTITION BY id_a ORDER BY dist2, id_b) AS rn
-  FROM pairs)
-SELECT id_a, id_b, dist2, CAST(rn AS BIGINT) AS rk FROM r WHERE rn <= 3""",
-
-    "distance_join_3d" ->
-      """WITH p AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y, CAST(event_id % 2097152 AS BIGINT) AS t FROM events)
-SELECT a.id AS id_a, b.id AS id_b,
-  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-    + (a.t - b.t) * (a.t - b.t) AS dist2
-FROM p a JOIN p b ON a.id < b.id
-WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-    + (a.t - b.t) * (a.t - b.t) <= 22500""",
-
-    // the live multiset after delete + resurrect, aggregated once per
-    // phase: keys id%5=0 are deleted, the id%10=0 half re-put later
-    // (they must survive the marker) — identical rows for both phases
-    // pins logical-read exactness AND fold result-invisibility
-    "delete_equiv" ->
-      s"""WITH pts AS MATERIALIZED (
-  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events
-  WHERE event_id % 5 <> 0 OR event_id % 10 = 0),
-r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
-    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
-    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
-  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
-    AND y BETWEEN ${RY.min} AND ${RY.max}),
-t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
-k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
-    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
-  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
-        FROM pts ORDER BY d2, id LIMIT 10)),
-phases(phase) AS (VALUES ('logical'), ('folded'))
-SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
-  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
-FROM phases, r, t, k""",
-
-    // the live multiset after region delete + inside re-put: outside
-    // rows untouched, inside rows survive only via the seq-2 re-put
-    // (id % 2 = 0) — identical rows for both phases pins the compiled
-    // predicate's exactness AND the fold's result-invisibility
-    "delete_range_equiv" ->
-      s"""WITH pts AS MATERIALIZED (
-  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events
-  WHERE NOT (CAST(floor(value*100) AS BIGINT) BETWEEN 20000 AND 26000
-             AND user_id BETWEEN 50 AND 90)
-     OR event_id % 2 = 0),
-r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
-    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
-    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
-  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
-    AND y BETWEEN ${RY.min} AND ${RY.max}),
-t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
-k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
-    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
-  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
-        FROM pts ORDER BY d2, id LIMIT 10)),
-phases(phase) AS (VALUES ('logical'), ('folded'))
-SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
-  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
-FROM phases, r, t, k""",
-
-    // each AS OF bound replays the multiset the history presented at
-    // that sequence: all rows (asof0), deleted keys gone (asof1),
-    // re-put half resurrected (asof2 == the live view)
-    "snapshot_asof" -> {
-      def phaseSql(name: String, pred: String) =
-        s"""SELECT '$name' AS phase, r.*, t.*, k.* FROM
+      // each AS OF bound replays the multiset the history presented at
+      // that sequence: all rows (asof0), deleted keys gone (asof1),
+      // re-put half resurrected (asof2 == the live view)
+      {
+        def phaseSql(name: String, pred: String) =
+          s"""SELECT '$name' AS phase, r.*, t.*, k.* FROM
 (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
     CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
     CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
@@ -744,20 +693,19 @@ FROM phases, r, t, k""",
     CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
   FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
         FROM src WHERE $pred ORDER BY d2, id LIMIT 10)) k"""
-      s"""WITH src AS MATERIALIZED (
+        s"""WITH src AS MATERIALIZED (
   SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
     CAST(user_id AS BIGINT) AS y FROM events)
 ${phaseSql("asof0", "TRUE")}
 UNION ALL ${phaseSql("asof1", "id % 5 <> 0")}
 UNION ALL ${phaseSql("asof2", "id % 5 <> 0 OR id % 10 = 0")}"""
-    },
-
-    "skyline" ->
-      """WITH p0 AS (SELECT CAST(p_size AS BIGINT) AS x,
-    CAST(floor(p_retailprice) AS BIGINT) AS y, min(p_partkey) AS id
-  FROM part GROUP BY 1, 2)
-SELECT id, x, y FROM p0 p
-WHERE NOT EXISTS (SELECT 1 FROM p0 q
-  WHERE q.x <= p.x AND q.y <= p.y AND (q.x < p.x OR q.y < p.y))"""
+      })
   )
+
+  private def maskLit(pl: Int): String = ZOrder.makeMask(pl).toString
+
+  /** Source CTE for the 3-D codec oracle — the SQL twin of [[events3]]. */
+  private val z3Src =
+    """WITH z3src AS (SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+  CAST(user_id AS BIGINT) AS y, CAST(event_id % 2097152 AS BIGINT) AS t FROM events)"""
 }

@@ -15,6 +15,8 @@ import graft.operators.{QuantileSketch, Sketches}
  */
 object SketchQueries {
 
+  import Sketches.{HllM, AlphaE5, CmDepth, CmWidth, HllSeed, CmSeedBase, KmvK, KmvSeed}
+
   /**
    * Vocabulary-widening fixture: the driver corpus is ~31 near-universal
    * terms — fine for frequency sketches' heavy hitters but DEGENERATE
@@ -37,81 +39,233 @@ object SketchQueries {
     s.read.parquet(s"$dir/documents.parquet")
       .withColumn("text", expr(AugSql))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val gates: Seq[Gate] = Seq(
     // the m=256 HLL register table (reg, max-rho) — the fixed-size,
     // element-wise-max-mergeable distinct-count state
-    "hll_registers" -> ((s, dir) => Sketches.hllRegisters(docs(s, dir))),
+    Gate("hll_registers", (s, dir) => Sketches.hllRegisters(docs(s, dir)),
+      s"""WITH $regCte
+SELECT CAST(reg AS BIGINT) AS reg, CAST(rho AS INT) AS rho FROM regs"""),
     // raw-estimator distinct tokens vs exact: (n_exact, n_est, err_bp);
     // the register sum is scaled to exact BIGINTs, the division widened
     // to DECIMAL(38,0) — engine and oracle agree to the last digit
-    "hll_distinct" -> ((s, dir) => Sketches.hllDistinct(docs(s, dir))),
+    Gate("hll_distinct", (s, dir) => Sketches.hllDistinct(docs(s, dir)),
+      s"""WITH $regCte,
+sm AS (SELECT sum(CAST(1 AS BIGINT) << (53 - rho)) AS s FROM regs),
+est AS (SELECT $estExpr AS n_est FROM sm),
+ex AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS n_exact FROM w)
+SELECT ex.n_exact, est.n_est,
+  abs(est.n_est - ex.n_exact) * 10000 // ex.n_exact AS err_bp
+FROM ex, est"""),
     // per-source vocabulary size through the same registers — the
     // GROUP BY sketch shape (one (source, reg)-keyed shuffle)
-    "hll_by_source" -> ((s, dir) => Sketches.hllDistinctBy(docs(s, dir), "source")),
+    Gate("hll_by_source", (s, dir) => Sketches.hllDistinctBy(docs(s, dir), "source"),
+      s"""WITH $sdocsCte,
+w AS (SELECT source, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs),
+hh AS (SELECT source, ${oh60("w", HllSeed)} AS h FROM w),
+rr AS (SELECT source, h % $HllM AS reg, h // 256 AS rest FROM hh),
+rho AS (SELECT source, reg, CASE WHEN rest = 0 THEN 53 ELSE 53 - len(bin(rest)) END AS rho FROM rr),
+pres AS (SELECT source, reg, max(rho) AS rho FROM rho GROUP BY source, reg),
+sm AS (SELECT source,
+    sum(CAST(1 AS BIGINT) << (53 - rho)) + ($HllM - count(*)) * (CAST(1 AS BIGINT) << 53) AS s
+  FROM pres GROUP BY source),
+est AS (SELECT source, $estExpr AS n_est FROM sm),
+ex AS (SELECT source, CAST(count(DISTINCT w) AS BIGINT) AS n_exact FROM w GROUP BY source)
+SELECT ex.source, ex.n_exact, est.n_est FROM ex JOIN est ON est.source = ex.source"""),
     // the d=4 × w=512 Count-Min counter table over token occurrences —
     // the fixed-size, element-wise-sum-mergeable frequency state
-    "cms_counters" -> ((s, dir) => Sketches.cmCounters(docs(s, dir))),
+    Gate("cms_counters", (s, dir) => Sketches.cmCounters(docs(s, dir)),
+      s"""WITH $cmsCte
+SELECT CAST(depth AS BIGINT) AS depth, CAST(bucket AS BIGINT) AS bucket, cnt FROM counters"""),
     // exact top-20 tokens with their Count-Min point estimates:
     // (word, n_exact, n_est), n_est >= n_exact by construction
-    "cms_heavy_hitters" -> ((s, dir) => Sketches.cmHeavyHitters(docs(s, dir), 20)),
+    Gate("cms_heavy_hitters", (s, dir) => Sketches.cmHeavyHitters(docs(s, dir), 20),
+      s"""WITH $cmsCte,
+topk AS (SELECT w, cnt AS n_exact FROM tf ORDER BY cnt DESC, w LIMIT 20),
+probes AS (SELECT w, n_exact, t.range AS depth,
+    xor(${oh60("w", CmSeedBase)}, ${oh60("w", CmSeedBase + 1)} * t.range) % $CmWidth AS bucket
+  FROM topk, range(0, $CmDepth) t)
+SELECT p.w AS word, p.n_exact, min(c.cnt) AS n_est
+FROM probes p JOIN counters c ON c.depth = p.depth AND c.bucket = p.bucket
+GROUP BY p.w, p.n_exact"""),
     // the q-digest node table over event cents — the fixed-size,
     // deterministically-compacted, sum-mergeable RANK state (level-
     // synchronous compression replayed by 16 unrolled oracle rounds)
-    "quantile_digest" -> ((s, dir) => QuantileSketch.digestTable(ev(s, dir), "cents")),
+    Gate("quantile_digest", (s, dir) => QuantileSketch.digestTable(ev(s, dir), "cents"),
+      s"""WITH $qdBase,
+${qdBuildRounds("q", "SELECT tau FROM tc")}
+SELECT CAST(lvl AS INT) AS lvl, idx, CAST(cnt AS BIGINT) AS cnt FROM q$QL"""),
     // digest quantile estimates at 7 φ targets vs the EXACT rank
     // selection, realized rank error and the Levels·τ contract pinned
-    "quantile_sketch" -> ((s, dir) => QuantileSketch.quantileProbe(ev(s, dir), "cents")),
+    Gate("quantile_sketch", (s, dir) => QuantileSketch.quantileProbe(ev(s, dir), "cents"),
+      s"""WITH $qdBase,
+${qdBuildRounds("q", "SELECT tau FROM tc")},
+${qdProbeTail(s"q$QL", s"$QL * (SELECT tau FROM tc)")}"""),
     // the merge law: two half-corpus digests (split by event_id parity)
     // merged by node-count sum + re-compression, probed against the
     // FULL corpus's exact quantiles under the compounded bound
-    "quantile_merge" -> ((s, dir) =>
-      QuantileSketch.mergeProbe(ev(s, dir), "cents", "event_id")),
+    Gate("quantile_merge", (s, dir) =>
+      QuantileSketch.mergeProbe(ev(s, dir), "cents", "event_id"),
+      s"""WITH ev AS (SELECT event_id, CAST(round(value*100) AS BIGINT) AS cents FROM events),
+lfa AS MATERIALIZED (SELECT cents AS leaf, count(*) AS cnt FROM ev WHERE event_id % 2 = 0 GROUP BY 1),
+lfb AS MATERIALIZED (SELECT cents AS leaf, count(*) AS cnt FROM ev WHERE event_id % 2 = 1 GROUP BY 1),
+na AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n FROM lfa),
+nb AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n FROM lfb),
+ta AS (SELECT greatest(1, (SELECT n FROM na) // $QK) AS tau),
+tb AS (SELECT greatest(1, (SELECT n FROM nb) // $QK) AS tau),
+a0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM lfa),
+${qdBuildRounds("a", "SELECT tau FROM ta")},
+b0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM lfb),
+${qdBuildRounds("b", "SELECT tau FROM tb")},
+lf AS MATERIALIZED (SELECT cents AS leaf, count(*) AS cnt FROM ev GROUP BY 1),
+nn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM lf),
+tm AS (SELECT greatest(1, (SELECT n FROM nn) // $QK) AS tau),
+m0 AS (SELECT lvl, idx, sum(cnt) AS cnt FROM
+  (SELECT * FROM a$QL UNION ALL SELECT * FROM b$QL) GROUP BY 1, 2),
+${qdMergeRounds("m", "SELECT tau FROM tm")},
+${qdProbeTail(s"m$QL",
+        s"$QL * ((SELECT tau FROM ta) + (SELECT tau FROM tb) + (SELECT tau FROM tm))")}"""),
     // the bottom-k (KMV) sketch of the token vocabulary — the third
     // mergeable axis (distinct AND intersection), k smallest 60-bit
     // hashes, rank-ordered; deterministic by construction
-    "kmv_sketch" -> ((s, dir) => Sketches.kmvSketch(docs(s, dir))),
+    Gate("kmv_sketch", (s, dir) => Sketches.kmvSketch(docs(s, dir)),
+      s"""WITH $sdocsCte,
+w AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs),
+${kmvCte("kmv", "w")}
+SELECT CAST(row_number() OVER (ORDER BY h) AS INT) AS rank, h FROM kmv"""),
     // (k−1)·2^60/h_(k) distinct estimate vs exact, DECIMAL-widened —
     // the KMV twin of hll_distinct (independent seed, independent
     // estimator family, same standing-accuracy-probe shape)
-    "kmv_distinct" -> ((s, dir) => Sketches.kmvDistinct(docs(s, dir))),
+    Gate("kmv_distinct", (s, dir) => Sketches.kmvDistinct(docs(s, dir)),
+      s"""WITH $sdocsCte,
+w AS MATERIALIZED (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs),
+${kmvCte("kmv", "w")},
+hk AS (SELECT max(h) AS hk, count(*) AS kk FROM kmv),
+ex AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS n_exact FROM w),
+est AS (SELECT CAST((CAST(kk - 1 AS HUGEINT) * ${1L << 60}) // CAST(hk AS HUGEINT) AS BIGINT) AS n_est FROM hk)
+SELECT ex.n_exact, est.n_est,
+  abs(est.n_est - ex.n_exact) * 10000 // ex.n_exact AS err_bp
+FROM ex, est"""),
     // union-merge law + Jaccard: two overlapping doc subsets
     // (doc_id%3 ∈ {0,1} vs {1,2} — true vocab overlap ≈ 1/3), sketches
     // merged bottom-k, |merged ∩ A ∩ B|/k vs the exact Jaccard
-    "kmv_jaccard" -> ((s, dir) => {
+    Gate("kmv_jaccard", (s, dir) => {
       val d = docs(s, dir)
       Sketches.kmvJaccard(
         d.filter(expr("doc_id % 3 IN (0, 1)")),
         d.filter(expr("doc_id % 3 IN (1, 2)")))
-    }),
+    },
+      s"""WITH $sdocsCte,
+wa AS MATERIALIZED ${wCte("doc_id % 3 IN (0, 1)")},
+wb AS MATERIALIZED ${wCte("doc_id % 3 IN (1, 2)")},
+${kmvCte("ka", "wa")},
+${kmvCte("kb", "wb")},
+mg AS MATERIALIZED (SELECT DISTINCT h FROM
+  (SELECT h FROM ka UNION ALL SELECT h FROM kb) ORDER BY h LIMIT $KmvK),
+ni AS (SELECT CAST(count(*) AS BIGINT) AS n_inter FROM mg
+  WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)),
+ku AS (SELECT count(*) AS k_used FROM mg),
+ex AS (SELECT CAST(
+    (SELECT count(*) FROM (SELECT w FROM wa INTERSECT SELECT w FROM wb)) * 10000
+    // (SELECT count(*) FROM (SELECT w FROM wa UNION SELECT w FROM wb))
+  AS BIGINT) AS j_exact_e4)
+SELECT ex.j_exact_e4, CAST(n_inter * 10000 // k_used AS BIGINT) AS j_est_e4, n_inter
+FROM ex, ni, ku"""),
     // one-call corpus profiler: the whole sketch family (HLL + KMV +
     // Count-Min + q-digest) composed into a long-format (metric,
     // value) report next to the exact answers — the "describe this
     // table" dashboard a 100 TB pipeline would publish per snapshot
-    "profile_docs" -> ((s, dir) => Sketches.profileDocs(docs(s, dir))),
+    Gate("profile_docs", (s, dir) => Sketches.profileDocs(docs(s, dir)),
+      s"""WITH $regCte,
+sm AS (SELECT sum(CAST(1 AS BIGINT) << (53 - rho)) AS s FROM regs),
+${kmvCte("kmv", "w")},
+hk AS (SELECT max(h) AS hk, count(*) AS kk FROM kmv),
+tf AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY w),
+cells AS MATERIALIZED (SELECT t.range AS depth,
+    xor(${oh60("w", CmSeedBase)}, ${oh60("w", CmSeedBase + 1)} * t.range) % $CmWidth AS bucket,
+    sum(cnt) AS cnt
+  FROM tf, range(0, $CmDepth) t GROUP BY 1, 2),
+top1 AS (SELECT w, cnt AS n_exact FROM tf ORDER BY cnt DESC, w LIMIT 1),
+probes AS (SELECT w, n_exact, t.range AS depth,
+    xor(${oh60("w", CmSeedBase)}, ${oh60("w", CmSeedBase + 1)} * t.range) % $CmWidth AS bucket
+  FROM top1, range(0, $CmDepth) t),
+cmest AS (SELECT min(c.cnt) AS n_est, max(p.n_exact) AS n_exact
+  FROM probes p JOIN cells c ON c.depth = p.depth AND c.bucket = p.bucket),
+pllf AS MATERIALIZED (SELECT CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS leaf, count(*) AS cnt FROM sdocs GROUP BY 1),
+pln AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM pllf),
+plt AS (SELECT greatest(1, (SELECT n FROM pln) // $QK) AS tau),
+pl0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM pllf),
+${qdBuildRounds("pl", "SELECT tau FROM plt")},
+plord AS (SELECT (idx + 1) * (CAST(1 AS BIGINT) << lvl) - 1 AS ub, lvl, cnt FROM pl$QL),
+plcum AS MATERIALIZED (SELECT ub, lvl, CAST(sum(cnt) OVER (ORDER BY ub, lvl ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cm FROM plord),
+pllcum AS MATERIALIZED (SELECT leaf, CAST(sum(cnt) OVER (ORDER BY leaf ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM pllf),
+plr AS (SELECT (50 * (SELECT n FROM pln) + 99) // 100 AS r)
+SELECT 'n_docs' AS metric, CAST(count(*) AS BIGINT) AS value FROM sdocs
+UNION ALL SELECT 'n_tokens', CAST(count(*) AS BIGINT) FROM w
+UNION ALL SELECT 'distinct_tokens_exact', CAST(count(DISTINCT w) AS BIGINT) FROM w
+UNION ALL SELECT 'distinct_tokens_hll', $estExpr FROM sm
+UNION ALL SELECT 'distinct_tokens_kmv', CAST((CAST(kk - 1 AS HUGEINT) * ${1L << 60}) // CAST(hk AS HUGEINT) AS BIGINT) FROM hk
+UNION ALL SELECT 'top_token_cnt_exact', CAST(n_exact AS BIGINT) FROM cmest
+UNION ALL SELECT 'top_token_cnt_est', CAST(n_est AS BIGINT) FROM cmest
+UNION ALL SELECT 'doclen_p50_exact', (SELECT min(leaf) FROM pllcum WHERE c >= (SELECT r FROM plr))
+UNION ALL SELECT 'doclen_p50_est', (SELECT min(ub) FROM plcum WHERE cm >= (SELECT r FROM plr))"""),
     // the reference's range-count capability answered from SKETCH
     // state: est[lo,hi] = estLe(hi) − estLe(lo−1) over the digest,
     // ≤ 2·Levels·τ endpoint error pinned as a column, four mixed-width
     // rectangles including the canonical [10000, 30000] range-gate box
-    "quantile_range_count" -> ((s, dir) =>
+    Gate("quantile_range_count", (s, dir) =>
       QuantileSketch.rangeCountProbe(ev(s, dir), "cents",
-        Seq((10000L, 30000L), (0L, 500L), (25000L, 26000L), (50000L, 60000L)))),
+        Seq((10000L, 30000L), (0L, 500L), (25000L, 26000L), (50000L, 60000L))),
+      s"""WITH $qdBase,
+${qdBuildRounds("q", "SELECT tau FROM tc")},
+ordn AS MATERIALIZED (SELECT (idx + 1) * (CAST(1 AS BIGINT) << lvl) - 1 AS ub, cnt FROM q$QL),
+lcum AS MATERIALIZED (SELECT leaf, CAST(sum(cnt) OVER (ORDER BY leaf ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM lf),
+rng(lo, hi) AS (VALUES (10000, 30000), (0, 500), (25000, 26000), (50000, 60000)),
+est AS (SELECT CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi,
+    CAST((SELECT coalesce(sum(cnt), 0) FROM ordn WHERE ub <= rng.hi) -
+         (SELECT coalesce(sum(cnt), 0) FROM ordn WHERE ub <= rng.lo - 1) AS BIGINT) AS n_est,
+    CAST((SELECT coalesce(max(c), 0) FROM lcum WHERE leaf <= rng.hi) -
+         (SELECT coalesce(max(c), 0) FROM lcum WHERE leaf <= rng.lo - 1) AS BIGINT) AS n_exact
+  FROM rng)
+SELECT lo, hi, n_exact, n_est, abs(n_est - n_exact) AS rank_err,
+  CAST(2 * $QL * (SELECT tau FROM tc) AS BIGINT) AS bound,
+  abs(n_est - n_exact) <= 2 * $QL * (SELECT tau FROM tc) AS within
+FROM est"""),
     // the GROUP BY sketch shape: an independent q-digest per
     // event_type (its own n, τ, bound) from ONE (group, leaf)-keyed
     // shuffle — per-type percentiles, the hllDistinctBy of ranks
-    "quantile_by_type" -> ((s, dir) =>
+    Gate("quantile_by_type", (s, dir) =>
       QuantileSketch.quantilesByGroup(
         s.read.parquet(s"$dir/events.parquet")
           .select(col("event_type"),
             expr("cast(round(value*100) as bigint)").as("cents")),
-        "event_type", "cents"))
+        "event_type", "cents"),
+      s"""WITH ev AS (SELECT event_type AS g, CAST(round(value*100) AS BIGINT) AS cents FROM events),
+lf AS MATERIALIZED (SELECT g, cents AS leaf, count(*) AS cnt FROM ev GROUP BY 1, 2),
+gn AS MATERIALIZED (SELECT g, CAST(sum(cnt) AS BIGINT) AS n FROM lf GROUP BY g),
+gtau AS MATERIALIZED (SELECT g, greatest(1, n // $QK) AS tau FROM gn),
+q0 AS (SELECT g, 0 AS lvl, leaf AS idx, cnt FROM lf),
+${qdBuildRoundsGrouped("q")},
+ordn AS (SELECT g, (idx + 1) * (CAST(1 AS BIGINT) << lvl) - 1 AS ub, lvl, cnt FROM q$QL),
+cum AS MATERIALIZED (SELECT g, ub, lvl, CAST(sum(cnt) OVER (PARTITION BY g ORDER BY ub, lvl ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cm FROM ordn),
+lcum AS MATERIALIZED (SELECT g, leaf, CAST(sum(cnt) OVER (PARTITION BY g ORDER BY leaf ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM lf),
+phis(phi) AS (VALUES (1), (5), (25), (50), (75), (95), (99)),
+tgt AS (SELECT gn.g, phi, gn.n, (phi * gn.n + 99) // 100 AS r FROM gn, phis),
+sel AS (SELECT t.g, t.phi, t.n, t.r,
+    (SELECT min(leaf) FROM lcum WHERE lcum.g = t.g AND c >= t.r) AS v_exact,
+    (SELECT min(ub) FROM cum WHERE cum.g = t.g AND cum.cm >= t.r) AS v_est
+  FROM tgt t),
+errs AS (SELECT s.g, s.phi, s.n, s.v_exact, s.v_est, s.r,
+    abs((SELECT coalesce(max(c), 0) FROM lcum WHERE lcum.g = s.g AND leaf <= s.v_est) - s.r) AS rank_err
+  FROM sel s)
+SELECT e.g, CAST(e.phi AS INT) AS phi_pct, e.n, e.v_exact, e.v_est, e.rank_err,
+  CAST($QL * t.tau AS BIGINT) AS bound, e.rank_err <= $QL * t.tau AS within
+FROM errs e JOIN gtau t ON t.g = e.g""")
   )
 
   /** Event cents — the [[QuantileSketch]] leaf universe ([0, 2^16)). */
   private def ev(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")
       .select(col("event_id"), expr("cast(round(value*100) as bigint)").as("cents"))
-
-  import Sketches.{HllM, AlphaE5, CmDepth, CmWidth, HllSeed, CmSeedBase}
 
   /** Oracle twin of Sketches.h60. */
   private def oh60(e: String, seed: Int): String =
@@ -236,8 +390,6 @@ FROM errs"""
 
   // ---- KMV oracle spelling -----------------------------------------
 
-  import Sketches.{KmvK, KmvSeed}
-
   /** Bottom-k CTE over a distinct-words CTE `$wcte`: `$name(h)`,
     * plus the rank view `${name}r(rank, h)`. */
   private def kmvCte(name: String, wcte: String): String =
@@ -255,188 +407,4 @@ q0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM lf)"""
   /** Distinct-words CTE body over `sdocs`, optionally subset. */
   private def wCte(pred: String = "TRUE"): String =
     s"""(SELECT DISTINCT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs WHERE $pred)"""
-
-  val oracle: Map[String, String] = Map(
-    "kmv_sketch" ->
-      s"""WITH $sdocsCte,
-w AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs),
-${kmvCte("kmv", "w")}
-SELECT CAST(row_number() OVER (ORDER BY h) AS INT) AS rank, h FROM kmv""",
-
-    "kmv_distinct" ->
-      s"""WITH $sdocsCte,
-w AS MATERIALIZED (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs),
-${kmvCte("kmv", "w")},
-hk AS (SELECT max(h) AS hk, count(*) AS kk FROM kmv),
-ex AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS n_exact FROM w),
-est AS (SELECT CAST((CAST(kk - 1 AS HUGEINT) * ${1L << 60}) // CAST(hk AS HUGEINT) AS BIGINT) AS n_est FROM hk)
-SELECT ex.n_exact, est.n_est,
-  abs(est.n_est - ex.n_exact) * 10000 // ex.n_exact AS err_bp
-FROM ex, est""",
-
-    "kmv_jaccard" ->
-      s"""WITH $sdocsCte,
-wa AS MATERIALIZED ${wCte("doc_id % 3 IN (0, 1)")},
-wb AS MATERIALIZED ${wCte("doc_id % 3 IN (1, 2)")},
-${kmvCte("ka", "wa")},
-${kmvCte("kb", "wb")},
-mg AS MATERIALIZED (SELECT DISTINCT h FROM
-  (SELECT h FROM ka UNION ALL SELECT h FROM kb) ORDER BY h LIMIT $KmvK),
-ni AS (SELECT CAST(count(*) AS BIGINT) AS n_inter FROM mg
-  WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)),
-ku AS (SELECT count(*) AS k_used FROM mg),
-ex AS (SELECT CAST(
-    (SELECT count(*) FROM (SELECT w FROM wa INTERSECT SELECT w FROM wb)) * 10000
-    // (SELECT count(*) FROM (SELECT w FROM wa UNION SELECT w FROM wb))
-  AS BIGINT) AS j_exact_e4)
-SELECT ex.j_exact_e4, CAST(n_inter * 10000 // k_used AS BIGINT) AS j_est_e4, n_inter
-FROM ex, ni, ku""",
-
-    "profile_docs" ->
-      s"""WITH $regCte,
-sm AS (SELECT sum(CAST(1 AS BIGINT) << (53 - rho)) AS s FROM regs),
-${kmvCte("kmv", "w")},
-hk AS (SELECT max(h) AS hk, count(*) AS kk FROM kmv),
-tf AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM w GROUP BY w),
-cells AS MATERIALIZED (SELECT t.range AS depth,
-    xor(${oh60("w", CmSeedBase)}, ${oh60("w", CmSeedBase + 1)} * t.range) % $CmWidth AS bucket,
-    sum(cnt) AS cnt
-  FROM tf, range(0, $CmDepth) t GROUP BY 1, 2),
-top1 AS (SELECT w, cnt AS n_exact FROM tf ORDER BY cnt DESC, w LIMIT 1),
-probes AS (SELECT w, n_exact, t.range AS depth,
-    xor(${oh60("w", CmSeedBase)}, ${oh60("w", CmSeedBase + 1)} * t.range) % $CmWidth AS bucket
-  FROM top1, range(0, $CmDepth) t),
-cmest AS (SELECT min(c.cnt) AS n_est, max(p.n_exact) AS n_exact
-  FROM probes p JOIN cells c ON c.depth = p.depth AND c.bucket = p.bucket),
-pllf AS MATERIALIZED (SELECT CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS leaf, count(*) AS cnt FROM sdocs GROUP BY 1),
-pln AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM pllf),
-plt AS (SELECT greatest(1, (SELECT n FROM pln) // $QK) AS tau),
-pl0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM pllf),
-${qdBuildRounds("pl", "SELECT tau FROM plt")},
-plord AS (SELECT (idx + 1) * (CAST(1 AS BIGINT) << lvl) - 1 AS ub, lvl, cnt FROM pl$QL),
-plcum AS MATERIALIZED (SELECT ub, lvl, CAST(sum(cnt) OVER (ORDER BY ub, lvl ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cm FROM plord),
-pllcum AS MATERIALIZED (SELECT leaf, CAST(sum(cnt) OVER (ORDER BY leaf ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM pllf),
-plr AS (SELECT (50 * (SELECT n FROM pln) + 99) // 100 AS r)
-SELECT 'n_docs' AS metric, CAST(count(*) AS BIGINT) AS value FROM sdocs
-UNION ALL SELECT 'n_tokens', CAST(count(*) AS BIGINT) FROM w
-UNION ALL SELECT 'distinct_tokens_exact', CAST(count(DISTINCT w) AS BIGINT) FROM w
-UNION ALL SELECT 'distinct_tokens_hll', $estExpr FROM sm
-UNION ALL SELECT 'distinct_tokens_kmv', CAST((CAST(kk - 1 AS HUGEINT) * ${1L << 60}) // CAST(hk AS HUGEINT) AS BIGINT) FROM hk
-UNION ALL SELECT 'top_token_cnt_exact', CAST(n_exact AS BIGINT) FROM cmest
-UNION ALL SELECT 'top_token_cnt_est', CAST(n_est AS BIGINT) FROM cmest
-UNION ALL SELECT 'doclen_p50_exact', (SELECT min(leaf) FROM pllcum WHERE c >= (SELECT r FROM plr))
-UNION ALL SELECT 'doclen_p50_est', (SELECT min(ub) FROM plcum WHERE cm >= (SELECT r FROM plr))""",
-
-    "quantile_range_count" ->
-      s"""WITH $qdBase,
-${qdBuildRounds("q", "SELECT tau FROM tc")},
-ordn AS MATERIALIZED (SELECT (idx + 1) * (CAST(1 AS BIGINT) << lvl) - 1 AS ub, cnt FROM q$QL),
-lcum AS MATERIALIZED (SELECT leaf, CAST(sum(cnt) OVER (ORDER BY leaf ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM lf),
-rng(lo, hi) AS (VALUES (10000, 30000), (0, 500), (25000, 26000), (50000, 60000)),
-est AS (SELECT CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi,
-    CAST((SELECT coalesce(sum(cnt), 0) FROM ordn WHERE ub <= rng.hi) -
-         (SELECT coalesce(sum(cnt), 0) FROM ordn WHERE ub <= rng.lo - 1) AS BIGINT) AS n_est,
-    CAST((SELECT coalesce(max(c), 0) FROM lcum WHERE leaf <= rng.hi) -
-         (SELECT coalesce(max(c), 0) FROM lcum WHERE leaf <= rng.lo - 1) AS BIGINT) AS n_exact
-  FROM rng)
-SELECT lo, hi, n_exact, n_est, abs(n_est - n_exact) AS rank_err,
-  CAST(2 * $QL * (SELECT tau FROM tc) AS BIGINT) AS bound,
-  abs(n_est - n_exact) <= 2 * $QL * (SELECT tau FROM tc) AS within
-FROM est""",
-
-    "quantile_by_type" ->
-      s"""WITH ev AS (SELECT event_type AS g, CAST(round(value*100) AS BIGINT) AS cents FROM events),
-lf AS MATERIALIZED (SELECT g, cents AS leaf, count(*) AS cnt FROM ev GROUP BY 1, 2),
-gn AS MATERIALIZED (SELECT g, CAST(sum(cnt) AS BIGINT) AS n FROM lf GROUP BY g),
-gtau AS MATERIALIZED (SELECT g, greatest(1, n // $QK) AS tau FROM gn),
-q0 AS (SELECT g, 0 AS lvl, leaf AS idx, cnt FROM lf),
-${qdBuildRoundsGrouped("q")},
-ordn AS (SELECT g, (idx + 1) * (CAST(1 AS BIGINT) << lvl) - 1 AS ub, lvl, cnt FROM q$QL),
-cum AS MATERIALIZED (SELECT g, ub, lvl, CAST(sum(cnt) OVER (PARTITION BY g ORDER BY ub, lvl ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cm FROM ordn),
-lcum AS MATERIALIZED (SELECT g, leaf, CAST(sum(cnt) OVER (PARTITION BY g ORDER BY leaf ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c FROM lf),
-phis(phi) AS (VALUES (1), (5), (25), (50), (75), (95), (99)),
-tgt AS (SELECT gn.g, phi, gn.n, (phi * gn.n + 99) // 100 AS r FROM gn, phis),
-sel AS (SELECT t.g, t.phi, t.n, t.r,
-    (SELECT min(leaf) FROM lcum WHERE lcum.g = t.g AND c >= t.r) AS v_exact,
-    (SELECT min(ub) FROM cum WHERE cum.g = t.g AND cum.cm >= t.r) AS v_est
-  FROM tgt t),
-errs AS (SELECT s.g, s.phi, s.n, s.v_exact, s.v_est, s.r,
-    abs((SELECT coalesce(max(c), 0) FROM lcum WHERE lcum.g = s.g AND leaf <= s.v_est) - s.r) AS rank_err
-  FROM sel s)
-SELECT e.g, CAST(e.phi AS INT) AS phi_pct, e.n, e.v_exact, e.v_est, e.rank_err,
-  CAST($QL * t.tau AS BIGINT) AS bound, e.rank_err <= $QL * t.tau AS within
-FROM errs e JOIN gtau t ON t.g = e.g""",
-
-    "quantile_digest" ->
-      s"""WITH $qdBase,
-${qdBuildRounds("q", "SELECT tau FROM tc")}
-SELECT CAST(lvl AS INT) AS lvl, idx, CAST(cnt AS BIGINT) AS cnt FROM q$QL""",
-
-    "quantile_sketch" ->
-      s"""WITH $qdBase,
-${qdBuildRounds("q", "SELECT tau FROM tc")},
-${qdProbeTail(s"q$QL", s"$QL * (SELECT tau FROM tc)")}""",
-
-    "quantile_merge" ->
-      s"""WITH ev AS (SELECT event_id, CAST(round(value*100) AS BIGINT) AS cents FROM events),
-lfa AS MATERIALIZED (SELECT cents AS leaf, count(*) AS cnt FROM ev WHERE event_id % 2 = 0 GROUP BY 1),
-lfb AS MATERIALIZED (SELECT cents AS leaf, count(*) AS cnt FROM ev WHERE event_id % 2 = 1 GROUP BY 1),
-na AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n FROM lfa),
-nb AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n FROM lfb),
-ta AS (SELECT greatest(1, (SELECT n FROM na) // $QK) AS tau),
-tb AS (SELECT greatest(1, (SELECT n FROM nb) // $QK) AS tau),
-a0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM lfa),
-${qdBuildRounds("a", "SELECT tau FROM ta")},
-b0 AS (SELECT 0 AS lvl, leaf AS idx, cnt FROM lfb),
-${qdBuildRounds("b", "SELECT tau FROM tb")},
-lf AS MATERIALIZED (SELECT cents AS leaf, count(*) AS cnt FROM ev GROUP BY 1),
-nn AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM lf),
-tm AS (SELECT greatest(1, (SELECT n FROM nn) // $QK) AS tau),
-m0 AS (SELECT lvl, idx, sum(cnt) AS cnt FROM
-  (SELECT * FROM a$QL UNION ALL SELECT * FROM b$QL) GROUP BY 1, 2),
-${qdMergeRounds("m", "SELECT tau FROM tm")},
-${qdProbeTail(s"m$QL",
-        s"$QL * ((SELECT tau FROM ta) + (SELECT tau FROM tb) + (SELECT tau FROM tm))")}""",
-
-    "hll_registers" ->
-      s"""WITH $regCte
-SELECT CAST(reg AS BIGINT) AS reg, CAST(rho AS INT) AS rho FROM regs""",
-
-    "hll_distinct" ->
-      s"""WITH $regCte,
-sm AS (SELECT sum(CAST(1 AS BIGINT) << (53 - rho)) AS s FROM regs),
-est AS (SELECT $estExpr AS n_est FROM sm),
-ex AS (SELECT CAST(count(DISTINCT w) AS BIGINT) AS n_exact FROM w)
-SELECT ex.n_exact, est.n_est,
-  abs(est.n_est - ex.n_exact) * 10000 // ex.n_exact AS err_bp
-FROM ex, est""",
-
-    "hll_by_source" ->
-      s"""WITH $sdocsCte,
-w AS (SELECT source, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM sdocs),
-hh AS (SELECT source, ${oh60("w", HllSeed)} AS h FROM w),
-rr AS (SELECT source, h % $HllM AS reg, h // 256 AS rest FROM hh),
-rho AS (SELECT source, reg, CASE WHEN rest = 0 THEN 53 ELSE 53 - len(bin(rest)) END AS rho FROM rr),
-pres AS (SELECT source, reg, max(rho) AS rho FROM rho GROUP BY source, reg),
-sm AS (SELECT source,
-    sum(CAST(1 AS BIGINT) << (53 - rho)) + ($HllM - count(*)) * (CAST(1 AS BIGINT) << 53) AS s
-  FROM pres GROUP BY source),
-est AS (SELECT source, $estExpr AS n_est FROM sm),
-ex AS (SELECT source, CAST(count(DISTINCT w) AS BIGINT) AS n_exact FROM w GROUP BY source)
-SELECT ex.source, ex.n_exact, est.n_est FROM ex JOIN est ON est.source = ex.source""",
-
-    "cms_counters" ->
-      s"""WITH $cmsCte
-SELECT CAST(depth AS BIGINT) AS depth, CAST(bucket AS BIGINT) AS bucket, cnt FROM counters""",
-
-    "cms_heavy_hitters" ->
-      s"""WITH $cmsCte,
-topk AS (SELECT w, cnt AS n_exact FROM tf ORDER BY cnt DESC, w LIMIT 20),
-probes AS (SELECT w, n_exact, t.range AS depth,
-    xor(${oh60("w", CmSeedBase)}, ${oh60("w", CmSeedBase + 1)} * t.range) % $CmWidth AS bucket
-  FROM topk, range(0, $CmDepth) t)
-SELECT p.w AS word, p.n_exact, min(c.cnt) AS n_est
-FROM probes p JOIN counters c ON c.depth = p.depth AND c.bucket = p.bucket
-GROUP BY p.w, p.n_exact"""
-  )
 }

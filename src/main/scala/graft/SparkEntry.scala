@@ -1,9 +1,22 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query inventories live in per-domain registries (PointQueries, …);
-  * this object aggregates them. */
+/** One oracle-gated query: `run(session, sfDir)` answers over the driver
+  * tables under `sfDir`, and `oracleSql` is the equivalent ANSI SQL that
+  * DuckDB runs over the same parquet tables (registered as views named
+  * after their files) to gate that answer. */
+final case class Gate(key: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+object Gate {
+  /** The oracle SQL of gate `key` in `gates`, for a gate whose oracle is
+    * another gate's. */
+  def sql(gates: Seq[Gate], key: String): String =
+    gates.find(_.key == key).getOrElse(throw new NoSuchElementException(key)).oracleSql
+}
+
+/** Driver contract: every gate by key, its `(session, sfDir)` run, and
+  * its DuckDB oracle SQL. Gates are declared per domain (PointQueries,
+  * …); this object concatenates them into one registry. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -12,12 +25,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("knn")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    PointQueries.queries ++ RelationalQueries.queries ++ TextQueries.queries ++ EmbeddingQueries.queries ++ MultimodalQueries.queries ++ StreamingQueries.queries ++ SqlQueries.queries ++ CurationQueries.queries ++ HtmlQueries.queries ++ ClassifierQueries.queries ++ SketchQueries.queries ++ FusionQueries.queries ++ AnalyticsQueries.queries
+  /** Each domain's gate list. */
+  def domains: Seq[Seq[Gate]] = Seq(PointQueries.gates, RelationalQueries.gates,
+    TextQueries.gates, EmbeddingQueries.gates, MultimodalQueries.gates,
+    StreamingQueries.gates, SqlQueries.gates, CurationQueries.gates,
+    HtmlQueries.gates, ClassifierQueries.gates, SketchQueries.gates,
+    FusionQueries.gates, AnalyticsQueries.gates)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** The registry; a key declared twice fails it. */
+  lazy val gates: Seq[Gate] = {
+    val all = domains.flatten
+    val repeated = all.groupBy(_.key).collect { case (k, gs) if gs.size > 1 => k }
+    require(repeated.isEmpty, s"gate keys declared more than once: ${repeated.mkString(", ")}")
+    all
+  }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.key -> g.run).toMap
+
   def oracleSql: Map[String, String] =
-    PointQueries.oracle ++ RelationalQueries.oracle ++ TextQueries.oracle ++ EmbeddingQueries.oracle ++ MultimodalQueries.oracle ++ StreamingQueries.oracle ++ SqlQueries.oracle ++ CurationQueries.oracle ++ HtmlQueries.oracle ++ ClassifierQueries.oracle ++ SketchQueries.oracle ++ FusionQueries.oracle ++ AnalyticsQueries.oracle
+    gates.map(g => g.key -> g.oracleSql).toMap
 }

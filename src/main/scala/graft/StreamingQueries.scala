@@ -29,8 +29,11 @@ object StreamingQueries {
   // same time window as the batch range_query_3d gate
   private val RT3 = IntRange(500, 300000)
 
-  private val gates: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_ingest_range" -> ((s, dir) => {
+  /** The streaming gates, each run bound to its [[streamSession]] clone
+    * (the staging/read-back batch work inside the gates is tiny —
+    * coalesced writes and final aggregates — so it runs there too). */
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("stream_ingest_range", (s, dir) => {
       import org.apache.hadoop.fs.{FileUtil, Path}
       // the file stream source wants a DIRECTORY to watch; the source
       // table may itself be a file OR a directory-shaped parquet dataset
@@ -61,7 +64,14 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      s"""SELECT CAST(count(*) AS BIGINT) AS cnt,
+  CAST(sum(event_id) AS BIGINT) AS id_sum,
+  CAST(sum(CAST(floor(value*100) AS BIGINT)) AS BIGINT) AS x_sum,
+  CAST(sum(user_id) AS BIGINT) AS y_sum
+FROM events
+WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
+  AND user_id BETWEEN ${RY.min} AND ${RY.max}"""),
 
     // The same online ingest loop over the 3-D OCTREE layout
     // (StreamingIngest.EventsLayout3D): foreachBatch two-phase publish,
@@ -70,7 +80,7 @@ object StreamingQueries {
     // SQL on the source — proves the whole put path is key-agnostic and
     // the spatio-temporal store has the same online write surface as
     // the 2-D store (the reference's put path, lifted).
-    "stream_ingest_box3" -> ((s, dir) => {
+    Gate("stream_ingest_box3", (s, dir) => {
       import org.apache.hadoop.fs.{FileUtil, Path}
       val tmp = Files.createTempDirectory("graft-stream-gate3").toString
       val conf = s.sparkContext.hadoopConfiguration
@@ -96,7 +106,16 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      s"""SELECT CAST(count(*) AS BIGINT) AS cnt,
+  CAST(sum(event_id) AS BIGINT) AS id_sum,
+  CAST(sum(CAST(floor(value*100) AS BIGINT)) AS BIGINT) AS x_sum,
+  CAST(sum(user_id) AS BIGINT) AS y_sum,
+  CAST(sum(event_id % 2097152) AS BIGINT) AS t_sum
+FROM events
+WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
+  AND user_id BETWEEN ${RY.min} AND ${RY.max}
+  AND (event_id % 2097152) BETWEEN ${RT3.min} AND ${RT3.max}"""),
 
     // Watermarked windowed aggregation in APPEND mode — the canonical
     // streaming-analytics shape, gated against the batch definition.
@@ -107,7 +126,7 @@ object StreamingQueries {
     // sink. The result is therefore exactly the batch hourly rollup —
     // unless watermark bookkeeping, window assignment, or append-mode
     // finalization is broken, which is the gate.
-    "stream_hourly" -> ((s, dir) => {
+    Gate("stream_hourly", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-hourly").toString
       val src = graft.sources.EventTime.events(s, dir)
         .select(expr("timestamp_micros(div(ts, 1000))").as("event_time"),
@@ -143,7 +162,9 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the batch hourly rollup — identical to events_hourly's oracle
+      Gate.sql(RelationalQueries.gates, "events_hourly")),
 
     // Sliding (OVERLAPPING) windowed aggregation in append mode: every
     // event lands in four 1h/15m windows; the sentinel advances the
@@ -152,7 +173,7 @@ object StreamingQueries {
     // The batch oracle replays the overlap by exploding each event
     // into its four window starts — streaming window ASSIGNMENT,
     // watermark bookkeeping, and append finalization are all gated.
-    "stream_sliding" -> ((s, dir) => {
+    Gate("stream_sliding", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-sliding").toString
       val src = graft.sources.EventTime.events(s, dir)
         .select(expr("timestamp_micros(div(ts, 1000))").as("event_time"),
@@ -189,7 +210,16 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // batch replay of the 1h/15m sliding assignment: each event
+      // explodes into its four window starts
+      """WITH e AS (SELECT epoch_ns(ts) // 1000000000 AS tsec, event_type,
+    CAST(round(value*100) AS BIGINT) AS cents FROM events),
+w AS (SELECT ((tsec // 900) - k.k) * 900 AS win_start, event_type, cents
+  FROM e, (SELECT unnest(range(0, 4)) AS k) k)
+SELECT win_start, event_type, count(*) AS cnt,
+  CAST(sum(cents) AS BIGINT) AS sum_cents
+FROM w GROUP BY win_start, event_type"""),
 
     // Online web-ingest classification: the capstone composition of
     // the web-ingest chain — raw HTML pages arrive as microbatches;
@@ -202,7 +232,7 @@ object StreamingQueries {
     // with zero state; only accepted documents (margin > 0) are
     // emitted. The oracle replays training doc-by-doc and scores the
     // same extracted text in batch.
-    "stream_classify" -> ((s, dir) => {
+    Gate("stream_classify", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-classify").toString
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val w = Perceptron.ipmTrain(docs)
@@ -230,7 +260,17 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      s"""${Perceptron.oracleCore()},
+h AS (SELECT doc_id, ${HtmlQueries.FixtureHtmlSql} AS html FROM documents),
+xt AS (SELECT doc_id,
+    regexp_split_to_array(lower(trim(${Html.stripSql("html", duck = true)})), '\\s+') AS ws
+  FROM h),
+sc AS (SELECT xt.doc_id,
+    CAST(m.w[${Perceptron.Buckets + 1}] + list_sum(list_transform(xt.ws,
+      t -> m.w[CAST(${Perceptron.bucketDuck(Perceptron.Buckets)} + 1 AS BIGINT)])) AS BIGINT) AS margin
+  FROM xt, mix${Perceptron.Epochs} m)
+SELECT doc_id, margin FROM sc WHERE margin > 0"""),
 
     // Stateful streaming dedup: dropDuplicates state must survive
     // across microbatches — the source is rewritten as several files
@@ -240,7 +280,7 @@ object StreamingQueries {
     // plain batch distinct over the source). Only key columns flow
     // into the dedup, so the surviving-row arrival order — the one
     // nondeterministic degree of freedom — cannot affect the result.
-    "stream_dedup" -> ((s, dir) => {
+    Gate("stream_dedup", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-dedup").toString
       s.read.parquet(s"$dir/events.parquet")
         .select("user_id", "event_type")
@@ -263,7 +303,9 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      """SELECT event_type, count(DISTINCT user_id) AS n_users
+FROM events GROUP BY event_type"""),
 
     // Streaming dedup through dropDuplicatesWithinWatermark — the
     // PRODUCTION dedup shape whose state store is BOUNDED by the
@@ -278,7 +320,7 @@ object StreamingQueries {
     // original event time makes re-emission impossible), so the gate
     // pins exactly the batch distinct over the source. Double-emission
     // from lost/evicted state inflates n_users and fails the oracle.
-    "stream_dedup_wm" -> ((s, dir) => {
+    Gate("stream_dedup_wm", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-dedupwm").toString
       val ev = graft.sources.EventTime.events(s, dir)
         .select(col("user_id"), col("event_type"),
@@ -325,7 +367,11 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the deduped union IS the source's distinct key set: the injected
+      // within-watermark duplicates must all be dropped by state
+      """SELECT event_type, count(DISTINCT user_id) AS n_users
+FROM events GROUP BY event_type"""),
 
     // COMPACTION EQUIVALENCE — the property the reference's
     // non-transactional split famously lacks (SURVEY §3.1): a file-
@@ -342,7 +388,7 @@ object StreamingQueries {
     // the pre row still matches — the diff pins the rewrite itself.
     // Aggregates pin the row multiset (range rectangle count/sums,
     // whole-store count/sum, kNN id+dist2 sums), not just counts.
-    "compact_equiv" -> ((s, dir) => {
+    Gate("compact_equiv", (s, dir) => {
       import org.apache.hadoop.fs.{FileUtil, Path}
       val tmp = Files.createTempDirectory("graft-compact-equiv").toString
       val conf = s.sparkContext.hadoopConfiguration
@@ -409,7 +455,29 @@ object StreamingQueries {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(Seq(pre, post)).asJava),
         outSchema)
-    }),
+    },
+      // compaction is result-invisible: the SOURCE-table aggregates hold
+      // for BOTH phases — a lost/duplicated/corrupted row after the
+      // rewrite breaks only the post row, pinning the rewrite itself
+      s"""WITH pts AS MATERIALIZED (
+  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events),
+r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
+    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
+    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
+  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
+    AND y BETWEEN ${RY.min} AND ${RY.max}),
+t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
+k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
+    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
+  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
+        FROM pts ORDER BY d2, id LIMIT 10)),
+phases(phase) AS (VALUES ('pre'), ('post'))
+SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
+  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
+FROM phases, r, t, k"""),
 
     // Watermarked STREAM-STREAM inner join — the attribution shape
     // (impressions × conversions within a bounded lag) with BOTH sides
@@ -439,7 +507,7 @@ object StreamingQueries {
     // = the batch interval join over the full union: a lost pair
     // (over-eager eviction), duplicate pair (replayed emission), or
     // late-filtered row (delay bookkeeping) each breaks the hash.
-    "stream_join" -> ((s, dir) => {
+    Gate("stream_join", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-join").toString
       val ev = graft.sources.EventTime.events(s, dir)
         .filter(col("event_type").isin("view", "click", "purchase"))
@@ -508,7 +576,29 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the batch interval join over the full union: every within-window
+      // (impression, conversion) pair exactly once — late arrivals, state
+      // retention, and watermark bookkeeping all collapse into multiset
+      // equality with this one-shot join
+      // tns is FLOORED to microseconds: the streaming side joins on
+      // event_time = timestamp_micros(ts div 1000), so the oracle must
+      // compare at the same granularity or a ts with sub-µs residue
+      // within 1 µs of the 6 h window edge would flip pair membership
+      """WITH e AS MATERIALIZED (
+  SELECT user_id, event_type, epoch_ns(ts) // 1000 * 1000 AS tns FROM events
+  WHERE event_type IN ('view', 'click', 'purchase')),
+imp AS (SELECT user_id, tns AS imp_tns FROM e WHERE event_type = 'view'),
+conv AS (SELECT user_id, event_type, tns AS conv_tns FROM e
+  WHERE event_type <> 'view')
+SELECT conv.event_type AS conv_type,
+  count(*) AS n_pairs,
+  CAST(count(DISTINCT conv.user_id) AS BIGINT) AS n_users,
+  CAST(sum((conv.conv_tns - imp.imp_tns) // 1000000000) AS BIGINT) AS lag_s_sum
+FROM imp JOIN conv ON imp.user_id = conv.user_id
+  AND conv.conv_tns >= imp.imp_tns
+  AND conv.conv_tns <= imp.imp_tns + 21600000000000
+GROUP BY conv_type"""),
 
     // LEFT-OUTER watermarked stream-stream join — the semantics the
     // inner gate cannot reach: an impression with NO conversion inside
@@ -527,7 +617,7 @@ object StreamingQueries {
     // premature null emission (a null row for an impression whose
     // window could still match) or a swallowed unmatched impression
     // both break the hash.
-    "stream_join_outer" -> ((s, dir) => {
+    Gate("stream_join_outer", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-joinout").toString
       val ev = graft.sources.EventTime.events(s, dir)
         .filter(col("event_type").isin("view", "click", "purchase"))
@@ -610,7 +700,28 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the batch LEFT join over the real rows: sentinels forced every
+      // unmatched impression's null row out before the stream stopped,
+      // so the emitted multiset equals the one-shot outer join exactly
+      // same µs floor as stream_join — both engines compare at the
+      // granularity the streaming clock actually carries
+      """WITH e AS MATERIALIZED (
+  SELECT user_id, event_type, epoch_ns(ts) // 1000 * 1000 AS tns FROM events
+  WHERE event_type IN ('view', 'click', 'purchase')),
+imp AS (SELECT user_id, tns AS imp_tns FROM e WHERE event_type = 'view'),
+conv AS (SELECT user_id, event_type, tns AS conv_tns FROM e
+  WHERE event_type <> 'view'),
+lj AS (SELECT imp.user_id, conv.event_type AS conv_type,
+    conv.conv_tns - imp.imp_tns AS lag_ns
+  FROM imp LEFT JOIN conv ON imp.user_id = conv.user_id
+    AND conv.conv_tns >= imp.imp_tns
+    AND conv.conv_tns <= imp.imp_tns + 21600000000000)
+SELECT coalesce(conv_type, '__none') AS conv_type,
+  count(*) AS n_pairs,
+  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+  CAST(coalesce(sum(lag_ns // 1000000000), 0) AS BIGINT) AS lag_s_sum
+FROM lj GROUP BY 1"""),
 
     // Streaming corpus curation: the documents table arrives as four
     // microbatches; each batch passes the per-row quality gate (pure
@@ -624,7 +735,7 @@ object StreamingQueries {
     // into the dedup, so arrival order cannot affect the result. (A
     // production stream would add a watermark to bound the state store;
     // the gate's corpus is finite.)
-    "stream_curate" -> ((s, dir) => {
+    Gate("stream_curate", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-curate").toString
       s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text")
@@ -651,7 +762,14 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the batch spelling of the streamed gate: distinct whitespace-
+      // collapsed fingerprints of the quality-passing documents
+      """SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+FROM documents
+WHERE len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 30
+  AND (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 500"""),
 
     // Streaming data-quality monitor: each microbatch appends its
     // per-rule violation counts ([[DataQuality.ruleViolations]] — one
@@ -675,7 +793,7 @@ object StreamingQueries {
     // doesn't move ('replayed' phase). The %10 keys resurrect through
     // the seq-1 marker, then the %30 subset dies again at seq 3 —
     // the full marker/put sequence interplay, online.
-    "stream_takedown" -> ((s, dir) => {
+    Gate("stream_takedown", (s, dir) => {
       import org.apache.hadoop.fs.Path
       val tmp = Files.createTempDirectory("graft-stream-takedown").toString
       val base = PointStore.points(
@@ -739,7 +857,32 @@ object StreamingQueries {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(
             Seq(streamed, replayed)).asJava), outSchema)
-    }),
+    },
+      // the live multiset after the streamed marker history: base rows
+      // survive %5 (seq 1) and %3 (seq 3); the %10 re-puts (seq 2)
+      // resurrect through seq 1 but die under seq 3 where id % 3 = 0 —
+      // one row per phase, and redelivered markers must not move it
+      s"""WITH pts AS MATERIALIZED (
+  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events
+  WHERE (event_id % 5 <> 0 AND event_id % 3 <> 0)
+     OR (event_id % 10 = 0 AND event_id % 3 <> 0)),
+r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
+    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
+    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
+  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
+    AND y BETWEEN ${RY.min} AND ${RY.max}),
+t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
+k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
+    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
+  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
+        FROM pts ORDER BY d2, id LIMIT 10)),
+phases(phase) AS (VALUES ('streamed'), ('replayed'))
+SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
+  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
+FROM phases, r, t, k"""),
 
     // region takedown ONLINE: the file stream delivers two rectangle
     // markers (rect A at seq 1, rect B at seq 3) that foreachBatch
@@ -748,7 +891,7 @@ object StreamingQueries {
     // but die where rect B covers them; redelivering rect A after the
     // stream must not move the live view (markers commute and
     // duplicates are invisible — at-least-once in, exactly-once out)
-    "stream_takedown_range" -> ((s, dir) => {
+    Gate("stream_takedown_range", (s, dir) => {
       import org.apache.hadoop.fs.Path
       val tmp = Files.createTempDirectory("graft-stream-rtakedown").toString
       val base = PointStore.points(
@@ -818,9 +961,37 @@ object StreamingQueries {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(
             Seq(streamed, replayed)).asJava), outSchema)
-    }),
+    },
+      // the live multiset after the streamed RECTANGLE-marker history:
+      // base rows (seq 0) survive outside rects A(seq 1) and B(seq 3);
+      // the %10 re-puts (seq 2) resurrect through A but die inside B —
+      // and the redelivered rect-A batch must not move any number
+      s"""WITH pts AS MATERIALIZED (
+  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
+    CAST(user_id AS BIGINT) AS y FROM events),
+live AS MATERIALIZED (
+  SELECT * FROM pts WHERE CASE WHEN id % 10 = 0
+    THEN NOT (x BETWEEN 12000 AND 40000 AND y BETWEEN 50 AND 130)
+    ELSE NOT (x BETWEEN 0 AND 15000 AND y BETWEEN 0 AND 70)
+     AND NOT (x BETWEEN 12000 AND 40000 AND y BETWEEN 50 AND 130) END),
+r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
+    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
+    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
+  FROM live WHERE x BETWEEN ${RX.min} AND ${RX.max}
+    AND y BETWEEN ${RY.min} AND ${RY.max}),
+t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
+    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM live),
+k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
+    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
+  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
+        FROM live ORDER BY d2, id LIMIT 10)),
+phases(phase) AS (VALUES ('streamed'), ('replayed'))
+SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
+  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
+FROM phases, r, t, k"""),
 
-    "stream_dq" -> ((s, dir) => {
+    Gate("stream_dq", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-dq").toString
       s.read.parquet(s"$dir/events.parquet")
         .select("event_id", "event_type", "value")
@@ -853,7 +1024,15 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // additive merge law: per-batch rule counts summed over the log
+      // must equal the one-pass batch audit over the union
+      """SELECT 'events.value_nonpos' AS check_name,
+  CAST(coalesce(sum(CASE WHEN value <= 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_bad FROM events
+UNION ALL SELECT 'events.value_cents_gt_9000',
+  CAST(coalesce(sum(CASE WHEN CAST(round(value*100) AS BIGINT) > 9000 THEN 1 ELSE 0 END), 0) AS BIGINT) FROM events
+UNION ALL SELECT 'events.error_events',
+  CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END), 0) AS BIGINT) FROM events"""),
 
     // Streaming heavy hitters: each microbatch writes its PARTIAL
     // Count-Min counter table to a batch-id-keyed log directory
@@ -862,7 +1041,7 @@ object StreamingQueries {
     // merge-then-probe must equal the one-pass batch sketch. The
     // trending-terms loop: O(d·w) state per batch, exact top-k probed
     // through the merged sketch.
-    "stream_topk" -> ((s, dir) => {
+    Gate("stream_topk", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-topk").toString
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("text", expr(SketchQueries.AugSql))
@@ -893,7 +1072,9 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the one-pass batch sketch probe — equality IS the CM merge law
+      Gate.sql(SketchQueries.gates, "cms_heavy_hitters")),
 
     // Streaming distinct-count sketch: the documents corpus arrives as
     // four microbatches; each batch appends its PARTIAL HyperLogLog
@@ -917,7 +1098,7 @@ object StreamingQueries {
     // reach the sink. Emitted sessions must therefore equal the batch
     // gap-and-islands oracle exactly — lost state splits sessions,
     // leaked state merges them, and either fails the hash.
-    "stream_sessionize" -> ((s, dir) => {
+    Gate("stream_sessionize", (s, dir) => {
       val gap = 86400L * 1000000000L
       val tmp = Files.createTempDirectory("graft-stream-sess").toString
       val ev = graft.sources.EventTime.events(s, dir)
@@ -958,7 +1139,10 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the batch gap-and-islands twin: the state machine must emit
+      // every real session exactly once (sentinels close the open tails)
+      Gate.sql(RelationalQueries.gates, "sessionize")),
 
     // Streaming quantile-sketch maintenance: the events corpus arrives
     // as four microbatches; each batch writes its PARTIAL leaf
@@ -969,7 +1153,7 @@ object StreamingQueries {
     // compressed digest is BIT-IDENTICAL to the one-pass batch build:
     // the oracle is exactly the batch quantile_sketch replay, and
     // equality IS the merge law.
-    "stream_quantiles" -> ((s, dir) => {
+    Gate("stream_quantiles", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-quant").toString
       s.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"), expr("cast(round(value*100) as bigint)").as("cents"))
@@ -995,7 +1179,10 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the one-pass batch digest probe — summed leaf partials compress
+      // to the identical digest, so equality IS the quantile merge law
+      Gate.sql(SketchQueries.gates, "quantile_sketch")),
 
     // Streaming KMV maintenance: per-batch bottom-k partials appended
     // to a sketch log; the read side dedups hash values and re-takes
@@ -1005,7 +1192,7 @@ object StreamingQueries {
     // is replay-safe because the union dedups by value (the KMV
     // analog of HLL's max-idempotence). Oracle = the batch kmv_sketch
     // replay itself.
-    "stream_kmv" -> ((s, dir) => {
+    Gate("stream_kmv", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-kmv").toString
       s.read.parquet(s"$dir/documents.parquet")
         .withColumn("text", expr(SketchQueries.AugSql))
@@ -1031,7 +1218,9 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the batch bottom-k itself — merged per-batch partials equal it
+      Gate.sql(SketchQueries.gates, "kmv_sketch")),
 
     // ONLINE graph maintenance: connected-component labels kept
     // current as edge batches stream in. State is a PARQUET label
@@ -1043,7 +1232,7 @@ object StreamingQueries {
     // delivery nets exactly-once state). The final label table must
     // equal the one-shot full-union flood: a dropped batch, doubled
     // fold, or contraction error each breaks the hash.
-    "stream_cc" -> ((s, dir) => {
+    Gate("stream_cc", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-cc").toString
       // prior graph = the block cycles; its labels seed state b0
       graft.operators.LinkGraph.components(HtmlQueries.ccPriorEdges(s, dir))
@@ -1109,7 +1298,16 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the one-shot full-union flood folded to its component roster —
+      // the streamed label state's final version must equal it exactly,
+      // both before and after superseded-version compaction
+      s"""WITH base AS MATERIALIZED (${Gate.sql(HtmlQueries.gates, "cc_incremental")}),
+agg AS (SELECT component, count(*) AS n_members,
+    CAST(min(v) AS BIGINT) AS min_v, CAST(sum(v) AS BIGINT) AS v_sum
+  FROM base GROUP BY 1),
+phases(phase) AS (VALUES ('pre'), ('post'))
+SELECT phase, component, n_members, min_v, v_sum FROM phases, agg"""),
 
     // ONLINE inverted-index maintenance — the reference's raison
     // d'être (continuous index updates) on the text surface: the
@@ -1122,7 +1320,7 @@ object StreamingQueries {
     // a lost batch, doubled replay, or stats drift (avgdl is derived
     // by ONE truncating division over the summed partials — per-batch
     // truncation would diverge) each breaks the hash.
-    "stream_postings" -> ((s, dir) => {
+    Gate("stream_postings", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-postings").toString
       val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
@@ -1170,7 +1368,19 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the one-shot retrieval replay, aggregated and emitted once per
+      // serving phase: the streamed store's answer must collapse to the
+      // same row BOTH before and after compaction (the compact_equiv
+      // discipline on the text index)
+      s"""WITH base AS MATERIALIZED (${TextQueries.bm25DocOracleSql}),
+agg AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+    CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
+    CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
+    CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum
+  FROM base),
+phases(phase) AS (VALUES ('streamed'), ('compacted'))
+SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, agg"""),
 
     // TIME TRAVEL over the ONLINE-built text index: the corpus arrives
     // as three doc_id-ordered thirds (foreachBatch ids 0..2, delivery
@@ -1179,7 +1389,7 @@ object StreamingQueries {
     // replay exactly the corpus that operation horizon selects. The
     // history the bounds slice IS the batch subtree layout the stream
     // already wrote: nothing is rewritten or versioned to serve it
-    "stream_postings_asof" -> ((s, dir) => {
+    Gate("stream_postings_asof", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-pasof").toString
       val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
@@ -1237,7 +1447,22 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // four as-of phases over the streamed index, each the one-shot
+      // aggregate over exactly the corpus its operation bound selects:
+      // the first streamed third / all three / all minus the op-3
+      // takedown / the live view (== the last bound)
+      s"""WITH b0 AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver(
+        "doc_id IN (SELECT doc_id FROM (SELECT doc_id, ntile(3) OVER (ORDER BY doc_id) AS nt FROM rdocs) WHERE nt = 1)")}),
+b2 AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver("TRUE")}),
+b3 AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver("doc_id % 5 <> 0")}),
+a0 AS (${TextQueries.retrievalAggSql("b0")}),
+a2 AS (${TextQueries.retrievalAggSql("b2")}),
+a3 AS (${TextQueries.retrievalAggSql("b3")})
+SELECT 'asof0' AS phase, * FROM a0
+UNION ALL SELECT 'asof2' AS phase, * FROM a2
+UNION ALL SELECT 'asof3' AS phase, * FROM a3
+UNION ALL SELECT 'live' AS phase, * FROM a3"""),
 
     // ONLINE DOCUMENT UPSERT — the re-crawl lifecycle driven through
     // foreachBatch: each micro-batch of updated documents becomes a
@@ -1248,7 +1473,7 @@ object StreamingQueries {
     // overwrites its own subtree). Serving after the stream must equal
     // the one-shot replay over the LAST-WRITER corpus; the redelivered
     // batch must not move it; the fold must be result-invisible
-    "stream_postings_reindex" -> ((s, dir) => {
+    Gate("stream_postings_reindex", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-reidx").toString
       val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
       graft.operators.PostingsStore.build(d, s"$tmp/store")
@@ -1312,7 +1537,16 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the LAST-WRITER corpus replay: the second update wave (%15) wins
+      // over the first (%10) on their %30 overlap — streamed upsert,
+      // whole-wave redelivery, and the physical fold all collapse to it
+      s"""WITH upd_base AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver("TRUE", "TRUE",
+        "CASE WHEN doc_id % 15 = 0 THEN text || ' updzc' " +
+        "WHEN doc_id % 10 = 0 THEN text || ' updza updzb' ELSE text END")}),
+ua AS (${TextQueries.retrievalAggSql("upd_base")}),
+phases(phase) AS (VALUES ('streamed'), ('replayed'), ('folded'))
+SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, ua"""),
 
     // ONLINE TAKEDOWN FOR THE TEXT INDEX — deleteDocs driven through
     // foreachBatch with the BATCH ID as the delete id, so an
@@ -1324,7 +1558,7 @@ object StreamingQueries {
     // once regardless of batch arrival order. Phase 'streamed' serves
     // through markers + negative partials; 'compacted' after the
     // physical fold — both must equal the filtered-corpus replay.
-    "stream_postings_takedown" -> ((s, dir) => {
+    Gate("stream_postings_takedown", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-ptd").toString
       val d = TextQueries.retDocs(s, dir).select("doc_id", "text")
       graft.operators.PostingsStore.build(d, s"$tmp/store")
@@ -1366,9 +1600,22 @@ object StreamingQueries {
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(
             streamed ++ compacted).asJava), outSchema)
-    }),
+    },
+      // the filtered-corpus replay (both streamed takedown lists applied,
+      // overlap counted once), emitted once per serving phase — the
+      // marker/negative-partial read AND the physical fold must both
+      // collapse to it
+      s"""WITH base AS MATERIALIZED (
+${TextQueries.bm25DocOracleSqlOver("doc_id % 5 <> 0 AND doc_id % 7 <> 0")}),
+agg AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+    CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
+    CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
+    CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum
+  FROM base),
+phases(phase) AS (VALUES ('streamed'), ('compacted'))
+SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, agg"""),
 
-    "stream_hll" -> ((s, dir) => {
+    Gate("stream_hll", (s, dir) => {
       val tmp = Files.createTempDirectory("graft-stream-hll").toString
       // same vocabulary-widening fixture as the batch sketch gates
       // (the raw corpus is ~31 distinct terms — small-range regime)
@@ -1397,8 +1644,13 @@ object StreamingQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    })
-  )
+    },
+      // the batch spelling of the streamed sketch: registers over the
+      // whole corpus, then the estimator — equality IS the merge law
+      s"""WITH ${SketchQueries.regCte},
+sm AS (SELECT sum(CAST(1 AS BIGINT) << (53 - rho)) AS s FROM regs)
+SELECT ${SketchQueries.estExpr} AS n_est FROM sm""")
+  ).map(g => g.copy(run = (s, d) => g.run(streamSession(s), d)))
 
   /** Session clone sized for the STREAMING gates' per-trigger volume.
     *
@@ -1428,306 +1680,4 @@ object StreamingQueries {
     c.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
     c
   }
-
-  /** The gate map, each gate bound to its [[streamSession]] clone (the
-    * staging/read-back batch work inside the gates is tiny — coalesced
-    * writes and final aggregates — so it runs there too). */
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    gates.map { case (k, f) =>
-      k -> ((s: SparkSession, d: String) => f(streamSession(s), d))
-    }
-
-  val oracle: Map[String, String] = Map(
-    // the batch spelling of the streamed sketch: registers over the
-    // whole corpus, then the estimator — equality IS the merge law
-    "stream_hll" ->
-      s"""WITH ${SketchQueries.regCte},
-sm AS (SELECT sum(CAST(1 AS BIGINT) << (53 - rho)) AS s FROM regs)
-SELECT ${SketchQueries.estExpr} AS n_est FROM sm""",
-
-    // additive merge law: per-batch rule counts summed over the log
-    // must equal the one-pass batch audit over the union
-    "stream_dq" ->
-      """SELECT 'events.value_nonpos' AS check_name,
-  CAST(coalesce(sum(CASE WHEN value <= 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_bad FROM events
-UNION ALL SELECT 'events.value_cents_gt_9000',
-  CAST(coalesce(sum(CASE WHEN CAST(round(value*100) AS BIGINT) > 9000 THEN 1 ELSE 0 END), 0) AS BIGINT) FROM events
-UNION ALL SELECT 'events.error_events',
-  CAST(coalesce(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END), 0) AS BIGINT) FROM events""",
-
-    "stream_ingest_range" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS cnt,
-  CAST(sum(event_id) AS BIGINT) AS id_sum,
-  CAST(sum(CAST(floor(value*100) AS BIGINT)) AS BIGINT) AS x_sum,
-  CAST(sum(user_id) AS BIGINT) AS y_sum
-FROM events
-WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
-  AND user_id BETWEEN ${RY.min} AND ${RY.max}""",
-
-    // the live multiset after the streamed marker history: base rows
-    // survive %5 (seq 1) and %3 (seq 3); the %10 re-puts (seq 2)
-    // resurrect through seq 1 but die under seq 3 where id % 3 = 0 —
-    // one row per phase, and redelivered markers must not move it
-    "stream_takedown" ->
-      s"""WITH pts AS MATERIALIZED (
-  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events
-  WHERE (event_id % 5 <> 0 AND event_id % 3 <> 0)
-     OR (event_id % 10 = 0 AND event_id % 3 <> 0)),
-r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
-    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
-    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
-  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
-    AND y BETWEEN ${RY.min} AND ${RY.max}),
-t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
-k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
-    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
-  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
-        FROM pts ORDER BY d2, id LIMIT 10)),
-phases(phase) AS (VALUES ('streamed'), ('replayed'))
-SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
-  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
-FROM phases, r, t, k""",
-
-    // the live multiset after the streamed RECTANGLE-marker history:
-    // base rows (seq 0) survive outside rects A(seq 1) and B(seq 3);
-    // the %10 re-puts (seq 2) resurrect through A but die inside B —
-    // and the redelivered rect-A batch must not move any number
-    "stream_takedown_range" ->
-      s"""WITH pts AS MATERIALIZED (
-  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events),
-live AS MATERIALIZED (
-  SELECT * FROM pts WHERE CASE WHEN id % 10 = 0
-    THEN NOT (x BETWEEN 12000 AND 40000 AND y BETWEEN 50 AND 130)
-    ELSE NOT (x BETWEEN 0 AND 15000 AND y BETWEEN 0 AND 70)
-     AND NOT (x BETWEEN 12000 AND 40000 AND y BETWEEN 50 AND 130) END),
-r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
-    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
-    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
-  FROM live WHERE x BETWEEN ${RX.min} AND ${RX.max}
-    AND y BETWEEN ${RY.min} AND ${RY.max}),
-t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM live),
-k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
-    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
-  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
-        FROM live ORDER BY d2, id LIMIT 10)),
-phases(phase) AS (VALUES ('streamed'), ('replayed'))
-SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
-  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
-FROM phases, r, t, k""",
-
-    "stream_ingest_box3" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS cnt,
-  CAST(sum(event_id) AS BIGINT) AS id_sum,
-  CAST(sum(CAST(floor(value*100) AS BIGINT)) AS BIGINT) AS x_sum,
-  CAST(sum(user_id) AS BIGINT) AS y_sum,
-  CAST(sum(event_id % 2097152) AS BIGINT) AS t_sum
-FROM events
-WHERE CAST(floor(value*100) AS INT) BETWEEN ${RX.min} AND ${RX.max}
-  AND user_id BETWEEN ${RY.min} AND ${RY.max}
-  AND (event_id % 2097152) BETWEEN ${RT3.min} AND ${RT3.max}""",
-
-    "stream_classify" ->
-      s"""${Perceptron.oracleCore()},
-h AS (SELECT doc_id, ${HtmlQueries.FixtureHtmlSql} AS html FROM documents),
-xt AS (SELECT doc_id,
-    regexp_split_to_array(lower(trim(${Html.stripSql("html", duck = true)})), '\\s+') AS ws
-  FROM h),
-sc AS (SELECT xt.doc_id,
-    CAST(m.w[${Perceptron.Buckets + 1}] + list_sum(list_transform(xt.ws,
-      t -> m.w[CAST(${Perceptron.bucketDuck(Perceptron.Buckets)} + 1 AS BIGINT)])) AS BIGINT) AS margin
-  FROM xt, mix${Perceptron.Epochs} m)
-SELECT doc_id, margin FROM sc WHERE margin > 0""",
-
-    "stream_dedup" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type""",
-
-    // the deduped union IS the source's distinct key set: the injected
-    // within-watermark duplicates must all be dropped by state
-    "stream_dedup_wm" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type""",
-
-    // the batch spelling of the streamed gate: distinct whitespace-
-    // collapsed fingerprints of the quality-passing documents
-    "stream_curate" ->
-      """SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-FROM documents
-WHERE len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 30
-  AND (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\s+')) >= 500""",
-
-    // compaction is result-invisible: the SOURCE-table aggregates hold
-    // for BOTH phases — a lost/duplicated/corrupted row after the
-    // rewrite breaks only the post row, pinning the rewrite itself
-    "compact_equiv" ->
-      s"""WITH pts AS MATERIALIZED (
-  SELECT event_id AS id, CAST(floor(value*100) AS BIGINT) AS x,
-    CAST(user_id AS BIGINT) AS y FROM events),
-r AS (SELECT CAST(count(*) AS BIGINT) AS range_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS range_id_sum,
-    CAST(coalesce(sum(x), 0) AS BIGINT) AS range_x_sum,
-    CAST(coalesce(sum(y), 0) AS BIGINT) AS range_y_sum
-  FROM pts WHERE x BETWEEN ${RX.min} AND ${RX.max}
-    AND y BETWEEN ${RY.min} AND ${RY.max}),
-t AS (SELECT CAST(count(*) AS BIGINT) AS total_cnt,
-    CAST(coalesce(sum(id), 0) AS BIGINT) AS total_id_sum FROM pts),
-k AS (SELECT CAST(coalesce(sum(id), 0) AS BIGINT) AS knn_id_sum,
-    CAST(coalesce(sum(d2), 0) AS BIGINT) AS knn_d2_sum
-  FROM (SELECT id, (x-25000)*(x-25000) + (y-75)*(y-75) AS d2
-        FROM pts ORDER BY d2, id LIMIT 10)),
-phases(phase) AS (VALUES ('pre'), ('post'))
-SELECT phase, range_cnt, range_id_sum, range_x_sum, range_y_sum,
-  total_cnt, total_id_sum, knn_id_sum, knn_d2_sum
-FROM phases, r, t, k""",
-
-    // the batch interval join over the full union: every within-window
-    // (impression, conversion) pair exactly once — late arrivals, state
-    // retention, and watermark bookkeeping all collapse into multiset
-    // equality with this one-shot join
-    // tns is FLOORED to microseconds: the streaming side joins on
-    // event_time = timestamp_micros(ts div 1000), so the oracle must
-    // compare at the same granularity or a ts with sub-µs residue
-    // within 1 µs of the 6 h window edge would flip pair membership
-    "stream_join" ->
-      """WITH e AS MATERIALIZED (
-  SELECT user_id, event_type, epoch_ns(ts) // 1000 * 1000 AS tns FROM events
-  WHERE event_type IN ('view', 'click', 'purchase')),
-imp AS (SELECT user_id, tns AS imp_tns FROM e WHERE event_type = 'view'),
-conv AS (SELECT user_id, event_type, tns AS conv_tns FROM e
-  WHERE event_type <> 'view')
-SELECT conv.event_type AS conv_type,
-  count(*) AS n_pairs,
-  CAST(count(DISTINCT conv.user_id) AS BIGINT) AS n_users,
-  CAST(sum((conv.conv_tns - imp.imp_tns) // 1000000000) AS BIGINT) AS lag_s_sum
-FROM imp JOIN conv ON imp.user_id = conv.user_id
-  AND conv.conv_tns >= imp.imp_tns
-  AND conv.conv_tns <= imp.imp_tns + 21600000000000
-GROUP BY conv_type""",
-
-    // the batch LEFT join over the real rows: sentinels forced every
-    // unmatched impression's null row out before the stream stopped,
-    // so the emitted multiset equals the one-shot outer join exactly
-    // same µs floor as stream_join — both engines compare at the
-    // granularity the streaming clock actually carries
-    "stream_join_outer" ->
-      """WITH e AS MATERIALIZED (
-  SELECT user_id, event_type, epoch_ns(ts) // 1000 * 1000 AS tns FROM events
-  WHERE event_type IN ('view', 'click', 'purchase')),
-imp AS (SELECT user_id, tns AS imp_tns FROM e WHERE event_type = 'view'),
-conv AS (SELECT user_id, event_type, tns AS conv_tns FROM e
-  WHERE event_type <> 'view'),
-lj AS (SELECT imp.user_id, conv.event_type AS conv_type,
-    conv.conv_tns - imp.imp_tns AS lag_ns
-  FROM imp LEFT JOIN conv ON imp.user_id = conv.user_id
-    AND conv.conv_tns >= imp.imp_tns
-    AND conv.conv_tns <= imp.imp_tns + 21600000000000)
-SELECT coalesce(conv_type, '__none') AS conv_type,
-  count(*) AS n_pairs,
-  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-  CAST(coalesce(sum(lag_ns // 1000000000), 0) AS BIGINT) AS lag_s_sum
-FROM lj GROUP BY 1""",
-
-    // the one-shot retrieval replay, aggregated and emitted once per
-    // serving phase: the streamed store's answer must collapse to the
-    // same row BOTH before and after compaction (the compact_equiv
-    // discipline on the text index)
-    "stream_postings" ->
-      s"""WITH base AS MATERIALIZED (${TextQueries.bm25DocOracleSql}),
-agg AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-    CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
-    CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
-    CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum
-  FROM base),
-phases(phase) AS (VALUES ('streamed'), ('compacted'))
-SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, agg""",
-
-    // four as-of phases over the streamed index, each the one-shot
-    // aggregate over exactly the corpus its operation bound selects:
-    // the first streamed third / all three / all minus the op-3
-    // takedown / the live view (== the last bound)
-    "stream_postings_asof" ->
-      s"""WITH b0 AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver(
-        "doc_id IN (SELECT doc_id FROM (SELECT doc_id, ntile(3) OVER (ORDER BY doc_id) AS nt FROM rdocs) WHERE nt = 1)")}),
-b2 AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver("TRUE")}),
-b3 AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver("doc_id % 5 <> 0")}),
-a0 AS (${TextQueries.retrievalAggSql("b0")}),
-a2 AS (${TextQueries.retrievalAggSql("b2")}),
-a3 AS (${TextQueries.retrievalAggSql("b3")})
-SELECT 'asof0' AS phase, * FROM a0
-UNION ALL SELECT 'asof2' AS phase, * FROM a2
-UNION ALL SELECT 'asof3' AS phase, * FROM a3
-UNION ALL SELECT 'live' AS phase, * FROM a3""",
-
-    // the LAST-WRITER corpus replay: the second update wave (%15) wins
-    // over the first (%10) on their %30 overlap — streamed upsert,
-    // whole-wave redelivery, and the physical fold all collapse to it
-    "stream_postings_reindex" ->
-      s"""WITH upd_base AS MATERIALIZED (${TextQueries.bm25DocOracleSqlOver("TRUE", "TRUE",
-        "CASE WHEN doc_id % 15 = 0 THEN text || ' updzc' " +
-        "WHEN doc_id % 10 = 0 THEN text || ' updza updzb' ELSE text END")}),
-ua AS (${TextQueries.retrievalAggSql("upd_base")}),
-phases(phase) AS (VALUES ('streamed'), ('replayed'), ('folded'))
-SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, ua""",
-
-    // the filtered-corpus replay (both streamed takedown lists applied,
-    // overlap counted once), emitted once per serving phase — the
-    // marker/negative-partial read AND the physical fold must both
-    // collapse to it
-    "stream_postings_takedown" ->
-      s"""WITH base AS MATERIALIZED (
-${TextQueries.bm25DocOracleSqlOver("doc_id % 5 <> 0 AND doc_id % 7 <> 0")}),
-agg AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-    CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
-    CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
-    CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum
-  FROM base),
-phases(phase) AS (VALUES ('streamed'), ('compacted'))
-SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, agg""",
-
-    // the one-shot full-union flood folded to its component roster —
-    // the streamed label state's final version must equal it exactly,
-    // both before and after superseded-version compaction
-    "stream_cc" ->
-      s"""WITH base AS MATERIALIZED (${HtmlQueries.oracle("cc_incremental")}),
-agg AS (SELECT component, count(*) AS n_members,
-    CAST(min(v) AS BIGINT) AS min_v, CAST(sum(v) AS BIGINT) AS v_sum
-  FROM base GROUP BY 1),
-phases(phase) AS (VALUES ('pre'), ('post'))
-SELECT phase, component, n_members, min_v, v_sum FROM phases, agg""",
-
-    // the batch hourly rollup — identical to events_hourly's oracle
-    "stream_hourly" -> RelationalQueries.oracle("events_hourly"),
-
-    // the one-pass batch sketch probe — equality IS the CM merge law
-    "stream_topk" -> SketchQueries.oracle("cms_heavy_hitters"),
-
-    // the one-pass batch digest probe — summed leaf partials compress
-    // to the identical digest, so equality IS the quantile merge law
-    "stream_quantiles" -> SketchQueries.oracle("quantile_sketch"),
-
-    // the batch bottom-k itself — merged per-batch partials equal it
-    "stream_kmv" -> SketchQueries.oracle("kmv_sketch"),
-
-    // the batch gap-and-islands twin: the state machine must emit
-    // every real session exactly once (sentinels close the open tails)
-    "stream_sessionize" -> RelationalQueries.oracle("sessionize"),
-
-    // batch replay of the 1h/15m sliding assignment: each event
-    // explodes into its four window starts
-    "stream_sliding" ->
-      """WITH e AS (SELECT epoch_ns(ts) // 1000000000 AS tsec, event_type,
-    CAST(round(value*100) AS BIGINT) AS cents FROM events),
-w AS (SELECT ((tsec // 900) - k.k) * 900 AS win_start, event_type, cents
-  FROM e, (SELECT unnest(range(0, 4)) AS k) k)
-SELECT win_start, event_type, count(*) AS cnt,
-  CAST(sum(cents) AS BIGINT) AS sum_cents
-FROM w GROUP BY win_start, event_type"""
-  )
 }

@@ -96,68 +96,191 @@ object TextQueries {
     (CASE WHEN doc_id % 2 = 0 THEN ' ta' || (doc_id % 61) ELSE '' END) AS text
   FROM documents)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_stats"  -> ((s, dir) => TextAnalysis.stats(docs(s, dir))),
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("text_stats", (s, dir) => TextAnalysis.stats(docs(s, dir)),
+      """SELECT doc_id,
+  CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens,
+  CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) AS n_distinct,
+  CAST(length(lower(trim(text))) AS BIGINT) AS n_chars_norm,
+  CAST(len(regexp_extract_all(lower(trim(text)), '[^a-z0-9\s]')) AS BIGINT) AS n_punct,
+  CAST((length(lower(trim(text))) + 3) // 4 AS BIGINT) AS bpe_est,
+  CAST((CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) * 1000) // len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS quality_e3
+FROM documents"""),
     // Unicode NFC canonical composition (the pre-hash normalization
     // every multilingual pipeline runs): the fixture appends DECOMPOSED
     // e/n/A + combining marks next to their precomposed forms — the
     // engine's codegen java.text.Normalizer expression must agree with
     // DuckDB's independent utf8proc implementation on the composed
     // string AND the character counts (which shrink under NFC)
-    "text_nfc" -> ((s, dir) => docs(s, dir)
+    Gate("text_nfc", (s, dir) => docs(s, dir)
       .select(col("doc_id"),
         concat(col("text"), lit(" " + NfcMarker)).as("raw"))
       .select(col("doc_id"),
         length(col("raw")).cast("long").as("raw_chars"),
         graft.functions.GraftFunctions.nfc_normalize(col("raw")).as("nfc"))
-      .withColumn("nfc_chars", length(col("nfc")).cast("long"))),
-    "lang_id"     -> ((s, dir) => TextAnalysis.langId(docs(s, dir))),
-    "fingerprint" -> ((s, dir) => TextAnalysis.fingerprint(docs(s, dir))),
-    "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
+      .withColumn("nfc_chars", length(col("nfc")).cast("long")),
+      s"""SELECT doc_id,
+  CAST(length(text || ' $NfcMarker') AS BIGINT) AS raw_chars,
+  nfc_normalize(text || ' $NfcMarker') AS nfc,
+  CAST(length(nfc_normalize(text || ' $NfcMarker')) AS BIGINT) AS nfc_chars
+FROM documents"""),
+
+    Gate("lang_id", (s, dir) => TextAnalysis.langId(docs(s, dir)),
+      // Cavnar–Trenkle out-of-place distance against the same literal
+      // rank profiles the engine bakes into its plan (generated from one
+      // shared Scala source — rank LITERALS, no cross-engine profile
+      // sort)
+      langIdOracle),
+
+    Gate("fingerprint", (s, dir) => TextAnalysis.fingerprint(docs(s, dir)),
+      """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+FROM documents"""),
+
+    Gate("dedup_exact", (s, dir) => Dedup.exact(docs(s, dir)),
+      """SELECT md5(text) AS text_hash, min(doc_id) AS keeper_id, count(*) AS n_copies
+FROM documents GROUP BY md5(text)"""),
     // exact 3-shingle Jaccard >= 1/2 — isolates the planted near-dups
-    "dedup_near_pairs" -> ((s, dir) =>
-      Dedup.jaccardPairs(docs(s, dir), 1, 2, maxDf = MaxShingleDf)),
+    Gate("dedup_near_pairs", (s, dir) =>
+      Dedup.jaccardPairs(docs(s, dir), 1, 2, maxDf = MaxShingleDf),
+      s"""WITH $shingleCte,
+cnt AS (SELECT doc_id, count(*) AS n FROM dsh GROUP BY doc_id),
+keep AS (SELECT sh FROM dsh GROUP BY sh HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
+dshc AS (SELECT d.doc_id, d.sh FROM dsh d JOIN keep USING (sh)),
+inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+  FROM dshc a JOIN dshc b ON a.sh = b.sh AND a.doc_id < b.doc_id
+  GROUP BY 1, 2)
+SELECT id_a, id_b, inter, ca.n AS na, cb.n AS nb
+FROM inter
+JOIN cnt ca ON id_a = ca.doc_id
+JOIN cnt cb ON id_b = cb.doc_id
+WHERE 3 * inter >= 1 * (ca.n + cb.n)"""),
     // asymmetric containment >= 9/10 of the SMALLER side over the
     // quote-augmented corpus: every 40th document gains a 12-word
     // quote twin (doc_id + 1e6) whose shingles are a strict subset of
     // its source's — high containment, low Jaccard, invisible to
     // dedup_near_pairs
-    "dedup_containment" -> ((s, dir) =>
+    Gate("dedup_containment", (s, dir) =>
       Dedup.containmentPairs(quoteAugDocs(s, dir), 9, 10,
-        maxDf = MaxShingleDf)),
-    "minhash_signatures" -> ((s, dir) =>
-      Dedup.minhashSignatures(docs(s, dir), NumHashes)),
-    "lsh_candidates" -> ((s, dir) =>
+        maxDf = MaxShingleDf),
+      // same shared-shingle skeleton over the quote-augmented corpus,
+      // containment predicate on the smaller side + permille evidence
+      s"""WITH $quoteAugCte,
+cnt AS (SELECT doc_id, count(*) AS n FROM dsh GROUP BY doc_id),
+keep AS (SELECT sh FROM dsh GROUP BY sh HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
+dshc AS (SELECT d.doc_id, d.sh FROM dsh d JOIN keep USING (sh)),
+inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+  FROM dshc a JOIN dshc b ON a.sh = b.sh AND a.doc_id < b.doc_id
+  GROUP BY 1, 2)
+SELECT id_a, id_b, inter, ca.n AS na, cb.n AS nb,
+  (inter * 1000) // ca.n AS cont_a_permille,
+  (inter * 1000) // cb.n AS cont_b_permille
+FROM inter
+JOIN cnt ca ON id_a = ca.doc_id
+JOIN cnt cb ON id_b = cb.doc_id
+WHERE 10 * inter >= 9 * least(ca.n, cb.n)"""),
+
+    Gate("minhash_signatures", (s, dir) =>
+      Dedup.minhashSignatures(docs(s, dir), NumHashes),
+      s"$sigCte SELECT * FROM sigs"),
+
+    Gate("lsh_candidates", (s, dir) =>
       Dedup.lshCandidates(Dedup.minhashSignatures(docs(s, dir), NumHashes),
-        Bands, RowsPerBand)),
+        Bands, RowsPerBand),
+      s"""$sigCte,
+bandsigs AS ($bandSelects)
+SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+FROM bandsigs a JOIN bandsigs b
+  ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id"""),
     // APPROXIMATION QUALITY, oracle-gated like the ann_*_recall gates:
     // recall of the banded-LSH candidate generator against the exact
     // Jaccard>=1/2 ground truth (both already gated individually) —
     // the number a pipeline tunes bands/rows against before trusting
     // LSH at a scale where exact pairing is unaffordable
-    "lsh_recall" -> ((s, dir) =>
+    Gate("lsh_recall", (s, dir) =>
       Dedup.lshRecall(docs(s, dir), 1, 2, NumHashes, Bands, RowsPerBand,
-        maxDf = MaxShingleDf)),
-    "simhash" -> ((s, dir) => Dedup.simhash(docs(s, dir))),
-    "simhash_near_pairs" -> ((s, dir) => Dedup.simhashNearPairs(docs(s, dir), 8)),
+        maxDf = MaxShingleDf),
+      // exact truth and LSH candidates replayed from their own gated
+      // CTEs, folded to the three counts + floor-permille recall
+      s"""$sigCte,
+bandsigs AS ($bandSelects),
+cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bandsigs a JOIN bandsigs b
+    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id),
+cnt AS (SELECT doc_id, count(*) AS n FROM dsh GROUP BY doc_id),
+keep AS (SELECT sh FROM dsh GROUP BY sh HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
+dshc AS (SELECT d.doc_id, d.sh FROM dsh d JOIN keep USING (sh)),
+inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+  FROM dshc a JOIN dshc b ON a.sh = b.sh AND a.doc_id < b.doc_id
+  GROUP BY 1, 2),
+truth AS MATERIALIZED (SELECT id_a, id_b FROM inter
+  JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
+  WHERE 3 * inter >= 1 * (ca.n + cb.n)),
+tc AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth),
+cc AS (SELECT CAST(count(*) AS BIGINT) AS n_cand FROM cand),
+hc AS (SELECT CAST(count(*) AS BIGINT) AS n_hit
+  FROM truth JOIN cand USING (id_a, id_b))
+SELECT n_true, n_cand, n_hit,
+  CAST(CASE WHEN n_true = 0 THEN 1000 ELSE (n_hit * 1000) // n_true END AS BIGINT)
+    AS recall_permille
+FROM tc, cc, hc"""),
+
+    Gate("simhash", (s, dir) => Dedup.simhash(docs(s, dir)),
+      s"$simhashCte SELECT doc_id, simhash FROM shash"),
+
+    Gate("simhash_near_pairs", (s, dir) => Dedup.simhashNearPairs(docs(s, dir), 8),
+      s"""$simhashCte,
+banded AS (SELECT doc_id, simhash, t.range AS band,
+    (simhash >> (t.range * 15)) & 32767 AS v
+  FROM shash, range(0, 4) t)
+SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM banded a JOIN banded b
+  ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 8"""),
     // per-document top-5 distinctive terms (integer tf-idf surrogate)
-    "tfidf_topk" -> ((s, dir) => TextAnalysis.tfidfTopK(docs(s, dir), 5)),
+    Gate("tfidf_topk", (s, dir) => TextAnalysis.tfidfTopK(docs(s, dir), 5),
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
+p0 AS (SELECT doc_id, unnest(list_distinct(ws)) AS term, ws FROM w),
+p AS (SELECT doc_id, term, CAST(len(list_filter(ws, x -> x = term)) AS BIGINT) AS tf FROM p0),
+dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY term),
+sc AS (SELECT p.doc_id, p.term, p.tf, d.df,
+    CAST((p.tf * 1000000) // d.df AS BIGINT) AS score_e6
+  FROM p JOIN dfreq d USING (term)),
+r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_e6 DESC, term) AS rn FROM sc)
+SELECT doc_id, term, tf, df, score_e6, CAST(rn AS BIGINT) AS rank FROM r WHERE rn <= 5"""),
     // the retrieval upgrade over tfidf: saturated tf + length
     // normalization + log2-quantized integer idf (ubiquitous terms
     // score exactly zero)
-    "bm25_topk" -> ((s, dir) => TextAnalysis.bm25TopK(docs(s, dir), 5)),
+    Gate("bm25_topk", (s, dir) => TextAnalysis.bm25TopK(docs(s, dir), 5),
+      {
+        import TextAnalysis.{Bm25K1E4 => K1, Bm25K1p1E4 => K1P1, Bm25BE4 => B}
+        s"""WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
+d AS (SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS dl FROM w),
+st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) // count(*) AS BIGINT) AS avgdl FROM d),
+p0 AS (SELECT doc_id, dl, unnest(list_distinct(ws)) AS term, ws FROM d),
+p AS (SELECT doc_id, dl, term, CAST(len(list_filter(ws, x -> x = term)) AS BIGINT) AS tf FROM p0),
+dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY term),
+sc AS (SELECT p.doc_id, p.term, p.tf, d.df,
+    CAST((length(bin(st.n_docs // d.df)) - 1) *
+      ((p.tf * $K1P1 * 1000000) //
+       (p.tf * 10000 + ($K1 * ((10000 - $B) + ($B * p.dl) // st.avgdl)) // 10000)) AS BIGINT) AS score_e6
+  FROM p JOIN dfreq d USING (term), st),
+r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_e6 DESC, term) AS rn FROM sc)
+SELECT doc_id, term, tf, df, score_e6, CAST(rn AS BIGINT) AS rank FROM r WHERE rn <= 5"""
+      }),
     // document RETRIEVAL: top-k documents per query by summed BM25 over
     // the topic-augmented corpus; each query is every 29th document's
     // own two topic terms plus one near-universal word (which the
     // zero-idf filter must drop)
-    "bm25_doc_topk" -> ((s, dir) =>
-      TextAnalysis.bm25DocTopK(retQueries(s, dir), retDocs(s, dir), 10)),
+    Gate("bm25_doc_topk", (s, dir) =>
+      TextAnalysis.bm25DocTopK(retQueries(s, dir), retDocs(s, dir), 10),
+      bm25DocOracleSql),
     // inverted-index STORE lifecycle (the reference's index-build idea
     // on the text surface): build the term-range-clustered postings
     // store, serve the same retrieval from it, and emit the direct and
     // served aggregates as two phases — the oracle's one-shot replay
     // must equal BOTH, proving the materialization result-invisible
-    "postings_equiv" -> ((s, dir) => {
+    Gate("postings_equiv", (s, dir) => {
       val d = retDocs(s, dir)
       val qs = retQueries(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-postings").toString
@@ -179,12 +302,22 @@ object TextQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the one-shot retrieval aggregate, cross-joined with the two
+      // phases: the engine's direct and store-served runs must BOTH
+      // equal it — materialization is result-invisible or the hash breaks
+      s"""WITH phases(phase) AS (VALUES ('direct'), ('served')),
+base AS MATERIALIZED ($bm25DocOracleSql),
+a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+  CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
+  CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
+  CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum FROM base)
+SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, a"""),
     // document takedown through the text index: serve after logical
     // delete and again after the physical fold, both against the
     // filtered-corpus replay — a deleted doc must vanish from ranks AND
     // stop counting in df/n_docs/avgdl at every phase
-    "postings_delete_equiv" -> ((s, dir) => {
+    Gate("postings_delete_equiv", (s, dir) => {
       val d = retDocs(s, dir)
       val qs = retQueries(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-postings-del").toString
@@ -215,14 +348,30 @@ object TextQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // takedown replay: the pre phase equals the full-corpus one-shot,
+      // the deleted AND compacted phases both equal the filtered-corpus
+      // one-shot — logical delete and physical fold are result-identical
+      s"""WITH full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
+del_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 5 <> 0")}),
+fa AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+  CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
+  CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
+  CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum FROM full_base),
+da AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
+  CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
+  CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
+  CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum FROM del_base)
+SELECT 'pre' AS phase, * FROM fa
+UNION ALL SELECT 'deleted' AS phase, * FROM da
+UNION ALL SELECT 'compacted' AS phase, * FROM da"""),
     // snapshot (time-travel) reads over the postings store: two batch
     // appends (ops 1: even docs, 2: odd docs) then a takedown (op 3,
     // %5 docs) — serving AS OF each bound must replay the one-shot
     // retrieval over exactly the corpus that existed then, and the
     // live read equals the last bound (every phase hash-checked
     // against the corresponding filtered-corpus oracle)
-    "postings_asof" -> ((s, dir) => {
+    Gate("postings_asof", (s, dir) => {
       val d = retDocs(s, dir)
       val qs = retQueries(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-postings-asof").toString
@@ -253,13 +402,26 @@ object TextQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // four as-of phases, each the one-shot aggregate over exactly the
+      // corpus the bound selects: batch 1 only / both batches / both
+      // minus the op-3 takedown / the live view (== the last bound)
+      s"""WITH even_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 2 = 0")}),
+full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
+del_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 5 <> 0")}),
+ea AS (${retrievalAggSql("even_base")}),
+fa AS (${retrievalAggSql("full_base")}),
+da AS (${retrievalAggSql("del_base")})
+SELECT 'asof1' AS phase, * FROM ea
+UNION ALL SELECT 'asof2' AS phase, * FROM fa
+UNION ALL SELECT 'asof3' AS phase, * FROM da
+UNION ALL SELECT 'live' AS phase, * FROM da"""),
     // the compact-then-append lifecycle (the NORMAL shape of a store
     // that compacts periodically while ingest continues): offline base
     // + one batch, a fold, then a post-fold append — each serve must
     // union every layer on disk (the r17 layout silently dropped the
     // compacted base once a batch dir appeared)
-    "postings_compact_append" -> ((s, dir) => {
+    Gate("postings_compact_append", (s, dir) => {
       val d = retDocs(s, dir)
       val qs = retQueries(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-postings-ca").toString
@@ -284,13 +446,22 @@ object TextQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // compact-then-append: base+batch before and after the fold replay
+      // the two-thirds corpus; the post-fold append reaches the full one
+      s"""WITH part_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 3 <> 2")}),
+full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
+pa AS (${retrievalAggSql("part_base")}),
+fa AS (${retrievalAggSql("full_base")})
+SELECT 'mixed1' AS phase, * FROM pa
+UNION ALL SELECT 'folded' AS phase, * FROM pa
+UNION ALL SELECT 'mixed2' AS phase, * FROM fa"""),
     // RE-INDEX (document update, the re-crawl lifecycle): takedown at
     // op 1 then appendBatch of UPDATED text at op 2 — the marker kills
     // only versions ≤ its op, so the new version serves; stats track
     // exactly (delete subtracts the old length, the batch partial adds
     // the new); the fold is result-invisible over the whole cycle
-    "postings_reindex" -> ((s, dir) => {
+    Gate("postings_reindex", (s, dir) => {
       val d = retDocs(s, dir)
       val qs = retQueries(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-postings-reidx").toString
@@ -316,13 +487,27 @@ object TextQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // the full / takedown-filtered / UPDATED-corpus replays: after the
+      // re-add, scoring runs over the corpus with the %10 docs' new text
+      // (two fresh terms appended), and the fold changes nothing
+      s"""WITH full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
+del_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 10 <> 0")}),
+upd_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE", "TRUE",
+        "CASE WHEN doc_id % 10 = 0 THEN text || ' updza updzb' ELSE text END")}),
+fa AS (${retrievalAggSql("full_base")}),
+da AS (${retrievalAggSql("del_base")}),
+ua AS (${retrievalAggSql("upd_base")})
+SELECT 'pre' AS phase, * FROM fa
+UNION ALL SELECT 'deleted' AS phase, * FROM da
+UNION ALL SELECT 'reindexed' AS phase, * FROM ua
+UNION ALL SELECT 'folded' AS phase, * FROM ua"""),
     // TERM purge (the PII/secret-token workflow, the vocabulary-axis
     // takedown): after purgeTerms the purged terms stop being served —
     // df and per-query n_terms shift, corpus stats (doc lengths at
     // index time) do NOT — and the physical fold must serve the same
     // term-filtered replay the marker read does
-    "postings_term_purge" -> ((s, dir) => {
+    Gate("postings_term_purge", (s, dir) => {
       val d = retDocs(s, dir)
       val qs = retQueries(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-postings-purge").toString
@@ -344,31 +529,167 @@ object TextQueries {
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), outSchema)
-    }),
+    },
+      // term-filtered replay: the purged terms vanish from the posting
+      // side (df, sc, n_terms) while corpus stats stay the full ones —
+      // marker read and physical fold both collapse to it
+      s"""WITH full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
+purged_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE", "term NOT IN ('ta7', 'tb3')")}),
+fa AS (${retrievalAggSql("full_base")}),
+pa AS (${retrievalAggSql("purged_base")})
+SELECT 'pre' AS phase, * FROM fa
+UNION ALL SELECT 'purged' AS phase, * FROM pa
+UNION ALL SELECT 'folded' AS phase, * FROM pa"""),
     // BPE-style pre-tokenizer piece counts (engine-exact, no heuristic)
-    "token_pieces" -> ((s, dir) => TextAnalysis.tokenPieces(docs(s, dir))),
+    Gate("token_pieces", (s, dir) => TextAnalysis.tokenPieces(docs(s, dir)),
+      """SELECT doc_id,
+  CAST(len(regexp_extract_all(lower(trim(text)), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+')) AS BIGINT) AS n_pieces,
+  CAST(len(list_distinct(regexp_extract_all(lower(trim(text)), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+'))) AS BIGINT) AS n_distinct_pieces
+FROM documents"""),
     // winnowing (rolling-hash) local fingerprints, k=5 w=4
-    "winnow_fp" -> ((s, dir) => TextAnalysis.winnowFingerprints(docs(s, dir), 5, 4)),
+    Gate("winnow_fp", (s, dir) => TextAnalysis.winnowFingerprints(docs(s, dir), 5, 4),
+      // k=5 word grams, windows of 4 gram hashes, min per window,
+      // distinct — DuckDB's 1-based inclusive list slice gs[j:j+3] is the
+      // 4-wide window; hash = the shared 60-bit md5 derivation, 'wn:' salt
+      """WITH dwords AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
+g AS (SELECT doc_id, ws FROM dwords WHERE len(ws) >= 8),
+gh AS (SELECT doc_id, list_transform(range(1, len(ws)-3), i ->
+    CAST(('0x' || substr(md5('wn:' || ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 15)) AS BIGINT)) AS gs
+  FROM g)
+SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(gs)-2),
+  j -> list_min(gs[j:j+3])))) AS fp
+FROM gh"""),
     // passage-overlap mining over the winnow index (>= 3 shared fps)
-    "winnow_pairs" -> ((s, dir) =>
-      TextAnalysis.winnowPairs(docs(s, dir), 5, 4, 3, MaxShingleDf)),
+    Gate("winnow_pairs", (s, dir) =>
+      TextAnalysis.winnowPairs(docs(s, dir), 5, 4, 3, MaxShingleDf),
+      s"""WITH dwords AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
+g AS (SELECT doc_id, ws FROM dwords WHERE len(ws) >= 8),
+gh AS (SELECT doc_id, list_transform(range(1, len(ws)-3), i ->
+    CAST(('0x' || substr(md5('wn:' || ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 15)) AS BIGINT)) AS gs
+  FROM g),
+f AS (SELECT DISTINCT doc_id, unnest(list_distinct(list_transform(range(1, len(gs)-2),
+    j -> list_min(gs[j:j+3])))) AS fp
+  FROM gh),
+keep AS (SELECT fp FROM f GROUP BY fp HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
+fk AS (SELECT f.doc_id, f.fp FROM f JOIN keep USING (fp))
+SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
+FROM fk a JOIN fk b ON a.fp = b.fp AND a.doc_id < b.doc_id
+GROUP BY 1, 2 HAVING count(*) >= 3"""),
     // bigram-LM predictability score (integer CCNet-perplexity stand-in)
-    "lm_score" -> ((s, dir) => TextAnalysis.lmScore(docs(s, dir))),
+    Gate("lm_score", (s, dir) => TextAnalysis.lmScore(docs(s, dir)),
+      """WITH dw AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
+bg AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)), i -> ws[i]||' '||ws[i+1])) AS b
+  FROM dw WHERE len(ws) >= 2),
+c2 AS (SELECT b, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY b),
+c1 AS (SELECT split_part(b, ' ', 1) AS w1, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
+p AS (SELECT b, (c2 * 1000000) // c1 AS prob_e6
+  FROM c2 JOIN c1 ON split_part(b, ' ', 1) = w1)
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+  CAST(sum(prob_e6) // count(*) AS BIGINT) AS lm_score_e6
+FROM bg JOIN p USING (b)
+GROUP BY doc_id"""),
     // exact-substring span removal (Lee et al. 2022 ExactSubstr at
     // k-gram granularity): duplicated >= SpanK-token passages vanish
     // from every document but their first (keeper) document
-    "span_dedup" -> ((s, dir) => Dedup.spanDedup(docs(s, dir), SpanK, 2)),
+    Gate("span_dedup", (s, dir) => Dedup.spanDedup(docs(s, dir), SpanK, 2),
+      // gram hash mirrors Dedup.spanDedup exactly: one md5 per TOKEN, then
+      // Dedup.spanGramHash's polynomial per position (same expression
+      // string — both dialects agree on % * + and bracket indexing; only
+      // the range base differs, 1-based here vs 0-based in Spark)
+      s"""WITH dw AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents
+  WHERE len(regexp_split_to_array(lower(trim(text)), '\\s+')) >= 1),
+th AS (SELECT doc_id, ws,
+    list_transform(ws, t -> CAST(('0x' || substr(md5('sp:' || t), 1, 15)) AS BIGINT)) AS hs
+  FROM dw),
+g AS (SELECT doc_id, ws,
+    CASE WHEN len(ws) >= $SpanK THEN list_transform(range(1, len(ws)-${SpanK - 2}),
+      i -> ${Dedup.spanGramHash(SpanK)})
+    ELSE CAST([] AS BIGINT[]) END AS ghs
+  FROM th),
+occ AS (SELECT DISTINCT doc_id, unnest(ghs) AS gh FROM g),
+dup AS (SELECT gh, min(doc_id) AS keeper FROM occ GROUP BY gh HAVING count(*) >= 2),
+pos AS (SELECT doc_id, pg.i AS i, pg.gh AS gh FROM (
+  SELECT doc_id, unnest(list_transform(range(1, len(ghs)+1),
+    i -> {'i': i, 'gh': ghs[i]})) AS pg FROM g)),
+ds AS (SELECT p.doc_id, list_sort(list(p.i)) AS ss
+  FROM pos p JOIN dup d ON p.gh = d.gh AND p.doc_id <> d.keeper
+  GROUP BY p.doc_id),
+j AS (SELECT g.doc_id, g.ws, coalesce(ds.ss, CAST([] AS BIGINT[])) AS ss
+  FROM g LEFT JOIN ds USING (doc_id)),
+kept AS (SELECT doc_id, ws,
+    list_transform(list_filter(range(1, len(ws)+1),
+      p -> len(list_filter(ss, s -> s <= p AND s >= p - ${SpanK - 1})) = 0), p -> ws[p]) AS kt
+  FROM j)
+SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
+  CAST(len(kt) AS BIGINT) AS n_kept,
+  coalesce(array_to_string(kt, ' '), '') AS cleaned
+FROM kept"""),
     // character-level duplicate coverage over the punctuation-stripped
     // stream — catches separator-variant copies word grams miss
-    "span_dedup_chars" -> ((s, dir) => Dedup.spanDedupChars(docs(s, dir), SpanCharsK, 2)),
+    Gate("span_dedup_chars", (s, dir) => Dedup.spanDedupChars(docs(s, dir), SpanCharsK, 2),
+      // char-gram twin: same dup/keeper/coverage chain as span_dedup, over
+      // ascii codes of the [a-z0-9]-only stream (no digest — the
+      // polynomial runs on the codes; substr is per-position here, fine
+      // at oracle scale)
+      spanCharsExactOracle("documents")),
     // winnow-prefiltered APPROXIMATE span dedup: exact for duplicated
     // spans >= k+w-1 tokens, candidates-only positioned join — the
     // scale path for mostly-distinct corpora. maxCandidateFrac = 1.0
     // pins the PURE approximate path: the oracle models winnow
     // semantics with no bail-out, so the adaptive exact fallback must
     // never engage in the gate regardless of fixture duplication rate
-    "span_dedup_winnow" -> ((s, dir) =>
-      Dedup.spanDedupApprox(docs(s, dir), SpanK, 2, 4, maxCandidateFrac = 1.0)),
+    Gate("span_dedup_winnow", (s, dir) =>
+      Dedup.spanDedupApprox(docs(s, dir), SpanK, 2, 4, maxCandidateFrac = 1.0),
+      // winnow-prefiltered approximate variant: fingerprints are window
+      // minima (w=4) over the SAME polynomial gram hashes span_dedup
+      // uses; candidate docs share a duplicated fingerprint (df >= 2) or
+      // an exact-duplicated text; the span_dedup chain — including the
+      // dup inventory — runs over candidates only, everyone else passes
+      // through with n_kept = n_tokens. Exact for duplicated spans
+      // >= k+w-1 tokens by the winnowing guarantee.
+      s"""WITH dw AS (SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents
+  WHERE len(regexp_split_to_array(lower(trim(text)), '\\s+')) >= 1),
+th AS (SELECT doc_id, text, ws,
+    list_transform(ws, t -> CAST(('0x' || substr(md5('sp:' || t), 1, 15)) AS BIGINT)) AS hs
+  FROM dw),
+g AS (SELECT doc_id, text, ws,
+    CASE WHEN len(ws) >= $SpanK THEN list_transform(range(1, len(ws)-${SpanK - 2}),
+      i -> ${Dedup.spanGramHash(SpanK)})
+    ELSE CAST([] AS BIGINT[]) END AS ghs
+  FROM th),
+f AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ghs)-2),
+    j -> list_min(ghs[j:j+3])))) AS fp
+  FROM g WHERE len(ghs) >= 4),
+dupf AS (SELECT fp FROM f GROUP BY fp HAVING count(*) >= 2),
+cand AS (SELECT DISTINCT doc_id FROM f JOIN dupf USING (fp)
+  UNION
+  SELECT doc_id FROM g WHERE text IN (
+    SELECT text FROM documents GROUP BY text HAVING count(*) >= 2)),
+gc AS (SELECT doc_id, ws, ghs FROM g WHERE doc_id IN (SELECT doc_id FROM cand)),
+occ AS (SELECT DISTINCT doc_id, unnest(ghs) AS gh FROM gc),
+dup AS (SELECT gh, min(doc_id) AS keeper FROM occ GROUP BY gh HAVING count(*) >= 2),
+pos AS (SELECT doc_id, pg.i AS i, pg.gh AS gh FROM (
+  SELECT doc_id, unnest(list_transform(range(1, len(ghs)+1),
+    i -> {'i': i, 'gh': ghs[i]})) AS pg FROM gc)),
+ds AS (SELECT p.doc_id, list_sort(list(p.i)) AS ss
+  FROM pos p JOIN dup d ON p.gh = d.gh AND p.doc_id <> d.keeper
+  GROUP BY p.doc_id),
+j AS (SELECT gc.doc_id, gc.ws, coalesce(ds.ss, CAST([] AS BIGINT[])) AS ss
+  FROM gc LEFT JOIN ds USING (doc_id)),
+kept AS (SELECT doc_id, ws,
+    list_transform(list_filter(range(1, len(ws)+1),
+      p -> len(list_filter(ss, s -> s <= p AND s >= p - ${SpanK - 1})) = 0), p -> ws[p]) AS kt
+  FROM j)
+SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
+  CAST(len(kt) AS BIGINT) AS n_kept,
+  coalesce(array_to_string(kt, ' '), '') AS cleaned
+FROM kept
+UNION ALL
+SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
+  CAST(len(ws) AS BIGINT) AS n_kept,
+  array_to_string(ws, ' ') AS cleaned
+FROM g
+WHERE doc_id NOT IN (SELECT doc_id FROM cand)"""),
     // the char-granularity twin at the PRODUCTION default bail-out
     // (maxCandidateFrac = 0.5): at oracle scale (sf0.01) the fixture
     // sits at ~42% candidacy, under the threshold, so the pure
@@ -380,8 +701,53 @@ object TextQueries {
     // the signal-pass floor there (instead of re-tokenizing nearly
     // every candidate) is the operator working as designed. The
     // prefilter's win case is pinned by span_dedup_chars_winnow_sparse
-    "span_dedup_chars_winnow" -> ((s, dir) =>
-      Dedup.spanDedupCharsApprox(docs(s, dir), SpanCharsK, 2, 4, maxCandidateFrac = 0.5)),
+    Gate("span_dedup_chars_winnow", (s, dir) =>
+      Dedup.spanDedupCharsApprox(docs(s, dir), SpanCharsK, 2, 4, maxCandidateFrac = 0.5),
+      // char twin of span_dedup_winnow: fingerprints are window minima
+      // (w=4) over the char-gram hashes; candidates share a duplicated
+      // fingerprint or a duplicated cleaned text; the chain runs over
+      // candidates only, everyone else reports zero coverage. The gate
+      // runs the production default maxCandidateFrac=0.5, and the sf0.01
+      // fixture's ~42% candidacy stays under it — so the PURE approximate
+      // path this SQL models is the path the engine takes at oracle scale
+      // (the >0.5 bail-out at larger scale returns exact results, pinned
+      // by the DedupSpec equivalence test, not this oracle)
+      s"""WITH c AS (SELECT doc_id, regexp_replace(lower(trim(text)), '[^a-z0-9]', '', 'g') AS clean
+  FROM documents),
+h AS (SELECT doc_id, clean, length(clean) AS n,
+    list_transform(range(1, length(clean)+1), i -> CAST(ascii(substr(clean, CAST(i AS INT), 1)) AS BIGINT)) AS hs
+  FROM c WHERE length(clean) >= 1),
+g AS (SELECT doc_id, clean, n,
+    CASE WHEN n >= $SpanCharsK THEN list_transform(range(1, n-${SpanCharsK - 2}),
+      i -> ${Dedup.spanGramHash(SpanCharsK)})
+    ELSE CAST([] AS BIGINT[]) END AS ghs
+  FROM h),
+f AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ghs)-2),
+    j -> list_min(ghs[j:j+3])))) AS fp
+  FROM g WHERE len(ghs) >= 4),
+dupf AS (SELECT fp FROM f GROUP BY fp HAVING count(*) >= 2),
+cand AS (SELECT DISTINCT doc_id FROM f JOIN dupf USING (fp)
+  UNION
+  SELECT doc_id FROM g WHERE clean IN (
+    SELECT clean FROM c GROUP BY clean HAVING count(*) >= 2)),
+gc AS (SELECT doc_id, n, ghs FROM g WHERE doc_id IN (SELECT doc_id FROM cand)),
+occ AS (SELECT DISTINCT doc_id, unnest(ghs) AS gh FROM gc),
+dup AS (SELECT gh, min(doc_id) AS keeper FROM occ GROUP BY gh HAVING count(*) >= 2),
+pos AS (SELECT doc_id, pg.i AS i, pg.gh AS gh FROM (
+  SELECT doc_id, unnest(list_transform(range(1, len(ghs)+1),
+    i -> {'i': i, 'gh': ghs[i]})) AS pg FROM gc)),
+ds AS (SELECT p.doc_id, list_sort(list(p.i)) AS ss
+  FROM pos p JOIN dup d ON p.gh = d.gh AND p.doc_id <> d.keeper
+  GROUP BY p.doc_id),
+j AS (SELECT gc.doc_id, gc.n, coalesce(ds.ss, CAST([] AS BIGINT[])) AS ss
+  FROM gc LEFT JOIN ds USING (doc_id))
+SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
+  CAST(len(list_filter(range(1, n+1),
+    p -> len(list_filter(ss, s -> s <= p AND s >= p - ${SpanCharsK - 1})) > 0)) AS BIGINT) AS n_dup_chars
+FROM j
+UNION ALL
+SELECT doc_id, CAST(n AS BIGINT) AS n_chars, CAST(0 AS BIGINT) AS n_dup_chars
+FROM g WHERE doc_id NOT IN (SELECT doc_id FROM cand)"""),
     // the mostly-distinct corpus the winnow prefilter is FOR: ~90% of
     // docs carry doc-salted generated text (no two docs share a 20-char
     // window — every token embeds its doc_id), ~10% share one literal
@@ -389,70 +755,112 @@ object TextQueries {
     // runs over candidates only, and the approximate twin beats the
     // exact one on the SAME fixture — the bench row the duplication-
     // heavy documents fixture structurally cannot show
-    "span_dedup_chars_sparse" -> ((s, dir) =>
-      Dedup.spanDedupChars(sparseDocs(s, dir), SpanCharsK, 2)),
-    "span_dedup_chars_winnow_sparse" -> ((s, dir) =>
-      Dedup.spanDedupCharsApprox(sparseDocs(s, dir), SpanCharsK, 2, 4)),
+    Gate("span_dedup_chars_sparse", (s, dir) =>
+      Dedup.spanDedupChars(sparseDocs(s, dir), SpanCharsK, 2),
+      // the sparse fixture: approximate == exact there (duplicates are
+      // exact copies ≥ k+w-1 chars; uniques share no 20-char window), so
+      // BOTH sparse twins replay the one exact oracle over the fixture
+      spanCharsExactOracle(sparseDocsSql)),
+
+    Gate("span_dedup_chars_winnow_sparse", (s, dir) =>
+      Dedup.spanDedupCharsApprox(sparseDocs(s, dir), SpanCharsK, 2, 4),
+      spanCharsExactOracle(sparseDocsSql)),
     // BPE tokenizer-training primitive: corpus-weighted adjacent
     // char-pair counts over the distinct-word table, top-k candidates
-    "bpe_merges" -> ((s, dir) => TextAnalysis.bpeMergeCandidates(docs(s, dir), 20)),
+    Gate("bpe_merges", (s, dir) => TextAnalysis.bpeMergeCandidates(docs(s, dir), 20),
+      // both engines run 1-based substr over the distinct-word table, so
+      // the pair expression is dialect-shared verbatim
+      """WITH wds AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS w FROM documents),
+wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wc FROM wds GROUP BY w),
+pr AS (SELECT wc, unnest(list_transform(range(1, length(w)),
+    i -> substr(w, CAST(i AS INT), 1) || substr(w, CAST(i AS INT)+1, 1))) AS pair
+  FROM wf WHERE length(w) >= 2)
+SELECT pair, CAST(sum(wc) AS BIGINT) AS total FROM pr GROUP BY pair
+ORDER BY total DESC, pair LIMIT 20"""),
     // FULL iterative BPE training: each round applies the heaviest
     // merge and recounts over the rewritten symbol table (driver-bounded
     // loop, one vocabulary-scale aggregate per round)
-    "bpe_train" -> ((s, dir) => TextAnalysis.bpeTrain(docs(s, dir), BpeRounds)),
+    Gate("bpe_train", (s, dir) => TextAnalysis.bpeTrain(docs(s, dir), BpeRounds),
+      // full BPE training, one unrolled CTE stage per round. Symbol
+      // sequences ride as chr(31)-wrapped strings (each symbol enclosed
+      // in unit separators, absent from the ASCII corpus), so the greedy
+      // left-to-right merge IS string replace: the pattern
+      // sep+lhs+sep+sep+rhs+sep only aligns at symbol boundaries, and
+      // replace() scans left-to-right non-overlapping — the textbook BPE
+      // walk the engine's fold implements on arrays.
+      bpeTrainOracle(BpeRounds)),
     // tokenizer APPLICATION: replay the trained merge list over every
     // word (plan-literal folds, zero shuffle) — per-doc true token
     // counts under the corpus's own tokenizer
-    "bpe_encode" -> ((s, dir) => {
+    Gate("bpe_encode", (s, dir) => {
       val merges = TextAnalysis.bpeMerges(docs(s, dir), BpeRounds)
       TextAnalysis.bpeEncode(docs(s, dir), merges)
-    }),
+    },
+      // tokenizer application: the SAME unrolled training stages derive
+      // b1..bR, then every (doc, word) replays the replace chain and the
+      // per-doc piece counts roll up
+      bpeEncodeOracle(BpeRounds)),
     // WordPiece TRAINING (likelihood-scored merges): same merge
     // machinery as bpe_train but the winner maximizes the quantized
     // score floor(n·1e12/(c(l)·c(r))) — already-rare symbol pairs can
     // beat ubiquitous ones (the BERT-tokenizer selection rule)
-    "wordpiece_train" -> ((s, dir) =>
-      TextAnalysis.wordpieceTrain(docs(s, dir), BpeRounds)),
+    Gate("wordpiece_train", (s, dir) =>
+      TextAnalysis.wordpieceTrain(docs(s, dir), BpeRounds),
+      wordpieceTrainOracle(BpeRounds)),
     // WordPiece ENCODE: greedy longest-match-first walk under the
     // trained vocabulary (alphabet + merges, digits excluded) over the
     // corpus augmented with one digit-bearing word per document — the
     // [UNK] whole-word fallback fires exactly once per doc
-    "wordpiece_encode" -> ((s, dir) => {
+    Gate("wordpiece_encode", (s, dir) => {
       val vocab = TextAnalysis.wordpieceVocab(docs(s, dir), BpeRounds)
       TextAnalysis.wordpieceEncode(wpAugDocs(s, dir), vocab)
-    }),
+    },
+      wordpieceEncodeOracle(BpeRounds)),
     // BYTE-level BPE training over the mixed-script fixture (each doc
     // gains a non-ASCII suffix and a reserved separator): merges are
     // two-hex-char byte symbols, the special token contributes nothing
-    "bpe_train_bytes" -> ((s, dir) =>
-      TextAnalysis.bpeTrainBytes(augDocs(s, dir), BpeRounds, Seq(BpeSpecial))),
+    Gate("bpe_train_bytes", (s, dir) =>
+      TextAnalysis.bpeTrainBytes(augDocs(s, dir), BpeRounds, Seq(BpeSpecial)),
+      // byte-level training on the mixed-script augmented corpus: same
+      // unrolled stage chain, byte-symbol v1, special token excluded
+      bpeTrainOracleCore(bpeByteHead, BpeRounds)),
     // byte-fallback ENCODING with special tokens: every mixed-script
     // word decomposes into the closed byte alphabet (nothing drops),
     // the separator counts as exactly one piece and bypasses merges
-    "bpe_encode_bytes" -> ((s, dir) => {
+    Gate("bpe_encode_bytes", (s, dir) => {
       val aug = augDocs(s, dir)
       val merges = TextAnalysis.bpeMerges(aug, BpeRounds, Seq(BpeSpecial),
         byteMode = true)
       TextAnalysis.bpeEncodeBytes(aug, merges, Seq(BpeSpecial))
-    }),
+    },
+      // byte-fallback encoding: special tokens one piece each, everything
+      // else replays the byte merge chain — nothing can drop
+      bpeByteEncodeOracle(BpeRounds)),
     // unigram-LM (SentencePiece-style) tokenizer TRAINING on the
     // mixed-script fixture: alphabet + top-N substring seeds, two
     // Viterbi-EM prune rounds — all exact-integer (fewest pieces,
     // ties to the largest count sum), so the final vocabulary
     // hash-matches the oracle's recursive-CTE replay
-    "unigram_train" -> ((s, dir) =>
-      TextAnalysis.unigramTrain(augDocs(s, dir), UniSeedN, UniMaxLen, UniKeep)),
+    Gate("unigram_train", (s, dir) =>
+      TextAnalysis.unigramTrain(augDocs(s, dir), UniSeedN, UniMaxLen, UniKeep),
+      // unigram-LM training replayed as recursive-CTE Viterbi dp + path
+      // per E/M round (validated against an independent python reference
+      // in tools/proto_unigram.py before wiring)
+      uniTrainOracle(UniSeedN, UniMaxLen, UniKeep)),
     // tokenizer APPLICATION: optimal Viterbi piece counts per document
     // under the trained vocabulary (fused codegen DP, zero shuffle)
-    "unigram_encode" -> ((s, dir) => {
+    Gate("unigram_encode", (s, dir) => {
       val aug = augDocs(s, dir)
       val vocab = TextAnalysis.unigramVocabulary(aug, UniSeedN, UniMaxLen, UniKeep)
       TextAnalysis.unigramEncode(aug, vocab, UniMaxLen)
-    }),
+    },
+      // encode: the same chain to the final vocabulary, one more dp, and
+      // the per-doc rollup of optimal piece counts
+      uniEncodeOracle(UniSeedN, UniMaxLen, UniKeep)),
     // train/val split-leakage audit: deterministic hash split, then
     // every LSH-verified near-dup pair that CROSSES the split boundary
     // (the eval-contamination a random split silently ships)
-    "split_leakage" -> ((s, dir) => {
+    Gate("split_leakage", (s, dir) => {
       val d = docs(s, dir)
       val sp = d.select(col("doc_id"), expr(
         """if(cast(conv(substr(md5(concat('split:', cast(doc_id as string))), 1, 8), 16, 10) as bigint) % 10 < 9,
@@ -463,31 +871,92 @@ object TextQueries {
         .join(sp.withColumnRenamed("doc_id", "id_b").withColumnRenamed("split", "split_b"), "id_b")
         .filter(col("split_a") =!= col("split_b"))
         .select("id_a", "id_b", "split_a", "split_b")
-    }),
+    },
+      s"""$sigCte,
+bandsigs AS ($bandSelects),
+cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bandsigs a JOIN bandsigs b
+    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id),
+csets AS (SELECT doc_id,
+    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
+  FROM dwords WHERE len(ws) >= 3),
+prs AS (SELECT id_a, id_b FROM cands
+  JOIN csets sa ON id_a = sa.doc_id JOIN csets sb ON id_b = sb.doc_id
+  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
+spl AS (SELECT doc_id,
+    CASE WHEN CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 < 9
+         THEN 'train' ELSE 'val' END AS split
+  FROM documents)
+SELECT p.id_a, p.id_b, sa.split AS split_a, sb.split AS split_b
+FROM prs p JOIN spl sa ON p.id_a = sa.doc_id JOIN spl sb ON p.id_b = sb.doc_id
+WHERE sa.split <> sb.split"""),
     // corpus-level token frequency, top-k
-    "word_freq" -> ((s, dir) =>
+    Gate("word_freq", (s, dir) =>
       docs(s, dir)
         .select(explode(TextAnalysis.tokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("word")).limit(20)),
+        .orderBy(col("cnt").desc, col("word")).limit(20),
+      """WITH w AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS word FROM documents)
+SELECT word, count(*) AS cnt FROM w GROUP BY word
+ORDER BY cnt DESC, word LIMIT 20"""),
     // the Gopher rule battery: word count, mean word length, alphabetic
     // fraction, symbol ratio, stopword count, duplicate-line fraction,
     // bullet/ellipsis line ratios + composite pass flag
-    "gopher_quality" -> ((s, dir) =>
-      TextAnalysis.gopherQuality(docs(s, dir), segLen = SegLen)),
+    Gate("gopher_quality", (s, dir) =>
+      TextAnalysis.gopherQuality(docs(s, dir), segLen = SegLen),
+      {
+        val stopList = TextAnalysis.GopherStopWords.map(w => s"'$w'").mkString("[", ", ", "]")
+        s"""WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
+sg AS (SELECT doc_id, ws,
+    list_transform(range(0, (len(ws) + ${SegLen - 1}) // $SegLen),
+      i -> array_to_string(ws[i*$SegLen+1 : i*$SegLen+$SegLen], ' ')) AS segs
+  FROM w WHERE len(ws) >= 1),
+g AS (SELECT doc_id,
+    CAST(len(ws) AS BIGINT) AS n_words,
+    CAST((CAST(list_sum(list_transform(ws, x -> length(x))) AS BIGINT) * 1000) // len(ws) AS BIGINT) AS mean_wordlen_e3,
+    CAST((CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) * 1000) // len(ws) AS BIGINT) AS alpha_e3,
+    CAST((CAST(len(list_filter(ws, x -> contains(x, '#') OR contains(x, '...'))) AS BIGINT) * 1000) // len(ws) AS BIGINT) AS symbol_e3,
+    CAST(len(list_filter(ws, x -> list_contains($stopList, x))) AS BIGINT) AS n_stopwords,
+    CAST((CAST(len(segs) - len(list_distinct(segs)) AS BIGINT) * 1000) // len(segs) AS BIGINT) AS dupline_e3,
+    CAST((CAST(len(list_filter(segs, s -> starts_with(s, '-') OR starts_with(s, '*') OR starts_with(s, '•'))) AS BIGINT) * 1000) // len(segs) AS BIGINT) AS bullet_e3,
+    CAST((CAST(len(list_filter(segs, s -> ends_with(s, '...'))) AS BIGINT) * 1000) // len(segs) AS BIGINT) AS ellipsis_e3
+  FROM sg)
+SELECT doc_id, n_words, mean_wordlen_e3, alpha_e3, symbol_e3, n_stopwords,
+  dupline_e3, bullet_e3, ellipsis_e3,
+  CASE WHEN n_words BETWEEN 50 AND 100000 AND mean_wordlen_e3 BETWEEN 3000 AND 10000
+        AND alpha_e3 >= 800 AND symbol_e3 <= 100 AND n_stopwords >= 2
+        AND dupline_e3 <= 300 AND bullet_e3 <= 900 AND ellipsis_e3 <= 300
+       THEN 1 ELSE 0 END AS pass
+FROM g"""
+      }),
     // quality-gated survivor set — the filtering step of a data pipeline
-    "quality_filter" -> ((s, dir) =>
+    Gate("quality_filter", (s, dir) =>
       TextAnalysis.stats(docs(s, dir))
         .filter(col("n_tokens") >= 30 && col("quality_e3") >= 500)
-        .select("doc_id")),
+        .select("doc_id"),
+      """SELECT doc_id FROM (
+  SELECT doc_id,
+    len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_tokens,
+    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\s+')) AS quality_e3
+  FROM documents)
+WHERE n_tokens >= 30 AND quality_e3 >= 500"""),
     // fixed-window token chunking with overlap (window 50, stride 40)
-    "chunk_docs" -> ((s, dir) => TextAnalysis.chunk(docs(s, dir), 50, 40)),
+    Gate("chunk_docs", (s, dir) => TextAnalysis.chunk(docs(s, dir), 50, 40),
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
+c AS (SELECT doc_id, unnest(list_transform(range(0, len(ws), 40),
+        s -> {'idx': s // 40, 'toks': ws[s+1:s+50]})) AS ch
+      FROM w WHERE len(ws) >= 1)
+SELECT doc_id, CAST(ch.idx AS INT) AS chunk_idx,
+  array_to_string(ch.toks, ' ') AS chunk_text,
+  CAST(len(ch.toks) AS BIGINT) AS n_tokens
+FROM c"""),
     // the composed training-data pipeline: quality gate, then drop the
     // higher-id member of every near-dup pair (deterministic keeper
     // rule). Near-dups come from the 100 TB-shape path: banded-LSH
     // candidates + exact Jaccard re-verification of candidate pairs
     // only — no join in the pipeline is keyed on a shingle.
-    "pipeline_corpus" -> ((s, dir) => {
+    Gate("pipeline_corpus", (s, dir) => {
       val d = docs(s, dir)
       val survivors = TextAnalysis.stats(d)
         .filter(col("n_tokens") >= 30 && col("quality_e3") >= 500)
@@ -495,70 +964,159 @@ object TextQueries {
       val dupLosers = Dedup.lshNearPairs(d, 1, 2, 3, NumHashes, Bands, RowsPerBand)
         .select(col("id_b").as("doc_id")).distinct()
       survivors.join(dupLosers, Seq("doc_id"), "left_anti")
-    }),
+    },
+      s"""$sigCte,
+bandsigs AS ($bandSelects),
+cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bandsigs a JOIN bandsigs b
+    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id),
+sets AS (SELECT doc_id,
+    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
+  FROM dwords WHERE len(ws) >= 3),
+losers AS (SELECT DISTINCT id_b AS doc_id FROM cands
+  JOIN sets sa ON id_a = sa.doc_id JOIN sets sb ON id_b = sb.doc_id
+  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
+q AS (SELECT doc_id, CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,
+    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
+  FROM documents)
+SELECT doc_id, n_tokens FROM q
+WHERE n_tokens >= 30 AND quality_e3 >= 500
+  AND NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = q.doc_id)"""),
     // transitive duplicate resolution: LSH-verified near-dup pairs →
     // connected components → (doc_id, cluster_id = min reachable id).
     // All three cluster consumers (here, dedup_keepers, pipeline_curate)
     // read the ONE materialized-per-process cluster table — the
     // dedup-once-consume-many shape of a real corpus build
-    "dedup_clusters" -> ((s, dir) =>
-      Dedup.sharedClusters(docs(s, dir), dir, 1, 2, 3, NumHashes, Bands, RowsPerBand)),
+    Gate("dedup_clusters", (s, dir) =>
+      Dedup.sharedClusters(docs(s, dir), dir, 1, 2, 3, NumHashes, Bands, RowsPerBand),
+      s"""$recursiveSigCte,
+$clusterCte
+SELECT doc_id, cluster_id FROM clus"""),
     // corpus survivors after cluster-canonical keeper selection: unlike
     // pipeline_corpus's pairwise loser rule, a~b~c collapses to ONE doc
-    "dedup_keepers" -> ((s, dir) =>
+    Gate("dedup_keepers", (s, dir) =>
       Dedup.keepersFrom(docs(s, dir),
-        Dedup.sharedClusters(docs(s, dir), dir, 1, 2, 3, NumHashes, Bands, RowsPerBand))),
+        Dedup.sharedClusters(docs(s, dir), dir, 1, 2, 3, NumHashes, Bands, RowsPerBand)),
+      s"""$recursiveSigCte,
+$clusterCte
+SELECT d.doc_id FROM documents d
+WHERE NOT EXISTS (SELECT 1 FROM clus c
+  WHERE c.doc_id = d.doc_id AND c.doc_id <> c.cluster_id)"""),
     // quality-aware keeper selection: every cluster ships its BEST
     // member (lexical-diversity score, ties to lowest id) instead of
     // the minimum id — the keeper rule a production dedup wants
-    "dedup_keepers_best" -> ((s, dir) => {
+    Gate("dedup_keepers_best", (s, dir) => {
       val d = docs(s, dir)
       val scores = TextAnalysis.stats(d)
         .select(col("doc_id"), col("quality_e3").as("score"))
       Dedup.keepersByScore(d,
         Dedup.sharedClusters(d, dir, 1, 2, 3, NumHashes, Bands, RowsPerBand), scores)
-    }),
+    },
+      s"""$recursiveSigCte,
+$clusterCte,
+qsc AS (SELECT doc_id,
+    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
+      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS score
+  FROM documents),
+win AS (SELECT doc_id FROM (
+    SELECT c.doc_id,
+      row_number() OVER (PARTITION BY c.cluster_id ORDER BY q.score DESC, c.doc_id) AS rn
+    FROM clus c JOIN qsc q USING (doc_id)) WHERE rn = 1)
+SELECT d.doc_id FROM documents d
+WHERE NOT EXISTS (SELECT 1 FROM clus WHERE clus.doc_id = d.doc_id)
+   OR EXISTS (SELECT 1 FROM win WHERE win.doc_id = d.doc_id)"""),
     // incremental (cross-run) dedup: a fourth of the corpus plays the
     // incoming batch, deduped against the other three quarters playing
     // yesterday's shipped corpus — exact-hash anti-join + LSH-verified
     // cross near-dup anti-join, never prior×prior
-    "dedup_incremental" -> ((s, dir) => {
+    Gate("dedup_incremental", (s, dir) => {
       val d = docs(s, dir)
       Dedup.incrementalKeepers(
         d.filter(col("doc_id") % 4 === 3), d.filter(col("doc_id") % 4 < 3),
         1, 2, 3, NumHashes, Bands, RowsPerBand)
-    }),
+    },
+      dedupIncrementalOracle),
     // the same incremental dedup with batch-side bloom filters reducing
     // the prior corpus at its scan (value-identical by construction —
     // bloom misses cannot match, positives are exactly re-verified)
-    "dedup_incremental_bloom" -> ((s, dir) => {
+    Gate("dedup_incremental_bloom", (s, dir) => {
       val d = docs(s, dir)
       Dedup.incrementalKeepersAtScale(
         d.filter(col("doc_id") % 4 === 3), d.filter(col("doc_id") % 4 < 3),
         1, 2, 3, NumHashes, Bands, RowsPerBand)
-    }),
+    },
+      dedupIncrementalOracle),
     // line-level dedup (C4/CCNet-style): segments duplicated across
     // documents are removed everywhere but their first occurrence and
     // the cleaned text is reassembled — catches shared boilerplate that
     // document-level near-dup detection can't
-    "segment_shared" -> ((s, dir) => Dedup.segmentShared(docs(s, dir), SegLen, 2)),
-    "segment_dedup" -> ((s, dir) => Dedup.segmentDedup(docs(s, dir), SegLen, 2)),
+    Gate("segment_shared", (s, dir) => Dedup.segmentShared(docs(s, dir), SegLen, 2),
+      s"""$segmentCte
+SELECT seg, CAST(count(DISTINCT doc_id) AS BIGINT) AS df, min(doc_id) AS keeper_doc
+FROM segs GROUP BY seg HAVING count(DISTINCT doc_id) >= 2"""),
+
+    Gate("segment_dedup", (s, dir) => Dedup.segmentDedup(docs(s, dir), SegLen, 2),
+      s"""$segmentCte,
+st AS (SELECT seg, count(DISTINCT doc_id) AS df, min(doc_id) AS keeper_doc
+  FROM segs GROUP BY seg),
+j AS (SELECT s.doc_id, s.seg_idx, s.seg,
+    (st.df < 2 OR s.doc_id = st.keeper_doc) AS survive
+  FROM segs s JOIN st USING (seg))
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segs,
+  CAST(sum(CASE WHEN survive THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+  coalesce(string_agg(seg, ' ' ORDER BY seg_idx) FILTER (WHERE survive), '') AS cleaned
+FROM j GROUP BY doc_id"""),
     // the full nightly-batch composition: the incoming quarter is
     // deduplicated WITHIN itself (cluster-canonical keepers — a~b~c
     // collapses to the minimum member) AND against the shipped prior
     // corpus (exact + LSH-verified cross anti-joins); a document ships
     // only if it survives both. The fused operator signs and
     // shingle-sets the batch ONCE for both stages (Dedup.nightly).
-    "pipeline_nightly" -> ((s, dir) => {
+    Gate("pipeline_nightly", (s, dir) => {
       val d = docs(s, dir)
       Dedup.nightly(d.filter(col("doc_id") % 4 === 3), d.filter(col("doc_id") % 4 < 3),
         1, 2, 3, NumHashes, Bands, RowsPerBand)
-    }),
+    },
+      // nightly composition oracle: the intra-batch recursive cluster
+      // chain restricted to the new quarter, plus the cross-corpus
+      // exact/near losers of dedup_incremental — survivors pass both
+      s"""$recursiveSigCte,
+bandsigs AS ($bandSelects),
+csets AS (SELECT doc_id,
+    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
+  FROM dwords WHERE len(ws) >= 3),
+ncands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bandsigs a JOIN bandsigs b
+    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
+  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 = 3),
+npairs AS (SELECT id_a, id_b FROM ncands
+  JOIN csets sa ON id_a = sa.doc_id JOIN csets sb ON id_b = sb.doc_id
+  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
+ncedges AS (SELECT id_a AS src, id_b AS dst FROM npairs
+  UNION ALL SELECT id_b, id_a FROM npairs),
+nreach AS (SELECT src AS id, src AS r FROM ncedges
+  UNION
+  SELECT e.dst, r.r FROM nreach r JOIN ncedges e ON e.src = r.id),
+nclus AS (SELECT id AS doc_id, min(r) AS cluster_id FROM nreach GROUP BY id),
+xcands AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_prior
+  FROM bandsigs a JOIN bandsigs b ON a.band_id = b.band_id AND a.sig = b.sig
+  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 < 3),
+xlosers AS (SELECT DISTINCT id_new AS doc_id FROM xcands
+  JOIN csets sa ON id_new = sa.doc_id JOIN csets sb ON id_prior = sb.doc_id
+  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
+ph AS (SELECT DISTINCT md5(text) AS th FROM documents WHERE doc_id % 4 < 3)
+SELECT d.doc_id FROM documents d
+WHERE d.doc_id % 4 = 3
+  AND NOT EXISTS (SELECT 1 FROM nclus c
+    WHERE c.doc_id = d.doc_id AND c.doc_id <> c.cluster_id)
+  AND NOT EXISTS (SELECT 1 FROM ph WHERE ph.th = md5(d.text))
+  AND NOT EXISTS (SELECT 1 FROM xlosers l WHERE l.doc_id = d.doc_id)"""),
     // exact phrase search (positional-postings intersection): every
     // 37th document's tokens 2..4 play a quoted query; occurrences
     // surface wherever the corpus repeats the phrase — the token-ORDER
     // retrieval companion to bm25_doc_topk's bag-of-words ranking
-    "phrase_search" -> ((s, dir) => {
+    Gate("phrase_search", (s, dir) => {
       val d = docs(s, dir)
       val qs = d.filter(col("doc_id") % 37 === 1)
         .filter(size(TextAnalysis.tokens(col("text"))) >= 4)
@@ -566,13 +1124,66 @@ object TextQueries {
           concat_ws(" ", slice(TextAnalysis.tokens(col("text")), 2, 3))
             .as("phrase"))
       Search.phraseOccurrences(qs, d)
-    }),
+    },
+      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
+q AS (SELECT doc_id AS query_id, ws[2:4] AS qs FROM w
+  WHERE doc_id % 37 = 1 AND len(ws) >= 4),
+toks AS (SELECT doc_id,
+    unnest(list_transform(range(1, len(ws) + 1), i -> {'p': i, 'w': ws[i]}), recursive := true)
+  FROM w),
+qt AS (SELECT query_id,
+    unnest(list_transform(range(1, len(qs) + 1), i -> {'i': i, 'w': qs[i]}), recursive := true)
+  FROM q),
+ql AS (SELECT query_id, len(qs) AS qlen FROM q),
+anch AS (SELECT qt.query_id, toks.doc_id, CAST(toks.p - qt.i AS BIGINT) AS anchor, qt.i
+  FROM toks JOIN qt ON toks.w = qt.w),
+fm AS (SELECT query_id, doc_id, anchor, count(DISTINCT i) AS nm
+  FROM anch GROUP BY query_id, doc_id, anchor),
+m AS (SELECT f.query_id, f.doc_id, f.anchor
+  FROM fm f JOIN ql USING (query_id) WHERE nm = qlen)
+SELECT query_id, doc_id, count(*) AS n_occ, min(anchor) AS first_pos
+FROM m GROUP BY query_id, doc_id"""),
     // document-level PMI co-occurrence over the top-40 df terms
     // (collocation mining; the quadratic pair door is closed by the
     // bounded vocabulary — <= 40 terms per doc enter the self-join)
-    "pmi_pairs" -> ((s, dir) =>
-      Cooccur.pmiPairs(docs(s, dir), topN = 40, minPairCount = 5L))
+    Gate("pmi_pairs", (s, dir) =>
+      Cooccur.pmiPairs(docs(s, dir), topN = 40, minPairCount = 5L),
+      """WITH occ AS (SELECT DISTINCT doc_id,
+    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
+nd AS (SELECT count(*) AS n_docs FROM documents),
+pdf AS (SELECT term, count(*) AS n_t FROM occ GROUP BY term),
+top AS (SELECT term, n_t FROM pdf ORDER BY n_t DESC, term LIMIT 40),
+focc AS (SELECT o.doc_id, o.term, t.n_t FROM occ o JOIN top t USING (term)),
+p AS (SELECT x.term AS term_a, y.term AS term_b, x.n_t AS n_a, y.n_t AS n_b,
+    count(*) AS n_ab
+  FROM focc x JOIN focc y ON x.doc_id = y.doc_id AND x.term < y.term
+  GROUP BY 1, 2, 3, 4 HAVING count(*) >= 5)
+SELECT term_a, term_b, n_ab, n_a, n_b,
+  CAST((n_ab::HUGEINT * n_docs * 10000) // (n_a::HUGEINT * n_b) AS BIGINT) AS ratio_e4
+FROM p, nd""")
   )
+
+  /** dedup_incremental's oracle, shared by dedup_incremental_bloom: the
+    * bloom-prefiltered incremental path is value-identical by
+    * construction (a bloom miss cannot match; positives are exactly
+    * re-verified). */
+  private lazy val dedupIncrementalOracle =
+    s"""$sigCte,
+bandsigs AS ($bandSelects),
+xcands AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_prior
+  FROM bandsigs a JOIN bandsigs b ON a.band_id = b.band_id AND a.sig = b.sig
+  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 < 3),
+xsets AS (SELECT doc_id,
+    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
+  FROM dwords WHERE len(ws) >= 3),
+xlosers AS (SELECT DISTINCT id_new AS doc_id FROM xcands
+  JOIN xsets sa ON id_new = sa.doc_id JOIN xsets sb ON id_prior = sb.doc_id
+  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
+ph AS (SELECT DISTINCT md5(text) AS th FROM documents WHERE doc_id % 4 < 3)
+SELECT d.doc_id FROM documents d
+WHERE d.doc_id % 4 = 3
+  AND NOT EXISTS (SELECT 1 FROM ph WHERE ph.th = md5(d.text))
+  AND NOT EXISTS (SELECT 1 FROM xlosers l WHERE l.doc_id = d.doc_id)"""
 
   /** Oracle twin of [[TextAnalysis.langId]]: doc 1..3-gram ranks, the
     * VALUES profile table generated from the SAME [[TextAnalysis
@@ -1136,699 +1747,6 @@ reach AS (SELECT src AS id, src AS r FROM cedges
 clus AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)"""
 
   private[graft] val recursiveSigCte = sigCte.replaceFirst("WITH ", "WITH RECURSIVE ")
-
-  val oracle: Map[String, String] = oracleBase +
-    // the bloom-prefiltered incremental path is value-identical by
-    // construction (a bloom miss cannot match; positives are exactly
-    // re-verified), so it shares dedup_incremental's oracle
-    ("dedup_incremental_bloom" -> oracleBase("dedup_incremental"))
-
-  private lazy val oracleBase: Map[String, String] = Map(
-    "text_nfc" ->
-      s"""SELECT doc_id,
-  CAST(length(text || ' $NfcMarker') AS BIGINT) AS raw_chars,
-  nfc_normalize(text || ' $NfcMarker') AS nfc,
-  CAST(length(nfc_normalize(text || ' $NfcMarker')) AS BIGINT) AS nfc_chars
-FROM documents""",
-
-    "dedup_clusters" ->
-      s"""$recursiveSigCte,
-$clusterCte
-SELECT doc_id, cluster_id FROM clus""",
-
-    "dedup_keepers" ->
-      s"""$recursiveSigCte,
-$clusterCte
-SELECT d.doc_id FROM documents d
-WHERE NOT EXISTS (SELECT 1 FROM clus c
-  WHERE c.doc_id = d.doc_id AND c.doc_id <> c.cluster_id)""",
-
-    "text_stats" ->
-      """SELECT doc_id,
-  CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens,
-  CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) AS n_distinct,
-  CAST(length(lower(trim(text))) AS BIGINT) AS n_chars_norm,
-  CAST(len(regexp_extract_all(lower(trim(text)), '[^a-z0-9\s]')) AS BIGINT) AS n_punct,
-  CAST((length(lower(trim(text))) + 3) // 4 AS BIGINT) AS bpe_est,
-  CAST((CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) * 1000) // len(regexp_split_to_array(lower(trim(text)), '\s+')) AS BIGINT) AS quality_e3
-FROM documents""",
-
-    // Cavnar–Trenkle out-of-place distance against the same literal
-    // rank profiles the engine bakes into its plan (generated from one
-    // shared Scala source — rank LITERALS, no cross-engine profile
-    // sort)
-    "lang_id" -> langIdOracle,
-
-    "fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-FROM documents""",
-
-    // gram hash mirrors Dedup.spanDedup exactly: one md5 per TOKEN, then
-    // Dedup.spanGramHash's polynomial per position (same expression
-    // string — both dialects agree on % * + and bracket indexing; only
-    // the range base differs, 1-based here vs 0-based in Spark)
-    "span_dedup" ->
-      s"""WITH dw AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents
-  WHERE len(regexp_split_to_array(lower(trim(text)), '\\s+')) >= 1),
-th AS (SELECT doc_id, ws,
-    list_transform(ws, t -> CAST(('0x' || substr(md5('sp:' || t), 1, 15)) AS BIGINT)) AS hs
-  FROM dw),
-g AS (SELECT doc_id, ws,
-    CASE WHEN len(ws) >= $SpanK THEN list_transform(range(1, len(ws)-${SpanK - 2}),
-      i -> ${Dedup.spanGramHash(SpanK)})
-    ELSE CAST([] AS BIGINT[]) END AS ghs
-  FROM th),
-occ AS (SELECT DISTINCT doc_id, unnest(ghs) AS gh FROM g),
-dup AS (SELECT gh, min(doc_id) AS keeper FROM occ GROUP BY gh HAVING count(*) >= 2),
-pos AS (SELECT doc_id, pg.i AS i, pg.gh AS gh FROM (
-  SELECT doc_id, unnest(list_transform(range(1, len(ghs)+1),
-    i -> {'i': i, 'gh': ghs[i]})) AS pg FROM g)),
-ds AS (SELECT p.doc_id, list_sort(list(p.i)) AS ss
-  FROM pos p JOIN dup d ON p.gh = d.gh AND p.doc_id <> d.keeper
-  GROUP BY p.doc_id),
-j AS (SELECT g.doc_id, g.ws, coalesce(ds.ss, CAST([] AS BIGINT[])) AS ss
-  FROM g LEFT JOIN ds USING (doc_id)),
-kept AS (SELECT doc_id, ws,
-    list_transform(list_filter(range(1, len(ws)+1),
-      p -> len(list_filter(ss, s -> s <= p AND s >= p - ${SpanK - 1})) = 0), p -> ws[p]) AS kt
-  FROM j)
-SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-  CAST(len(kt) AS BIGINT) AS n_kept,
-  coalesce(array_to_string(kt, ' '), '') AS cleaned
-FROM kept""",
-
-    // winnow-prefiltered approximate variant: fingerprints are window
-    // minima (w=4) over the SAME polynomial gram hashes span_dedup
-    // uses; candidate docs share a duplicated fingerprint (df >= 2) or
-    // an exact-duplicated text; the span_dedup chain — including the
-    // dup inventory — runs over candidates only, everyone else passes
-    // through with n_kept = n_tokens. Exact for duplicated spans
-    // >= k+w-1 tokens by the winnowing guarantee.
-    "span_dedup_winnow" ->
-      s"""WITH dw AS (SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents
-  WHERE len(regexp_split_to_array(lower(trim(text)), '\\s+')) >= 1),
-th AS (SELECT doc_id, text, ws,
-    list_transform(ws, t -> CAST(('0x' || substr(md5('sp:' || t), 1, 15)) AS BIGINT)) AS hs
-  FROM dw),
-g AS (SELECT doc_id, text, ws,
-    CASE WHEN len(ws) >= $SpanK THEN list_transform(range(1, len(ws)-${SpanK - 2}),
-      i -> ${Dedup.spanGramHash(SpanK)})
-    ELSE CAST([] AS BIGINT[]) END AS ghs
-  FROM th),
-f AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ghs)-2),
-    j -> list_min(ghs[j:j+3])))) AS fp
-  FROM g WHERE len(ghs) >= 4),
-dupf AS (SELECT fp FROM f GROUP BY fp HAVING count(*) >= 2),
-cand AS (SELECT DISTINCT doc_id FROM f JOIN dupf USING (fp)
-  UNION
-  SELECT doc_id FROM g WHERE text IN (
-    SELECT text FROM documents GROUP BY text HAVING count(*) >= 2)),
-gc AS (SELECT doc_id, ws, ghs FROM g WHERE doc_id IN (SELECT doc_id FROM cand)),
-occ AS (SELECT DISTINCT doc_id, unnest(ghs) AS gh FROM gc),
-dup AS (SELECT gh, min(doc_id) AS keeper FROM occ GROUP BY gh HAVING count(*) >= 2),
-pos AS (SELECT doc_id, pg.i AS i, pg.gh AS gh FROM (
-  SELECT doc_id, unnest(list_transform(range(1, len(ghs)+1),
-    i -> {'i': i, 'gh': ghs[i]})) AS pg FROM gc)),
-ds AS (SELECT p.doc_id, list_sort(list(p.i)) AS ss
-  FROM pos p JOIN dup d ON p.gh = d.gh AND p.doc_id <> d.keeper
-  GROUP BY p.doc_id),
-j AS (SELECT gc.doc_id, gc.ws, coalesce(ds.ss, CAST([] AS BIGINT[])) AS ss
-  FROM gc LEFT JOIN ds USING (doc_id)),
-kept AS (SELECT doc_id, ws,
-    list_transform(list_filter(range(1, len(ws)+1),
-      p -> len(list_filter(ss, s -> s <= p AND s >= p - ${SpanK - 1})) = 0), p -> ws[p]) AS kt
-  FROM j)
-SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-  CAST(len(kt) AS BIGINT) AS n_kept,
-  coalesce(array_to_string(kt, ' '), '') AS cleaned
-FROM kept
-UNION ALL
-SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-  CAST(len(ws) AS BIGINT) AS n_kept,
-  array_to_string(ws, ' ') AS cleaned
-FROM g
-WHERE doc_id NOT IN (SELECT doc_id FROM cand)""",
-
-    // char-gram twin: same dup/keeper/coverage chain as span_dedup, over
-    // ascii codes of the [a-z0-9]-only stream (no digest — the
-    // polynomial runs on the codes; substr is per-position here, fine
-    // at oracle scale)
-    "span_dedup_chars" -> spanCharsExactOracle("documents"),
-
-    // the sparse fixture: approximate == exact there (duplicates are
-    // exact copies ≥ k+w-1 chars; uniques share no 20-char window), so
-    // BOTH sparse twins replay the one exact oracle over the fixture
-    "span_dedup_chars_sparse" -> spanCharsExactOracle(sparseDocsSql),
-    "span_dedup_chars_winnow_sparse" -> spanCharsExactOracle(sparseDocsSql),
-
-    // char twin of span_dedup_winnow: fingerprints are window minima
-    // (w=4) over the char-gram hashes; candidates share a duplicated
-    // fingerprint or a duplicated cleaned text; the chain runs over
-    // candidates only, everyone else reports zero coverage. The gate
-    // runs the production default maxCandidateFrac=0.5, and the sf0.01
-    // fixture's ~42% candidacy stays under it — so the PURE approximate
-    // path this SQL models is the path the engine takes at oracle scale
-    // (the >0.5 bail-out at larger scale returns exact results, pinned
-    // by the DedupSpec equivalence test, not this oracle)
-    "span_dedup_chars_winnow" ->
-      s"""WITH c AS (SELECT doc_id, regexp_replace(lower(trim(text)), '[^a-z0-9]', '', 'g') AS clean
-  FROM documents),
-h AS (SELECT doc_id, clean, length(clean) AS n,
-    list_transform(range(1, length(clean)+1), i -> CAST(ascii(substr(clean, CAST(i AS INT), 1)) AS BIGINT)) AS hs
-  FROM c WHERE length(clean) >= 1),
-g AS (SELECT doc_id, clean, n,
-    CASE WHEN n >= $SpanCharsK THEN list_transform(range(1, n-${SpanCharsK - 2}),
-      i -> ${Dedup.spanGramHash(SpanCharsK)})
-    ELSE CAST([] AS BIGINT[]) END AS ghs
-  FROM h),
-f AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ghs)-2),
-    j -> list_min(ghs[j:j+3])))) AS fp
-  FROM g WHERE len(ghs) >= 4),
-dupf AS (SELECT fp FROM f GROUP BY fp HAVING count(*) >= 2),
-cand AS (SELECT DISTINCT doc_id FROM f JOIN dupf USING (fp)
-  UNION
-  SELECT doc_id FROM g WHERE clean IN (
-    SELECT clean FROM c GROUP BY clean HAVING count(*) >= 2)),
-gc AS (SELECT doc_id, n, ghs FROM g WHERE doc_id IN (SELECT doc_id FROM cand)),
-occ AS (SELECT DISTINCT doc_id, unnest(ghs) AS gh FROM gc),
-dup AS (SELECT gh, min(doc_id) AS keeper FROM occ GROUP BY gh HAVING count(*) >= 2),
-pos AS (SELECT doc_id, pg.i AS i, pg.gh AS gh FROM (
-  SELECT doc_id, unnest(list_transform(range(1, len(ghs)+1),
-    i -> {'i': i, 'gh': ghs[i]})) AS pg FROM gc)),
-ds AS (SELECT p.doc_id, list_sort(list(p.i)) AS ss
-  FROM pos p JOIN dup d ON p.gh = d.gh AND p.doc_id <> d.keeper
-  GROUP BY p.doc_id),
-j AS (SELECT gc.doc_id, gc.n, coalesce(ds.ss, CAST([] AS BIGINT[])) AS ss
-  FROM gc LEFT JOIN ds USING (doc_id))
-SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
-  CAST(len(list_filter(range(1, n+1),
-    p -> len(list_filter(ss, s -> s <= p AND s >= p - ${SpanCharsK - 1})) > 0)) AS BIGINT) AS n_dup_chars
-FROM j
-UNION ALL
-SELECT doc_id, CAST(n AS BIGINT) AS n_chars, CAST(0 AS BIGINT) AS n_dup_chars
-FROM g WHERE doc_id NOT IN (SELECT doc_id FROM cand)""",
-
-    "lm_score" ->
-      """WITH dw AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
-bg AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)), i -> ws[i]||' '||ws[i+1])) AS b
-  FROM dw WHERE len(ws) >= 2),
-c2 AS (SELECT b, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY b),
-c1 AS (SELECT split_part(b, ' ', 1) AS w1, CAST(sum(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1),
-p AS (SELECT b, (c2 * 1000000) // c1 AS prob_e6
-  FROM c2 JOIN c1 ON split_part(b, ' ', 1) = w1)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-  CAST(sum(prob_e6) // count(*) AS BIGINT) AS lm_score_e6
-FROM bg JOIN p USING (b)
-GROUP BY doc_id""",
-
-    "dedup_exact" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keeper_id, count(*) AS n_copies
-FROM documents GROUP BY md5(text)""",
-
-    "dedup_near_pairs" ->
-      s"""WITH $shingleCte,
-cnt AS (SELECT doc_id, count(*) AS n FROM dsh GROUP BY doc_id),
-keep AS (SELECT sh FROM dsh GROUP BY sh HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
-dshc AS (SELECT d.doc_id, d.sh FROM dsh d JOIN keep USING (sh)),
-inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM dshc a JOIN dshc b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT id_a, id_b, inter, ca.n AS na, cb.n AS nb
-FROM inter
-JOIN cnt ca ON id_a = ca.doc_id
-JOIN cnt cb ON id_b = cb.doc_id
-WHERE 3 * inter >= 1 * (ca.n + cb.n)""",
-
-    // same shared-shingle skeleton over the quote-augmented corpus,
-    // containment predicate on the smaller side + permille evidence
-    "dedup_containment" ->
-      s"""WITH $quoteAugCte,
-cnt AS (SELECT doc_id, count(*) AS n FROM dsh GROUP BY doc_id),
-keep AS (SELECT sh FROM dsh GROUP BY sh HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
-dshc AS (SELECT d.doc_id, d.sh FROM dsh d JOIN keep USING (sh)),
-inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM dshc a JOIN dshc b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT id_a, id_b, inter, ca.n AS na, cb.n AS nb,
-  (inter * 1000) // ca.n AS cont_a_permille,
-  (inter * 1000) // cb.n AS cont_b_permille
-FROM inter
-JOIN cnt ca ON id_a = ca.doc_id
-JOIN cnt cb ON id_b = cb.doc_id
-WHERE 10 * inter >= 9 * least(ca.n, cb.n)""",
-
-    "chunk_docs" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
-c AS (SELECT doc_id, unnest(list_transform(range(0, len(ws), 40),
-        s -> {'idx': s // 40, 'toks': ws[s+1:s+50]})) AS ch
-      FROM w WHERE len(ws) >= 1)
-SELECT doc_id, CAST(ch.idx AS INT) AS chunk_idx,
-  array_to_string(ch.toks, ' ') AS chunk_text,
-  CAST(len(ch.toks) AS BIGINT) AS n_tokens
-FROM c""",
-
-    "pipeline_corpus" ->
-      s"""$sigCte,
-bandsigs AS ($bandSelects),
-cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bandsigs a JOIN bandsigs b
-    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id),
-sets AS (SELECT doc_id,
-    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
-  FROM dwords WHERE len(ws) >= 3),
-losers AS (SELECT DISTINCT id_b AS doc_id FROM cands
-  JOIN sets sa ON id_a = sa.doc_id JOIN sets sb ON id_b = sb.doc_id
-  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
-q AS (SELECT doc_id, CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS BIGINT) AS n_tokens,
-    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS quality_e3
-  FROM documents)
-SELECT doc_id, n_tokens FROM q
-WHERE n_tokens >= 30 AND quality_e3 >= 500
-  AND NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = q.doc_id)""",
-
-    "minhash_signatures" -> s"$sigCte SELECT * FROM sigs",
-
-    "dedup_keepers_best" ->
-      s"""$recursiveSigCte,
-$clusterCte,
-qsc AS (SELECT doc_id,
-    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS score
-  FROM documents),
-win AS (SELECT doc_id FROM (
-    SELECT c.doc_id,
-      row_number() OVER (PARTITION BY c.cluster_id ORDER BY q.score DESC, c.doc_id) AS rn
-    FROM clus c JOIN qsc q USING (doc_id)) WHERE rn = 1)
-SELECT d.doc_id FROM documents d
-WHERE NOT EXISTS (SELECT 1 FROM clus WHERE clus.doc_id = d.doc_id)
-   OR EXISTS (SELECT 1 FROM win WHERE win.doc_id = d.doc_id)""",
-
-    "dedup_incremental" ->
-      s"""$sigCte,
-bandsigs AS ($bandSelects),
-xcands AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_prior
-  FROM bandsigs a JOIN bandsigs b ON a.band_id = b.band_id AND a.sig = b.sig
-  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 < 3),
-xsets AS (SELECT doc_id,
-    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
-  FROM dwords WHERE len(ws) >= 3),
-xlosers AS (SELECT DISTINCT id_new AS doc_id FROM xcands
-  JOIN xsets sa ON id_new = sa.doc_id JOIN xsets sb ON id_prior = sb.doc_id
-  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
-ph AS (SELECT DISTINCT md5(text) AS th FROM documents WHERE doc_id % 4 < 3)
-SELECT d.doc_id FROM documents d
-WHERE d.doc_id % 4 = 3
-  AND NOT EXISTS (SELECT 1 FROM ph WHERE ph.th = md5(d.text))
-  AND NOT EXISTS (SELECT 1 FROM xlosers l WHERE l.doc_id = d.doc_id)""",
-
-    // nightly composition oracle: the intra-batch recursive cluster
-    // chain restricted to the new quarter, plus the cross-corpus
-    // exact/near losers of dedup_incremental — survivors pass both
-    "pipeline_nightly" ->
-      s"""$recursiveSigCte,
-bandsigs AS ($bandSelects),
-csets AS (SELECT doc_id,
-    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
-  FROM dwords WHERE len(ws) >= 3),
-ncands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bandsigs a JOIN bandsigs b
-    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id
-  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 = 3),
-npairs AS (SELECT id_a, id_b FROM ncands
-  JOIN csets sa ON id_a = sa.doc_id JOIN csets sb ON id_b = sb.doc_id
-  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
-ncedges AS (SELECT id_a AS src, id_b AS dst FROM npairs
-  UNION ALL SELECT id_b, id_a FROM npairs),
-nreach AS (SELECT src AS id, src AS r FROM ncedges
-  UNION
-  SELECT e.dst, r.r FROM nreach r JOIN ncedges e ON e.src = r.id),
-nclus AS (SELECT id AS doc_id, min(r) AS cluster_id FROM nreach GROUP BY id),
-xcands AS (SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_prior
-  FROM bandsigs a JOIN bandsigs b ON a.band_id = b.band_id AND a.sig = b.sig
-  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 < 3),
-xlosers AS (SELECT DISTINCT id_new AS doc_id FROM xcands
-  JOIN csets sa ON id_new = sa.doc_id JOIN csets sb ON id_prior = sb.doc_id
-  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
-ph AS (SELECT DISTINCT md5(text) AS th FROM documents WHERE doc_id % 4 < 3)
-SELECT d.doc_id FROM documents d
-WHERE d.doc_id % 4 = 3
-  AND NOT EXISTS (SELECT 1 FROM nclus c
-    WHERE c.doc_id = d.doc_id AND c.doc_id <> c.cluster_id)
-  AND NOT EXISTS (SELECT 1 FROM ph WHERE ph.th = md5(d.text))
-  AND NOT EXISTS (SELECT 1 FROM xlosers l WHERE l.doc_id = d.doc_id)""",
-
-    "lsh_candidates" ->
-      s"""$sigCte,
-bandsigs AS ($bandSelects)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM bandsigs a JOIN bandsigs b
-  ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id""",
-
-    // exact truth and LSH candidates replayed from their own gated
-    // CTEs, folded to the three counts + floor-permille recall
-    "lsh_recall" ->
-      s"""$sigCte,
-bandsigs AS ($bandSelects),
-cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bandsigs a JOIN bandsigs b
-    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id),
-cnt AS (SELECT doc_id, count(*) AS n FROM dsh GROUP BY doc_id),
-keep AS (SELECT sh FROM dsh GROUP BY sh HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
-dshc AS (SELECT d.doc_id, d.sh FROM dsh d JOIN keep USING (sh)),
-inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM dshc a JOIN dshc b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2),
-truth AS MATERIALIZED (SELECT id_a, id_b FROM inter
-  JOIN cnt ca ON id_a = ca.doc_id JOIN cnt cb ON id_b = cb.doc_id
-  WHERE 3 * inter >= 1 * (ca.n + cb.n)),
-tc AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth),
-cc AS (SELECT CAST(count(*) AS BIGINT) AS n_cand FROM cand),
-hc AS (SELECT CAST(count(*) AS BIGINT) AS n_hit
-  FROM truth JOIN cand USING (id_a, id_b))
-SELECT n_true, n_cand, n_hit,
-  CAST(CASE WHEN n_true = 0 THEN 1000 ELSE (n_hit * 1000) // n_true END AS BIGINT)
-    AS recall_permille
-FROM tc, cc, hc""",
-
-    "tfidf_topk" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
-p0 AS (SELECT doc_id, unnest(list_distinct(ws)) AS term, ws FROM w),
-p AS (SELECT doc_id, term, CAST(len(list_filter(ws, x -> x = term)) AS BIGINT) AS tf FROM p0),
-dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY term),
-sc AS (SELECT p.doc_id, p.term, p.tf, d.df,
-    CAST((p.tf * 1000000) // d.df AS BIGINT) AS score_e6
-  FROM p JOIN dfreq d USING (term)),
-r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_e6 DESC, term) AS rn FROM sc)
-SELECT doc_id, term, tf, df, score_e6, CAST(rn AS BIGINT) AS rank FROM r WHERE rn <= 5""",
-
-    "bm25_topk" -> {
-      import TextAnalysis.{Bm25K1E4 => K1, Bm25K1p1E4 => K1P1, Bm25BE4 => B}
-      s"""WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
-d AS (SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS dl FROM w),
-st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) // count(*) AS BIGINT) AS avgdl FROM d),
-p0 AS (SELECT doc_id, dl, unnest(list_distinct(ws)) AS term, ws FROM d),
-p AS (SELECT doc_id, dl, term, CAST(len(list_filter(ws, x -> x = term)) AS BIGINT) AS tf FROM p0),
-dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM p GROUP BY term),
-sc AS (SELECT p.doc_id, p.term, p.tf, d.df,
-    CAST((length(bin(st.n_docs // d.df)) - 1) *
-      ((p.tf * $K1P1 * 1000000) //
-       (p.tf * 10000 + ($K1 * ((10000 - $B) + ($B * p.dl) // st.avgdl)) // 10000)) AS BIGINT) AS score_e6
-  FROM p JOIN dfreq d USING (term), st),
-r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_e6 DESC, term) AS rn FROM sc)
-SELECT doc_id, term, tf, df, score_e6, CAST(rn AS BIGINT) AS rank FROM r WHERE rn <= 5"""
-    },
-
-    "bm25_doc_topk" -> bm25DocOracleSql,
-
-    // the one-shot retrieval aggregate, cross-joined with the two
-    // phases: the engine's direct and store-served runs must BOTH
-    // equal it — materialization is result-invisible or the hash breaks
-    "postings_equiv" ->
-      s"""WITH phases(phase) AS (VALUES ('direct'), ('served')),
-base AS MATERIALIZED ($bm25DocOracleSql),
-a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
-  CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
-  CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum FROM base)
-SELECT phase, n_rows, score_sum, dr_sum, terms_sum FROM phases, a""",
-
-    // takedown replay: the pre phase equals the full-corpus one-shot,
-    // the deleted AND compacted phases both equal the filtered-corpus
-    // one-shot — logical delete and physical fold are result-identical
-    "postings_delete_equiv" ->
-      s"""WITH full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
-del_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 5 <> 0")}),
-fa AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
-  CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
-  CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum FROM full_base),
-da AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-  CAST(coalesce(sum(score_e6), 0) AS BIGINT) AS score_sum,
-  CAST(coalesce(sum(doc_id * rank), 0) AS BIGINT) AS dr_sum,
-  CAST(coalesce(sum(n_terms), 0) AS BIGINT) AS terms_sum FROM del_base)
-SELECT 'pre' AS phase, * FROM fa
-UNION ALL SELECT 'deleted' AS phase, * FROM da
-UNION ALL SELECT 'compacted' AS phase, * FROM da""",
-
-    // four as-of phases, each the one-shot aggregate over exactly the
-    // corpus the bound selects: batch 1 only / both batches / both
-    // minus the op-3 takedown / the live view (== the last bound)
-    "postings_asof" ->
-      s"""WITH even_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 2 = 0")}),
-full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
-del_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 5 <> 0")}),
-ea AS (${retrievalAggSql("even_base")}),
-fa AS (${retrievalAggSql("full_base")}),
-da AS (${retrievalAggSql("del_base")})
-SELECT 'asof1' AS phase, * FROM ea
-UNION ALL SELECT 'asof2' AS phase, * FROM fa
-UNION ALL SELECT 'asof3' AS phase, * FROM da
-UNION ALL SELECT 'live' AS phase, * FROM da""",
-
-    // compact-then-append: base+batch before and after the fold replay
-    // the two-thirds corpus; the post-fold append reaches the full one
-    "postings_compact_append" ->
-      s"""WITH part_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 3 <> 2")}),
-full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
-pa AS (${retrievalAggSql("part_base")}),
-fa AS (${retrievalAggSql("full_base")})
-SELECT 'mixed1' AS phase, * FROM pa
-UNION ALL SELECT 'folded' AS phase, * FROM pa
-UNION ALL SELECT 'mixed2' AS phase, * FROM fa""",
-
-    // the full / takedown-filtered / UPDATED-corpus replays: after the
-    // re-add, scoring runs over the corpus with the %10 docs' new text
-    // (two fresh terms appended), and the fold changes nothing
-    "postings_reindex" ->
-      s"""WITH full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
-del_base AS MATERIALIZED (${bm25DocOracleSqlOver("doc_id % 10 <> 0")}),
-upd_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE", "TRUE",
-        "CASE WHEN doc_id % 10 = 0 THEN text || ' updza updzb' ELSE text END")}),
-fa AS (${retrievalAggSql("full_base")}),
-da AS (${retrievalAggSql("del_base")}),
-ua AS (${retrievalAggSql("upd_base")})
-SELECT 'pre' AS phase, * FROM fa
-UNION ALL SELECT 'deleted' AS phase, * FROM da
-UNION ALL SELECT 'reindexed' AS phase, * FROM ua
-UNION ALL SELECT 'folded' AS phase, * FROM ua""",
-
-    // term-filtered replay: the purged terms vanish from the posting
-    // side (df, sc, n_terms) while corpus stats stay the full ones —
-    // marker read and physical fold both collapse to it
-    "postings_term_purge" ->
-      s"""WITH full_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE")}),
-purged_base AS MATERIALIZED (${bm25DocOracleSqlOver("TRUE", "term NOT IN ('ta7', 'tb3')")}),
-fa AS (${retrievalAggSql("full_base")}),
-pa AS (${retrievalAggSql("purged_base")})
-SELECT 'pre' AS phase, * FROM fa
-UNION ALL SELECT 'purged' AS phase, * FROM pa
-UNION ALL SELECT 'folded' AS phase, * FROM pa""",
-
-    "token_pieces" ->
-      """SELECT doc_id,
-  CAST(len(regexp_extract_all(lower(trim(text)), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+')) AS BIGINT) AS n_pieces,
-  CAST(len(list_distinct(regexp_extract_all(lower(trim(text)), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+'))) AS BIGINT) AS n_distinct_pieces
-FROM documents""",
-
-    // k=5 word grams, windows of 4 gram hashes, min per window,
-    // distinct — DuckDB's 1-based inclusive list slice gs[j:j+3] is the
-    // 4-wide window; hash = the shared 60-bit md5 derivation, 'wn:' salt
-    "winnow_fp" ->
-      """WITH dwords AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
-g AS (SELECT doc_id, ws FROM dwords WHERE len(ws) >= 8),
-gh AS (SELECT doc_id, list_transform(range(1, len(ws)-3), i ->
-    CAST(('0x' || substr(md5('wn:' || ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 15)) AS BIGINT)) AS gs
-  FROM g)
-SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(gs)-2),
-  j -> list_min(gs[j:j+3])))) AS fp
-FROM gh""",
-
-    "winnow_pairs" ->
-      s"""WITH dwords AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
-g AS (SELECT doc_id, ws FROM dwords WHERE len(ws) >= 8),
-gh AS (SELECT doc_id, list_transform(range(1, len(ws)-3), i ->
-    CAST(('0x' || substr(md5('wn:' || ws[i]||' '||ws[i+1]||' '||ws[i+2]||' '||ws[i+3]||' '||ws[i+4]), 1, 15)) AS BIGINT)) AS gs
-  FROM g),
-f AS (SELECT DISTINCT doc_id, unnest(list_distinct(list_transform(range(1, len(gs)-2),
-    j -> list_min(gs[j:j+3])))) AS fp
-  FROM gh),
-keep AS (SELECT fp FROM f GROUP BY fp HAVING count(*) BETWEEN 2 AND $MaxShingleDf),
-fk AS (SELECT f.doc_id, f.fp FROM f JOIN keep USING (fp))
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
-FROM fk a JOIN fk b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING count(*) >= 3""",
-
-    "segment_shared" ->
-      s"""$segmentCte
-SELECT seg, CAST(count(DISTINCT doc_id) AS BIGINT) AS df, min(doc_id) AS keeper_doc
-FROM segs GROUP BY seg HAVING count(DISTINCT doc_id) >= 2""",
-
-    "segment_dedup" ->
-      s"""$segmentCte,
-st AS (SELECT seg, count(DISTINCT doc_id) AS df, min(doc_id) AS keeper_doc
-  FROM segs GROUP BY seg),
-j AS (SELECT s.doc_id, s.seg_idx, s.seg,
-    (st.df < 2 OR s.doc_id = st.keeper_doc) AS survive
-  FROM segs s JOIN st USING (seg))
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segs,
-  CAST(sum(CASE WHEN survive THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-  coalesce(string_agg(seg, ' ' ORDER BY seg_idx) FILTER (WHERE survive), '') AS cleaned
-FROM j GROUP BY doc_id""",
-
-    "word_freq" ->
-      """WITH w AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS word FROM documents)
-SELECT word, count(*) AS cnt FROM w GROUP BY word
-ORDER BY cnt DESC, word LIMIT 20""",
-
-    // both engines run 1-based substr over the distinct-word table, so
-    // the pair expression is dialect-shared verbatim
-    "bpe_merges" ->
-      """WITH wds AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS w FROM documents),
-wf AS (SELECT w, CAST(count(*) AS BIGINT) AS wc FROM wds GROUP BY w),
-pr AS (SELECT wc, unnest(list_transform(range(1, length(w)),
-    i -> substr(w, CAST(i AS INT), 1) || substr(w, CAST(i AS INT)+1, 1))) AS pair
-  FROM wf WHERE length(w) >= 2)
-SELECT pair, CAST(sum(wc) AS BIGINT) AS total FROM pr GROUP BY pair
-ORDER BY total DESC, pair LIMIT 20""",
-
-    // full BPE training, one unrolled CTE stage per round. Symbol
-    // sequences ride as chr(31)-wrapped strings (each symbol enclosed
-    // in unit separators, absent from the ASCII corpus), so the greedy
-    // left-to-right merge IS string replace: the pattern
-    // sep+lhs+sep+sep+rhs+sep only aligns at symbol boundaries, and
-    // replace() scans left-to-right non-overlapping — the textbook BPE
-    // walk the engine's fold implements on arrays.
-    "bpe_train" -> bpeTrainOracle(BpeRounds),
-
-    "wordpiece_train" -> wordpieceTrainOracle(BpeRounds),
-    "wordpiece_encode" -> wordpieceEncodeOracle(BpeRounds),
-
-    // tokenizer application: the SAME unrolled training stages derive
-    // b1..bR, then every (doc, word) replays the replace chain and the
-    // per-doc piece counts roll up
-    "bpe_encode" -> bpeEncodeOracle(BpeRounds),
-
-    // byte-level training on the mixed-script augmented corpus: same
-    // unrolled stage chain, byte-symbol v1, special token excluded
-    "bpe_train_bytes" -> bpeTrainOracleCore(bpeByteHead, BpeRounds),
-
-    // byte-fallback encoding: special tokens one piece each, everything
-    // else replays the byte merge chain — nothing can drop
-    "bpe_encode_bytes" -> bpeByteEncodeOracle(BpeRounds),
-
-    // unigram-LM training replayed as recursive-CTE Viterbi dp + path
-    // per E/M round (validated against an independent python reference
-    // in tools/proto_unigram.py before wiring)
-    "unigram_train" -> uniTrainOracle(UniSeedN, UniMaxLen, UniKeep),
-
-    // encode: the same chain to the final vocabulary, one more dp, and
-    // the per-doc rollup of optimal piece counts
-    "unigram_encode" -> uniEncodeOracle(UniSeedN, UniMaxLen, UniKeep),
-
-    "split_leakage" ->
-      s"""$sigCte,
-bandsigs AS ($bandSelects),
-cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bandsigs a JOIN bandsigs b
-    ON a.band_id = b.band_id AND a.sig = b.sig AND a.doc_id < b.doc_id),
-csets AS (SELECT doc_id,
-    list_distinct(list_transform(range(1, len(ws)-1), i -> ws[i]||' '||ws[i+1]||' '||ws[i+2])) AS shs
-  FROM dwords WHERE len(ws) >= 3),
-prs AS (SELECT id_a, id_b FROM cands
-  JOIN csets sa ON id_a = sa.doc_id JOIN csets sb ON id_b = sb.doc_id
-  WHERE 3 * len(list_intersect(sa.shs, sb.shs)) >= 1 * (len(sa.shs) + len(sb.shs))),
-spl AS (SELECT doc_id,
-    CASE WHEN CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10 < 9
-         THEN 'train' ELSE 'val' END AS split
-  FROM documents)
-SELECT p.id_a, p.id_b, sa.split AS split_a, sb.split AS split_b
-FROM prs p JOIN spl sa ON p.id_a = sa.doc_id JOIN spl sb ON p.id_b = sb.doc_id
-WHERE sa.split <> sb.split""",
-
-    "gopher_quality" -> {
-      val stopList = TextAnalysis.GopherStopWords.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"""WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
-sg AS (SELECT doc_id, ws,
-    list_transform(range(0, (len(ws) + ${SegLen - 1}) // $SegLen),
-      i -> array_to_string(ws[i*$SegLen+1 : i*$SegLen+$SegLen], ' ')) AS segs
-  FROM w WHERE len(ws) >= 1),
-g AS (SELECT doc_id,
-    CAST(len(ws) AS BIGINT) AS n_words,
-    CAST((CAST(list_sum(list_transform(ws, x -> length(x))) AS BIGINT) * 1000) // len(ws) AS BIGINT) AS mean_wordlen_e3,
-    CAST((CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) * 1000) // len(ws) AS BIGINT) AS alpha_e3,
-    CAST((CAST(len(list_filter(ws, x -> contains(x, '#') OR contains(x, '...'))) AS BIGINT) * 1000) // len(ws) AS BIGINT) AS symbol_e3,
-    CAST(len(list_filter(ws, x -> list_contains($stopList, x))) AS BIGINT) AS n_stopwords,
-    CAST((CAST(len(segs) - len(list_distinct(segs)) AS BIGINT) * 1000) // len(segs) AS BIGINT) AS dupline_e3,
-    CAST((CAST(len(list_filter(segs, s -> starts_with(s, '-') OR starts_with(s, '*') OR starts_with(s, '•'))) AS BIGINT) * 1000) // len(segs) AS BIGINT) AS bullet_e3,
-    CAST((CAST(len(list_filter(segs, s -> ends_with(s, '...'))) AS BIGINT) * 1000) // len(segs) AS BIGINT) AS ellipsis_e3
-  FROM sg)
-SELECT doc_id, n_words, mean_wordlen_e3, alpha_e3, symbol_e3, n_stopwords,
-  dupline_e3, bullet_e3, ellipsis_e3,
-  CASE WHEN n_words BETWEEN 50 AND 100000 AND mean_wordlen_e3 BETWEEN 3000 AND 10000
-        AND alpha_e3 >= 800 AND symbol_e3 <= 100 AND n_stopwords >= 2
-        AND dupline_e3 <= 300 AND bullet_e3 <= 900 AND ellipsis_e3 <= 300
-       THEN 1 ELSE 0 END AS pass
-FROM g"""
-    },
-
-    "quality_filter" ->
-      """SELECT doc_id FROM (
-  SELECT doc_id,
-    len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_tokens,
-    (CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT) * 1000)
-      // len(regexp_split_to_array(lower(trim(text)), '\s+')) AS quality_e3
-  FROM documents)
-WHERE n_tokens >= 30 AND quality_e3 >= 500""",
-
-    "simhash" -> s"$simhashCte SELECT doc_id, simhash FROM shash",
-
-    "simhash_near_pairs" ->
-      s"""$simhashCte,
-banded AS (SELECT doc_id, simhash, t.range AS band,
-    (simhash >> (t.range * 15)) & 32767 AS v
-  FROM shash, range(0, 4) t)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM banded a JOIN banded b
-  ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 8""",
-
-    "phrase_search" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS ws FROM documents),
-q AS (SELECT doc_id AS query_id, ws[2:4] AS qs FROM w
-  WHERE doc_id % 37 = 1 AND len(ws) >= 4),
-toks AS (SELECT doc_id,
-    unnest(list_transform(range(1, len(ws) + 1), i -> {'p': i, 'w': ws[i]}), recursive := true)
-  FROM w),
-qt AS (SELECT query_id,
-    unnest(list_transform(range(1, len(qs) + 1), i -> {'i': i, 'w': qs[i]}), recursive := true)
-  FROM q),
-ql AS (SELECT query_id, len(qs) AS qlen FROM q),
-anch AS (SELECT qt.query_id, toks.doc_id, CAST(toks.p - qt.i AS BIGINT) AS anchor, qt.i
-  FROM toks JOIN qt ON toks.w = qt.w),
-fm AS (SELECT query_id, doc_id, anchor, count(DISTINCT i) AS nm
-  FROM anch GROUP BY query_id, doc_id, anchor),
-m AS (SELECT f.query_id, f.doc_id, f.anchor
-  FROM fm f JOIN ql USING (query_id) WHERE nm = qlen)
-SELECT query_id, doc_id, count(*) AS n_occ, min(anchor) AS first_pos
-FROM m GROUP BY query_id, doc_id""",
-
-    "pmi_pairs" ->
-      """WITH occ AS (SELECT DISTINCT doc_id,
-    unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term FROM documents),
-nd AS (SELECT count(*) AS n_docs FROM documents),
-pdf AS (SELECT term, count(*) AS n_t FROM occ GROUP BY term),
-top AS (SELECT term, n_t FROM pdf ORDER BY n_t DESC, term LIMIT 40),
-focc AS (SELECT o.doc_id, o.term, t.n_t FROM occ o JOIN top t USING (term)),
-p AS (SELECT x.term AS term_a, y.term AS term_b, x.n_t AS n_a, y.n_t AS n_b,
-    count(*) AS n_ab
-  FROM focc x JOIN focc y ON x.doc_id = y.doc_id AND x.term < y.term
-  GROUP BY 1, 2, 3, 4 HAVING count(*) >= 5)
-SELECT term_a, term_b, n_ab, n_a, n_b,
-  CAST((n_ab::HUGEINT * n_docs * 10000) // (n_a::HUGEINT * n_b) AS BIGINT) AS ratio_e4
-FROM p, nd"""
-  )
 
   /** Shared oracle CTE: fixed-length token segments (`segs`), the
     * oracle twin of Dedup.segments at SegLen. DuckDB's unnest-in-SELECT

@@ -1,32 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local dev
-    // loop — gate a few keys without paying for all 65); the driver
+    // loop — gate a few keys without paying for all of them); the driver
     // always calls with two args = everything
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver tables carry TIMESTAMP(NANOS) which Spark 4 otherwise
-      // rejects; nanos surface as BIGINT (ordering-equivalent)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // with the extensions loaded, every oracle comparison ALSO gates
-      // the ZOrderPruningRule's soundness (a pruning rule that dropped
-      // rows would hash-mismatch here)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // with the extensions loaded, every oracle comparison ALSO gates
+    // the ZOrderPruningRule's soundness (a pruning rule that dropped
+    // rows would hash-mismatch here)
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, extensions = true)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name)) {

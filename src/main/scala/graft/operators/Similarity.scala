@@ -444,17 +444,8 @@ object Similarity {
    * than the old fixed 16 — pass `nCentroids = 16` explicitly to
    * reproduce old results.
    */
-  def autoCentroids(emb: DataFrame): Int = TableMemo.contentKey(emb) match {
-    case Some(fp) =>
-      autoCache.computeIfAbsent(fp, _ => Integer.valueOf(countAuto(emb))).intValue()
-    case None => countAuto(emb)
-  }
-
-  /** fingerprint → resolved auto centroid count (session-lifetime; the
-    * fingerprint self-invalidates when data is rewritten, so stale
-    * entries are unreachable, not wrong). */
-  private val autoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  def autoCentroids(emb: DataFrame): Int =
+    TableMemo.value("autoCentroids", emb, "")(countAuto(emb))
 
   /** Count jobs the auto rule has actually run (spec hook: repeated
     * resolution on one fingerprinted corpus must not re-count). */

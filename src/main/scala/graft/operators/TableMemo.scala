@@ -127,4 +127,23 @@ private[graft] object TableMemo {
   /** The memo-key component for `df`: the content fingerprint, or the
     * no-files sentinel for inputs that cannot be content-keyed. */
   def keyOf(df: DataFrame): String = contentKey(df).getOrElse("nofiles")
+
+  private final class Value(compute: () => Any) {
+    lazy val get: Any = compute()
+  }
+
+  private val values = new ConcurrentHashMap[String, Value]()
+
+  /** `compute`, run once per process for each `namespace`, content
+    * fingerprint of `df` and `params` (a driver-side value: a trained
+    * model, a resolved count), and on every call when `df` has no
+    * file-backed input. As in the table memo, only a cheap holder is
+    * built under the map's lock, so a `compute` may itself memoize. */
+  def value[T](namespace: String, df: DataFrame, params: String)(compute: => T): T =
+    contentKey(df) match {
+      case Some(fp) =>
+        values.computeIfAbsent(s"$namespace|$fp|$params", _ => new Value(() => compute))
+          .get.asInstanceOf[T]
+      case None => compute
+    }
 }

@@ -838,21 +838,12 @@ object TextAnalysis {
    */
   def bpeMerges(df: DataFrame, rounds: Int = 8,
                 specials: Seq[String] = Seq.empty,
-                byteMode: Boolean = false): Seq[(String, String)] = {
-    def train(): Seq[(String, String)] =
+                byteMode: Boolean = false): Seq[(String, String)] =
+    TableMemo.value("bpeMerges", df, s"$rounds|${specials.mkString(",")}|$byteMode") {
       (if (byteMode) bpeTrainBytes(df, rounds, specials) else bpeTrain(df, rounds))
         .collect().sortBy(_.getInt(0))
         .map(r => (r.getString(1), r.getString(2))).toSeq
-    TableMemo.contentKey(df) match {
-      case Some(fp) =>
-        mergeCache.computeIfAbsent(s"$fp|$rounds|${specials.mkString(",")}|$byteMode",
-          _ => train())
-      case None => train()
     }
-  }
-
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
 
   def bpeTrain(df: DataFrame, rounds: Int = 8): DataFrame =
     bpeTrainLoop(df.sparkSession,
@@ -1053,18 +1044,9 @@ object TextAnalysis {
     * content fingerprint like [[bpeMerges]] (train once, encode
     * everywhere; un-fingerprintable in-memory inputs retrain). */
   def unigramVocabulary(df: DataFrame, seedN: Int = 40, maxPieceLen: Int = 4,
-                        keepSizes: Seq[Int] = Seq(24, 16)): Seq[(String, Long)] = {
-    def train(): Seq[(String, Long)] = unigramTrainLoop(df, seedN, maxPieceLen, keepSizes)
-    TableMemo.contentKey(df) match {
-      case Some(fp) =>
-        unigramCache.computeIfAbsent(
-          s"$fp|$seedN|$maxPieceLen|${keepSizes.mkString(",")}", _ => train())
-      case None => train()
-    }
-  }
-
-  private val unigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
+                        keepSizes: Seq[Int] = Seq(24, 16)): Seq[(String, Long)] =
+    TableMemo.value("unigramVocabulary", df, s"$seedN|$maxPieceLen|${keepSizes.mkString(",")}")(
+      unigramTrainLoop(df, seedN, maxPieceLen, keepSizes))
 
   /** Binary UTF-8 lexicographic `<` — the collation Spark's `orderBy`
     * and DuckDB both use (Java `String.compareTo` compares UTF-16 code
@@ -1229,17 +1211,8 @@ object TextAnalysis {
     * corpus trains ONCE — previously each call re-ran the full
     * per-round aggregate loop. */
   private def wordpieceMerges(df: DataFrame, rounds: Int)
-      : Seq[(Int, String, String, String, Long, Long)] = {
-    def train() = wordpieceMergesCore(df, rounds)
-    TableMemo.contentKey(df) match {
-      case Some(fp) =>
-        wordpieceMergesCache.computeIfAbsent(s"$fp|$rounds", _ => train())
-      case None => train()
-    }
-  }
-
-  private val wordpieceMergesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, String, Long, Long)]]()
+      : Seq[(Int, String, String, String, Long, Long)] =
+    TableMemo.value("wordpieceMerges", df, s"$rounds")(wordpieceMergesCore(df, rounds))
 
   private def wordpieceMergesCore(df: DataFrame, rounds: Int)
       : Seq[(Int, String, String, String, Long, Long)] = {
@@ -1290,8 +1263,8 @@ object TextAnalysis {
     * BERT-style closed-alphabet convention — and the hook that makes
     * the UNK path testable on a digit-free prose corpus). Both the
     * alphabet and the merge list are model-scale collects. */
-  def wordpieceVocab(df: DataFrame, rounds: Int = 8): Seq[String] = {
-    def build(): Seq[String] = {
+  def wordpieceVocab(df: DataFrame, rounds: Int = 8): Seq[String] =
+    TableMemo.value("wordpieceVocab", df, s"$rounds") {
       val merged = wordpieceMerges(df, rounds).map(_._4)
       val alpha = spread(df).select(explode(tokens(col("text"))).as("w"))
         .select(explode(expr("filter(split(w, ''), c -> c != '')")).as("ch"))
@@ -1299,15 +1272,6 @@ object TextAnalysis {
       (alpha ++ merged).distinct
         .filterNot(_.exists(ch => ch >= '0' && ch <= '9'))
     }
-    TableMemo.contentKey(df) match {
-      case Some(fp) =>
-        wordpieceCache.computeIfAbsent(s"$fp|$rounds", _ => build())
-      case None => build()
-    }
-  }
-
-  private val wordpieceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
 
   /**
    * Apply a WordPiece vocabulary to the corpus — greedy

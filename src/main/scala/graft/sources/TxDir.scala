@@ -21,7 +21,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  */
 object TxDir {
 
-  private val NamePattern = """(.+)-(\d+)-of-(\d+)\.parquet""".r
+  /** A published file name `<prefix>-<i>-of-<n>.parquet` as (prefix, i, n). */
+  object Name {
+    private val Pattern = """(.+)-(\d+)-of-(\d+)\.parquet""".r
+    def unapply(name: String): Option[(String, Int, Int)] = name match {
+      case Pattern(pfx, i, n) => Some((pfx, i.toInt, n.toInt))
+      case _ => None
+    }
+  }
 
   /** Move every data file of `scratch` into `dest` under the prefix,
     * then return the published file names. Call only after the scratch
@@ -44,56 +51,44 @@ object TxDir {
     names.toSeq
   }
 
-  /** Is a complete `<prefix>-*-of-n` set present in `dest`? All members
-    * must agree on `n` (a stale file from an older generation that a
-    * failed delete left behind must not validate a newer partial set). */
-  def isComplete(fs: FileSystem, dest: Path, prefix: String): Boolean = {
-    val mine = published(fs, dest, prefix)
-    mine.nonEmpty && {
-      val n = mine.head._3
-      mine.forall(_._3 == n) && mine.length == n &&
-        mine.map(_._2).distinct.sorted.sameElements(0 until n)
-    }
-  }
-
-  /** File names of a published set (complete or not). */
-  def publishedNames(fs: FileSystem, dest: Path, prefix: String): Seq[String] =
-    published(fs, dest, prefix).map(_._1.getName).toSeq
+  /** Is a complete `<prefix>-*-of-n` set present in `dest`? */
+  def isComplete(fs: FileSystem, dest: Path, prefix: String): Boolean =
+    completePrefixes(allSets(fs, dest))(prefix)
 
   /** Remove an incomplete published set (no-op when complete or absent). */
   def cleanPartial(fs: FileSystem, dest: Path, prefix: String): Unit =
-    if (!isComplete(fs, dest, prefix)) {
-      published(fs, dest, prefix).foreach { case (p, _, _) => fs.delete(p, false) }
+    completeOrClean(fs, dest, prefix)
+
+  /** The file names of `prefix`'s set when it is complete; otherwise
+    * None, after removing whatever partial set is present. One listing:
+    * the replay decision of a unit of work. */
+  def completeOrClean(fs: FileSystem, dest: Path, prefix: String): Option[Seq[String]] = {
+    val sets = allSets(fs, dest)
+    val mine = sets.getOrElse(prefix, Nil).map(_._1)
+    if (completePrefixes(sets)(prefix)) Some(mine)
+    else {
+      mine.foreach(n => fs.delete(new Path(dest, n), false))
+      None
     }
+  }
 
   /** ONE-LISTING view of every published set in `dest`: prefix → member
     * (name, i, n) triples. Maintenance sweeps that touch many prefixes
-    * must use this instead of per-prefix [[isComplete]]/[[cleanPartial]]
-    * — those re-list the directory per call, O(files²) at store scale. */
+    * list once through this rather than once per prefix. */
   def allSets(fs: FileSystem, dest: Path): Map[String, Seq[(String, Int, Int)]] =
     if (!fs.exists(dest)) Map.empty
     else fs.listStatus(dest).map(_.getPath.getName).toSeq
-      .flatMap {
-        case n @ NamePattern(pfx, i, c) => Some((pfx, (n, i.toInt, c.toInt)))
-        case _ => None
-      }
+      .collect { case n @ Name(pfx, i, c) => (pfx, (n, i, c)) }
       .groupMap(_._1)(_._2)
 
-  /** The complete sets among [[allSets]] output (same rule as
-    * [[isComplete]]: all members agree on n, exactly 0..n-1 present). */
+  /** The complete sets among [[allSets]] output: all members agree on n
+    * and exactly 0..n-1 are present (a stale file from an older
+    * generation that a failed delete left behind must not validate a
+    * newer partial set). */
   def completePrefixes(sets: Map[String, Seq[(String, Int, Int)]]): Set[String] =
     sets.collect { case (pfx, members) if {
       val n = members.head._3
       members.forall(_._3 == n) && members.length == n &&
         members.map(_._2).distinct.sorted == (0 until n).toList
     } => pfx }.toSet
-
-  private def published(fs: FileSystem, dest: Path, prefix: String): Array[(Path, Int, Int)] =
-    if (!fs.exists(dest)) Array.empty
-    else fs.listStatus(dest).map(_.getPath).flatMap { p =>
-      p.getName match {
-        case NamePattern(pfx, i, n) if pfx == prefix => Some((p, i.toInt, n.toInt))
-        case _ => None
-      }
-    }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.GraftFunctions.bucket_key
 import graft.operators.{ParquetFooters, PointStore, StoreSwap}
 import graft.operators.StoreSwap.fsOf
+import graft.sources.TxDir
 
 /**
  * Online ingest — the Structured Streaming re-expression of the
@@ -154,15 +155,12 @@ object StreamingIngest {
     val fs = fsOf(spark, storePath)
     val dest = new Path(storePath)
     val prefix = s"ingest-$batchId"
-    if (graft.sources.TxDir.isComplete(fs, dest, prefix)) {
-      graft.sources.TxDir.publishedNames(fs, dest, prefix)
-    } else {
-      graft.sources.TxDir.cleanPartial(fs, dest, prefix)
+    TxDir.completeOrClean(fs, dest, prefix).getOrElse {
       val pts = layout.derive(batch)
       val scratch = new Path(storePath + s".batch-$batchId")
       fs.delete(scratch, true)
       layout.write(pts, scratch.toString, 0)
-      graft.sources.TxDir.publish(fs, scratch, dest, prefix)
+      TxDir.publish(fs, scratch, dest, prefix)
     }
   }
 
@@ -320,7 +318,6 @@ object StreamingIngest {
   private val SnapshotManifest = "_GRAFT_RECLUSTER_SNAPSHOT"
   private val CompactSuffix = ".compacting"
 
-  private val TxName = """(.+)-(\d+)-of-(\d+)\.parquet""".r
   private val IngestPrefix = """ingest-(\d+)""".r
 
   /** Data files of a store dir (excludes markers/hidden files). */
@@ -338,7 +335,7 @@ object StreamingIngest {
     * sequentially, so only this generation can be in-flight or pending
     * an at-least-once replay — every older generation is committed. */
   private def newestIngestId(names: Seq[String]): Option[Long] =
-    names.collect { case TxName(IngestPrefix(id), _, _) => id.toLong }
+    names.collect { case TxDir.Name(IngestPrefix(id), _, _) => id.toLong }
       .maxOption
 
   /** Data files eligible for a recluster snapshot: plain files, COMPLETE
@@ -353,10 +350,9 @@ object StreamingIngest {
   private def snapshotNames(fs: FileSystem, store: Path): Seq[String] = {
     val names = dataFileNames(fs, store)
     val newest = newestIngestId(names)
-    val complete = graft.sources.TxDir.completePrefixes(
-      graft.sources.TxDir.allSets(fs, store))
+    val complete = TxDir.completePrefixes(TxDir.allSets(fs, store))
     val byPrefix = names.groupBy {
-      case TxName(pfx, _, _) => Some(pfx)
+      case TxDir.Name(pfx, _, _) => Some(pfx)
       case _ => None
     }
     byPrefix.toSeq.flatMap {
@@ -524,8 +520,8 @@ object StreamingIngest {
     // rewrite already happened (just drop the source); a partial set is
     // wiped and redone. ONE directory listing serves every prefix check
     // (per-prefix isComplete would re-list per file — O(files²)).
-    val sets = graft.sources.TxDir.allSets(fs, dest)
-    val complete = graft.sources.TxDir.completePrefixes(sets)
+    val sets = TxDir.allSets(fs, dest)
+    val complete = TxDir.completePrefixes(sets)
     val todo = oversized.filter { case (srcPath, _, _) =>
       val prefix = splitPrefix(srcPath.getName)
       if (complete(prefix)) {
@@ -556,7 +552,7 @@ object StreamingIngest {
     todo.foreach { case (srcPath, _, _) =>
       val prefix = splitPrefix(srcPath.getName)
       val sub = new Path(scratchAll, "__split=" + prefix.stripPrefix("split-"))
-      graft.sources.TxDir.publish(fs, sub, dest, prefix)
+      TxDir.publish(fs, sub, dest, prefix)
       fs.delete(srcPath, false)
       ()
     }
@@ -577,8 +573,8 @@ object StreamingIngest {
     if (names.isEmpty) return
     val newest = newestIngestId(names)
     // one listing serves every prefix check (O(files), not O(files²))
-    val sets = graft.sources.TxDir.allSets(fs, store)
-    val complete = graft.sources.TxDir.completePrefixes(sets)
+    val sets = TxDir.allSets(fs, store)
+    val complete = TxDir.completePrefixes(sets)
     names
       .filterNot(n => newest.exists(id => n.startsWith(s"ingest-$id-")))
       .foreach { n =>

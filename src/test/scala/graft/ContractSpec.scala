@@ -3,27 +3,18 @@ package graft
 import graft.operators.CheckpointScope
 
 /**
- * Guards the driver contract: the oracle map must reference real
- * queries, rows-only queries are a known closed set, and every
- * registered query must at least execute and produce its schema on the
- * smallest scale factor (catching per-query runtime breakage before
- * the oracle gate does) and leave no persisted RDD behind once
- * [[CheckpointScope.releaseAll]] has run.
+ * Guards the driver contract: gate keys are unique across the domain
+ * registries, and every registered query must at least execute and
+ * produce its schema on the smallest scale factor (catching per-query
+ * runtime breakage before the oracle gate does) and leave no persisted
+ * RDD behind once [[CheckpointScope.releaseAll]] has run.
  */
 class ContractSpec extends SparkSpec {
 
-  // empty since round 4: even the approximate LSH path is oracle-gated
-  // (md5-derived hyperplanes are reproducible in DuckDB SQL)
-  private val rowsOnlyByDesign = Set.empty[String]
-
-  test("every oracle entry has a registered query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
-  }
-
-  test("every query is oracle-gated unless explicitly rows-only") {
-    val ungated = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(ungated === rowsOnlyByDesign, s"unexpected rows-only queries: $ungated")
+  test("gate keys are unique across domains") {
+    val keys = SparkEntry.domains.flatMap(_.map(_.key))
+    val repeated = keys.diff(keys.distinct).distinct
+    assert(repeated.isEmpty, s"gate keys declared more than once: $repeated")
   }
 
   test("every registered query executes at sf0.001 (schema + evaluation)") {

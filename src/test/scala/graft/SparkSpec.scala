@@ -64,16 +64,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("GRAFT_TEST_CPUS", "4")}]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("GRAFT_TEST_SHUFFLE", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Fixed at 4 cores and without [[graft.plans.GraftExtensions]]: the
+    * rule-off arms of the pruning specs need a session without the rule. */
+  lazy val session: SparkSession = LocalSession(4, extensions = false)
 }

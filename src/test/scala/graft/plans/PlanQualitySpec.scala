@@ -53,13 +53,13 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("small-dimension joins broadcast (no shuffle of the big side's join key)") {
-    val plan = graft.RelationalQueries.queries("revenue_by_nation")(spark, sf("sf0.01"))
+    val plan = graft.SparkEntry.queries("revenue_by_nation")(spark, sf("sf0.01"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("aggregations use map-side partial aggregation") {
-    val plan = graft.RelationalQueries.queries("q1_agg")(spark, sf("sf0.01"))
+    val plan = graft.SparkEntry.queries("q1_agg")(spark, sf("sf0.01"))
       .queryExecution.executedPlan.toString
     // partial_ marks the map-side combine before the exchange
     assert(plan.contains("partial_"), plan)
