@@ -26,10 +26,13 @@ import graft.zorder.{IntRange, ZCodec, ZOrder, ZRanges}
  *    goes through [[ParquetFooters.readParquet]], whose file index
  *    plans only the files whose footers can match the pushed filters,
  *    and the executors skip row groups within them.
- *  - Every query returns a `DataFrame` and stays fully distributed; the
+ *  - Every query returns a `DataFrame` and stays distributed; the
  *    reference's client-side materialization (`Client.java:78-82`) is the
  *    anti-pattern this design avoids — at 100 TB nothing may fold into
- *    the driver except final small results.
+ *    the driver except final small results. The one exception is bounded:
+ *    with [[graft.plans.GraftExtensions]] loaded, a read whose kept row
+ *    groups fit [[graft.plans.LocalPointReads]]' budget is read on the
+ *    driver and submits no job within the budget.
  *  - Filters always include the raw x/y predicates; zkey predicates are
  *    redundant pruning hints, so correctness never depends on them
  *    (SURVEY §7.3).
@@ -101,9 +104,11 @@ object PointStore {
    *
    * TERMINATION, as in [[nearest]]: on a bare store scan
    * (`PointStore.open(..).df`) the footer zone map ([[ZoneMap]]) seeds
-   * the search, and the query costs ONE Spark job when its probe answers
-   * (the returned frame is then local, so collecting it submits none),
-   * else the probe plus the final scan. On any other frame (derived
+   * the search, and the query costs one round when its probe answers
+   * (the returned frame is then local, so collecting it submits no job),
+   * else the probe plus the final scan; a round whose window keeps rows
+   * within [[graft.plans.LocalPointReads]]' budget submits no job within
+   * the budget, else one. On any other frame (derived
    * frames, [[PointStore#live]], [[PointStore#snapshotAsOf]]) the window
    * starts at `initialRadius` and grows ×8 — AT MOST 12 rounds
    * (8^11 > 2^32), each of which may answer the same way; no exit can
@@ -143,14 +148,15 @@ object PointStore {
    *
    * TERMINATION: a bare parquet scan starts from its zone map's probe
    * radius (sized so its ball holds ~2k rows) and probes at most once:
-   * 1 job when the probe answers, else the probe plus the final scan at
+   * one round when the probe answers, else the probe plus the final scan at
    * the k-th distance's radius or, when the probe holds fewer than k
    * rows, at the cap, which holds ≥ k rows by the footers' counts; no
    * probe at all when the probe radius reaches the cap or fewer than k
    * rows have coordinates. Any other frame, or a scan whose footers lack
    * statistics, walks the ×8 ladder from `initialRadius` until a round
    * answers or holds ≥ k rows; the round at the radius covering every
-   * Int coordinate always answers.
+   * Int coordinate always answers. Each round is one Spark job, or no
+   * job within [[graft.plans.LocalPointReads]]' budget.
    */
   private[operators] def nearest(pts: DataFrame, coords: Seq[String], q: Seq[Int], k: Int,
                                  initialRadius: Int, window: Long => DataFrame,

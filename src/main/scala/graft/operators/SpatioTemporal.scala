@@ -102,8 +102,10 @@ object SpatioTemporal {
    *
    * TERMINATION, as in [[PointStore.nearest]]: a bare store scan
    * (`SpatioTemporal.open(..).df`) is seeded from its footer zone map
-   * and costs ONE Spark job when its probe answers (the returned frame
-   * is then local), else the probe plus the final scan; any other frame
+   * and costs one round when its probe answers (the returned frame is
+   * then local), else the probe plus the final scan — each round one
+   * Spark job, or no job within [[graft.plans.LocalPointReads]]'
+   * budget; any other frame
    * walks the ×8 ladder from `initialRadius` to the cube covering every
    * Int coordinate, AT MOST 12 rounds, each of which may answer.
    */

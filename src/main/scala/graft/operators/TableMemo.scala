@@ -71,9 +71,12 @@ private[graft] object TableMemo {
    * (different filters/projections) fingerprint differently, so memo
    * keys built from it self-invalidate.
    *
-   * Metadata-only and driver-side: the listing comes from the plan's
-   * already-materialized file index when the input is a V1 file scan
-   * (no filesystem round trips beyond what planning already paid);
+   * Metadata-only and driver-side: the listing comes from the analyzed
+   * plan's already-materialized file index when the input is a V1 file
+   * scan (no filesystem round trips beyond what planning already paid).
+   * Optimizer rules never rewrite the analyzed plan, so a read
+   * [[graft.plans.LocalPointReads]] folds into local rows keeps its
+   * files' identity;
    * otherwise one `getFileStatus` per `inputFiles` entry. Returns None
    * when the plan has no file-backed input (in-memory fixtures) — such
    * inputs cannot be content-keyed and the caller's key stands alone.
@@ -85,7 +88,7 @@ private[graft] object TableMemo {
     import org.apache.spark.sql.execution.datasources.{
       HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
     val fromIndex: Seq[(String, Long, Long)] =
-      df.queryExecution.optimizedPlan.collect {
+      df.queryExecution.analyzed.collect {
         case lr: LogicalRelation => lr.relation
       }.collect { case fs: HadoopFsRelation => fs.location }
         .collect { case idx: PartitioningAwareFileIndex => idx }

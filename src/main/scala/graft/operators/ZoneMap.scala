@@ -13,13 +13,16 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitionedFile,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFilters, ParquetOptions, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -144,12 +147,16 @@ object ZoneMap {
  * in place changes its length or modification time and is read afresh.
  * Cache misses are read in parallel on a small daemon pool. Beside the
  * footers, a second LRU keeps the collected rows of small store
- * relations under the same file identity ([[collectSmall]]).
+ * relations under the same file identity ([[collectSmall]]). The row
+ * groups a scan's pushed filters keep ([[keptRowGroups]]) decide both
+ * which files a store read plans and whether
+ * [[graft.plans.LocalPointReads]] reads them on the driver
+ * ([[readRows]]).
  */
 private[graft] object ParquetFooters {
 
   /** Files whose footers the cache keeps. */
-  private val CacheFiles = 4096
+  val CacheFiles = 4096
 
   private type Key = (String, Long, Long)
 
@@ -360,24 +367,58 @@ private[graft] object ParquetFooters {
       if (pushed.isEmpty || !sql.parquetFilterPushDown || files.size > CacheFiles) None
       else try {
         val footers = of(files, s.sessionState.newHadoopConf())
-        Some(files.zip(footers).collect { case (st, f) if mayMatch(f, pushed, sql) => st.getPath }.toSet)
+        Some(files.zip(footers).collect { case (st, f) if keptRowGroups(f, pushed, sql).nonEmpty => st.getPath }.toSet)
       } catch { case NonFatal(_) => None }
     }
   }
 
-  /** Whether a row group of the file with `footer` survives the
-    * statistics skip of the predicate the executor builds for `pushed`. */
+  /** The row groups of the file with `footer` that survive the
+    * statistics skip of the predicate the executor builds for `pushed`:
+    * all of them when pushdown is off or no filter translates. The one
+    * test behind both [[FooterIndex]]'s file skip and the row budget of
+    * [[graft.plans.LocalPointReads]]. */
   @nowarn("cat=deprecation")
-  private def mayMatch(footer: ParquetMetadata, pushed: Seq[Filter], sql: SQLConf): Boolean = {
+  def keptRowGroups(footer: ParquetMetadata, pushed: Seq[Filter], sql: SQLConf): Seq[BlockMetaData] = {
     val meta = footer.getFileMetaData
-    val rebase = DataSourceUtils.datetimeRebaseSpec(meta.getKeyValueMetaData.get,
-      new ParquetOptions(Map.empty[String, String], sql).datetimeRebaseModeInRead)
-    val filters = new ParquetFilters(meta.getSchema, sql.parquetFilterPushDownDate,
-      sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
-      sql.parquetFilterPushDownStringPredicate, sql.parquetFilterPushDownInFilterThreshold,
-      sql.caseSensitiveAnalysis, rebase)
-    pushed.flatMap(filters.createFilter).reduceOption(FilterApi.and).forall(p =>
-      !RowGroupFilter.filterRowGroups(FilterCompat.get(p), footer.getBlocks, meta.getSchema).isEmpty)
+    val blocks = footer.getBlocks
+    val predicate = if (pushed.isEmpty || !sql.parquetFilterPushDown) None else {
+      val rebase = DataSourceUtils.datetimeRebaseSpec(meta.getKeyValueMetaData.get,
+        new ParquetOptions(Map.empty[String, String], sql).datetimeRebaseModeInRead)
+      val filters = new ParquetFilters(meta.getSchema, sql.parquetFilterPushDownDate,
+        sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
+        sql.parquetFilterPushDownStringPredicate, sql.parquetFilterPushDownInFilterThreshold,
+        sql.caseSensitiveAnalysis, rebase)
+      pushed.flatMap(filters.createFilter).reduceOption(FilterApi.and)
+    }
+    predicate.fold(blocks)(p => RowGroupFilter.filterRowGroups(FilterCompat.get(p), blocks, meta.getSchema))
+      .asScala.toSeq
+  }
+
+  /**
+   * The rows a scan of `relation` yields from `files`, read on the
+   * driver with the reader executors run
+   * (`ParquetFileFormat.buildReaderWithPartitionValues`, row-based, with
+   * the `pushed` filters and the relation's Hadoop conf), as `required`'s
+   * columns: each row copied through an `UnsafeProjection`. The files
+   * are read in parallel on the footer pool, as a scan's tasks would be.
+   * Throws where the executor's read would.
+   */
+  def readRows(relation: HadoopFsRelation, required: StructType, pushed: Seq[Filter],
+               files: Seq[FileStatus]): Seq[InternalRow] = {
+    val s = relation.sparkSession
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(s, relation.dataSchema,
+      relation.partitionSchema, required, pushed,
+      relation.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      s.sessionState.newHadoopConfWithOptions(relation.options))
+    Await.result(Future.traverse(files) { st =>
+      Future {
+        val copy = UnsafeProjection.create(required)
+        val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath), 0, st.getLen,
+          Array.empty[String], st.getModificationTime, st.getLen))
+        try rows.map(r => copy(r).copy()).toVector
+        finally rows match { case c: java.io.Closeable => c.close(); case _ => }
+      }(readers)
+    }(implicitly, readers), Duration.Inf).flatten
   }
 
   /** One read's listing as Spark's listing cache, keyed by root path. */

@@ -1,0 +1,174 @@
+package graft.plans
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.catalyst.FileSourceOptions
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.operators.ParquetFooters
+
+/**
+ * Optimizer rule answering a small point-store read on the driver, with
+ * no Spark job — the re-expression of MD-HBase's client reading a
+ * bucket's rows straight from its region (`Client.java:61-83`,
+ * `Bucket.java:90-98`), with no batch scheduler between the index probe
+ * and the rows.
+ *
+ * It fires when the whole plan is a chain of foldable operators over one
+ * Z-order store scan, and the row groups that scan's pushed filters keep
+ * fit the budget ([[BudgetRows]] rows and [[BudgetBytes]] uncompressed
+ * bytes, counted from the footers before any data is read). It then
+ * reads those row groups on the driver with Spark's own parquet reader
+ * ([[graft.operators.ParquetFooters.readRows]]) and folds the whole plan
+ * into one `LocalRelation`, so collecting it submits no job.
+ *
+ *  - The scan: a non-streaming, unpartitioned, unbucketed parquet
+ *    `HadoopFsRelation` without a `_metadata` column, whose output
+ *    carries a Z-order marker (`graft.zorder` or `graft.zorder3`, the
+ *    markers [[ZOrderPruningRule]] trusts), read with neither
+ *    `ignoreMissingFiles` nor `ignoreCorruptFiles` (the driver read does
+ *    not honour them).
+ *  - The chain, checked before anything is read: `Project`, `Filter`,
+ *    global `Sort`, `GlobalLimit`/`LocalLimit` and a grouping-free
+ *    `Aggregate` of plain `count(...)`s, every expression deterministic
+ *    and free of subqueries.
+ *  - The rows: the scan's files that [[ParquetFooters.keptRowGroups]]
+ *    keeps a row group of, read with the pushed filters the executor's
+ *    scan would get (the conjuncts of the filters directly over the
+ *    scan, translated as `FileSourceScanExec` translates them). The
+ *    budget sums the same kept row groups, so it bounds what is decoded.
+ *  - The fold, bottom-up: Catalyst's `ConvertToLocalRelation` for
+ *    Project, Filter and the limits; here only what Spark does not fold:
+ *    a global Sort (an `InterpretedOrdering`), the counts, and the lone
+ *    `GlobalLimit` left once its `LocalLimit` is folded.
+ *
+ * All or nothing: the result is one `LocalRelation` with the plan's
+ * output, or the plan it was given (`eq`) — above the budget, over a
+ * listing larger than the footer cache, and on any non-fatal error
+ * while checking the budget or reading, in which case the distributed
+ * scan raises its own error as before. Answers never change. Spark's
+ * `spark.sql.optimizer.excludedRules` switches it off.
+ */
+object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** The most rows the kept row groups of a folded read may hold. */
+  val BudgetRows = 65536L
+
+  /** The most uncompressed bytes the kept row groups of a folded read may hold. */
+  val BudgetBytes = 8L << 20
+
+  override def apply(plan: LogicalPlan): LogicalPlan = scanOf(plan) match {
+    case Some(scan) => try local(plan, scan).getOrElse(plan) catch { case NonFatal(_) => plan }
+    case None => plan
+  }
+
+  /** The eligible scan under a chain of foldable operators. */
+  private def scanOf(p: LogicalPlan): Option[LogicalRelation] = p match {
+    case lr: LogicalRelation => Option.when(eligible(lr))(lr)
+    case _ if !p.expressions.forall(e => e.deterministic && !SubqueryExpression.hasSubquery(e)) => None
+    case Project(_, child) => scanOf(child)
+    case Filter(_, child) => scanOf(child)
+    case s: Sort if s.global => scanOf(s.child)
+    case GlobalLimit(IntegerLiteral(_), child) => scanOf(child)
+    case LocalLimit(IntegerLiteral(_), child) => scanOf(child)
+    case a: Aggregate if a.groupingExpressions.isEmpty && a.aggregateExpressions.forall {
+        case Alias(AggregateExpression(_: Count, Complete, false, None, _), _) => true
+        case _ => false
+      } => scanOf(a.child)
+    case _ => None
+  }
+
+  private def eligible(lr: LogicalRelation): Boolean = lr.relation match {
+    case fs: HadoopFsRelation =>
+      val opts = new FileSourceOptions(CaseInsensitiveMap(fs.options))
+      !lr.isStreaming && fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+        fs.partitionSchema.isEmpty && fs.bucketSpec.isEmpty &&
+        !lr.output.exists { case FileSourceMetadataAttribute(_) => true; case _ => false } &&
+        lr.output.exists(a => ZOrderPruningRule.Markers.exists(a.metadata.contains)) &&
+        !opts.ignoreMissingFiles && !opts.ignoreCorruptFiles
+    case _ => false
+  }
+
+  /** `plan` over `scan` as one local relation, when the rows its pushed
+    * filters keep fit the budget. */
+  private def local(plan: LogicalPlan, scan: LogicalRelation): Option[LocalRelation] = {
+    val fs = scan.relation.asInstanceOf[HadoopFsRelation]
+    val session = fs.sparkSession
+    val dataFilters = Bridge.normalize(filtersOn(plan), scan.output)
+    val pushed = Bridge.pushedFilters(fs, dataFilters)
+    val files = fs.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+    if (files.size > ParquetFooters.CacheFiles) return None
+    val footers = ParquetFooters.of(files, session.sessionState.newHadoopConfWithOptions(fs.options))
+    // the files' kept row groups, summed until they pass the budget
+    var (rows, bytes) = (0L, 0L)
+    val kept = files.iterator.zip(footers.iterator)
+      .map { case (st, footer) => st -> ParquetFooters.keptRowGroups(footer, pushed, session.sessionState.conf) }
+      .filter(_._2.nonEmpty)
+      .takeWhile { case (_, groups) =>
+        rows += groups.map(_.getRowCount).sum
+        bytes += groups.map(_.getTotalByteSize).sum
+        rows <= BudgetRows && bytes <= BudgetBytes
+      }.toVector
+    if (rows > BudgetRows || bytes > BudgetBytes) None
+    else {
+      val used = plan.collect { case n => n.references }.foldLeft(plan.outputSet)(_ ++ _)
+      val needed = scan.output.filter(used.contains)
+      val data = ParquetFooters.readRows(fs,
+        StructType(needed.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))),
+        pushed, kept.map(_._1))
+      fold(plan, scan, LocalRelation(needed, data))
+    }
+  }
+
+  /** The conjuncts of the filters directly over the chain's scan. */
+  private def filtersOn(p: LogicalPlan): Seq[Expression] = p match {
+    case Filter(cond, child) if overScan(child) => splitConjunctivePredicates(cond) ++ filtersOn(child)
+    case _: LogicalRelation => Nil
+    case _ => filtersOn(p.children.head)
+  }
+
+  private def overScan(p: LogicalPlan): Boolean = p match {
+    case _: LogicalRelation => true
+    case Filter(_, child) => overScan(child)
+    case _ => false
+  }
+
+  private def fold(p: LogicalPlan, scan: LogicalRelation, rows: LocalRelation): Option[LocalRelation] =
+    if (p eq scan) Some(rows)
+    else fold(p.children.head, scan, rows).flatMap(child => step(p.withNewChildren(Seq(child))))
+
+  /** One operator over local rows, folded. */
+  private def step(p: LogicalPlan): Option[LocalRelation] = ConvertToLocalRelation(p) match {
+    case done: LocalRelation => Some(done)
+    case s: Sort => s.child match {
+      case in: LocalRelation =>
+        Some(in.copy(data = in.data.sorted(new InterpretedOrdering(s.order.map(bind(_, in.output))))))
+      case _ => None
+    }
+    case GlobalLimit(IntegerLiteral(n), in: LocalRelation) => Some(in.copy(data = in.data.take(n)))
+    case a: Aggregate => a.child match {
+      case in: LocalRelation =>
+        val counts = a.aggregateExpressions.map {
+          case Alias(AggregateExpression(Count(args), _, _, _, _), _) =>
+            val bound = args.map(bind(_, in.output))
+            in.data.count(row => bound.forall(_.eval(row) != null)).toLong
+        }
+        Some(LocalRelation(a.output, Seq(InternalRow.fromSeq(counts))))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  private def bind[E <: Expression](e: E, output: Seq[Attribute]): E =
+    BindReferences.bindReference(e, output)
+}

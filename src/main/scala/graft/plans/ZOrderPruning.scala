@@ -51,6 +51,9 @@ object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
     ("zkey", "graft.zorder", Seq("x", "y"), ZOrder),
     ("z3", "graft.zorder3", Seq("x", "y", "t"), ZOrder3))
 
+  /** The metadata markers of the layouts' keys. */
+  private[graft] val Markers: Seq[String] = Layouts.map(_._2)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
       val conjuncts = splitConjunctivePredicates(cond)
@@ -114,8 +117,9 @@ object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /**
- * Session extensions registering the engine's Catalyst surface:
- * the [[ZOrderPruningRule]] optimizer rule and the SQL functions of
+ * Session extensions registering the engine's Catalyst surface: the
+ * [[ZOrderPruningRule]] and [[LocalPointReads]] optimizer rules, in that
+ * order, and the SQL functions of
  * [[graft.functions.GraftFunctions.sqlFunctions]].
  *
  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)…`
@@ -124,6 +128,7 @@ object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ZOrderPruningRule)
+    e.injectOptimizerRule(_ => LocalPointReads)
     GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
       e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }

@@ -77,9 +77,12 @@ object TxDir {
     * list once through this rather than once per prefix. */
   def allSets(fs: FileSystem, dest: Path): Map[String, Seq[(String, Int, Int)]] =
     if (!fs.exists(dest)) Map.empty
-    else fs.listStatus(dest).map(_.getPath.getName).toSeq
-      .collect { case n @ Name(pfx, i, c) => (pfx, (n, i, c)) }
-      .groupMap(_._1)(_._2)
+    else sets(fs.listStatus(dest).map(_.getPath.getName).toSeq)
+
+  /** The published sets among the file names `names`, as [[allSets]]
+    * groups them: for a caller that already listed the directory. */
+  def sets(names: Seq[String]): Map[String, Seq[(String, Int, Int)]] =
+    names.collect { case n @ Name(pfx, i, c) => (pfx, (n, i, c)) }.groupMap(_._1)(_._2)
 
   /** The complete sets among [[allSets]] output: all members agree on n
     * and exactly 0..n-1 are present (a stale file from an older

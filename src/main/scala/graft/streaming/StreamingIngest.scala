@@ -350,7 +350,7 @@ object StreamingIngest {
   private def snapshotNames(fs: FileSystem, store: Path): Seq[String] = {
     val names = dataFileNames(fs, store)
     val newest = newestIngestId(names)
-    val complete = TxDir.completePrefixes(TxDir.allSets(fs, store))
+    val complete = TxDir.completePrefixes(TxDir.sets(names))
     val byPrefix = names.groupBy {
       case TxDir.Name(pfx, _, _) => Some(pfx)
       case _ => None
@@ -573,7 +573,7 @@ object StreamingIngest {
     if (names.isEmpty) return
     val newest = newestIngestId(names)
     // one listing serves every prefix check (O(files), not O(files²))
-    val sets = TxDir.allSets(fs, store)
+    val sets = TxDir.sets(names)
     val complete = TxDir.completePrefixes(sets)
     names
       .filterNot(n => newest.exists(id => n.startsWith(s"ingest-$id-")))

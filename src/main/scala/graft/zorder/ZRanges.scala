@@ -47,7 +47,16 @@ object ZRanges {
     Option.when(box.forall(r => r.min >= 0 && r.max <= codec.maxCoord))(
       decompose(box, codec, MaxRanges))
 
-  def decompose(box: Seq[IntRange], codec: ZCodec, maxRanges: Int): Seq[(Long, Long)] = {
+  /** Cells the walk may visit per interval of its budget: past
+    * `VisitsPerRange * maxRanges` visited cells, every remaining cell is
+    * emitted whole. */
+  private[zorder] val VisitsPerRange = 64
+
+  def decompose(box: Seq[IntRange], codec: ZCodec, maxRanges: Int): Seq[(Long, Long)] =
+    walk(box, codec, maxRanges)._1
+
+  /** The decomposition and the number of cells its walk visited. */
+  private[zorder] def walk(box: Seq[IntRange], codec: ZCodec, maxRanges: Int): (Seq[(Long, Long)], Int) = {
     require(maxRanges >= 1)
     require(box.size == codec.dims, s"${box.size}-D box for a ${codec.dims}-D codec")
     val (mins, maxs) = (box.map(_.min).toArray, box.map(_.max).toArray)
@@ -78,17 +87,23 @@ object ZRanges {
     // ascending z order. The budget counts FINAL intervals: a cell
     // splits only while (finalized + pending + new children) fits the
     // budget; otherwise it is emitted whole — conservative, never lossy.
+    // A cell that merges into the previous interval costs no interval,
+    // so the walk is also bounded by the cells it visits: past the bound
+    // every remaining cell is emitted whole, just as conservatively.
     // Root = the cell of the whole valid domain (reference bootstrap,
     // Index.java:96-99).
+    val maxVisits = VisitsPerRange.toLong * maxRanges
+    var visited = 0
     var work: List[(Long, Int)] = List((0L, codec.rootPrefix)).filter(b => intersects(b._1, b._2))
     while (work.nonEmpty) {
       val (key, pl) = work.head
       work = work.tail
+      visited += 1
       if (contained(key, pl) || pl >= 64) emit(key, pl)
       else {
         val kids = Seq((key, pl + 1), (ZOrder.makeBit(key, pl), pl + 1))
           .filter(b => intersects(b._1, b._2))
-        if (out.size + work.size + kids.size <= maxRanges) work = kids.toList ++ work
+        if (visited < maxVisits && out.size + work.size + kids.size <= maxRanges) work = kids.toList ++ work
         else emit(key, pl)
       }
     }
@@ -98,8 +113,8 @@ object ZRanges {
     // single-interval bound — even when the budget forced coarse cells.
     val looseLo = codec.key(box.map(_.min))
     val looseHi = codec.key(box.map(_.max))
-    out.toSeq
+    (out.toSeq
       .map { case (lo, hi) => (math.max(lo, looseLo), math.min(hi, looseHi)) }
-      .filter { case (lo, hi) => lo <= hi }
+      .filter { case (lo, hi) => lo <= hi }, visited)
   }
 }

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, FileSourceConstantMetadataAttribute}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, FileSourceConstantMetadataAttribute}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils}
 import org.apache.spark.sql.sources.{BaseRelation, Filter}
@@ -21,6 +21,12 @@ object Bridge {
     * data schema Spark gives a file relation read with a given schema. */
   def asNullable(t: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     t.asNullable
+
+  /** `exprs` with each attribute named as in `output`, as
+    * `FileSourceStrategy` names a scan's filters before translating
+    * them (`DataSourceStrategy.normalizeExprs`). */
+  def normalize(exprs: Seq[Expression], output: Seq[Attribute]): Seq[Expression] =
+    DataSourceStrategy.normalizeExprs(exprs, output)
 
   /** The data source filters a file scan of `relation` hands its reader
     * for the scan's `dataFilters`, translated as `FileSourceScanExec`

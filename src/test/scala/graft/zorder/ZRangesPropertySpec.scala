@@ -69,6 +69,23 @@ class ZRangesPropertySpec extends AnyFunSuite {
     soundness(ZOrder3)
   }
 
+  test("a box spanning almost a whole dimension: the walk stays within its visit bound, the cover sound") {
+    val rnd = new scala.util.Random(16)
+    for ((box, budget) <- Seq(
+        (Seq(IntRange(1, Int.MaxValue), IntRange(42, 1909981080)), 28),
+        (Seq(IntRange(0, Int.MaxValue), IntRange(22, 911700142)), 25))) {
+      val (ranges, visited) = ZRanges.walk(box, ZOrder, budget)
+      assert(visited <= (ZRanges.VisitsPerRange + 1) * budget, s"$visited cells visited for $box")
+      assert(ranges.nonEmpty && ranges.size <= budget)
+      val points = Seq.fill(2000)(box.map(r => r.min + (rnd.nextDouble() * (r.max.toLong - r.min)).toInt)) ++
+        Seq(box.map(_.min), box.map(_.max), Seq(box(0).min, box(1).max), Seq(box(0).max, box(1).min))
+      points.foreach { p =>
+        val z = ZOrder.key(p)
+        assert(ranges.exists { case (lo, hi) => lo <= z && z <= hi }, s"$p uncovered in $box at $budget")
+      }
+    }
+  }
+
   test("golden covers: fixed 2-D and 3-D boxes at budgets 1, 4, 16, 64 decompose as recorded") {
     val src = Source.fromResource("graft/zorder/zranges-golden.txt")
     val lines = try src.getLines().filterNot(_.startsWith("#")).toList finally src.close()
