@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.FileSourceOptions
@@ -9,10 +11,12 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.operators.ParquetFooters
@@ -28,9 +32,12 @@ import graft.operators.ParquetFooters
  * Z-order store scan, and the row groups that scan's pushed filters keep
  * fit the budget ([[BudgetRows]] rows and [[BudgetBytes]] uncompressed
  * bytes, counted from the footers before any data is read). It then
- * reads those row groups on the driver with Spark's own parquet reader
- * ([[graft.operators.ParquetFooters.readRows]]) and folds the whole plan
- * into one `LocalRelation`, so collecting it submits no job.
+ * takes those row groups' rows on the driver
+ * ([[graft.operators.ParquetFooters.readRowGroups]]: Spark's own parquet
+ * reader, built once per column set, each row group decoded once per
+ * session into a byte-bounded cache) and folds the whole plan into one
+ * `LocalRelation`, so collecting it submits no job and a repeated read
+ * of hot row groups costs only its rows.
  *
  *  - The scan: a non-streaming, unpartitioned, unbucketed parquet
  *    `HadoopFsRelation` without a `_metadata` column, whose output
@@ -42,15 +49,34 @@ import graft.operators.ParquetFooters
  *    global `Sort`, `GlobalLimit`/`LocalLimit` and a grouping-free
  *    `Aggregate` of plain `count(...)`s, every expression deterministic
  *    and free of subqueries.
- *  - The rows: the scan's files that [[ParquetFooters.keptRowGroups]]
- *    keeps a row group of, read with the pushed filters the executor's
- *    scan would get (the conjuncts of the filters directly over the
- *    scan, translated as `FileSourceScanExec` translates them). The
- *    budget sums the same kept row groups, so it bounds what is decoded.
- *  - The fold, bottom-up: Catalyst's `ConvertToLocalRelation` for
- *    Project, Filter and the limits; here only what Spark does not fold:
- *    a global Sort (an `InterpretedOrdering`), the counts, and the lone
- *    `GlobalLimit` left once its `LocalLimit` is folded.
+ *  - The rows: the row groups [[ParquetFooters.keptRowGroups]] keeps
+ *    for the pushed filters the executor's scan would get (the
+ *    conjuncts of the filters directly over the scan, translated as
+ *    `FileSourceScanExec` translates them), decoded whole: every row of
+ *    the columns the plan uses. The budget sums the same kept row
+ *    groups, so it bounds what is decoded. An over-budget verdict is
+ *    kept on the scan for its pushed filters (less the `IsNotNull`
+ *    filters Spark infers in a later batch) and the session conf, so
+ *    a query checks it once, not once per optimizer iteration; an
+ *    inferred null check that would have skipped an all-null row group
+ *    is missed, which costs a job, not an answer.
+ *  - The fold, bottom-up, interpreted throughout, so it compiles no
+ *    class: a Filter bound once and evaluated with an interpreted
+ *    predicate (Catalyst's `ConvertToLocalRelation` would compile one
+ *    per query, as every window brings new literals; like it, never
+ *    over an `Unevaluable` expression), Catalyst's
+ *    `ConvertToLocalRelation` for Project and the limits, and what
+ *    Spark does not fold: a global Sort (an `InterpretedOrdering`), the
+ *    counts, and the lone `GlobalLimit` left once its `LocalLimit` is
+ *    folded. Cached rows are shared: every step builds a new
+ *    collection and never mutates a row.
+ *  - Files: a read serves the rows of the file identities (path,
+ *    length, modification time) its listing returned. A cached row
+ *    group of a listed file deleted or rewritten after the listing is
+ *    still served, as a snapshot of that identity; an uncached one
+ *    fails the read, and the plan falls back to the scan, which raises
+ *    Spark's own error. Isolating every reader from a concurrent
+ *    rewrite is the store file manifest's aim (ROADMAP item 4).
  *
  * All or nothing: the result is one `LocalRelation` with the plan's
  * output, or the plan it was given (`eq`) — above the budget, over a
@@ -66,6 +92,13 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
 
   /** The most uncompressed bytes the kept row groups of a folded read may hold. */
   val BudgetBytes = 8L << 20
+
+  /** Budget checks run, over-budget or not. */
+  private[graft] val budgetChecks = new AtomicLong
+
+  /** The (pushed filters but `IsNotNull`, session conf) pairs a scan
+    * was found over the budget for. */
+  private val OverBudget = TreeNodeTag[Set[(Seq[sources.Filter], Map[String, String])]]("graft.overBudget")
 
   override def apply(plan: LogicalPlan): LogicalPlan = scanOf(plan) match {
     case Some(scan) => try local(plan, scan).getOrElse(plan) catch { case NonFatal(_) => plan }
@@ -106,8 +139,14 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
     val session = fs.sparkSession
     val dataFilters = Bridge.normalize(filtersOn(plan), scan.output)
     val pushed = Bridge.pushedFilters(fs, dataFilters)
+    // the null checks Spark infers after the first check skip only
+    // all-null row groups: they stay out of the key, so they do not check again
+    val verdict = (pushed.filterNot(_.isInstanceOf[sources.IsNotNull]), session.sessionState.conf.getAllConfs)
+    val over = scan.getTagValue(OverBudget).getOrElse(Set.empty)
+    if (over(verdict)) return None
     val files = fs.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
     if (files.size > ParquetFooters.CacheFiles) return None
+    budgetChecks.incrementAndGet()
     val footers = ParquetFooters.of(files, session.sessionState.newHadoopConfWithOptions(fs.options))
     // the files' kept row groups, summed until they pass the budget
     var (rows, bytes) = (0L, 0L)
@@ -119,13 +158,14 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
         bytes += groups.map(_.getTotalByteSize).sum
         rows <= BudgetRows && bytes <= BudgetBytes
       }.toVector
-    if (rows > BudgetRows || bytes > BudgetBytes) None
-    else {
+    if (rows > BudgetRows || bytes > BudgetBytes) {
+      scan.setTagValue(OverBudget, over + verdict)
+      None
+    } else {
       val used = plan.collect { case n => n.references }.foldLeft(plan.outputSet)(_ ++ _)
       val needed = scan.output.filter(used.contains)
-      val data = ParquetFooters.readRows(fs,
-        StructType(needed.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))),
-        pushed, kept.map(_._1))
+      val data = ParquetFooters.readRowGroups(fs,
+        StructType(needed.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))), kept)
       fold(plan, scan, LocalRelation(needed, data))
     }
   }
@@ -148,7 +188,19 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
     else fold(p.children.head, scan, rows).flatMap(child => step(p.withNewChildren(Seq(child))))
 
   /** One operator over local rows, folded. */
-  private def step(p: LogicalPlan): Option[LocalRelation] = ConvertToLocalRelation(p) match {
+  private def step(p: LogicalPlan): Option[LocalRelation] = p match {
+    case Filter(cond, in: LocalRelation) =>
+      val bound = bind(cond, in.output)
+      if (bound.exists(_.isInstanceOf[Unevaluable])) None
+      else {
+        val predicate = Predicate.createInterpreted(bound)
+        predicate.initialize(0)
+        Some(in.copy(data = in.data.filter(predicate.eval)))
+      }
+    case _ => converted(p)
+  }
+
+  private def converted(p: LogicalPlan): Option[LocalRelation] = ConvertToLocalRelation(p) match {
     case done: LocalRelation => Some(done)
     case s: Sort => s.child match {
       case in: LocalRelation =>

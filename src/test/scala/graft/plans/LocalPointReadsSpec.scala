@@ -2,15 +2,19 @@ package graft.plans
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.SparkException
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, IsNotNull}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
@@ -272,5 +276,143 @@ class LocalPointReadsSpec extends SparkSpec {
     }
     val second = key()
     assert(second.isDefined && second != first)
+  }
+
+  // ---- the row-group cache
+
+  /** Counter `c`'s growth while `body` runs. */
+  private def grown[T](c: AtomicLong)(body: => T): (T, Long) = {
+    val before = c.get
+    val out = body
+    (out, c.get - before)
+  }
+
+  private sealed trait Step
+  private final case class Read(centre: Int, shift: Int, half: Int, kind: Int, k: Int) extends Step
+  private case object Rewrite extends Step
+  private final case class Bound(bytes: Long) extends Step
+
+  test("reads equal the rule-off reads over cache interleavings: repeats, overlaps, rewrites, eviction") {
+    val (dir, variants, coords, bigCoords) = mixed
+    val target = new File(dir, "r-inplace.parquet")
+    var rewrites = 0
+    val centres = (coords.take(6) ++ bigCoords.take(4) ++
+      variants.flatten.take(2).flatMap { case (_, x, y, _) => x.zip(y) }).toVector
+    val read = for {
+      c <- Gen.choose(0, centres.size - 1)
+      shift <- Gen.oneOf(0, 0, 15, -40)
+      half <- Gen.oneOf(0, 30, 120, 400)
+      kind <- Gen.choose(0, 3)
+      k <- Gen.oneOf(1, 10, 200)
+    } yield Read(c, shift, half, kind, k)
+    val step: Gen[Step] = Gen.frequency(6 -> read, 1 -> Gen.const(Rewrite),
+      1 -> Gen.oneOf(8L << 10, 200L << 10, ParquetFooters.GroupCacheBytes).map(Bound))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6)
+      .withInitialSeed(Seed(1414L)), Prop.forAllNoShrink(Gen.listOfN(8, step)) { steps =>
+      try steps.foreach {
+        case Rewrite =>
+          rewrites += 1
+          place(variants(rewrites % 2), target)
+          assert(target.setLastModified(System.currentTimeMillis() + 100000L + rewrites * 10000L))
+        case Bound(bytes) => ParquetFooters.groupCacheBound = bytes
+        case Read(c, shift, half, kind, k) =>
+          val (x, y) = (centres(c)._1 + shift, centres(c)._2 + shift)
+          val (rx, ry) = (IntRange(x - half, x + half), IntRange(y - half, y + half))
+          def one(): Seq[String] = {
+            val pts = PointStore.open(spark, dir).df
+            kind match {
+              case 0 => sorted(PointStore.get(pts, x, y))
+              case 1 => sorted(PointStore.rangeQuery(pts, rx, ry))
+              case 2 => sorted(PointStore.rangeQuery(pts, rx, ry).agg(count(lit(1)), count(col("zkey"))))
+              case _ => PointStore.knn(pts, x, y, k).collect().toSeq.map(_.toString)
+            }
+          }
+          assert(on(one()) === off(one()), s"read $kind at ($x, $y) ± $half, k $k")
+          assert(ParquetFooters.groupCacheHeldBytes <= ParquetFooters.groupCacheBound)
+      } finally ParquetFooters.groupCacheBound = ParquetFooters.GroupCacheBytes
+      true
+    })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("a one-row-group split decodes exactly that row group") {
+    val (dir, _, _, _) = mixed
+    val (fs, files) = PointStore.open(spark, dir).df.queryExecution.analyzed match {
+      case ParquetFooters.Scan(fs, files) => (fs, files)
+    }
+    val big = files.filter(_.getPath.getName == "b-big.parquet")
+    val blocks = ParquetFooters.of(big, spark.sessionState.newHadoopConf()).head.getBlocks.asScala.toSeq
+    assert(blocks.size > 4)
+    for (columns <- Seq(Seq("x", "y", "zkey"), fs.dataSchema.fieldNames.toSeq)) {
+      val required = StructType(columns.map(fs.dataSchema(_)))
+      val decoded = blocks.map(b => ParquetFooters.readRowGroups(fs, required, Seq(big.head -> Seq(b))).size.toLong)
+      assert(decoded === blocks.map(_.getRowCount), columns)
+    }
+  }
+
+  test("a second fold over the same row groups decodes none and builds no reader; a fresh window compiles no class") {
+    val (dir, _, coords, bigCoords) = mixed
+    val store = PointStore.open(spark, dir)
+    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
+    try {
+      for ((x, y) <- Seq(coords(21), bigCoords(5))) {
+        def reads() = (PointStore.get(store.df, x, y).collect().toSeq,
+          store.rangeCount(IntRange(x - 60, x + 60), IntRange(y - 60, y + 60)).head())
+        val first = reads()
+        val ((again, decoded), built) = grown(ParquetFooters.readersBuilt)(grown(ParquetFooters.groupsDecoded)(reads()))
+        assert(again === first)
+        assert(decoded === 0 && built === 0, s"($x, $y)")
+      }
+      def window(x: Int, y: Int) = store.rangeCount(IntRange(x - 90, x + 90), IntRange(y - 70, y + 70))
+      val (wx, wy) = coords(300)
+      window(wx, wy).head()
+      for ((x, y) <- Seq(coords(301), coords(302), bigCoords(40))) {
+        val df = window(x, y)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        df.head()
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles, s"($x, $y)")
+        assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      }
+    } finally spark.experimental.extraOptimizations = Nil
+  }
+
+  test("an over-budget read checks its budget once per query") {
+    val (dir, _, coords, _) = mixed
+    val store = PointStore.open(spark, dir)
+    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
+    try {
+      val (x, y) = coords(7)
+      val reads = Seq(store.df, PointStore.rangeQuery(store.df, IntRange(-2000, 40000), IntRange(-2000, 40000)),
+        store.rangeCount(IntRange(x - 30000, x + 30000), IntRange(y - 30000, y + 30000)))
+      for (df <- reads) {
+        val (plan, checks) = grown(LocalPointReads.budgetChecks)(df.queryExecution.optimizedPlan)
+        assert(!plan.isInstanceOf[LocalRelation])
+        assert(checks === 1, plan.treeString)
+        // a later optimizer pass over the same scan, as is and with the
+        // null checks Spark infers after the first pass
+        val inferred = plan.transformUp { case lr: LogicalRelation =>
+          Filter(lr.output.map(a => IsNotNull(a): Expression).reduce(And), lr)
+        }
+        for (again <- Seq(plan, inferred)) {
+          val (same, more) = grown(LocalPointReads.budgetChecks)(LocalPointReads(again))
+          assert((same eq again) && more === 0, again.treeString)
+        }
+      }
+    } finally spark.experimental.extraOptimizations = Nil
+  }
+
+  test("a cache hit for a file deleted after its listing serves the rows of the listed identity") {
+    val dir = tmp("gone") + "/store"
+    PointStore.write(points((0L until 400L).map(i => (i, Some(i.toInt), Some(i.toInt), Some(0L)))), dir, 4)
+    def read(): DataFrame = PointStore.get(PointStore.open(spark, dir).df, 9, 9)
+    val before = on(read().collect()).toSeq
+    assert(before.size === 1)
+    val (listedOn, listedOff) = (read(), read())
+    new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
+    val (after, jobs) = jobsDuring(on(listedOn.collect()).toSeq)
+    assert(jobs === 0)
+    assert(after === before)
+    val err = intercept[SparkException](off(listedOff.collect()))
+    assert(err.getCondition === "FAILED_READ_FILE.FILE_NOT_EXIST")
   }
 }
