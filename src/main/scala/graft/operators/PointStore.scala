@@ -325,23 +325,13 @@ object PointStore {
    * z-interval ≈ a bucket); `sortWithinPartitions` makes row groups
    * internally ordered so Parquet min/max stats are tight. At cluster
    * scale the same two calls distribute; only the partition count grows.
-   * The written files' footers are warmed for the first read
-   * ([[ParquetFooters.warm]]).
    */
-  def write(pts: DataFrame, path: String, numPartitions: Int = 0): Unit = {
-    writeCold(pts, path, numPartitions)
-    ParquetFooters.warm(pts.sparkSession, path)
-  }
-
-  /** [[write]] without the warming, for a scratch dir a commit renames. */
-  private[graft] def writeCold(pts: DataFrame, path: String, numPartitions: Int): Unit =
+  def write(pts: DataFrame, path: String, numPartitions: Int = 0): Unit =
     clustered(pts, numPartitions).write.mode("overwrite").parquet(path)
 
   /** Append a batch of puts (reference `Client.insert`, `Bucket.java:76-81`). */
-  def append(pts: DataFrame, path: String, numPartitions: Int = 0): Unit = {
+  def append(pts: DataFrame, path: String, numPartitions: Int = 0): Unit =
     clustered(pts, numPartitions).write.mode("append").parquet(path)
-    ParquetFooters.warm(pts.sparkSession, path)
-  }
 
   private def clustered(pts: DataFrame, numPartitions: Int): DataFrame = {
     val p = if (numPartitions > 0) pts.repartitionByRange(numPartitions, col("zkey"))
@@ -553,7 +543,6 @@ class PointStore(spark: SparkSession, path: String) {
     StoreSwap.begin(fs, sw)
     clustered(live(seqCols), numPartitions).write.parquet(sw.trees.head._2.toString)
     StoreSwap.commit(fs, sw)
-    ParquetFooters.warm(spark, path)
   }
 
   def get(x: Int, y: Int): DataFrame = PointStore.get(df, x, y)

@@ -41,12 +41,6 @@ object SpatioTemporal {
     * ingest); unlike [[PointStore.write]], which range-partitions by
     * zkey at 0 too. */
   def write(pts: DataFrame, path: String, numPartitions: Int): Unit = {
-    writeCold(pts, path, numPartitions)
-    ParquetFooters.warm(pts.sparkSession, path)
-  }
-
-  /** [[write]] without the warming, for a scratch dir a commit renames. */
-  private[graft] def writeCold(pts: DataFrame, path: String, numPartitions: Int): Unit = {
     val p = if (numPartitions > 0) pts.repartitionByRange(numPartitions, col("z3")) else pts
     p.sortWithinPartitions("z3").write.mode("overwrite").parquet(path)
   }

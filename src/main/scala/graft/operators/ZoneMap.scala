@@ -4,10 +4,9 @@ import java.util.concurrent.{Executors, ThreadFactory}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.annotation.nowarn
-import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
-import scala.util.{Success, Try}
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -20,7 +19,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitionedFile,
@@ -145,20 +144,15 @@ object ZoneMap {
  * on them. Files are immutable under their (path, length, modification
  * time), so each footer is cached under that key in one fixed-size LRU
  * shared by every reader ([[ZoneMap]], [[readParquet]] and its file
- * index); a file rewritten in place changes its length or modification
- * time and is read afresh. Cache misses are read in parallel on a small
- * daemon pool, and a reader asking for a footer whose read is already
- * in flight joins that read. A store write hands the files it committed
- * to the pool without waiting ([[warm]]), so the first read after it
- * finds their footers cached.
- *
- * Beside the footers, a second LRU keeps the collected rows of small
- * store relations under the same file identity ([[collectSmall]]). The
- * row groups a scan's pushed filters keep ([[keptRowGroups]]) decide
- * both which files a store read plans and whether
+ * index); a file rewritten
+ * in place changes its length or modification time and is read afresh.
+ * Cache misses are read in parallel on a small daemon pool. Beside the
+ * footers, a second LRU keeps the collected rows of small store
+ * relations under the same file identity ([[collectSmall]]). The row
+ * groups a scan's pushed filters keep ([[keptRowGroups]]) decide both
+ * which files a store read plans and whether
  * [[graft.plans.LocalPointReads]] reads them on the driver
- * ([[readRowGroups]], through a third, byte-bounded cache of decoded
- * row groups).
+ * ([[readRowGroups]]).
  */
 private[graft] object ParquetFooters {
 
@@ -167,19 +161,10 @@ private[graft] object ParquetFooters {
 
   private type Key = (String, Long, Long)
 
-  private def key(st: FileStatus): Key = (st.getPath.toString, st.getLen, st.getModificationTime)
-
   private val cache = new java.util.LinkedHashMap[Key, ParquetMetadata](256, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[Key, ParquetMetadata]): Boolean =
       size() > CacheFiles
   }
-
-  /** The footer reads started and not yet settled, guarded by `cache`'s
-    * lock: a key is in `cache` or here, never both. */
-  private val inflight = new java.util.HashMap[Key, Promise[ParquetMetadata]]()
-
-  /** Footers read from their files. */
-  private[graft] val footerReads = new AtomicLong
 
   private lazy val readers: ExecutionContext = ExecutionContext.fromExecutorService(
     Executors.newFixedThreadPool(8, new ThreadFactory {
@@ -190,81 +175,23 @@ private[graft] object ParquetFooters {
       }
     }))
 
-  /** The footers of `files`, in order; `conf` is built only when a read
-    * starts here. Throws when a footer cannot be read. */
+  /** The footers of `files`, in order; `conf` is built only on a cache
+    * miss. Throws when a footer cannot be read. */
   def of(files: Seq[FileStatus], conf: => Configuration): Seq[ParquetMetadata] = {
-    val (footers, claimed) = claim(files)
-    start(claimed, conf)
-    footers.map(Await.result(_, Duration.Inf))
-  }
-
-  /**
-   * Reads the footers of the data files under `path` into the cache,
-   * without waiting: one task on the footer pool lists `path` and reads
-   * the footers one at a time, so it takes one thread from the work that
-   * follows a write. Store writes call it right after they commit, so
-   * the first read of the files they wrote does not pay their cold
-   * footers; a reader arriving meanwhile joins the read in flight and
-   * reads the files not yet claimed itself. A read that fails caches
-   * nothing and raises nothing (the next [[of]] reads the file afresh
-   * and raises there). A listing above [[CacheFiles]] files is left
-   * cold, as [[FooterIndex]] would not use it. The result completes,
-   * always successfully, once the task is done.
-   */
-  def warm(s: SparkSession, path: String): Future[Unit] = Future {
-    val conf = s.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val files = visible(fs.listStatus(fs.makeQualified(root))).filter(_.isFile)
-    if (files.size <= CacheFiles) files.foreach { st =>
-      claim(Seq(st))._2.foreach { case (_, p) => settle(st, p, Try(read(st, conf))) }
+    def key(st: FileStatus): Key = (st.getPath.toString, st.getLen, st.getModificationTime)
+    val known = cache.synchronized(files.map(st => Option(cache.get(key(st)))))
+    val missing = files.zip(known).collect { case (st, None) => st }
+    if (missing.isEmpty) known.flatten
+    else {
+      val c = conf
+      val fresh = Await.result(Future.traverse(missing)(st =>
+        Future(key(st) -> read(st, c))(readers))(implicitly, readers), Duration.Inf).toMap
+      cache.synchronized(fresh.foreach { case (k, f) => cache.put(k, f) })
+      files.zip(known).map { case (st, k) => k.getOrElse(fresh(key(st))) }
     }
-  }(readers).transform(_ => Success(()))(ExecutionContext.parasitic)
-
-  /** Footer reads in flight. */
-  private[graft] def footersInFlight: Int = cache.synchronized(inflight.size)
-
-  /** Per file, its footer: cached, the read in flight, or a read claimed
-    * here and returned beside them for [[start]]. */
-  private def claim(files: Seq[FileStatus])
-      : (Seq[Future[ParquetMetadata]], Seq[(FileStatus, Promise[ParquetMetadata])]) =
-    cache.synchronized {
-      val claimed = Seq.newBuilder[(FileStatus, Promise[ParquetMetadata])]
-      val footers = files.map { st =>
-        val k = key(st)
-        Option(cache.get(k)).map(Future.successful).getOrElse {
-          Option(inflight.get(k)).getOrElse {
-            val p = Promise[ParquetMetadata]()
-            inflight.put(k, p)
-            claimed += st -> p
-            p
-          }.future
-        }
-      }
-      (footers, claimed.result())
-    }
-
-  /** Reads the claimed footers in parallel on the pool. */
-  private def start(claimed: Seq[(FileStatus, Promise[ParquetMetadata])], conf: => Configuration): Unit =
-    if (claimed.nonEmpty) {
-      val c = Try(conf)
-      claimed.foreach { case (st, p) =>
-        Future(read(st, c.get))(readers).onComplete(settle(st, p, _))(ExecutionContext.parasitic)
-      }
-    }
-
-  /** Ends a claimed read: caches the footer when it was read, and hands
-    * the outcome to every reader waiting on it. */
-  private def settle(st: FileStatus, p: Promise[ParquetMetadata], r: Try[ParquetMetadata]): Unit = {
-    cache.synchronized {
-      inflight.remove(key(st))
-      r.foreach(cache.put(key(st), _))
-    }
-    p.complete(r)
   }
 
   private def read(st: FileStatus, conf: Configuration): ParquetMetadata = {
-    footerReads.incrementAndGet()
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
     try reader.getFooter finally reader.close()
   }
@@ -468,131 +395,80 @@ private[graft] object ParquetFooters {
       .asScala.toSeq
   }
 
-  /** The bytes of decoded rows (their `getSizeInBytes`) the row-group
-    * cache holds at most; JVM object headers add about 40 bytes a row. */
-  val GroupCacheBytes = 64L << 20
-
-  /** The row-group cache's bound, [[GroupCacheBytes]] but in tests. */
-  @volatile private[graft] var groupCacheBound = GroupCacheBytes
-
   /** Spark's parquet reader built for one relation schema and column
-    * set, as executors run it; identity-keyed, so the row groups it
-    * decoded are cached under the reader that decoded them. */
+    * set, as executors run it. */
   private final class RowReader(val required: StructType, val read: PartitionedFile => Iterator[InternalRow])
 
   /** A reader's inputs: data schema, requested schema, relation options,
-    * the session's SQL conf, and the Spark application (its broadcast
-    * Hadoop conf lives there). */
+    * every entry of the Hadoop conf it reads with (the session's Hadoop
+    * and SQL settings and the relation's options), and the Spark
+    * application (its broadcast of that conf lives there). */
   private type ReaderKey = (StructType, StructType, Map[String, String], Map[String, String], String, Long)
 
   private val rowReaders = new java.util.LinkedHashMap[ReaderKey, RowReader](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[ReaderKey, RowReader]): Boolean = size() > 16
   }
 
-  /** A row group: its file's identity, its starting offset, and the
-    * reader (so the columns and conf) that decoded it. */
-  private type GroupKey = (String, Long, Long, Long, RowReader)
-
-  private val groupCache = new java.util.LinkedHashMap[GroupKey, (Array[UnsafeRow], Long)](64, 0.75f, true)
-  private var groupCacheHeld = 0L
-
-  /** Readers built and row groups decoded. */
-  private[graft] val readersBuilt, groupsDecoded = new AtomicLong
-
-  /** The bytes of row data the row-group cache holds. */
-  private[graft] def groupCacheHeldBytes: Long = groupCache.synchronized(groupCacheHeld)
+  /** Readers built. */
+  private[graft] val readersBuilt = new AtomicLong
 
   /**
    * The rows a scan of `relation` yields from the row groups `groups`
    * (per file, the row groups it keeps), as `required`'s columns, read
-   * on the driver: each row group decoded once per session and then
-   * served from a byte-bounded LRU of immutable `UnsafeRow`s, shared by
-   * every caller. Throws where the executor's read would.
+   * on the driver, each row copied into an `UnsafeRow`. The row groups
+   * are decoded in parallel on the footer pool, as a scan's tasks would
+   * be. Throws where the executor's read would.
    *
    *  - The reader: `ParquetFileFormat.buildReaderWithPartitionValues`,
    *    the function executors run (row-based, the relation's options and
-   *    Hadoop conf), built once per (data schema, requested schema,
-   *    options, session SQL conf, application) and kept in a 16-entry
-   *    LRU; building it broadcasts a Hadoop conf, the larger part of a
-   *    small read's set-up.
+   *    Hadoop conf, no pushed filter), built once per (data schema,
+   *    requested schema, options, Hadoop conf entries, application) and
+   *    kept in a 16-entry LRU; building it broadcasts the Hadoop conf,
+   *    the larger part of a small read's set-up, so a reader is reused
+   *    across queries and a Hadoop or SQL setting changed since builds
+   *    a new one.
    *  - A row group: the split `[start, start + compressed size)`, which
    *    Spark's reader turns into exactly that group (it keeps the groups
-   *    whose midpoint falls in the split), decoded whole with no pushed
-   *    filter, so what is cached does not depend on a query; a decode
-   *    whose row count is not the group's throws. The callers apply
-   *    their complete filter. The trade-off: a kept group is decoded
-   *    whole where the column index could have skipped pages, which
-   *    costs nothing with one page per column chunk, the point store's
-   *    layout today.
-   *  - The cache: keyed by (path, length, modification time, start,
-   *    reader), so a file rewritten in place, another column set or a
-   *    conf change misses. It holds at most [[GroupCacheBytes]] of row
-   *    data, evicting the least recently used groups; a group larger
-   *    than that is served and not kept. Misses decode in parallel on
-   *    the footer pool.
+   *    whose midpoint falls in the split), decoded whole; a decode whose
+   *    row count is not the group's throws. The callers apply their
+   *    complete filter, so what is read does not depend on what the
+   *    reader prunes. The trade-off: a kept group is decoded whole where
+   *    the column index could have skipped pages, which costs nothing
+   *    with one page per column chunk, the point store's layout today.
    */
   def readRowGroups(relation: HadoopFsRelation, required: StructType,
                     groups: Seq[(FileStatus, Seq[BlockMetaData])]): Seq[InternalRow] = {
     val reader = rowReader(relation, required)
-    val keyed = for ((st, blocks) <- groups; b <- blocks)
-      yield ((st.getPath.toString, st.getLen, st.getModificationTime, b.getStartingPos, reader), st, b)
-    val cached = groupCache.synchronized(keyed.map(g => Option(groupCache.get(g._1)).map(_._1)))
-    val missing = keyed.zip(cached).collect { case (g, None) => g }
-    val fresh = Await.result(Future.traverse(missing) { case (k, st, b) =>
-      Future(k -> decode(reader, st, b))(readers)
-    }(implicitly, readers), Duration.Inf).toMap
-    groupCache.synchronized {
-      fresh.foreach { case (k, rows) => admit(k, rows) }
-      trim()
-    }
-    keyed.zip(cached).flatMap { case ((k, _, _), hit) => hit.getOrElse(fresh(k)).iterator }
+    Await.result(Future.traverse(for ((st, blocks) <- groups; b <- blocks) yield (st, b)) {
+      case (st, b) => Future(decode(reader, st, b))(readers)
+    }(implicitly, readers), Duration.Inf).flatten
   }
 
   private def rowReader(relation: HadoopFsRelation, required: StructType): RowReader = {
     val s = relation.sparkSession
-    val k = (relation.dataSchema, required, relation.options, s.sessionState.conf.getAllConfs,
+    val conf = s.sessionState.newHadoopConfWithOptions(relation.options)
+    val k = (relation.dataSchema, required, relation.options,
+      conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap,
       s.sparkContext.applicationId, s.sparkContext.startTime)
     rowReaders.synchronized(Option(rowReaders.get(k))).getOrElse {
       readersBuilt.incrementAndGet()
       val built = new RowReader(required, new ParquetFileFormat().buildReaderWithPartitionValues(s,
         relation.dataSchema, relation.partitionSchema, required, Nil,
-        relation.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        s.sessionState.newHadoopConfWithOptions(relation.options)))
+        relation.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"), conf))
       rowReaders.synchronized(Option(rowReaders.putIfAbsent(k, built)).getOrElse(built))
     }
   }
 
   /** Row group `group` of file `st`, decoded whole and copied. */
-  private def decode(reader: RowReader, st: FileStatus, group: BlockMetaData): Array[UnsafeRow] = {
-    groupsDecoded.incrementAndGet()
+  private def decode(reader: RowReader, st: FileStatus, group: BlockMetaData): Vector[InternalRow] = {
     val copy = UnsafeProjection.create(reader.required)
     val rows = reader.read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
       group.getStartingPos, group.getCompressedSize, Array.empty[String], st.getModificationTime, st.getLen))
-    val out = try rows.map(r => copy(r).copy()).toArray
+    val out = try rows.map(r => copy(r).copy()).toVector
       finally rows match { case c: java.io.Closeable => c.close(); case _ => }
     if (out.length != group.getRowCount) throw new IllegalStateException(
       s"${st.getPath}: the split at ${group.getStartingPos} decoded ${out.length} rows of ${group.getRowCount}")
     out
-  }
-
-  /** Caches `rows` under `k`, unless they alone pass the bound; called
-    * under `groupCache`'s lock. */
-  private def admit(k: GroupKey, rows: Array[UnsafeRow]): Unit = {
-    val bytes = rows.iterator.map(_.getSizeInBytes.toLong).sum
-    if (bytes <= groupCacheBound) {
-      Option(groupCache.put(k, (rows, bytes))).foreach(old => groupCacheHeld -= old._2)
-      groupCacheHeld += bytes
-    }
-  }
-
-  /** Evicts the least recently used row groups down to the bound;
-    * called under `groupCache`'s lock. */
-  private def trim(): Unit = {
-    val eldest = groupCache.values.iterator
-    while (groupCacheHeld > groupCacheBound) {
-      groupCacheHeld -= eldest.next()._2
-      eldest.remove()
-    }
   }
 
   /** One read's listing as Spark's listing cache, keyed by root path. */

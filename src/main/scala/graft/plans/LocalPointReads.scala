@@ -32,12 +32,11 @@ import graft.operators.ParquetFooters
  * Z-order store scan, and the row groups that scan's pushed filters keep
  * fit the budget ([[BudgetRows]] rows and [[BudgetBytes]] uncompressed
  * bytes, counted from the footers before any data is read). It then
- * takes those row groups' rows on the driver
+ * decodes those row groups on the driver
  * ([[graft.operators.ParquetFooters.readRowGroups]]: Spark's own parquet
- * reader, built once per column set, each row group decoded once per
- * session into a byte-bounded cache) and folds the whole plan into one
- * `LocalRelation`, so collecting it submits no job and a repeated read
- * of hot row groups costs only its rows.
+ * reader, built once per column set and conf, not once per read) and
+ * folds the whole plan into one `LocalRelation`, so collecting it
+ * submits no job.
  *
  *  - The scan: a non-streaming, unpartitioned, unbucketed parquet
  *    `HadoopFsRelation` without a `_metadata` column, whose output
@@ -54,12 +53,12 @@ import graft.operators.ParquetFooters
  *    conjuncts of the filters directly over the scan, translated as
  *    `FileSourceScanExec` translates them), decoded whole: every row of
  *    the columns the plan uses. The budget sums the same kept row
- *    groups, so it bounds what is decoded. An over-budget verdict is
- *    kept on the scan for its pushed filters (less the `IsNotNull`
- *    filters Spark infers in a later batch) and the session conf, so
- *    a query checks it once, not once per optimizer iteration; an
- *    inferred null check that would have skipped an all-null row group
- *    is missed, which costs a job, not an answer.
+ *    groups, so it bounds what is decoded. The last over-budget
+ *    verdict is kept on the scan for its pushed filters (less the
+ *    `IsNotNull` filters Spark infers in a later batch) and the session
+ *    conf, so a query checks it once, not once per optimizer
+ *    iteration; an inferred null check that would have skipped an
+ *    all-null row group is missed, which costs a job, not an answer.
  *  - The fold, bottom-up, interpreted throughout, so it compiles no
  *    class: a Filter bound once and evaluated with an interpreted
  *    predicate (Catalyst's `ConvertToLocalRelation` would compile one
@@ -68,15 +67,12 @@ import graft.operators.ParquetFooters
  *    `ConvertToLocalRelation` for Project and the limits, and what
  *    Spark does not fold: a global Sort (an `InterpretedOrdering`), the
  *    counts, and the lone `GlobalLimit` left once its `LocalLimit` is
- *    folded. Cached rows are shared: every step builds a new
- *    collection and never mutates a row.
- *  - Files: a read serves the rows of the file identities (path,
- *    length, modification time) its listing returned. A cached row
- *    group of a listed file deleted or rewritten after the listing is
- *    still served, as a snapshot of that identity; an uncached one
- *    fails the read, and the plan falls back to the scan, which raises
- *    Spark's own error. Isolating every reader from a concurrent
- *    rewrite is the store file manifest's aim (ROADMAP item 4).
+ *    folded.
+ *  - Files: a read decodes the files its listing returned. A listed
+ *    file deleted before its row groups are decoded fails the read,
+ *    and the plan falls back to the scan, which raises Spark's own
+ *    error. Isolating every reader from a concurrent rewrite is the
+ *    store file manifest's aim (ROADMAP item 4).
  *
  * All or nothing: the result is one `LocalRelation` with the plan's
  * output, or the plan it was given (`eq`) — above the budget, over a
@@ -96,9 +92,10 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
   /** Budget checks run, over-budget or not. */
   private[graft] val budgetChecks = new AtomicLong
 
-  /** The (pushed filters but `IsNotNull`, session conf) pairs a scan
-    * was found over the budget for. */
-  private val OverBudget = TreeNodeTag[Set[(Seq[sources.Filter], Map[String, String])]]("graft.overBudget")
+  /** The last (pushed filters but `IsNotNull`, session conf) a scan was
+    * found over the budget for: one verdict per scan, which is all one
+    * query's optimizer iterations need. */
+  private val OverBudget = TreeNodeTag[(Seq[sources.Filter], Map[String, String])]("graft.overBudget")
 
   override def apply(plan: LogicalPlan): LogicalPlan = scanOf(plan) match {
     case Some(scan) => try local(plan, scan).getOrElse(plan) catch { case NonFatal(_) => plan }
@@ -141,9 +138,9 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
     val pushed = Bridge.pushedFilters(fs, dataFilters)
     // the null checks Spark infers after the first check skip only
     // all-null row groups: they stay out of the key, so they do not check again
-    val verdict = (pushed.filterNot(_.isInstanceOf[sources.IsNotNull]), session.sessionState.conf.getAllConfs)
-    val over = scan.getTagValue(OverBudget).getOrElse(Set.empty)
-    if (over(verdict)) return None
+    val verdict = pushed.filterNot(_.isInstanceOf[sources.IsNotNull])
+    def conf = session.sessionState.conf.getAllConfs
+    if (scan.getTagValue(OverBudget).exists { case (f, c) => f == verdict && c == conf }) return None
     val files = fs.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
     if (files.size > ParquetFooters.CacheFiles) return None
     budgetChecks.incrementAndGet()
@@ -159,7 +156,7 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
         rows <= BudgetRows && bytes <= BudgetBytes
       }.toVector
     if (rows > BudgetRows || bytes > BudgetBytes) {
-      scan.setTagValue(OverBudget, over + verdict)
+      scan.setTagValue(OverBudget, (verdict, conf))
       None
     } else {
       val used = plan.collect { case n => n.references }.foldLeft(plan.outputSet)(_ ++ _)

@@ -52,8 +52,7 @@ object StreamingIngest {
    *  - `keyCol`: the clustered key column name (its min/max drive the
    *    footer-metadata split probe and the stats bucketing);
    *  - `derive`: batch rows → keyed point rows;
-   *  - `write`: the key-clustered layout writer, into a scratch dir the
-   *    caller commits (so it warms no footer); `partitions > 0`
+   *  - `write`: the key-clustered layout writer; `partitions > 0`
    *    range-partitions by the key into that many files. At 0 (the
    *    per-batch call) the stock layouts differ: [[PointStore.write]]
    *    still range-partitions by zkey over the session's shuffle
@@ -70,7 +69,7 @@ object StreamingIngest {
     keyCol = "zkey",
     derive = batch => PointStore.points(batch,
       col("event_id"), expr("cast(floor(value*100) as int)"), col("user_id")),
-    write = (pts, path, parts) => PointStore.writeCold(pts, path, parts))
+    write = (pts, path, parts) => PointStore.write(pts, path, parts))
 
   /** 3-D octree layout over the events schema: the spatio-temporal
     * derivation the batch gates use (`PointQueries.events3` — x =
@@ -82,7 +81,7 @@ object StreamingIngest {
     derive = batch => graft.operators.SpatioTemporal.points3(batch,
       col("event_id"), expr("cast(floor(value*100) as int)"), col("user_id"),
       expr("cast(event_id % 2097152 as int)")),
-    write = (pts, path, parts) => graft.operators.SpatioTemporal.writeCold(pts, path, parts))
+    write = (pts, path, parts) => graft.operators.SpatioTemporal.write(pts, path, parts))
 
   /** Event-time hourly rollup, identical for batch and streaming input
     * (the gated `events_hourly` query is its batch twin). `ts` arrives
@@ -313,7 +312,6 @@ object StreamingIngest {
     out.write(snapshot.mkString("\n").getBytes("UTF-8")); out.close()
     fs.create(new Path(scratch, ReclusterReady)).close()
     completeRecluster(fs, store, scratch)
-    ParquetFooters.warm(spark, storePath)
   }
 
   private val ReclusterReady = "_GRAFT_RECLUSTER_READY"
@@ -559,7 +557,7 @@ object StreamingIngest {
       ()
     }
     fs.delete(scratchAll, true)
-    ParquetFooters.warm(spark, storePath)
+    ()
   }
 
   /** Drop crashed-split debris WITHOUT launching jobs: a source file

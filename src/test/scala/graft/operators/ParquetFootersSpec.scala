@@ -3,9 +3,6 @@ package graft.operators
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -265,45 +262,5 @@ class ParquetFootersSpec extends SparkSpec {
     VectorStore.deleteVecs(spark, vec, Seq(5L, 45L).toDF("vec_id"), 2L)
     assert(jobsDuring(VectorStore.assignment(spark, vec))._2 === 0)
     assert(jobsDuring(VectorStore.assignmentAsOf(spark, vec, 1L))._2 === 0)
-  }
-
-  /** Waits until no footer read is in flight and none has started for
-    * 100 ms, so earlier writes' warming does not count below. */
-  private def footersIdle(): Unit = {
-    val deadline = System.nanoTime() + 30000000000L
-    var last = -1L
-    while ((ParquetFooters.footersInFlight > 0 || ParquetFooters.footerReads.get != last) &&
-           System.nanoTime() < deadline) {
-      last = ParquetFooters.footerReads.get
-      Thread.sleep(100)
-    }
-  }
-
-  test("a store write warms its files' footers: a read joins the warm, a failed warm caches nothing") {
-    val p = tmp("warm") + "/store"
-    val conf = spark.sessionState.newHadoopConf()
-    def listed(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val root = new Path(dir)
-      val fs = root.getFileSystem(conf)
-      fs.listStatus(fs.makeQualified(root)).filter(_.getPath.getName.endsWith(".parquet")).toSeq
-    }
-    footersIdle()
-    val reads = ParquetFooters.footerReads.get
-    PointStore.write(points(400, 0L), p, 4)
-    val files = listed(p)
-    assert(files.size === 4)
-    // cached by the warm, or joined while its read is in flight: never read twice
-    val footers = ParquetFooters.of(files, conf)
-    Await.result(ParquetFooters.warm(spark, p), 30.seconds)
-    assert(ParquetFooters.footerReads.get - reads === 4)
-    assert(ParquetFooters.of(files, conf).zip(footers).forall { case (a, b) => a eq b })
-
-    val bad = tmp("warm-bad")
-    Files.write(new File(bad, "part-0.parquet").toPath, "not a parquet file".getBytes("UTF-8"))
-    footersIdle()
-    val before = ParquetFooters.footerReads.get
-    Await.result(ParquetFooters.warm(spark, bad), 30.seconds)
-    intercept[RuntimeException](ParquetFooters.of(listed(bad), conf))
-    assert(ParquetFooters.footerReads.get - before === 2)
   }
 }

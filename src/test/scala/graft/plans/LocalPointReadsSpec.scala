@@ -278,7 +278,7 @@ class LocalPointReadsSpec extends SparkSpec {
     assert(second.isDefined && second != first)
   }
 
-  // ---- the row-group cache
+  // ---- the reused reader and the interpreted fold
 
   /** Counter `c`'s growth while `body` runs. */
   private def grown[T](c: AtomicLong)(body: => T): (T, Long) = {
@@ -290,9 +290,8 @@ class LocalPointReadsSpec extends SparkSpec {
   private sealed trait Step
   private final case class Read(centre: Int, shift: Int, half: Int, kind: Int, k: Int) extends Step
   private case object Rewrite extends Step
-  private final case class Bound(bytes: Long) extends Step
 
-  test("reads equal the rule-off reads over cache interleavings: repeats, overlaps, rewrites, eviction") {
+  test("reads equal the rule-off reads over sequences of repeats, overlaps and in-place rewrites") {
     val (dir, variants, coords, bigCoords) = mixed
     val target = new File(dir, "r-inplace.parquet")
     var rewrites = 0
@@ -305,16 +304,14 @@ class LocalPointReadsSpec extends SparkSpec {
       kind <- Gen.choose(0, 3)
       k <- Gen.oneOf(1, 10, 200)
     } yield Read(c, shift, half, kind, k)
-    val step: Gen[Step] = Gen.frequency(6 -> read, 1 -> Gen.const(Rewrite),
-      1 -> Gen.oneOf(8L << 10, 200L << 10, ParquetFooters.GroupCacheBytes).map(Bound))
+    val step: Gen[Step] = Gen.frequency(6 -> read, 1 -> Gen.const(Rewrite))
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6)
       .withInitialSeed(Seed(1414L)), Prop.forAllNoShrink(Gen.listOfN(8, step)) { steps =>
-      try steps.foreach {
+      steps.foreach {
         case Rewrite =>
           rewrites += 1
           place(variants(rewrites % 2), target)
           assert(target.setLastModified(System.currentTimeMillis() + 100000L + rewrites * 10000L))
-        case Bound(bytes) => ParquetFooters.groupCacheBound = bytes
         case Read(c, shift, half, kind, k) =>
           val (x, y) = (centres(c)._1 + shift, centres(c)._2 + shift)
           val (rx, ry) = (IntRange(x - half, x + half), IntRange(y - half, y + half))
@@ -328,8 +325,7 @@ class LocalPointReadsSpec extends SparkSpec {
             }
           }
           assert(on(one()) === off(one()), s"read $kind at ($x, $y) ± $half, k $k")
-          assert(ParquetFooters.groupCacheHeldBytes <= ParquetFooters.groupCacheBound)
-      } finally ParquetFooters.groupCacheBound = ParquetFooters.GroupCacheBytes
+      }
       true
     })
     assert(res.passed, res.status.toString)
@@ -350,7 +346,7 @@ class LocalPointReadsSpec extends SparkSpec {
     }
   }
 
-  test("a second fold over the same row groups decodes none and builds no reader; a fresh window compiles no class") {
+  test("a second fold builds no reader; a fresh window compiles no class") {
     val (dir, _, coords, bigCoords) = mixed
     val store = PointStore.open(spark, dir)
     spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
@@ -359,9 +355,9 @@ class LocalPointReadsSpec extends SparkSpec {
         def reads() = (PointStore.get(store.df, x, y).collect().toSeq,
           store.rangeCount(IntRange(x - 60, x + 60), IntRange(y - 60, y + 60)).head())
         val first = reads()
-        val ((again, decoded), built) = grown(ParquetFooters.readersBuilt)(grown(ParquetFooters.groupsDecoded)(reads()))
+        val (again, built) = grown(ParquetFooters.readersBuilt)(reads())
         assert(again === first)
-        assert(decoded === 0 && built === 0, s"($x, $y)")
+        assert(built === 0, s"($x, $y)")
       }
       def window(x: Int, y: Int) = store.rangeCount(IntRange(x - 90, x + 90), IntRange(y - 70, y + 70))
       val (wx, wy) = coords(300)
@@ -374,6 +370,30 @@ class LocalPointReadsSpec extends SparkSpec {
         assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
       }
     } finally spark.experimental.extraOptimizations = Nil
+  }
+
+  test("a Hadoop setting changed between two folds builds a new reader") {
+    val (dir, _, coords, _) = mixed
+    val store = PointStore.open(spark, dir)
+    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    try {
+      val (x, y) = coords(33)
+      def read() = grown(ParquetFooters.readersBuilt) {
+        val df = PointStore.get(store.df, x, y)
+        assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        df.collect().toSeq
+      }
+      val (first, _) = read()
+      assert(read()._2 === 0)
+      hadoop.set("graft.test.readerConf", "changed")
+      val (again, built) = read()
+      assert(again === first)
+      assert(built === 1)
+    } finally {
+      hadoop.unset("graft.test.readerConf")
+      spark.experimental.extraOptimizations = Nil
+    }
   }
 
   test("an over-budget read checks its budget once per query") {
@@ -399,20 +419,5 @@ class LocalPointReadsSpec extends SparkSpec {
         }
       }
     } finally spark.experimental.extraOptimizations = Nil
-  }
-
-  test("a cache hit for a file deleted after its listing serves the rows of the listed identity") {
-    val dir = tmp("gone") + "/store"
-    PointStore.write(points((0L until 400L).map(i => (i, Some(i.toInt), Some(i.toInt), Some(0L)))), dir, 4)
-    def read(): DataFrame = PointStore.get(PointStore.open(spark, dir).df, 9, 9)
-    val before = on(read().collect()).toSeq
-    assert(before.size === 1)
-    val (listedOn, listedOff) = (read(), read())
-    new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
-    val (after, jobs) = jobsDuring(on(listedOn.collect()).toSeq)
-    assert(jobs === 0)
-    assert(after === before)
-    val err = intercept[SparkException](off(listedOff.collect()))
-    assert(err.getCondition === "FAILED_READ_FILE.FILE_NOT_EXIST")
   }
 }
