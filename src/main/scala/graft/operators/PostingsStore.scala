@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import StoreSwap.BaseDir
@@ -221,7 +221,7 @@ object PostingsStore {
     // takedown issued before the fold performs (fold result-invisibility)
     val liveDocs = Store.live(s, path, "postings", Long.MaxValue)
     // four consumers otherwise re-read the whole store THROUGH the
-    // marker anti-join (postings range-sampling + write, doclens
+    // marker filter (postings range-sampling + write, doclens
     // range-sampling + write) — the [[build]]/[[appendBatch]] persist
     // discipline: one store read, three cache reads
     liveDocs.persist()
@@ -247,8 +247,9 @@ object PostingsStore {
    * through the postings projection).
    *
    * Marker side table `deletes/d$deleteId` holds the deleted doc ids;
-   * every postings read anti-joins it (broadcast — takedown sets are
-   * tiny), so df/tf/ranks adjust immediately. Corpus stats adjust
+   * every postings read drops the versions it marks
+   * ([[StoreSwap.killVersions]]: an inlined map literal, no join, for
+   * small sets), so df/tf/ranks adjust immediately. Corpus stats adjust
    * through a NEGATIVE mergeable partial `deletestats/d$deleteId` —
    * `(-n, -Σdl)` over the deleted docs, summed into the same raw
    * `(n_docs, dl_sum)` fold as the positive build/batch partials (the
@@ -492,12 +493,12 @@ object PostingsStore {
     TextAnalysis.bm25DocTopKFrom(queries, postingsAsOf(s, path, bound),
       servedStats(s, path, bound), k, broadcastQueries = true)
 
-  /** [[statsAsOf]] for a serve: the raw partials through the driver-side
-    * row cache ([[ParquetFooters.collectSmall]]), folded on the driver
-    * into a one-row local frame — a warm serve reads its stats with no
-    * Spark job. */
-  private def servedStats(s: SparkSession, path: String, bound: Long): DataFrame =
-    TextAnalysis.bm25StatsOf(s,
+  /** [[statsAsOf]]' row for a serve: the raw partials through the
+    * driver-side row cache ([[ParquetFooters.collectSmall]]), folded on
+    * the driver — a warm serve reads its stats with no Spark job and
+    * plans no query for them. */
+  private def servedStats(s: SparkSession, path: String, bound: Long): Row =
+    TextAnalysis.bm25StatsOf(
       ParquetFooters.collectSmall(rawPartials(s, path, bound).select("n_docs", "dl_sum")).toSeq)
 
   /** Drop the store (the reference's `drop` verb, `Client.java:217-224`,

@@ -860,7 +860,8 @@ object Similarity {
     // key at bench scale — ObjectHashAggregate breaks the codegen span
     // and the probed candidate set is small (nProbe/nCentroids of the
     // corpus), so the window's single tiny exchange wins empirically.
-    // Revisit if profiles ever show this exchange dominating a serve.
+    // A store serve whose probed row groups fit the read budget has no
+    // exchange at all: its scan runs as one task (SingleTaskStoreReads).
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid"))
     scoredCand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

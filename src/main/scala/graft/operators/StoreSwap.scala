@@ -1,8 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, MapType}
 
 /**
  * The one store-lifecycle core: the marker-guarded swap every store
@@ -173,16 +178,38 @@ private[graft] object StoreSwap {
     * marker matches its `key` with marker.op ≥ row.op — so a key
     * re-added under a LATER op than its takedown serves again (the
     * re-crawl / re-embed lifecycle), while earlier versions stay dead.
-    * Takedown sets are tiny, so the markers broadcast and the store
-    * side never shuffles. */
+    * A null key or a null op matches no marker.
+    *
+    * The markers are read through the driver-side row cache, a cold
+    * read decoding their files on the driver
+    * ([[ParquetFooters.collectSmall]] with `decode`), so a store open
+    * submits no job for them, and folded to key → latest marker op. Up
+    * to [[InlineMarkerCap]] keys (of the rows' key type) the fold is one
+    * map literal, a row dies iff `key IN keys(m) AND op <= m[key]`, and
+    * the store side needs no join; above it the same collected rows
+    * broadcast into an anti-join. The store side never shuffles. */
   def killVersions(rows: DataFrame, markers: Option[DataFrame], key: String): DataFrame = {
     val raw = withOp(rows)
     markers.fold(raw) { m0 =>
-      val m = withOp(m0).select(col(key).as("__del_key"), col("op").as("__del_op"))
-      raw.join(broadcast(m),
-        raw(key) === col("__del_key") && raw("op") <= col("__del_op"), "left_anti")
+      val m = withOp(m0).select(col(key).as("__del_key"), col("op").cast("long").as("__del_op"))
+      val marks = ParquetFooters.collectSmall(m, decode = true)
+      val latest = marks.iterator.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+        .map(r => r.get(0) -> r.getLong(1)).toSeq.groupMapReduce(_._1)(_._2)(math.max)
+      val keyType = m.schema(0).dataType
+      if (latest.isEmpty) raw
+      else if (latest.size <= InlineMarkerCap && raw.schema(key).dataType == keyType) {
+        val opOf = Bridge.column(Literal.create(latest, MapType(keyType, LongType, valueContainsNull = false)))
+        // the hashed key test first: a map literal's lookup is a scan of its keys
+        raw.filter(!(raw(key).isInCollection(latest.keys) && coalesce(raw("op") <= opOf(raw(key)), lit(false))))
+      } else
+        raw.join(broadcast(rows.sparkSession.createDataFrame(marks.toSeq.asJava, m.schema)),
+          raw(key) === col("__del_key") && raw("op") <= col("__del_op"), "left_anti")
     }
   }
+
+  /** Above this many marked keys a marker set is not inlined as a plan
+    * literal — every task would carry it — and broadcasts instead. */
+  private val InlineMarkerCap = 1000
 
   /** The lifecycle of a base/batch index store at `path`
     * ([[PostingsStore]], [[VectorStore]]): the data `trees` build and

@@ -415,18 +415,18 @@ object TextAnalysis {
     partials.agg(sum("n_docs").as("n_docs"),
       expr("div(sum(dl_sum), nullif(sum(n_docs), 0))").as("avgdl"))
 
-  /** [[bm25Stats]] of `(n_docs, dl_sum)` partial rows already on the
-    * driver: summed here, null-skipping like Spark's `sum`, into a
-    * one-row local frame whose `avgdl` is the same `div` — so it folds
-    * at optimization (no job) and gives [[bm25Stats]]' row. */
-  private[operators] def bm25StatsOf(s: SparkSession, partials: Seq[Row]): DataFrame = {
-    def total(i: Int): java.lang.Long = {
+  /** [[bm25Stats]]' row from `(n_docs, dl_sum)` partial rows already on
+    * the driver, with no query planned: summed null-skipping like
+    * Spark's `sum`, and `avgdl` the same truncating `div`, null when
+    * `n_docs` is null or 0. */
+  private[operators] def bm25StatsOf(partials: Seq[Row]): Row = {
+    def total(i: Int): Option[Long] = {
       val xs = partials.flatMap(r => Option(r.getAs[java.lang.Long](i)))
-      if (xs.isEmpty) null else xs.map(_.longValue).sum
+      Option.when(xs.nonEmpty)(xs.map(_.longValue).sum)
     }
-    val schema = StructType(Seq("n_docs", "dl_sum").map(StructField(_, LongType)))
-    s.createDataFrame(Seq(Row(total(0), total(1))).asJava, schema)
-      .select(col("n_docs"), expr("div(dl_sum, nullif(n_docs, 0))").as("avgdl"))
+    val (nDocs, dlSum) = (total(0), total(1))
+    val avgdl = for (n <- nDocs if n != 0; dl <- dlSum) yield dl / n
+    Row(nDocs.map(Long.box).orNull, avgdl.map(Long.box).orNull)
   }
 
   def bm25TopK(df: DataFrame, k: Int = 5): DataFrame = {
@@ -477,8 +477,12 @@ object TextAnalysis {
    * `(query_id, doc_id)` partial-aggregated sum,
    * bounded by the surviving posting lists of the query terms, then a
    * bounded CollectTopK per query (k·partitions rows to the driver
-   * merge). For a query table too large to broadcast (batch eval
-   * decontamination with tens of millions of queries), pass
+   * merge). A store serve whose kept postings row groups fit the read
+   * budget has neither: its scans run as one task
+   * ([[graft.plans.SingleTaskStoreReads]]), leaving the df broadcast
+   * and the result as its two jobs. For a query table too large to
+   * broadcast (batch eval decontamination with tens of millions of
+   * queries), pass
    * `broadcastQueries = false`: the term join becomes a shuffle on the
    * term key — both sides already idf-filtered — with identical
    * results (spec-pinned).
@@ -488,6 +492,11 @@ object TextAnalysis {
     val (pairs, partial) = bm25Corpus(df)
     bm25DocTopKFrom(queries, pairs, bm25Stats(partial), k, broadcastQueries)
   }
+
+  /** [[bm25DocTopKFrom]] with its stats row collected from `stats`. */
+  private[operators] def bm25DocTopKFrom(queries: DataFrame, pairs: DataFrame,
+      stats: DataFrame, k: Int, broadcastQueries: Boolean): DataFrame =
+    bm25DocTopKFrom(queries, pairs, stats.collect()(0), k, broadcastQueries)
 
   /** Above this many bytes of `(term, query_id)` entries a query batch
     * is not inlined as a plan literal — every task would carry it — and
@@ -499,16 +508,14 @@ object TextAnalysis {
     * parquet instead of a tokenize pass, everything downstream is the
     * identical scoring plan (so store-served results are bit-equal to
     * from-scratch by construction — gated end-to-end anyway by
-    * `postings_equiv`). `stats` (one `(n_docs, avgdl)` row) and, by
-    * default, the query batch are collected when the serve is built;
-    * a local frame of either costs no job. */
+    * `postings_equiv`). `stats` is the `(n_docs, avgdl)` row, two longs;
+    * by default the query batch is collected when the serve is built,
+    * and a local one costs no job. */
   private[operators] def bm25DocTopKFrom(queries: DataFrame, pairs: DataFrame,
-      stats: DataFrame, k: Int, broadcastQueries: Boolean): DataFrame = {
+      stats: Row, k: Int, broadcastQueries: Boolean): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
-    // the one-row corpus stats as literals: no stats join, no broadcast
-    val st = stats.collect()(0)
-    val Seq(nDocs, avgdl) = stats.schema.fields.indices.map(i =>
-      Bridge.column(Literal.create(st.get(i), stats.schema(i).dataType)))
+    // the corpus stats as literals: no stats join, no broadcast
+    val Seq(nDocs, avgdl) = (0 to 1).map(i => Bridge.column(Literal.create(stats.get(i), LongType)))
     // positive-idf vocabulary joins FIRST: stopword posting lists (the
     // corpus-scale ones) drop map-side, so neither the broadcast-hash
     // probe nor the non-broadcast term shuffle ever carries them

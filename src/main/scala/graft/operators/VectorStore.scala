@@ -144,7 +144,8 @@ object VectorStore {
   /** Logical vector DELETE (takedown) — the embedding of a taken-down
     * document must leave retrieval without rewriting the index. Marker
     * side table `deletes/d$deleteId` holds `(vec_id, op)`; every serve
-    * anti-joins it (broadcast — takedown sets are tiny). Markers are
+    * drops the versions it marks ([[StoreSwap.killVersions]]: an
+    * inlined map literal, no join, for small sets). Markers are
     * VERSIONED exactly as in [[PostingsStore.deleteDocs]]: a marker
     * kills assignment versions with op ≤ its own, so re-adding the id
     * under a LATER [[appendBatch]] serves the new embedding (the
@@ -185,7 +186,7 @@ object VectorStore {
     val swap = Store.swap(path)
     StoreSwap.begin(fs, swap)
     // sampling + write otherwise re-read the whole store THROUGH the
-    // marker anti-join twice — the [[build]] persist discipline
+    // marker filter twice — the [[build]] persist discipline
     val live = assignment(s, path)
     live.persist()
     try {

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitionedFile,
   PartitioningAwareFileIndex}
@@ -228,7 +228,12 @@ private[graft] object ParquetFooters {
   /**
    * `df.collect()` for a small store relation — centroids, stats
    * partials, marker lists, the build identity — answered on a warm
-   * read without a Spark job.
+   * read without a Spark job. With `decode`, a cold read decodes the
+   * scans' row groups on the driver instead of running the plan as a
+   * job: no job where the plan above them folds into a local relation
+   * (projections, filters, limits), for reads that must submit none,
+   * such as the marker set every store open inlines
+   * ([[StoreSwap.killVersions]]).
    *
    * Invariant: the rows are the ones `df.collect()` returns now. A
    * deterministic plan whose every leaf is a parquet file scan is a
@@ -239,29 +244,46 @@ private[graft] object ParquetFooters {
    * in place or a file added to or removed from the listing changes
    * the key. Any other plan is collected as is.
    */
-  def collectSmall(df: DataFrame): Array[Row] = {
+  def collectSmall(df: DataFrame, decode: Boolean = false): Array[Row] = {
     val plan = df.queryExecution.optimizedPlan
-    val files = plan.collectLeaves().map {
-      case Scan(_, fs) => Some(fs)
+    val scans = plan.collectLeaves().map {
+      case Scan(_, files) => Some(files)
       case _ => None
     }
-    val small = plan.deterministic && files.nonEmpty && files.forall(_.isDefined) && {
-      try {
-        val blocks = of(files.flatten.flatten.distinct, df.sparkSession.sessionState.newHadoopConf())
-          .flatMap(_.getBlocks.asScala)
-        blocks.map(_.getRowCount).sum <= SmallRows && blocks.map(_.getTotalByteSize).sum <= SmallBytes
-      } catch { case NonFatal(_) => false }
+    val footers = if (!plan.deterministic || scans.isEmpty || scans.exists(_.isEmpty)) None else {
+      val files = scans.flatten.flatten.distinct
+      try Some(files.zip(of(files, df.sparkSession.sessionState.newHadoopConf())).toMap)
+      catch { case NonFatal(_) => None }
+    }
+    val small = footers.exists { byFile =>
+      val blocks = byFile.values.flatMap(_.getBlocks.asScala)
+      blocks.map(_.getRowCount).sum <= SmallRows && blocks.map(_.getTotalByteSize).sum <= SmallBytes
     }
     (if (small) TableMemo.contentKey(df) else None) match {
       case None => df.collect()
       case Some(key) =>
         rowCache.synchronized(Option(rowCache.get(key))).getOrElse {
-          val rows = df.collect()
+          val rows = (if (decode) decoded(df, plan, footers.get) else None).getOrElse(df.collect())
           rowCache.synchronized(rowCache.put(key, rows))
           rows
         }
     }
   }
+
+  /** `plan`'s rows with each scan replaced by its files' row groups,
+    * decoded on the driver into a local relation. None where a scan has
+    * partition or metadata columns, or on any error. */
+  private def decoded(df: DataFrame, plan: LogicalPlan,
+                      footers: Map[FileStatus, ParquetMetadata]): Option[Array[Row]] =
+    try {
+      val local = plan.transformUp {
+        case lr @ Scan(fs, files) if fs.partitionSchema.isEmpty && lr.output.length == fs.dataSchema.length =>
+          LocalRelation(lr.output, readRowGroups(fs, fs.dataSchema,
+            files.map(st => st -> footers(st).getBlocks.asScala.toSeq)))
+      }
+      Option.when(local.collectLeaves().forall(_.isInstanceOf[LocalRelation]))(
+        Bridge.ofRows(df.sparkSession, local).collect())
+    } catch { case NonFatal(_) => None }
 
   /**
    * `spark.read.parquet(paths: _*)` without Spark's schema-inference job,
@@ -292,6 +314,10 @@ private[graft] object ParquetFooters {
       case Some((schema, leaves)) => s.baseRelationToDataFrame(new FooterIndex(s, leaves, schema).relation)
       case None => s.read.parquet(paths: _*)
     }
+
+  /** Is `relation` a store read [[readParquet]] built over a
+    * [[FooterIndex]]? A user's own `spark.read.parquet` never is. */
+  def footerIndexed(relation: HadoopFsRelation): Boolean = relation.location.isInstanceOf[FooterIndex]
 
   /** The schema Spark would infer for `paths` and every path's qualified
     * root with the leaf files Spark's listing finds under it, in its

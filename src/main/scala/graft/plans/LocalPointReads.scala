@@ -4,6 +4,8 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.spark.sql.catalyst.FileSourceOptions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -131,11 +133,36 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
 
   /** `plan` over `scan` as one local relation, when the rows its pushed
     * filters keep fit the budget. */
-  private def local(plan: LogicalPlan, scan: LogicalRelation): Option[LocalRelation] = {
+  private def local(plan: LogicalPlan, scan: LogicalRelation): Option[LocalRelation] =
+    keptWithinBudget(scan, pushedOn(plan, scan)).flatMap { kept =>
+      val fs = scan.relation.asInstanceOf[HadoopFsRelation]
+      val used = plan.collect { case n => n.references }.foldLeft(plan.outputSet)(_ ++ _)
+      val needed = scan.output.filter(used.contains)
+      val data = ParquetFooters.readRowGroups(fs,
+        StructType(needed.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))), kept)
+      fold(plan, scan, LocalRelation(needed, data))
+    }
+
+  /** The filters a scan of `scan` under the Project/Filter/... chain
+    * `plan` hands its reader: the conjuncts of the filters directly over
+    * the scan, normalized and translated as `FileSourceStrategy` does. */
+  private[plans] def pushedOn(plan: LogicalPlan, scan: LogicalRelation): Seq[sources.Filter] =
+    Bridge.pushedFilters(scan.relation, Bridge.normalize(filtersOn(plan), scan.output))
+
+  /**
+   * The one budget check of this rule and [[SingleTaskStoreReads]]: per
+   * file of `scan`'s listing, the row groups [[ParquetFooters.keptRowGroups]]
+   * keeps for `pushed`, when together they hold at most [[BudgetRows]]
+   * rows and [[BudgetBytes]] uncompressed bytes; None over the budget
+   * or over a listing larger than the footer cache. An over-budget
+   * verdict is kept on the scan for its pushed filters (less `IsNotNull`)
+   * and the session conf, so a query is checked once across both rules
+   * and every optimizer iteration. Throws where a footer cannot be read.
+   */
+  private[plans] def keptWithinBudget(scan: LogicalRelation, pushed: Seq[sources.Filter])
+      : Option[Seq[(FileStatus, Seq[BlockMetaData])]] = {
     val fs = scan.relation.asInstanceOf[HadoopFsRelation]
     val session = fs.sparkSession
-    val dataFilters = Bridge.normalize(filtersOn(plan), scan.output)
-    val pushed = Bridge.pushedFilters(fs, dataFilters)
     // the null checks Spark infers after the first check skip only
     // all-null row groups: they stay out of the key, so they do not check again
     val verdict = pushed.filterNot(_.isInstanceOf[sources.IsNotNull])
@@ -158,13 +185,7 @@ object LocalPointReads extends Rule[LogicalPlan] with PredicateHelper {
     if (rows > BudgetRows || bytes > BudgetBytes) {
       scan.setTagValue(OverBudget, (verdict, conf))
       None
-    } else {
-      val used = plan.collect { case n => n.references }.foldLeft(plan.outputSet)(_ ++ _)
-      val needed = scan.output.filter(used.contains)
-      val data = ParquetFooters.readRowGroups(fs,
-        StructType(needed.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))), kept)
-      fold(plan, scan, LocalRelation(needed, data))
-    }
+    } else Some(kept)
   }
 
   /** The conjuncts of the filters directly over the chain's scan. */

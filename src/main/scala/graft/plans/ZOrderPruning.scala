@@ -119,7 +119,8 @@ object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
 /**
  * Session extensions registering the engine's Catalyst surface: the
  * [[ZOrderPruningRule]] and [[LocalPointReads]] optimizer rules, in that
- * order, and the SQL functions of
+ * order, the [[SingleTaskStoreReads]] pre-CBO rule (once, after filter
+ * pushdown), and the SQL functions of
  * [[graft.functions.GraftFunctions.sqlFunctions]].
  *
  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)…`
@@ -129,6 +130,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ZOrderPruningRule)
     e.injectOptimizerRule(_ => LocalPointReads)
+    e.injectPreCBORule(_ => SingleTaskStoreReads)
     GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
       e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }

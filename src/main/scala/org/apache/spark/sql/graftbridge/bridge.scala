@@ -17,6 +17,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The DataFrame of an already resolved logical plan. */
+  def ofRows(s: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** `t` with every field, element and value nullable, at any depth: the
     * data schema Spark gives a file relation read with a given schema. */
   def asNullable(t: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
