@@ -31,7 +31,7 @@ import graft.zorder.{IntRange, ZCodec, ZOrder, ZRanges}
  *    anti-pattern this design avoids — at 100 TB nothing may fold into
  *    the driver except final small results. The one exception is bounded:
  *    with [[graft.plans.GraftExtensions]] loaded, a read whose kept row
- *    groups fit [[graft.plans.LocalPointReads]]' budget is read on the
+ *    groups fit [[graft.plans.SmallStoreReads]]' budget is read on the
  *    driver and submits no job within the budget.
  *  - Filters always include the raw x/y predicates; zkey predicates are
  *    redundant pruning hints, so correctness never depends on them
@@ -107,7 +107,7 @@ object PointStore {
    * the search, and the query costs one round when its probe answers
    * (the returned frame is then local, so collecting it submits no job),
    * else the probe plus the final scan; a round whose window keeps rows
-   * within [[graft.plans.LocalPointReads]]' budget submits no job within
+   * within [[graft.plans.SmallStoreReads]]' budget submits no job within
    * the budget, else one. On any other frame (derived
    * frames, [[PointStore#live]], [[PointStore#snapshotAsOf]]) the window
    * starts at `initialRadius` and grows ×8 — AT MOST 12 rounds
@@ -156,7 +156,7 @@ object PointStore {
    * statistics, walks the ×8 ladder from `initialRadius` until a round
    * answers or holds ≥ k rows; the round at the radius covering every
    * Int coordinate always answers. Each round is one Spark job, or no
-   * job within [[graft.plans.LocalPointReads]]' budget.
+   * job within [[graft.plans.SmallStoreReads]]' budget.
    */
   private[operators] def nearest(pts: DataFrame, coords: Seq[String], q: Seq[Int], k: Int,
                                  initialRadius: Int, window: Long => DataFrame,

@@ -443,7 +443,7 @@ object PostingsStore {
     * READY delete batch) — the mergeable representation every derived
     * number folds from. Only READY delete batches subtract: a
     * half-written batch's negative partial must stay invisible. */
-  private def rawPartials(s: SparkSession, path: String, bound: Long): DataFrame = {
+  private[operators] def rawPartials(s: SparkSession, path: String, bound: Long): DataFrame = {
     val base = Store.tree(s, path, "stats", bound)
     StoreSwap.readDirs(s, s"$path/deletestats", Store.deletes(path).ready(s, bound))
       .fold(base)(base.unionByName(_))

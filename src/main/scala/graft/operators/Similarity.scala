@@ -861,7 +861,7 @@ object Similarity {
     // and the probed candidate set is small (nProbe/nCentroids of the
     // corpus), so the window's single tiny exchange wins empirically.
     // A store serve whose probed row groups fit the read budget has no
-    // exchange at all: its scan runs as one task (SingleTaskStoreReads).
+    // exchange at all: its scan runs as one task (SmallStoreReads).
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("nid"))
     scoredCand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -104,7 +104,7 @@ object SpatioTemporal {
    * (`SpatioTemporal.open(..).df`) is seeded from its footer zone map
    * and costs one round when its probe answers (the returned frame is
    * then local), else the probe plus the final scan — each round one
-   * Spark job, or no job within [[graft.plans.LocalPointReads]]'
+   * Spark job, or no job within [[graft.plans.SmallStoreReads]]'
    * budget; any other frame
    * walks the ×8 ladder from `initialRadius` to the cube covering every
    * Int coordinate, AT MOST 12 rounds, each of which may answer.

@@ -182,8 +182,8 @@ private[graft] object StoreSwap {
     *
     * The markers are read through the driver-side row cache, a cold
     * read decoding their files on the driver
-    * ([[ParquetFooters.collectSmall]] with `decode`), so a store open
-    * submits no job for them, and folded to key → latest marker op. Up
+    * ([[ParquetFooters.collectSmall]]), so a store open submits no job
+    * for them, and folded to key → latest marker op. Up
     * to [[InlineMarkerCap]] keys (of the rows' key type) the fold is one
     * map literal, a row dies iff `key IN keys(m) AND op <= m[key]`, and
     * the store side needs no join; above it the same collected rows
@@ -192,7 +192,7 @@ private[graft] object StoreSwap {
     val raw = withOp(rows)
     markers.fold(raw) { m0 =>
       val m = withOp(m0).select(col(key).as("__del_key"), col("op").cast("long").as("__del_op"))
-      val marks = ParquetFooters.collectSmall(m, decode = true)
+      val marks = ParquetFooters.collectSmall(m)
       val latest = marks.iterator.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
         .map(r => r.get(0) -> r.getLong(1)).toSeq.groupMapReduce(_._1)(_._2)(math.max)
       val keyType = m.schema(0).dataType

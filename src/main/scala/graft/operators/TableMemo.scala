@@ -75,7 +75,7 @@ private[graft] object TableMemo {
    * plan's already-materialized file index when the input is a V1 file
    * scan (no filesystem round trips beyond what planning already paid).
    * Optimizer rules never rewrite the analyzed plan, so a read
-   * [[graft.plans.LocalPointReads]] folds into local rows keeps its
+   * [[graft.plans.SmallStoreReads]] folds into local rows keeps its
    * files' identity;
    * otherwise one `getFileStatus` per `inputFiles` entry. Returns None
    * when the plan has no file-backed input (in-memory fixtures) — such

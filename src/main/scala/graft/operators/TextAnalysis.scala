@@ -479,7 +479,7 @@ object TextAnalysis {
    * bounded CollectTopK per query (k·partitions rows to the driver
    * merge). A store serve whose kept postings row groups fit the read
    * budget has neither: its scans run as one task
-   * ([[graft.plans.SingleTaskStoreReads]]), leaving the df broadcast
+   * ([[graft.plans.SmallStoreReads]]), leaving the df broadcast
    * and the result as its two jobs. For a query table too large to
    * broadcast (batch eval decontamination with tens of millions of
    * queries), pass

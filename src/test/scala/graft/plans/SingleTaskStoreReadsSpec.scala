@@ -13,7 +13,7 @@ import org.scalacheck.rng.Seed
 import graft.SparkSpec
 import graft.operators.{ParquetFooters, PointStore, PostingsStore, VectorStore}
 
-/** [[SingleTaskStoreReads]]: a store read whose kept row groups fit the
+/** [[SmallStoreReads]]' coalesce: a store read whose kept row groups fit the
   * budget runs as one task, so the plan above it needs no shuffle, and
   * answers exactly as with the rule excluded; every other plan comes
   * back as it was given. */
@@ -24,13 +24,13 @@ class SingleTaskStoreReadsSpec extends SparkSpec {
 
   /** `body` with the rule among the session's extra optimizations. */
   private def on[T](body: => T): T = {
-    spark.experimental.extraOptimizations = Seq(SingleTaskStoreReads)
+    spark.experimental.extraOptimizations = Seq(SmallStoreReads)
     try body finally spark.experimental.extraOptimizations = Nil
   }
 
   /** `body` with the rule registered but excluded, Spark's off switch. */
   private def off[T](body: => T): T = on {
-    spark.conf.set("spark.sql.optimizer.excludedRules", SingleTaskStoreReads.ruleName)
+    spark.conf.set("spark.sql.optimizer.excludedRules", SmallStoreReads.ruleName)
     try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
@@ -129,12 +129,12 @@ class SingleTaskStoreReadsSpec extends SparkSpec {
 
   test("an IVF serve at the row budget runs as one task; one row group over it shuffles as rule-off") {
     val p = tmp("vedge")
-    VectorStore.build(vecs(0L until LocalPointReads.BudgetRows - 8), p, nCentroids = 2)
-    VectorStore.appendBatch(vecs(LocalPointReads.BudgetRows - 8 until LocalPointReads.BudgetRows), p, 1L)
+    VectorStore.build(vecs(0L until SmallStoreReads.BudgetRows - 8), p, nCentroids = 2)
+    VectorStore.appendBatch(vecs(SmallStoreReads.BudgetRows - 8 until SmallStoreReads.BudgetRows), p, 1L)
     VectorStore.deleteVecs(spark, p, Seq(5L, 9L).toDF("vec_id"), 2L)
     val q = Seq((1L, Seq(3L, -7L)), (2L, Seq(-40L, 20L))).toDF("vec_id", "v")
     same(() => VectorStore.topK(spark, p, q, 5, nProbe = 2), fires = true)
-    VectorStore.appendBatch(vecs(Seq(LocalPointReads.BudgetRows)), p, 3L)
+    VectorStore.appendBatch(vecs(Seq(SmallStoreReads.BudgetRows)), p, 3L)
     same(() => VectorStore.topK(spark, p, q, 5, nProbe = 2), fires = false)
   }
 
@@ -153,7 +153,7 @@ class SingleTaskStoreReadsSpec extends SparkSpec {
     def pts(ids: Seq[Long], seq: Long) = PointStore.points(
       ids.map(i => (i, (i % 1000).toInt, (i / 1000).toInt, seq)).toDF("pid", "px", "py", "seq"),
       col("pid"), col("px"), col("py"), Seq(col("seq").as("put_seq")))
-    PointStore.write(pts(0L until LocalPointReads.BudgetRows, 0L), dir, 4)
+    PointStore.write(pts(0L until SmallStoreReads.BudgetRows, 0L), dir, 4)
     val store = PointStore.open(spark, dir)
     store.delete(pts(Seq(5L, 7000L), 0L).select("id", "x", "y", "put_seq"))
     val seq = Seq("put_seq")
@@ -162,7 +162,7 @@ class SingleTaskStoreReadsSpec extends SparkSpec {
     same(() => latest(window(store.live(seq))), fires = true)
     same(() => latest(window(store.snapshotAsOf(seq, Seq(lit(0L))))), fires = true)
     same(() => latest(store.snapshotAsOf(seq, Seq(lit(0L)))), fires = true)
-    PointStore.append(pts(Seq(LocalPointReads.BudgetRows), 0L), dir, 1)
+    PointStore.append(pts(Seq(SmallStoreReads.BudgetRows), 0L), dir, 1)
     same(() => latest(store.snapshotAsOf(seq, Seq(lit(0L)))), fires = false)
     same(() => latest(window(store.snapshotAsOf(seq, Seq(lit(0L))))), fires = true)
   }
@@ -187,7 +187,7 @@ class SingleTaskStoreReadsSpec extends SparkSpec {
     vecs(0L until 500L).write.parquet(p + "/t")
     val store = ParquetFooters.readParquet(spark, p + "/t")
     def probe() = store.filter(col("vec_id") < 100).groupBy(col("vec_id") % 7).count()
-    assert(coalesces(SingleTaskStoreReads(probe().queryExecution.optimizedPlan)) === 1)
+    assert(coalesces(SmallStoreReads(probe().queryExecution.optimizedPlan)) === 1)
     val untouched = Seq(
       store.groupBy(col("vec_id") % 7).count(),                                   // no pushed filter
       store.filter(col("vec_id") < 100).withColumn("m", monotonically_increasing_id())
@@ -196,7 +196,7 @@ class SingleTaskStoreReadsSpec extends SparkSpec {
         .groupBy(col("vec_id") % 7).count())                                      // not a store read
     untouched.foreach { df =>
       val plan = df.queryExecution.optimizedPlan
-      assert(SingleTaskStoreReads(plan) eq plan, plan.treeString)
+      assert(SmallStoreReads(plan) eq plan, plan.treeString)
     }
     on {
       val df = probe()

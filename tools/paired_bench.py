@@ -14,8 +14,20 @@ JSON result line) is written to the output file as soon as it finishes.
 
 Then, for each end-to-end metric the change's BENCHMARK.json declares, it
 prints each side's q1/median/q3, the number of pairs the change wins, the
-median gap against the parent's interquartile range, and whether the
-change's median stays inside the metric's bound. A run that exits
+median gap against the parent's interquartile range, whether the
+change's median stays inside the metric's bound, and a verdict:
+
+    gain        the change wins at least 9 in 10 pairs (ties count for
+                neither) and its median is better by more than the
+                parent's interquartile range
+    WORSE       the change's median is worse than the parent's by more
+                than the bound
+    unresolved  the parent's interquartile range is wider than the bound
+                (relative to its median), unless every change run beats
+                every parent run
+    no worse    anything else
+
+A run that exits
 non-zero, prints no result line, is not `correct` or has failed
 operations is a failure: its pair is left out of the comparison and the
 failures are listed. Standard library only.
@@ -73,6 +85,23 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def verdict(ps, cs, bound, lower):
+    """The verdict on one metric from the paired parent/change values."""
+    better = (lambda a, b: b < a) if lower else (lambda a, b: b > a)
+    pq, cq = quartiles(ps), quartiles(cs)
+    wins = sum(1 for a, b in zip(ps, cs) if better(a, b))
+    if 10 * wins >= 9 * len(ps) and better(pq[1], cq[1]) and abs(cq[1] - pq[1]) > pq[2] - pq[0]:
+        return "gain"
+    limit = pq[1] * (1 + bound) if lower else pq[1] * (1 - bound)
+    if better(cq[1], limit):
+        return "WORSE"
+    spread = (pq[2] - pq[0]) / abs(pq[1]) if pq[1] else float("inf")
+    every_run_better = better(min(ps), max(cs)) if lower else better(max(ps), min(cs))
+    if spread > bound and not every_run_better:
+        return "unresolved"
+    return "no worse"
+
+
 def report(runs, metrics):
     by_seed = {}
     for r in runs:
@@ -88,7 +117,8 @@ def report(runs, metrics):
     print(f"{len(pairs)} complete pairs, {len(failures)} failed runs")
     for f in failures:
         print(f"  FAILED {f}")
-    header = f"{'metric':<28}{'parent q1/med/q3':>30}{'change q1/med/q3':>30}{'wins':>7}{'gap':>10}{'> IQR':>7}{'bound':>8}{'inside':>8}"
+    header = (f"{'metric':<28}{'parent q1/med/q3':>30}{'change q1/med/q3':>30}{'wins':>7}{'gap':>10}"
+              f"{'> IQR':>7}{'bound':>8}{'inside':>8}{'verdict':>12}")
     print(header)
     summary = {}
     for m in metrics:
@@ -103,12 +133,13 @@ def report(runs, metrics):
         iqr = pq[2] - pq[0]
         limit = pq[1] * (1 + m["bound"]) if lower else pq[1] * (1 - m["bound"])
         inside = cq[1] <= limit if lower else cq[1] >= limit
+        says = verdict(ps, cs, m["bound"], lower)
         summary[name] = {"parent": pq, "change": cq, "wins": wins, "pairs": len(got), "gap": gap,
                          "parent_iqr": iqr, "gap_exceeds_iqr": abs(gap) > iqr, "bound": m["bound"],
-                         "inside_bound": inside}
+                         "inside_bound": inside, "verdict": says}
         fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
         print(f"{name:<28}{fmt(pq):>30}{fmt(cq):>30}{f'{wins}/{len(got)}':>7}{gap:>+10.4g}"
-              f"{('yes' if abs(gap) > iqr else 'no'):>7}{m['bound']:>8}{('yes' if inside else 'NO'):>8}")
+              f"{('yes' if abs(gap) > iqr else 'no'):>7}{m['bound']:>8}{('yes' if inside else 'NO'):>8}{says:>12}")
     return summary, failures
 
 
